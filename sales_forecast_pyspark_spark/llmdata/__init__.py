@@ -17,7 +17,6 @@ from sales_forecast_pyspark_spark.llmdata.dedup import (
     minhash_near_dedup,
     ngram_jaccard_pairs,
     shingles_expr,
-    simhash_pairs,
 )
 from sales_forecast_pyspark_spark.llmdata.multimodal import (
     attach_binary,
@@ -145,7 +144,6 @@ __all__ = [
     "repetition_stats",
     "scrub_pii_expr",
     "shingles_expr",
-    "simhash_pairs",
     "srp_signatures",
     "term_tfidf",
     "text_stats",

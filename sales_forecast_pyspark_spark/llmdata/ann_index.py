@@ -27,14 +27,17 @@ shared ``_ivfpq_fit`` build stage, similarity.py):
   increments transparently and ``compact_ivfpq_index`` is the LSM
   merge that folds them back into size-targeted base files.
 
-- ``query_ivfpq_index(spark, path, queries, ...)`` replays the exact
-  query math of ``ivfpq_topk`` (probe → per-(query, cell) residual ADC
-  tables → code-only scan → exact-cosine refine) against the stored
-  tables. Same seeds + same corpus ⇒ results identical to the
+- ``query_ivfpq_index(spark, path, queries, ...)`` and
+  ``screen_against_ivfpq_index(spark, path, batch, ...)`` run
+  ``_ivfpq_search`` (similarity.py), the one IVF-PQ search kernel that
+  ``ivfpq_topk`` also runs, over the stored quantizers and tables
+  (probe → per-cell residual ADC scan over code rows → exact-cosine
+  refine). Same seeds + same corpus ⇒ results identical to the
   in-memory operator (parity pinned in tests/test_ann_index.py); the
-  PLAN differs deliberately — the ADC scan touches 8-byte code rows
-  only (the float vectors never ride the probed scan), and the refine
-  joins the bounded candidate set back to the vectors table.
+  ADC scan touches 8-byte code rows only (the float vectors never ride
+  the probed scan), and the refine joins the bounded candidate set
+  back to the vectors table. The screen is the serve path plus a
+  cosine threshold and an id exclusion.
 
 - ``ivfpq_index_stats`` is the three-channel rebuild trigger
   (median-normalized per-cell error, global gap, append skew vs
@@ -44,20 +47,25 @@ shared ``_ivfpq_fit`` build stage, similarity.py):
 At 100 TB: build cost is the m+1 seeded KMeans fits plus one encode
 pass (once); per-query-batch cost is n_probe/n_centroids of the code
 files + k·refine_factor vector rows + kilobytes of broadcast state.
-The queries frame stays BOUNDED by contract (same as ``cosine_topk``:
-it is broadcast, and its probed-cell list is collected driver-side —
-both are |Q|-scale, the documented O(|Q|) exception class).
+The queries frame stays BOUNDED by contract (at most
+``SEARCH_MAX_ROWS`` rows: it is materialized driver-side and broadcast,
+the documented O(|Q|) exception class).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_forecast_pyspark_spark.llmdata.lsm import DEFAULT_TARGET_FILE_MB
-from sales_forecast_pyspark_spark.llmdata.similarity import _ivfpq_fit
+from sales_forecast_pyspark_spark.llmdata.similarity import (
+    SEARCH_MAX_ROWS,
+    _ivfpq_fit,
+    _ivfpq_search,
+    _vec_to_python_expr,
+)
 
 
 # process-local memo of the IMMUTABLE quantizer tables (cells +
@@ -101,7 +109,9 @@ def _load_quantizers(spark: SparkSession, path: str):
     batches. Returns (meta dict, cell_mat [n_centroids × d],
     books list of m [codebook_k × sub] arrays). ``meta`` (mutable —
     every append rewrites n_vectors) is read fresh; the quantizer
-    tables come from the fingerprint-validated memo above."""
+    tables come from the fingerprint-validated memo above, read-only:
+    every caller shares them, so an in-place op would corrupt every
+    later load."""
     import numpy as np
 
     meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
@@ -124,6 +134,8 @@ def _load_quantizers(spark: SparkSession, path: str):
     for j in range(meta["m"]):
         rows = sorted((r for r in cb if r["j"] == j), key=lambda r: r["code"])
         books.append(np.stack([np.asarray(r["cen"]) for r in rows]))
+    for a in (cell_mat, *books):
+        a.flags.writeable = False
     if fp is not None:
         _QUANTIZER_MEMO[key] = (fp, cell_mat, books)
     return meta, cell_mat, books
@@ -513,7 +525,7 @@ def _build_locked(
     for t in ("codes", "vectors", "stats_live"):
         lsm.drop_inc(spark, path, t)
     lsm.drop_ledger(spark, path)
-    cells, cb, enc, d, sub = _ivfpq_fit(
+    cell_mat, books, enc, d, sub = _ivfpq_fit(
         df, id_col, vec_col, n_centroids, m, codebook_k, seed
     )
     # cache before the count, as in _append_locked (ADVICE r15): the
@@ -551,8 +563,17 @@ def _build_locked(
         .parquet(os.path.join(path, "vectors"))
     )
     enc.unpersist()
-    cells.write.mode("overwrite").parquet(os.path.join(path, "cells"))
-    cb.write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
+    spark.createDataFrame(
+        list(enumerate(cell_mat.tolist())), "cell int, cv array<double>"
+    ).write.mode("overwrite").parquet(os.path.join(path, "cells"))
+    spark.createDataFrame(
+        [
+            (j, c, cen)
+            for j, book in enumerate(books)
+            for c, cen in enumerate(book.tolist())
+        ],
+        "j int, code int, cen array<double>",
+    ).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
     meta = {
         "d": d,
         "sub": sub,
@@ -646,22 +667,6 @@ def append_to_ivfpq_index(
         spark, path, "append", retry_s=lease_retry_s
     ):
         return _append_locked(df, path, id_col, vec_col, batch_id)
-
-
-def _vec_to_python_expr(df: DataFrame, vec_col: str):
-    """The vector column as it should cross the JVM→Python Arrow
-    boundary: float/double element types ship AS-IS (the numpy side's
-    ``astype(float64)`` widens exactly, so values are bit-identical —
-    a JVM ``cast("array<double>")`` on a float column would only double
-    the Arrow bytes and pay a per-element array transform before the
-    boundary, guide §2.3/§4); anything else still casts to double."""
-    try:
-        et = df.schema[vec_col].dataType.elementType.simpleString()
-    except Exception:
-        et = ""
-    if et in ("float", "double"):
-        return F.col(vec_col)
-    return F.col(vec_col).cast("array<double>")
 
 
 def _append_locked(
@@ -1217,6 +1222,39 @@ def recommend_n_probe(
     }
 
 
+def _search_index(
+    spark: SparkSession,
+    path: str,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    n_probe: int,
+    refine_factor: int,
+    max_rows: int,
+    what: str,
+) -> DataFrame:
+    """``_ivfpq_search`` over a persisted index: the memoized
+    quantizers plus the base ∪ increments codes and vectors tables."""
+    _, cell_mat, books = _load_quantizers(spark, path)
+    return _ivfpq_search(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("v")
+        ),
+        cell_mat,
+        books,
+        _read_index_table(spark, path, "codes").select(
+            "neighbor_id", "cell", "codes"
+        ),
+        _read_index_table(spark, path, "vectors").select("neighbor_id", "v"),
+        k,
+        n_probe,
+        refine_factor,
+        max_rows,
+        what,
+    )
+
+
 def query_ivfpq_index(
     spark: SparkSession,
     path: str,
@@ -1227,139 +1265,18 @@ def query_ivfpq_index(
     n_probe: int = 6,
     refine_factor: int = 32,
 ) -> DataFrame:
-    """Top-k over a persisted IVF-PQ index — same output contract and
-    determinism as ``ivfpq_topk`` (query_id, neighbor_id, cos_sim,
-    rank; seeded, neighbor-id tie order, refined scores are true
-    cosines)."""
-    meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
-    sub = meta["sub"]
-    cells = spark.read.parquet(os.path.join(path, "cells"))
-    cb = spark.read.parquet(os.path.join(path, "codebooks"))
-    codes = _read_index_table(spark, path, "codes")
-    vectors = _read_index_table(spark, path, "vectors")
-
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv0"),
-    )
-    qnorm = F.sqrt(
-        F.aggregate(F.transform("qv0", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    q = (
-        q0.withColumn("n", qnorm)
-        .filter(F.col("n") > 0)
-        .select("query_id", F.transform("qv0", lambda x: x / F.col("n")).alias("qv"))
-    )
-    qd = q.select(F.size("qv").alias("_d")).first()
-    if qd is not None and qd["_d"] != meta["d"]:
-        raise ValueError(
-            f"query dimension {qd['_d']} != index dimension {meta['d']} "
-            f"(index at {path} was built with d={meta['d']}, m={meta['m']})"
-        )
-
-    # Probe the n_probe nearest cells per query (identical math to
-    # ivfpq_topk).
-    cell_d = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.asc("cd"), F.asc("cell"))
-    probes = (
-        q.join(F.broadcast(cells))
-        .select(
-            "query_id",
-            "qv",
-            "cell",
-            cell_d.alias("cd"),
-            F.zip_with("qv", "cv", lambda x, y: x - y).alias("qr"),
-        )
-        .withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "cell", "qr")
-    )
-    probes.cache()
-    # bounded driver-side collect (<= |Q| x n_probe ints): an IN-list
-    # of probed cells reaches the code scan as a STATIC PartitionFilter
-    # — a join would need dynamic pruning, and the whole point of the
-    # partitionBy(cell) layout is that unprobed cells are never read
-    probed_cells = sorted(
-        {r["cell"] for r in probes.select("cell").distinct().collect()}
-    )
-
-    # Per-(query, cell) ADC tables from the query residual.
-    sqd = F.aggregate(
-        F.zip_with(
-            F.slice("qr", F.col("j") * sub + 1, sub),
-            F.col("cen"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    tabs = (
-        probes.join(F.broadcast(cb))
-        .select("query_id", "qv", "cell", "j", "code", sqd.alias("dd"))
-        .groupBy("query_id", "qv", "cell", "j")
-        .agg(F.array_sort(F.collect_list(F.struct("code", "dd"))).alias("cl"))
-        .select(
-            "query_id", "qv", "cell", "j",
-            F.transform("cl", lambda s: s["dd"]).alias("tab"),
-        )
-        .groupBy("query_id", "qv", "cell")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "tab"))).alias("jt"))
-        .select(
-            "query_id", "qv", "cell",
-            F.transform("jt", lambda s: s["tab"]).alias("tables"),
-        )
-    )
-
-    # Code-only ADC scan over the PRUNED partitions; the float vectors
-    # never ride this scan (8 code bytes/row is the working set).
-    adc = F.aggregate(
-        F.zip_with("codes", "tables", lambda c, t: F.element_at(t, c.cast("int") + 1)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        F.broadcast(tabs)
-        .join(codes.filter(F.col("cell").isin(probed_cells)), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "qv", "neighbor_id", adc.alias("adc"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    cand = scored.withColumn("prank", F.row_number().over(w_adc)).filter(
-        F.col("prank") <= k * refine_factor
-    )
-    # Exact-cosine refine: the bounded candidate set (<= |Q| x k x
-    # refine_factor rows) broadcasts against the vectors table — no
-    # corpus-scale shuffle, row-group stats prune the point reads.
-    cos = F.round(
-        F.aggregate(
-            F.zip_with("v", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        ),
-        6,
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    out = (
-        vectors.join(F.broadcast(cand), "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        # full-row dedupe over the BOUNDED refine set: duplicate
-        # vector rows for an id can exist transiently (a torn batch's
-        # orphans folded into the base before its replay completes it,
-        # healed at the next compaction) and would otherwise fan the
-        # join out into the same neighbor at two ranks. Duplicates are
-        # bit-identical by contract (same id ⇒ same vector ⇒ same
-        # cosine), so whole-row distinct removes exactly them and is a
-        # no-op on a healthy index. (Key-subset dropDuplicates here
-        # trips a Catalyst column-pruning internal error under
-        # exceptAll — whole-row distinct does not.)
-        .dropDuplicates()
-        .withColumn("rank", F.row_number().over(w_cos))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
-    return out
+    """Top-k over a persisted IVF-PQ index — ``_ivfpq_search``, the
+    kernel ``ivfpq_topk`` runs on its in-memory fit, over the stored
+    quantizers and tables. Same output contract and determinism as
+    ``ivfpq_topk`` (query_id, neighbor_id, cos_sim, rank, ordered by
+    query_id then rank; seeded, neighbor-id tie order, refined scores
+    are true cosines). The query set is materialized driver-side, at
+    most ``SEARCH_MAX_ROWS`` rows per call; a query dimension other
+    than the index's fails loudly before any job touches the index."""
+    return _search_index(
+        spark, path, queries, id_col, vec_col, k, n_probe, refine_factor,
+        SEARCH_MAX_ROWS, "query",
+    ).orderBy("query_id", "rank")
 
 
 def screen_against_ivfpq_index(
@@ -1373,7 +1290,7 @@ def screen_against_ivfpq_index(
     n_probe: int = 6,
     refine_factor: int = 8,
     exclude_ids: DataFrame | None = None,
-    max_rows: int = 50_000,
+    max_rows: int = SEARCH_MAX_ROWS,
 ) -> DataFrame:
     """Which batch vectors are SEMANTIC near-dups (cosine ≥ threshold)
     of vectors already in the index? The embedding analogue of
@@ -1384,38 +1301,15 @@ def screen_against_ivfpq_index(
     against the SERVING index — |batch| probe queries over the
     cell-pruned code scan, nothing corpus-sized recomputed.
 
-    SCREEN-SHAPED EXECUTION (r14, reshaped r16; measured necessity):
-    the expression-built serve path (``query_ivfpq_index``)
-    materializes per-(query, cell) ADC tables through two
-    collect_list/array_sort aggregations and broadcasts them — right
-    for bounded k-NN query sets, measured ~0.1 s/query and OOM-bound
-    near ~10k queries, which an ingest batch routinely exceeds.
-    Screening instead runs the textbook IVF-PQ scan shape with the
-    batch as BROADCAST STATE (the ``exact_self_similarity_join``
-    precedent): (1) the contract-bounded batch is Arrow-materialized
-    ONCE driver-side; normalization, the ``n_probe``-nearest-cell
-    assignment and the cell→query map are one |batch|×n_centroids
-    numpy product on the driver — no assign pass, no checkpoint, no
-    probed-cell collect job; (2) the probed-cell id list — bounded by
-    n_centroids — reaches the codes scan as a static PartitionFilter;
-    (3) a ``groupBy(cell).applyInPandas`` over the NARROW code rows
-    computes the Q_c×256 ADC tables ONCE per subspace and scans all
-    N_c code rows with vectorized table lookups (query-chunked so peak
-    memory is ~chunk×N_c floats), emitting each query's top
-    ``k·refine_factor`` candidates — the queries ride the broadcast,
-    so the only shuffle left carries (neighbor_id, cell, codes), never
-    a query vector (r14 shipped each query vector n_probe× through a
-    checkpoint and a cogroup exchange); (4) the bounded candidate set
-    (≤ |batch|·k·refine_factor narrow rows) broadcasts against the
-    vectors table for the EXACT-cosine refine — true cosines computed
-    by the SAME JVM expressions over the same float64 values as r14,
-    same rounding and (cos desc, neighbor asc) tie order as the serve
-    path. Nothing corpus-sized shuffles; the |batch|-scale objects are
-    the one driver materialization and its broadcast, the class the
-    in-batch peel already carries. ``max_rows`` is the honesty guard
-    on that class: a frame past the ingest contract bound raises
-    loudly instead of silently materializing a corpus driver-side —
-    corpus-scale screening is ``embedding_near_dups``' job.
+    It is the serve path's search (``_ivfpq_search``, the same kernel
+    ``query_ivfpq_index`` runs) followed by the threshold, so its hits
+    are exactly the served rows at or above it. The batch is
+    Arrow-materialized once driver-side and broadcast; ``max_rows`` is
+    the honesty guard on that class: a frame past the ingest contract
+    bound raises loudly instead of silently materializing a corpus
+    driver-side — corpus-scale screening is ``embedding_near_dups``'
+    job. A batch dimension other than the index's fails loudly before
+    any job touches the index.
 
     Returns (vec_id, dup_of, cos_sim) for batch vectors whose best
     stored matches clear the threshold (several rows when several
@@ -1428,232 +1322,24 @@ def screen_against_ivfpq_index(
     batch's id set IS this batch's earlier attempt, before or after a
     fold).
 
-    Determinism note: the final output order/content is pinned by the
-    exact-cosine window; inside the ADC stage, candidates tied exactly
-    at the k·refine_factor cut boundary may select either tied row
-    (both score identically downstream) — the serve path's global
-    (adc, neighbor_id) row_number is exact there, the one semantic
-    difference between the two implementations.
-
     Recall caveat (the IVF trade, documented not hidden): a true
     near-dup stored in an UNPROBED cell is missed. At near-dup
     thresholds (cos ≥ 0.9) the quantizer maps the batch vector and its
     stored near-twin to the same or adjacent centroids, so the default
     ``n_probe`` covers the realistic regime; raise it (or use
     ``recommend_n_probe``) where misses are costlier than IO."""
-    import numpy as np
-    import pandas as pd
-
-    meta, cell_mat, books = _load_quantizers(spark, path)
-    d, sub, m = meta["d"], meta["sub"], meta["m"]
-    n_probe = min(int(n_probe), int(meta["n_centroids"]))
-    k_cand = int(k) * int(refine_factor)
-
-    src = batch.select(
-        F.col(id_col).alias("vec_id"),
-        _vec_to_python_expr(batch, vec_col).alias("v0"),
-    )
-    id_dtype = dict(src.dtypes)["vec_id"]
-    empty = spark.createDataFrame(
-        [], f"vec_id {id_dtype}, dup_of {id_dtype}, cos_sim double"
-    )
-    # limit BEFORE the collect so an over-contract frame costs at most
-    # max_rows+1 rows of driver memory before the loud refusal
-    qpdf = src.limit(int(max_rows) + 1).toPandas()
-    if len(qpdf) > max_rows:
-        raise ValueError(
-            f"screen_against_ivfpq_index is for contract-bounded "
-            f"ingest batches: got {len(qpdf)} rows > max_rows="
-            f"{max_rows}. Use embedding_near_dups / query_ivfpq_index "
-            f"for corpus-scale sweeps."
-        )
-    if not len(qpdf):
-        return empty
-    x = np.stack(qpdf["v0"].to_numpy()).astype(np.float64)
-    if x.shape[1] != d:
-        raise ValueError(
-            f"batch dimension {x.shape[1]} != index dimension {d}"
-        )
-    norms = np.sqrt(np.einsum("ij,ij->i", x, x))
-    keep = norms > 0
-    if not keep.any():
-        return empty
-    qids = qpdf["vec_id"].to_numpy()[keep]
-    x = x[keep] / norms[keep, None]
-
-    cell_sq = np.einsum("ij,ij->i", cell_mat, cell_mat)
-    cd = -2.0 * (x @ cell_mat.T) + cell_sq
-    # n_probe smallest cell distances, ties by cell id (same rule as
-    # the serve path's (cd, cell) row_number)
-    order = np.lexsort(
-        (np.broadcast_to(np.arange(cd.shape[1]), cd.shape), cd), axis=-1
-    )[:, :n_probe]
-    # cell → positions of the queries probing it; queries ride the
-    # broadcast into the code scan, so no query vector ever shuffles
-    cell_to_pos = {
-        int(c): np.nonzero((order == c).any(axis=1))[0]
-        for c in np.unique(order)
-    }
-    probed_cells = sorted(cell_to_pos)
-    bc = spark.sparkContext.broadcast((qids, x, cell_to_pos))
-
-    codes = _read_index_table(spark, path, "codes").filter(
-        F.col("cell").isin(probed_cells)
-    ).select("neighbor_id", F.col("cell").cast("int").alias("cell"), "codes")
-    # Explicit fixed-N repartition on the group key: the code rows are
-    # NARROW (the design's point), so AQE — which sizes partitions by
-    # bytes and is blind to the Python ADC work behind them — would
-    # coalesce this exchange to ~1 task and serialize the scan
-    # (measured ×4 at the 10× decade). A user-specified partition
-    # count is exempt from AQE coalescing, and the groupBy below
-    # reuses this exchange (same key, same count — no second shuffle).
-    n_scan_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    codes = codes.repartition(n_scan_parts, "cell")
-
-    book_sq = [np.einsum("ij,ij->i", b, b) for b in books]
-
-    def scan(key, cpdf):
-        cell = int(key[0])
-        b_ids, b_x, b_pos = bc.value
-        pos = b_pos.get(cell)
-        if pos is None or not len(cpdf):
-            return pd.DataFrame(
-                {
-                    "vec_id": b_ids[:0],
-                    "neighbor_id": cpdf["neighbor_id"][:0],
-                    "adc": pd.Series([], dtype="float64"),
-                }
-            )
-        xq = b_x[pos]
-        resid = xq - cell_mat[cell]
-        codes_m = np.stack(cpdf["codes"].to_numpy()).astype(np.int64)
-        nid = cpdf["neighbor_id"].to_numpy()
-        qid = b_ids[pos]
-        n_c = len(nid)
-        take = min(k_cand, n_c)
-        out_q, out_n, out_a = [], [], []
-        for lo in range(0, len(xq), 256):  # bound peak adc memory
-            r = resid[lo : lo + 256]
-            adc = np.zeros((len(r), n_c))
-            for j in range(m):
-                rj = r[:, j * sub : (j + 1) * sub]
-                # full squared distance per (query, code): |r|^2 -
-                # 2 r.b + |b|^2 — the |r|^2 term keeps ADC comparable
-                # ACROSS cells, as in the serve path
-                tab = (
-                    -2.0 * (rj @ books[j].T)
-                    + book_sq[j]
-                    + np.einsum("ij,ij->i", rj, rj)[:, None]
-                )
-                adc += tab[:, codes_m[:, j]]
-            if take < n_c:
-                part = np.argpartition(adc, take - 1, axis=1)[:, :take]
-            else:
-                part = np.broadcast_to(
-                    np.arange(n_c), (len(r), n_c)
-                ).copy()
-            rows = np.repeat(np.arange(len(r)), part.shape[1])
-            cols = part.reshape(-1)
-            out_q.append(np.repeat(qid[lo : lo + 256], part.shape[1]))
-            out_n.append(nid[cols])
-            out_a.append(adc[rows, cols])
-        return pd.DataFrame(
-            {
-                "vec_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "adc": np.concatenate(out_a),
-            }
-        )
-
-    cand_cells = codes.groupBy("cell").applyInPandas(
-        scan, f"vec_id {id_dtype}, neighbor_id {id_dtype}, adc double"
-    )
-    # global per-query candidate cut across the probed cells, then the
-    # bounded exact refine — true cosines, serve-path tie order
-    w_adc = Window.partitionBy("vec_id").orderBy(
-        F.asc("adc"), F.asc("neighbor_id")
-    )
-    cand = (
-        cand_cells.filter(F.col("neighbor_id") != F.col("vec_id"))
-        .withColumn("_r", F.row_number().over(w_adc))
-        .filter(F.col("_r") <= k_cand)
-        .select("vec_id", "neighbor_id")
-    )
-    # EXACT-cosine refine in the Python stage (r16): the r14/r15 shape
-    # computed 1M+ cosines per decade batch through interpreted JVM
-    # higher-order functions (zip_with + aggregate: ~2·d lambda
-    # evaluations per candidate), pinned to however few tasks the
-    # vectors scan produced — measured ~8 s of a ~13 s screen at the
-    # 10× decade. Instead each candidate stored vector crosses the
-    # Arrow boundary ONCE (grouping candidate pairs per neighbor first,
-    # so v is never duplicated per query) and numpy accumulates the
-    # dot product COLUMN BY COLUMN in ascending j — the exact
-    # left-to-right double-precision fold the JVM aggregate performed,
-    # so every unrounded cosine is bit-identical; rounding stays in the
-    # JVM (Spark round is BigDecimal HALF_UP — not numpy's
-    # half-to-even).
-    cand_by_nb = cand.groupBy("neighbor_id").agg(
-        F.collect_list("vec_id").alias("qids")
-    )
-    vectors = _read_index_table(spark, path, "vectors")
-    pos_of = {v: i for i, v in enumerate(qids.tolist())}
-    bc_pos = spark.sparkContext.broadcast(pos_of)
-
-    def refine(batches):
-        b_ids, b_x, b_pos = bc.value
-        posmap = bc_pos.value
-        # once per task: query columns contiguous, so the per-j gathers
-        # below stream over kilobyte-to-megabyte vectors instead of
-        # striding over a |pairs|×d panel (the obvious vr=v[rep] form
-        # materializes ~0.5 GB at the decade and thrashes every pass)
-        q_t = np.ascontiguousarray(b_x.T)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v_t = np.ascontiguousarray(np.stack(pdf["v"].to_numpy()).T)
-            qlists = pdf["qids"].to_numpy()
-            lens = np.fromiter(
-                (len(q) for q in qlists), dtype=np.int64, count=len(qlists)
-            )
-            rep = np.repeat(np.arange(len(qlists)), lens)
-            flat_q = np.concatenate([np.asarray(q) for q in qlists])
-            pos = pd.Series(flat_q).map(posmap).to_numpy()
-            acc = np.zeros(len(flat_q), dtype=np.float64)
-            for j in range(v_t.shape[0]):  # ascending j: the JVM fold order
-                acc += v_t[j][rep] * q_t[j][pos]
-            yield pd.DataFrame(
-                {
-                    "vec_id": flat_q,
-                    "dup_of": pdf["neighbor_id"].to_numpy()[rep],
-                    "cos_raw": acc,
-                }
-            )
-
-    refined = (
-        vectors.join(F.broadcast(cand_by_nb), "neighbor_id")
-        .select("neighbor_id", "v", "qids")
-        .mapInPandas(
-            refine,
-            f"vec_id {id_dtype}, dup_of {id_dtype}, cos_raw double",
-        )
-    )
-    w_cos = Window.partitionBy("vec_id").orderBy(
-        F.desc("cos_sim"), F.asc("dup_of")
-    )
+    id_dtype = batch.select(id_col).dtypes[0][1]
     out = (
-        refined.select(
-            "vec_id", "dup_of", F.round("cos_raw", 6).alias("cos_sim")
+        _search_index(
+            spark, path, batch, id_col, vec_col, k, n_probe, refine_factor,
+            max_rows, "batch",
         )
-        # transient duplicate vector rows (torn-batch orphans folded
-        # before their replay completes) are bit-identical by contract
-        # — whole-row distinct removes exactly them, as in the serve
-        # path
-        .dropDuplicates()
-        .withColumn("_rank", F.row_number().over(w_cos))
-        .filter((F.col("_rank") <= k) & (F.col("cos_sim") >= threshold))
-        .drop("_rank")
+        .filter(F.col("cos_sim") >= threshold)
+        .select(
+            F.col("query_id").alias("vec_id"),
+            F.col("neighbor_id").cast(id_dtype).alias("dup_of"),
+            "cos_sim",
+        )
     )
     if exclude_ids is not None:
         out = out.join(

@@ -1,5 +1,5 @@
 """Deduplication operators: exact fingerprint, exact n-gram Jaccard
-(blocked by shared shingles), MinHash+banding LSH, and SimHash.
+(blocked by shared shingles), and MinHash+banding LSH.
 
 Scale design (the whole point of these shapes):
 - Fingerprint dedup is ONE hash-aggregate shuffle on a 32-byte key —
@@ -10,9 +10,6 @@ Scale design (the whole point of these shapes):
   a fixed-width groupBy, banding turns "similar" into "equal bucket
   key", and only bucket-mates are verified. No all-pairs join exists
   anywhere in this module.
-- SimHash collapses a document to 64 bits; candidates share one of four
-  16-bit chunks (any pair within Hamming distance 3 must agree on at
-  least one chunk), verified with bit_count(xor).
 """
 
 from __future__ import annotations
@@ -311,74 +308,6 @@ def minhash_near_dedup(
         .distinct()
     )
     return _jaccard_on_pairs(sh, candidates, id_col, threshold)
-
-
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup: 64-bit signature from the sign of per-bit
-    weighted token-hash sums; candidate pairs share at least one of four
-    16-bit chunks (pigeonhole: hamming<=3 over 4 chunks forces an equal
-    chunk), verified with bit_count(xor).
-    """
-    tok = df.select(F.col(id_col), F.explode(tokens_expr(text_col)).alias("t"))
-    h = F.xxhash64("t")
-    bit_sums = tok.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"b{i}")
-            for i in range(64)
-        ]
-    )
-    sig_expr = None
-    for i in range(64):
-        bit = F.when(F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig_expr = bit if sig_expr is None else sig_expr.bitwiseOR(bit)
-    sig = bit_sums.select(F.col(id_col), sig_expr.alias("simhash"))
-
-    chunks = sig.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_idx"),
-                        F.shiftright(F.col("simhash"), 16 * c)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("chunk"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("cc"),
-    ).select(id_col, "simhash", "cc.chunk_idx", "cc.chunk")
-    left = chunks.select(
-        F.col(id_col).alias("doc_a"), F.col("simhash").alias("sig_a"), "chunk_idx", "chunk"
-    )
-    right = chunks.select(
-        F.col(id_col).alias("doc_b"), F.col("simhash").alias("sig_b"), "chunk_idx", "chunk"
-    )
-    return (
-        # merge hint: the chunk frame is a 4-way per-doc explode —
-        # static broadcast estimates are fiction (see _jaccard_on_pairs)
-        left.join(right.hint("merge"), ["chunk_idx", "chunk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-        .orderBy("doc_a", "doc_b")
-    )
 
 
 def duplicated_chunk_stats(

@@ -927,8 +927,8 @@ def exact_self_similarity_join(
     candidate shuffle, recall 1.0 by construction. LSH exists to avoid
     an N×N product over a CORPUS; a micro-batch is not a corpus.
 
-    Execution shape (the screen-shaped-scan precedent,
-    ``ann_index.screen_against_ivfpq_index``): the batch matrix is
+    Execution shape (the broadcast-batch precedent of
+    ``_ivfpq_search``, the IVF-PQ search kernel): the batch matrix is
     materialized ONCE driver-side via Arrow (|batch| × d floats —
     25 MB at the 25k×128 contract point) and broadcast; one
     ``mapInPandas`` pass over the same frame scores
@@ -1581,13 +1581,16 @@ def _ivfpq_fit(
     """The IVF-PQ BUILD stage, shared verbatim by ``ivfpq_topk``
     (fit-and-query in one call) and ``llmdata.ann_index`` (fit once,
     persist, query many — the billion-scale usage). Returns
-    (cells, codebooks, encoded corpus, d, sub): coarse KMeans cell
-    centers, shared residual codebooks (seeded ``seed + 1 + j`` per
-    subspace), and (neighbor_id, v, cell, codes) rows. Seeded and
+    (cell_mat, books, encoded corpus, d, sub): the coarse KMeans cell
+    centers as an [n_centroids × d] array, the shared residual
+    codebooks (seeded ``seed + 1 + j`` per subspace) as m
+    [codebook_k × sub] arrays, and (neighbor_id, v, cell, codes) rows —
+    the arrays are the quantizer state ``_ivfpq_search`` takes. Seeded and
     input-deterministic, so the two callers produce identical indexes
     from identical inputs (parity pinned in tests/test_ann_index.py).
     The corpus and assignment frames are cached (each is read by the
     coarse fit, the m codebook fits, and the encode pass)."""
+    import numpy as np
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -1615,9 +1618,9 @@ def _ivfpq_fit(
     coarse = KMeans(
         k=n_centroids, seed=seed, featuresCol="_fv", predictionCol="cell"
     ).fit(vecs)
+    cell_mat = np.stack(coarse.clusterCenters()).astype(np.float64)
     cells = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(coarse.clusterCenters())],
-        "cell int, cv array<double>",
+        list(enumerate(cell_mat.tolist())), "cell int, cv array<double>"
     )
     assigned = (
         coarse.transform(vecs)
@@ -1634,25 +1637,277 @@ def _ivfpq_fit(
 
     # Shared PQ codebooks trained on pooled residuals, then encode.
     enc = assigned
-    codebooks = []
+    books = []
     for j in range(m):
         enc = enc.withColumn(f"_f{j}", array_to_vector(F.slice("r", j * sub + 1, sub)))
         km = KMeans(
             k=codebook_k, seed=seed + 1 + j, featuresCol=f"_f{j}", predictionCol=f"_c{j}"
         ).fit(enc)
         enc = km.transform(enc)
-        codebooks += [
-            (j, c, [float(x) for x in cen])
-            for c, cen in enumerate(km.clusterCenters())
-        ]
+        books.append(np.stack(km.clusterCenters()).astype(np.float64))
     enc = enc.select(
         "neighbor_id",
         "v",
         "cell",
         F.array(*[F.col(f"_c{j}") for j in range(m)]).alias("codes"),
     )
-    cb = spark.createDataFrame(codebooks, "j int, code int, cen array<double>")
-    return cells, cb, enc, d, sub
+    return cell_mat, books, enc, d, sub
+
+
+# Largest query frame ``_ivfpq_search`` materializes driver-side and
+# broadcasts: the ingest contract's batch ceiling (~50 MB at d=128).
+SEARCH_MAX_ROWS = 50_000
+
+
+def _vec_to_python_expr(df: DataFrame, vec_col: str):
+    """The vector column as it should cross the JVM→Python Arrow
+    boundary: float/double element types ship AS-IS (the numpy side's
+    ``astype(float64)`` widens exactly, so values are bit-identical —
+    a JVM ``cast("array<double>")`` on a float column would only double
+    the Arrow bytes and pay a per-element array transform before the
+    boundary); anything else still casts to double."""
+    try:
+        et = df.schema[vec_col].dataType.elementType.simpleString()
+    except Exception:
+        et = ""
+    if et in ("float", "double"):
+        return F.col(vec_col)
+    return F.col(vec_col).cast("array<double>")
+
+
+def _ivfpq_search(
+    queries: DataFrame,
+    cell_mat,
+    books,
+    codes: DataFrame,
+    vectors: DataFrame,
+    k: int,
+    n_probe: int,
+    refine_factor: int,
+    max_rows: int,
+    what: str = "query",
+) -> DataFrame:
+    """The one IVF-PQ search kernel: probe → ADC scan → exact refine.
+    ``ivfpq_topk`` runs it on its in-memory fit;
+    ``ann_index.query_ivfpq_index`` and
+    ``ann_index.screen_against_ivfpq_index`` run it on a persisted
+    index's tables.
+
+    Inputs: ``queries`` (query_id, v); the quantizer arrays
+    ``cell_mat`` [n_centroids × d] and ``books`` (m arrays
+    [codebook_k × sub]); the corpus as a ``codes`` frame
+    (neighbor_id, cell, codes) and a ``vectors`` frame
+    (neighbor_id, v) of unit vectors. Returns
+    (query_id, neighbor_id, cos_sim, rank), unordered: per query, the
+    k best true cosines (rounded to 6, ties by neighbor_id) among its
+    k·refine_factor best-ADC candidates (ties by neighbor_id) over its
+    n_probe nearest cells (ties by cell), its own id excluded.
+    Zero-norm queries have no direction and return nothing.
+
+    Shape: (1) the query frame — at most ``max_rows`` rows, refused
+    loudly past that — is Arrow-materialized ONCE and broadcast;
+    normalization, the probe and the cell→query map run in numpy on
+    the driver. (2) The probed cells, at most n_centroids ids, reach
+    the codes scan as a static ``isin`` filter, which a
+    ``partitionBy(cell)`` table turns into a PartitionFilter.
+    (3) ``groupBy(cell).applyInPandas`` over the narrow code rows
+    builds each probing query's m × codebook_k residual ADC table,
+    scores the cell's rows by table lookup, and cuts each query's
+    k·refine_factor best in exact (adc, neighbor_id) order. No query
+    vector shuffles. (4) A window makes the same cut across the probed
+    cells. The bounded candidate set, grouped per neighbor, broadcasts
+    against the vectors table, and each candidate vector crosses the
+    Arrow boundary once for the exact cosine.
+
+    Every sum is a left-to-right double fold over ascending index:
+    query norms, probe distances and table entries over the
+    dimensions, ADC over the subspaces, cosines over the dimensions.
+    So every score is bit-identical to the same sum written as a JVM
+    ``aggregate(zip_with(...))`` expression (test-pinned). Rounding
+    stays in the JVM, since Spark's round is BigDecimal HALF_UP and
+    numpy's is half-to-even.
+    Duplicate vector rows for one id (a torn batch's orphans folded
+    before its replay) are bit-identical by contract, and a whole-row
+    distinct before the rank removes exactly them."""
+    import numpy as np
+    import pandas as pd
+
+    spark = queries.sparkSession
+    q_dtype = dict(queries.dtypes)["query_id"]
+    n_dtype = dict(codes.dtypes)["neighbor_id"]
+    empty = spark.createDataFrame(
+        [],
+        f"query_id {q_dtype}, neighbor_id {n_dtype}, cos_sim double, "
+        "rank int",
+    )
+    # limit BEFORE the collect so an over-contract frame costs at most
+    # max_rows+1 rows of driver memory before the loud refusal
+    qpdf = (
+        queries.select("query_id", _vec_to_python_expr(queries, "v").alias("v"))
+        .limit(int(max_rows) + 1)
+        .toPandas()
+    )
+    if len(qpdf) > max_rows:
+        raise ValueError(
+            f"IVF-PQ search takes contract-bounded {what} frames: got "
+            f"{len(qpdf)} rows > max_rows={max_rows}. Split the batch, "
+            f"or use embedding_near_dups for corpus-scale sweeps."
+        )
+    if not len(qpdf):
+        return empty
+    x = np.stack(qpdf["v"].to_numpy()).astype(np.float64)
+    d = cell_mat.shape[1]
+    if x.shape[1] != d:
+        raise ValueError(
+            f"{what} dimension {x.shape[1]} != index dimension {d}"
+        )
+    sq = np.zeros(len(x))
+    for j in range(d):
+        sq += x[:, j] * x[:, j]
+    norms = np.sqrt(sq)
+    keep = norms > 0
+    if not keep.any():
+        return empty
+    qids = qpdf["query_id"].to_numpy()[keep]
+    x = x[keep] / norms[keep, None]
+
+    cd = np.zeros((len(x), len(cell_mat)))
+    for j in range(d):
+        diff = x[:, j, None] - cell_mat[None, :, j]
+        cd += diff * diff
+    # stable sort: equal distances keep ascending cell order
+    probe = np.argsort(cd, axis=1, kind="stable")[:, : int(n_probe)]
+    cell_to_pos = {
+        int(c): np.nonzero((probe == c).any(axis=1))[0]
+        for c in np.unique(probe)
+    }
+    pos_of = {v: i for i, v in enumerate(qids.tolist())}
+    bc = spark.sparkContext.broadcast((qids, x, cell_to_pos, pos_of))
+
+    m, sub = len(books), books[0].shape[1]
+    k_cand = int(k) * int(refine_factor)
+    # Explicit fixed-N repartition on the group key: the code rows are
+    # NARROW, so AQE — which sizes partitions by bytes and is blind to
+    # the Python ADC work behind them — would coalesce this exchange to
+    # ~1 task and serialize the scan (measured ×4 at the 10× decade).
+    # A user-specified partition count is exempt from AQE coalescing,
+    # and the groupBy reuses this exchange.
+    n_scan_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    scan_rows = (
+        codes.filter(F.col("cell").isin(sorted(cell_to_pos)))
+        .select("neighbor_id", F.col("cell").cast("int").alias("cell"), "codes")
+        .repartition(n_scan_parts, "cell")
+    )
+
+    def scan(key, cpdf):
+        b_ids, b_x, b_pos, _ = bc.value
+        cell = int(key[0])
+        pos = b_pos.get(cell)
+        nid = cpdf["neighbor_id"].to_numpy()
+        if pos is None or not len(nid):
+            return pd.DataFrame(
+                {"query_id": b_ids[:0], "neighbor_id": nid[:0],
+                 "adc": np.empty(0)}
+            )
+        # columns in neighbor_id order: position order IS the tie order
+        order = np.argsort(nid, kind="stable")
+        nid = nid[order]
+        code_mat = np.stack(cpdf["codes"].to_numpy())[order].astype(np.int64)
+        resid = b_x[pos] - cell_mat[cell]
+        qid = b_ids[pos]
+        take = min(k_cand, len(nid))
+        # bound peak memory at ~4M adc doubles per query chunk
+        step = max(1, min(256, (1 << 22) // len(nid)))
+        out = []
+        for lo in range(0, len(pos), step):
+            r, q = resid[lo : lo + step], qid[lo : lo + step]
+            adc = np.zeros((len(r), len(nid)))
+            for j in range(m):
+                tab = np.zeros((len(r), len(books[j])))
+                for s in range(j * sub, (j + 1) * sub):
+                    diff = r[:, s, None] - books[j][None, :, s - j * sub]
+                    tab += diff * diff
+                adc += tab[:, code_mat[:, j]]
+            own = nid[None, :] == q[:, None]
+            adc[own] = np.inf
+            sel = ~own
+            if take < len(nid):
+                # exact (adc, neighbor_id) cut: everything below the
+                # take-th value, then the lowest-id rows tied at it
+                kth = np.partition(adc, take - 1, axis=1)[:, take - 1 : take]
+                below = adc < kth
+                tied = adc == kth
+                room = take - below.sum(axis=1, keepdims=True)
+                sel &= below | (tied & (np.cumsum(tied, axis=1) <= room))
+            rows, cols = np.nonzero(sel)
+            out.append((q[rows], nid[cols], adc[rows, cols]))
+        return pd.DataFrame(
+            {
+                "query_id": np.concatenate([o[0] for o in out]),
+                "neighbor_id": np.concatenate([o[1] for o in out]),
+                "adc": np.concatenate([o[2] for o in out]),
+            }
+        )
+
+    w_adc = Window.partitionBy("query_id").orderBy(
+        F.asc("adc"), F.asc("neighbor_id")
+    )
+    cand_by_nb = (
+        scan_rows.groupBy("cell")
+        .applyInPandas(
+            scan, f"query_id {q_dtype}, neighbor_id {n_dtype}, adc double"
+        )
+        .withColumn("_r", F.row_number().over(w_adc))
+        .filter(F.col("_r") <= k_cand)
+        .groupBy("neighbor_id")
+        .agg(F.array_sort(F.collect_list("query_id")).alias("qids"))
+    )
+
+    def refine(batches):
+        _, b_x, _, posmap = bc.value
+        # once per task: query columns contiguous, so the per-j gathers
+        # below stream over kilobyte-to-megabyte vectors instead of
+        # striding over a |pairs|×d panel
+        q_t = np.ascontiguousarray(b_x.T)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            v_t = np.ascontiguousarray(
+                np.stack(pdf["v"].to_numpy()).astype(np.float64).T
+            )
+            qlists = pdf["qids"].to_numpy()
+            lens = np.fromiter(
+                (len(q) for q in qlists), dtype=np.int64, count=len(qlists)
+            )
+            rep = np.repeat(np.arange(len(qlists)), lens)
+            flat_q = np.concatenate([np.asarray(q) for q in qlists])
+            pos = pd.Series(flat_q).map(posmap).to_numpy()
+            acc = np.zeros(len(flat_q))
+            for j in range(v_t.shape[0]):
+                acc += v_t[j][rep] * q_t[j][pos]
+            yield pd.DataFrame(
+                {
+                    "query_id": flat_q,
+                    "neighbor_id": pdf["neighbor_id"].to_numpy()[rep],
+                    "cos_raw": acc,
+                }
+            )
+
+    w_cos = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.asc("neighbor_id")
+    )
+    return (
+        vectors.join(F.broadcast(cand_by_nb), "neighbor_id")
+        .select("neighbor_id", "v", "qids")
+        .mapInPandas(
+            refine,
+            f"query_id {q_dtype}, neighbor_id {n_dtype}, cos_raw double",
+        )
+        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cos_sim"))
+        .dropDuplicates()
+        .withColumn("rank", F.row_number().over(w_cos))
+        .filter(F.col("rank") <= k)
+    )
 
 
 def ivfpq_topk(
@@ -1709,95 +1964,26 @@ def ivfpq_topk(
     residuals), so the broadcast state is m x codebook_k centroids +
     n_centroids cell centers regardless of corpus size.
 
-    Output and determinism match ``pq_topk`` (seeded, neighbor-id tie
-    order, refined scores are true cosines)."""
-    cells, cb, enc, d, sub = _ivfpq_fit(
+    This is ``_ivfpq_fit`` followed by ``_ivfpq_search``, the one
+    IVF-PQ search kernel that ``ann_index.query_ivfpq_index`` and
+    ``ann_index.screen_against_ivfpq_index`` run over a persisted
+    index; the encoded corpus serves as both its codes and its vectors
+    frame. The query set is materialized driver-side, at most
+    ``SEARCH_MAX_ROWS`` rows. Output and determinism match ``pq_topk``
+    (seeded, neighbor-id tie order, refined scores are true cosines)."""
+    cell_mat, books, enc, _, _ = _ivfpq_fit(
         df, id_col, vec_col, n_centroids, m, codebook_k, seed
     )
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv0"),
-    )
-    qnorm = F.sqrt(
-        F.aggregate(F.transform("qv0", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    q = (
-        q0.withColumn("n", qnorm)
-        .filter(F.col("n") > 0)
-        .select("query_id", F.transform("qv0", lambda x: x / F.col("n")).alias("qv"))
-    )
-
-    # Probe the n_probe nearest cells per query.
-    cell_d = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.asc("cd"), F.asc("cell"))
-    probes = (
-        q.join(F.broadcast(cells))
-        .select(
-            "query_id",
-            "qv",
-            "cell",
-            cell_d.alias("cd"),
-            F.zip_with("qv", "cv", lambda x, y: x - y).alias("qr"),
-        )
-        .withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "cell", "qr")
-    )
-
-    # Per-(query, cell) ADC tables from the query RESIDUAL.
-    sqd = F.aggregate(
-        F.zip_with(
-            F.slice("qr", F.col("j") * sub + 1, sub),
-            F.col("cen"),
-            lambda x, y: (x - y) * (x - y),
+    return _ivfpq_search(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("v")
         ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    tabs = (
-        probes.join(F.broadcast(cb))
-        .select("query_id", "qv", "cell", "j", "code", sqd.alias("dd"))
-        .groupBy("query_id", "qv", "cell", "j")
-        .agg(F.array_sort(F.collect_list(F.struct("code", "dd"))).alias("cl"))
-        .select(
-            "query_id", "qv", "cell", "j",
-            F.transform("cl", lambda s: s["dd"]).alias("tab"),
-        )
-        .groupBy("query_id", "qv", "cell")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "tab"))).alias("jt"))
-        .select(
-            "query_id", "qv", "cell",
-            F.transform("jt", lambda s: s["tab"]).alias("tables"),
-        )
-    )
-
-    # Score ONLY probed cells' codes (equality join on cell), refine.
-    adc = F.aggregate(
-        F.zip_with("codes", "tables", lambda c, t: F.element_at(t, c.cast("int") + 1)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        tabs.join(enc, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "qv", "neighbor_id", "v", adc.alias("adc"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    cand = scored.withColumn("prank", F.row_number().over(w_adc)).filter(
-        F.col("prank") <= k * refine_factor
-    )
-    cos = F.round(
-        F.aggregate(F.zip_with("v", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x),
-        6,
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w_cos))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+        cell_mat,
+        books,
+        enc.select("neighbor_id", "cell", "codes"),
+        enc.select("neighbor_id", "v"),
+        k,
+        n_probe,
+        refine_factor,
+        SEARCH_MAX_ROWS,
+    ).orderBy("query_id", "rank")

@@ -1609,17 +1609,6 @@ def q_near_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(pairs)
 
 
-# `simhash_pairs` RETIRED from the registry in r09 per SCALING.md's
-# retirement policy (first exercise of the ranked list): its
-# banded-signature near-dup shape is pinned oracle-green by
-# ngram_jaccard_pairs / ngram_containment_pairs, the signature-bucketing
-# physical plan by near_dedup_minhash, and the simhash-specific bit math
-# keeps its determinism pytest (tests/test_llmdata.py). The operator
-# (llmdata/dedup.py::simhash_pairs) is unchanged; only the
-# driver-verification slot was reclaimed — spent on
-# ols_trend_exactness_audit and ann_pairs_topk.
-
-
 # ---------------------------------------------------------------------------
 # LLM-data operators: similarity search + multimodal (embeddings/documents)
 # ---------------------------------------------------------------------------

@@ -12,19 +12,17 @@ batch against an index built on the full embeddings table of ``--dir``
 loop's three stages IN ISOLATION on the same cached batch:
 
   screen_s  — ``screen_against_ivfpq_index`` (the corpus-growth term)
-  peel_s    — in-batch pair mine + ``_greedy_losers`` (the r14
-              bottleneck; ``--peel {exact,lsh,both}`` selects the r15
-              exact path, the r14 BRP-LSH path, or both in one window
-              for a like-for-like ratio)
+  peel_s    — in-batch exact pair mine (``exact_self_similarity_join``)
+              + ``_greedy_losers``
   admit_s   — ``append_to_ivfpq_index`` of the survivors
 
-With ``--peel both`` it also verifies the two miners ADMIT THE SAME
-SET (loser parity), so the speedup claim carries its own correctness
-witness. Prints one JSON line.
+The BRP-LSH miner is no longer timed: the side-by-side run recorded in
+SCALING.md measured the exact miner ×201 faster with the same losers.
+Prints one JSON line.
 
 Usage:
     python scripts/profile_semantic_peel.py [--dir .rehearsal/sf1x]
-        [--batch-rows 25000] [--peel both] [--threshold 0.9]
+        [--batch-rows 25000] [--threshold 0.9]
 """
 
 from __future__ import annotations
@@ -43,8 +41,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--dir", default=".rehearsal/sf1x")
     ap.add_argument("--batch-rows", type=int, default=25_000)
-    ap.add_argument("--peel", choices=["exact", "lsh", "both"],
-                    default="both")
     ap.add_argument("--threshold", type=float, default=0.9)
     args = ap.parse_args()
 
@@ -60,7 +56,6 @@ def main() -> None:
     )
     from sales_forecast_pyspark_spark.llmdata.similarity import (
         exact_self_similarity_join,
-        lsh_similarity_join,
     )
     from sales_forecast_pyspark_spark.session import get_spark
 
@@ -130,7 +125,7 @@ def main() -> None:
     out["screen_s"] = round(time.time() - t0, 2)
     out["store_hits"] = n_store_hits
 
-    # ---- stage 2: the in-batch peel, per miner ----
+    # ---- stage 2: the in-batch peel ----
     norm = F.sqrt(
         F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x * x)
     )
@@ -147,48 +142,20 @@ def main() -> None:
         .localCheckpoint(eager=True)
     )
     dist_t = (2.0 * (1.0 - args.threshold)) ** 0.5
-    losers = {}
-    for miner in ("exact", "lsh"):
-        if args.peel not in (miner, "both"):
-            continue
-        t0 = time.time()
-        if miner == "exact":
-            pairs = exact_self_similarity_join(
-                normed, "vec_id", "embedding", distance_threshold=dist_t
-            )
-        else:
-            pairs = lsh_similarity_join(
-                normed, "vec_id", "embedding", distance_threshold=dist_t
-            )
-        pairs = pairs.select(
-            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-        ).join(
-            dup_store.select(F.col("vec_id").alias("doc_a")),
-            "doc_a",
-            "left_anti",
-        ).join(
-            dup_store.select(F.col("vec_id").alias("doc_b")),
-            "doc_b",
-            "left_anti",
-        )
-        mined = _greedy_losers(pairs).localCheckpoint(eager=True)
-        n_losers = mined.count()
-        losers[miner] = mined
-        out[f"peel_{miner}_s"] = round(time.time() - t0, 2)
-        out[f"peel_{miner}_losers"] = n_losers
-    if len(losers) == 2:
-        out["loser_parity"] = bool(
-            losers["exact"].exceptAll(losers["lsh"]).count() == 0
-            and losers["lsh"].exceptAll(losers["exact"]).count() == 0
-        )
-        out["peel_speedup"] = (
-            round(out["peel_lsh_s"] / out["peel_exact_s"], 1)
-            if out["peel_exact_s"]
-            else None
-        )
+    t0 = time.time()
+    pairs = exact_self_similarity_join(
+        normed, "vec_id", "embedding", distance_threshold=dist_t
+    ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+    pairs = pairs.join(
+        dup_store.select(F.col("vec_id").alias("doc_a")), "doc_a", "left_anti"
+    ).join(
+        dup_store.select(F.col("vec_id").alias("doc_b")), "doc_b", "left_anti"
+    )
+    peel = _greedy_losers(pairs).localCheckpoint(eager=True)
+    out["peel_losers"] = peel.count()
+    out["peel_s"] = round(time.time() - t0, 2)
 
     # ---- stage 3: admission of the survivors ----
-    peel = losers.get("exact") or losers.get("lsh")
     survivors = batch.join(dup_store, "vec_id", "left_anti").join(
         peel.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_anti"
     )

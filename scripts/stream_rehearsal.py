@@ -839,13 +839,16 @@ def run_dedup_screen_ratio(spark, sf_dir, files_per_trigger) -> dict:
             docs.unionByName(batch), threshold=0.5
         ).count()
         oneshot_s = time.time() - t0
+        # the ratio of the REPORTED (rounded) times, so a reader can
+        # recompute it from the same record
+        screen_s, oneshot_s = round(screen_s, 2), round(oneshot_s, 2)
         return {
             "path": "dedup_screen_ratio",
             "corpus_docs": n_docs,
             "batch_docs": 500,
             "build_s": round(build_s, 2),
-            "screen_s": round(screen_s, 2),
-            "oneshot_s": round(oneshot_s, 2),
+            "screen_s": screen_s,
+            "oneshot_s": oneshot_s,
             "ratio": round(oneshot_s / max(screen_s, 1e-9), 2),
             "screen_hits": n_hits,
             "oneshot_pairs": n_oneshot,

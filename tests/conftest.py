@@ -4,6 +4,8 @@ with the testdata views registered (mirroring the driver's oracle setup).
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -12,6 +14,30 @@ from sales_forecast_pyspark_spark.sources.readers import TESTDATA_TABLES
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+
+
+def pytest_collection_modifyitems(config, items):
+    """Skip ``slow`` soak tests unless a marker expression was given
+    (``-m slow``, ``-m "slow or not slow"``) or the test was named by
+    node id (``tests/test_x.py::test_y``), so asking for one slow test
+    runs it instead of silently deselecting it."""
+    if config.getoption("markexpr"):
+        return
+    named = []
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            rel = os.path.relpath(os.path.abspath(path), config.rootpath)
+            named.append(rel.replace(os.sep, "/") + "::" + rest)
+    skip = pytest.mark.skip(
+        reason="slow soak: run with -m slow or name it by node id"
+    )
+    for item in items:
+        if "slow" in item.keywords and not any(
+            item.nodeid == n or item.nodeid.startswith((n + "[", n + "::"))
+            for n in named
+        ):
+            item.add_marker(skip)
 
 
 @pytest.fixture(scope="session")

@@ -49,9 +49,8 @@ def test_index_query_matches_in_memory_operator(spark, emb, index_path):
 
 
 def test_screen_matches_serve_path_hits(spark, emb, index_path):
-    """The r14 screen-shaped scan (Arrow probe assignment + per-cell
-    cogroup ADC + bounded exact refine) must agree with the
-    expression-built serve path on the screening contract: the same
+    """The screen (the serve path's search kernel plus a threshold)
+    must agree with the serve path on the screening contract: the same
     (vec_id, dup_of, cos_sim) hit rows at the threshold, for a batch
     mixing exact copies of stored vectors (must hit at 1.0) and
     re-keyed random corpus rows (no near-twin at 0.9). refine_factor
@@ -93,6 +92,62 @@ def test_screen_matches_serve_path_hits(spark, emb, index_path):
         (v, d) for v, d, c in b if c >= 0.999999 and v - 40_000 == d
     }
     assert {v for v, _ in hit_twins} == copy_ids
+    # a replayed batch of STORED ids: each query's own row sits in its
+    # probed cell at ADC ~0 and must leave the candidate pool BEFORE the
+    # per-cell cut, or a tight cut (k·refine_factor = 1) keeps only the
+    # self row and the screen drops every query the serve path answers
+    replay = emb.filter(F.col("vec_id") < 300).localCheckpoint(eager=True)
+    for k, refine_factor, n_probe in ((1, 1, 1), (5, 2, 2)):
+        served = {
+            (r["query_id"], r["neighbor_id"], r["cos_sim"])
+            for r in query_ivfpq_index(
+                spark, index_path, replay, k=k, n_probe=n_probe,
+                refine_factor=refine_factor,
+            ).collect()
+        }
+        for threshold in (-1.0, 0.5):
+            screened = {
+                tuple(r)
+                for r in screen_against_ivfpq_index(
+                    spark, index_path, replay, threshold=threshold, k=k,
+                    n_probe=n_probe, refine_factor=refine_factor,
+                ).collect()
+            }
+            want = {t for t in served if t[2] >= threshold}
+            assert screened == want, (k, refine_factor, n_probe, threshold)
+        assert len(served) >= 0.9 * 300 * k
+
+
+def test_served_cosines_equal_the_jvm_fold(spark, emb, index_path):
+    """The search kernel sums in numpy in the JVM fold's order, so each
+    served cos_sim equals the same cosine written as Spark expressions
+    (query normalized by transform/aggregate, dot product by
+    zip_with/aggregate, round 6), bit for bit."""
+
+    def fold(arr):
+        return F.aggregate(arr, F.lit(0.0), lambda a, x: a + x)
+
+    queries = emb.filter(F.col("vec_id") < 20)
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv0"),
+    ).withColumn("n", F.sqrt(fold(F.transform("qv0", lambda x: x * x))))
+    q = q.select(
+        "query_id", F.transform("qv0", lambda x: x / F.col("n")).alias("qv")
+    )
+    rows = (
+        query_ivfpq_index(spark, index_path, queries, k=5)
+        .join(q, "query_id")
+        .join(spark.read.parquet(f"{index_path}/vectors"), "neighbor_id")
+        .select(
+            "cos_sim",
+            F.round(fold(F.zip_with("v", "qv", lambda a, b: a * b)), 6)
+            .alias("ref"),
+        )
+        .collect()
+    )
+    assert len(rows) == 100
+    assert all(r["cos_sim"] == r["ref"] for r in rows)
 
 
 def test_index_scan_prunes_unprobed_cell_partitions(spark, emb, index_path):
@@ -173,6 +228,12 @@ def test_quantizer_memo_hits_and_invalidates_on_rebuild(
     m1, c1, b1 = _load_quantizers(spark, path)
     m2, c2, b2 = _load_quantizers(spark, path)
     assert c2 is c1 and b2 is b1  # memo hit: same arrays, no reload
+    # shared by every caller, so an in-place op must fail, not poison
+    # later loads
+    assert not c1.flags.writeable
+    assert not any(b.flags.writeable for b in b1)
+    with pytest.raises(ValueError, match="read-only"):
+        c1 += 1.0
     # an append mutates meta (n_vectors) but NOT the quantizers: the
     # memo must survive and meta must be fresh
     extra = emb.filter(

@@ -1,6 +1,6 @@
 """LLM-data operator tests: tokenization/quality semantics, fingerprint
 normalization, Jaccard correctness, MinHash recall vs the exact pairs,
-SimHash identity, and pandas-UDF/JVM tokenizer parity.
+and pandas-UDF/JVM tokenizer parity.
 """
 
 from __future__ import annotations
@@ -13,7 +13,6 @@ from sales_forecast_pyspark_spark.llmdata import (
     minhash_near_dedup,
     ngram_jaccard_pairs,
     shingles_expr,
-    simhash_pairs,
     text_stats,
     tokens_expr,
 )
@@ -86,12 +85,6 @@ def test_minhash_matches_exact_pairs_on_testdata(spark):
            minhash_near_dedup(docs, threshold=0.5).collect()}
     assert lsh == exact
     assert len(exact) > 0
-
-
-def test_simhash_identical_docs_zero_hamming(docs):
-    pairs = {(r["doc_a"], r["doc_b"]): r["hamming"]
-             for r in simhash_pairs(docs, max_hamming=10).collect()}
-    assert pairs[(0, 1)] == 0  # same tokens -> identical signature
 
 
 def test_pandas_tokenizer_parity(docs):
