@@ -61,11 +61,6 @@ BENCH_QUERIES = [
     "doc_keywords",
     "boilerplate_chunk_stats",
     "demand_autocorr",
-    # ngram_containment_pairs is NOT benched: its cost is the same
-    # co-shingle self-join the exact-Jaccard tier pays (dominates at
-    # ~10s), which the dedup block already represents via
-    # near_dedup_minhash — benching it would double-count that stage
-    # (same rationale as dedup_clusters, see BENCH_BASELINE.md).
     "event_value_profile",
     "pivot_event_counts",
     "events_json_extract",

@@ -20,11 +20,7 @@ from sales_forecast_pyspark_spark.llmdata.dedup import (
 )
 from sales_forecast_pyspark_spark.llmdata.multimodal import (
     attach_binary,
-    decode_dimensions,
-    decode_image,
     extract_features,
-    fake_decode,
-    resize_images,
     sample_frames,
 )
 from sales_forecast_pyspark_spark.llmdata.dedup_store import (
@@ -58,39 +54,20 @@ from sales_forecast_pyspark_spark.llmdata.ingest import (
 )
 from sales_forecast_pyspark_spark.llmdata.similarity import (
     cosine_topk,
-    dequantize_embeddings,
-    exact_self_similarity_join,
     group_centroids,
     ivf_topk,
-    lsh_pairs_topk,
     lsh_similarity_join,
-    quantize_embeddings,
 )
-from sales_forecast_pyspark_spark.llmdata.vectorize import (
-    srp_signatures,
-    term_tfidf,
-    tfidf_near_pairs,
-    tfidf_vectors,
-)
-from sales_forecast_pyspark_spark.llmdata.pack import (
-    pack_sequences,
-    pack_stats,
-)
+from sales_forecast_pyspark_spark.llmdata.vectorize import term_tfidf
 from sales_forecast_pyspark_spark.llmdata.text import (
-    STOPWORD_PATTERN,
     chunk_documents,
-    ngrams_expr,
-    repetition_stats,
     pii_counts_exprs,
     scrub_pii_expr,
-    lang_id_expr,
-    quality_exprs,
     text_stats,
     tokens_expr,
 )
 
 __all__ = [
-    "STOPWORD_PATTERN",
     "attach_binary",
     "append_to_fp_store",
     "append_to_ivfpq_index",
@@ -119,35 +96,18 @@ __all__ = [
     "connected_components",
     "cosine_topk",
     "dedup_clusters",
-    "dequantize_embeddings",
-    "quantize_embeddings",
-    "decode_dimensions",
-    "resize_images",
     "sample_frames",
-    "decode_image",
     "extract_features",
-    "fake_decode",
     "ivf_topk",
-    "exact_self_similarity_join",
-    "lsh_pairs_topk",
     "lsh_similarity_join",
     "fingerprint_expr",
     "group_centroids",
-    "lang_id_expr",
     "minhash_near_dedup",
     "ngram_jaccard_pairs",
-    "ngrams_expr",
-    "pack_sequences",
-    "pack_stats",
     "pii_counts_exprs",
-    "quality_exprs",
-    "repetition_stats",
     "scrub_pii_expr",
     "shingles_expr",
-    "srp_signatures",
     "term_tfidf",
     "text_stats",
-    "tfidf_near_pairs",
-    "tfidf_vectors",
     "tokens_expr",
 ]

@@ -940,9 +940,8 @@ def compact_ivfpq_index(
     append adds up-to-shuffle-partitions new files per touched cell
     partition, so an hourly-ingest index accumulates thousands of
     kilobyte files per cell whose per-file open/footer cost comes to
-    dominate the probed scan (the same failure mode
-    ``sources/sinks.py::compact_parquet`` exists for, specialized to
-    this index's two layout contracts):
+    dominate the probed scan (the classic small-files failure mode,
+    handled here under this index's two layout contracts):
 
     - ``codes`` is rewritten cell-by-cell with a size-aware file
       count (total bytes / n_centroids / target_file_mb, floor 1),
@@ -1440,7 +1439,14 @@ def stream_ingest_semantic_dedup(
     store match above threshold is itself — excluded by id.
 
     ``auto_compact_after`` as in ``stream_append_to_ivfpq_index``.
-    Uses availableNow; returns the started StreamingQuery."""
+    Uses availableNow; returns the started StreamingQuery.
+
+    Batch ceiling: the screen and the in-batch pair mine each
+    materialize the batch driver-side, so a micro-batch over
+    ``SEARCH_MAX_ROWS`` rows raises ``ValueError`` and fails the query.
+    The recovery is a smaller trigger (e.g. ``maxFilesPerTrigger`` on
+    the source) that keeps every micro-batch under the ceiling; a batch
+    already in the checkpoint's offset log replays at its logged size."""
     from sales_forecast_pyspark_spark.llmdata.dedup_store import (
         _greedy_losers,
     )

@@ -93,21 +93,3 @@ def ngram_contamination(
     )
 
 
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-    min_hits: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_bench: bool = True,
-) -> DataFrame:
-    """Drop corpus documents with >= ``min_hits`` benchmark n-gram
-    overlaps — the filtering tier on top of the report. Implemented as
-    a left-anti join against the violation ids, so the corpus passes
-    through untouched (all columns, no re-tokenization cost beyond the
-    report's)."""
-    flagged = ngram_contamination(
-        corpus, benchmark, n, id_col, text_col, broadcast_bench
-    ).filter(F.col("n_hits") >= min_hits)
-    return corpus.join(flagged.select(id_col), id_col, "left_anti")

@@ -82,8 +82,8 @@ def _jaccard_on_pairs(
     # test scale but not at 10^9 docs, and the estimate that chose
     # broadcast here was equally fictional. The r09 static-broadcast
     # sweep then showed the `pairs=None` tier is NOT sample-only as
-    # the r09-merge comment claimed — ngram_jaccard_pairs and
-    # ngram_containment_pairs run it over the full corpus — so the
+    # the r09-merge comment claimed — ngram_jaccard_pairs runs it
+    # over the full corpus — so the
     # hint now covers both tiers (the minhash audit's sample-scale
     # exact runs pay a sub-second SMJ premium for it at bench scale).
     _hint = lambda d: d.hint("merge")  # noqa: E731
@@ -365,81 +365,3 @@ def duplicated_chunk_stats(
     )
 
 
-def ngram_containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """ASYMMETRIC near-dup: containment C(A in B) = |A∩B| / |A| over
-    distinct n-gram shingles — the subset lens symmetric Jaccard
-    misses. A short doc fully embedded in a much longer one (a quoted
-    article, a post plus its reply chain, a doc plus appended
-    boilerplate) has Jaccard ~ |A|/|B| (arbitrarily low) but
-    containment ~ 1; dedup pipelines that only threshold Jaccard keep
-    both copies. Returns ordered pairs (doc_a contained in doc_b,
-    doc_a != doc_b, both directions evaluated) with the shared/|A|/|B|
-    counts so callers can re-derive Jaccard too.
-
-    Same one co-shingle self-join as the exact Jaccard operator (the
-    pair fan-out is symmetric; only the final scoring differs), same
-    flat-df caveat: prefix filtering does not apply to containment
-    (its correctness argument is Jaccard-specific), so heavy-tailed
-    corpora should pre-filter stop-shingles upstream. Shared counts
-    ARE symmetric, so the self-join runs ONCE over doc_a < doc_b and
-    both orientations are emitted from the unordered pair by a
-    trailing explode — half the join fan-out of a naive ``!=`` join,
-    with no duplicated subtree."""
-    sh = _exploded_shingles(df, id_col, text_col, n)
-    counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    # merge hints: post-explode frames, static size estimates are
-    # fiction (see _jaccard_on_pairs)
-    shared = (
-        a.join(b.hint("merge"), ["shingle"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    na = counts.select(F.col(id_col).alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    nb = counts.select(F.col(id_col).alias("doc_b"), F.col("n_shingles").alias("n_b"))
-    both = (
-        # the per-doc count sides are one-row-per-doc aggregates —
-        # hash-build them per partition instead of sorting the
-        # PAIR-scale `shared` frame twice
-        shared.join(na.hint("shuffle_hash"), "doc_a")
-        .join(nb.hint("shuffle_hash"), "doc_b")
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a"), F.col("doc_b"),
-                        F.col("shared"),
-                        F.col("n_a"), F.col("n_b"),
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("doc_a"),
-                        F.col("doc_a").alias("doc_b"),
-                        F.col("shared"),
-                        F.col("n_b").alias("n_a"),
-                        F.col("n_a").alias("n_b"),
-                    ),
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b", "p.shared", "p.n_a", "p.n_b")
-    )
-    return (
-        both.select(
-            "doc_a",
-            "doc_b",
-            "shared",
-            "n_a",
-            "n_b",
-            F.round(F.col("shared") / F.col("n_a"), 4).alias("containment"),
-        )
-        .filter(F.col("containment") >= threshold)
-        .orderBy("doc_a", "doc_b")
-    )

@@ -801,9 +801,8 @@ def minhash_store_stats(spark: SparkSession, path: str) -> DataFrame:
     ``max_cand_per_doc`` threshold). The estimate upper-bounds novel
     content — a genuinely new doc can land in a fresh bucket and draw
     zero — and is exact for corpus-resembling traffic, the regime that
-    densifies. Same collision-mass statistic ``lsh_band_load_ladder``
-    samples for the one-shot operators (r12's density-aware banding),
-    computed here EXACTLY from the persisted buckets table.
+    densifies. The collision mass is computed EXACTLY from the
+    persisted buckets table.
 
     Output: one row per band — (band, n_buckets, n_rows, max_bucket,
     mean_bucket, cand_per_doc) — ordered by band; total screening load
@@ -852,8 +851,7 @@ def should_rescale_bands(
     candidate fan-out the build-time geometry never priced — the
     remedy is rebuilding the store with a wider-AND geometry (raise
     ``bands``' row width via num_hashes/bands at ``build_minhash_store``
-    time — the persisted-store form of ``adapt_band_geometry``'s
-    density rule). Returns {"rescale": bool, "reason": str,
+    time). Returns {"rescale": bool, "reason": str,
     "cand_per_doc": float (incoming-doc convention, Σ s²/n per band
     summed over bands), "worst_band": int, "worst_band_load": float,
     "n_docs": int (the store's ADMITTED doc count from the doc_counts

@@ -284,9 +284,9 @@ def compact_fp_store(
     ``fps`` location, and a marker file makes the store self-describing
     — ``screen_against_fp_store`` then joins the base exchange-free on
     the store side instead of relying on the broadcast planner. The
-    write-once-screen-every-batch amortization is exactly the
-    ``write_bucketed`` story (sources/sinks.py) applied to the store's
-    hottest join. Requires a catalog that survives as long as the
+    write-once-screen-every-batch amortization is the bucketed-table
+    story (co-located buckets → exchange-free joins) applied to the
+    store's hottest join. Requires a catalog that survives as long as the
     readers (production: a persistent metastore; the default in-memory
     catalog forgets the name across sessions, and the screen then
     degrades to the plain parquet read)."""
@@ -522,7 +522,15 @@ def stream_ingest_dedup_all(
        publish every batch row with its verdict to
        ``survivors_dir/b=<id>`` (overwrite — idempotent).
 
-    Uses availableNow; returns the started StreamingQuery."""
+    Uses availableNow; returns the started StreamingQuery.
+
+    Batch ceiling: stage 3 materializes its input driver-side, so a
+    micro-batch that brings more than ``SEARCH_MAX_ROWS`` rows
+    (similarity.py) to the semantic stage raises ``ValueError`` and
+    fails the query. The recovery is a smaller trigger (e.g.
+    ``maxFilesPerTrigger`` on the source) that keeps every micro-batch
+    under the ceiling; a batch already in the checkpoint's offset log
+    replays at its logged size."""
     from sales_forecast_pyspark_spark.llmdata.ann_index import (
         append_to_ivfpq_index,
         compact_ivfpq_index,

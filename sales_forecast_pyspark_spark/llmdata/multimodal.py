@@ -1,14 +1,9 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
 processed in Arrow batches via mapInPandas.
 
-The decode layer is OPTIONAL-DEPENDENCY: ``decode_image`` decodes real
-pixel dimensions via Pillow when it is importable, and raises
-NotImplementedError otherwise (this container ships no imaging libs).
-The pipeline's default path is ``fake_decode`` — a deterministic
-metadata extractor over the raw bytes — so the Spark-side contract
-(schema, batch shape, partition behavior) is real, tested, and
-oracle-stable with or without Pillow; ``decode_dimensions`` is the
-real-decode twin of ``extract_features`` for environments that have it.
+Feature extraction reads deterministic metadata from the raw bytes
+(no imaging library), so the Spark-side contract (schema, batch shape,
+partition behavior) is real, tested, and oracle-stable everywhere.
 
 Scale notes: mapInPandas streams Arrow record batches through Python —
 memory is bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``,
@@ -20,20 +15,11 @@ metadata instead.
 # NOTE: no `from __future__ import annotations` — it stringifies type
 # hints module-wide and breaks pandas-UDF signature inspection.
 import hashlib
-import io
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-try:  # optional dependency: real image decode
-    from PIL import Image as _PILImage
-
-    HAS_PIL = True
-except ImportError:  # pragma: no cover - exercised in PIL-less containers
-    _PILImage = None
-    HAS_PIL = False
 
 
 def attach_binary(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -45,27 +31,6 @@ def attach_binary(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.col(text_col).cast("binary").alias("content"),
         F.lit("application/octet-stream").alias("media_type"),
     )
-
-
-def decode_image(content: bytes) -> tuple[int, int, str]:
-    """REAL decode path: (width, height, mode) via Pillow when it is
-    importable; NotImplementedError otherwise. The Spark plumbing around
-    it (``decode_dimensions`` / ``extract_features``) is identical either
-    way — only this leaf swaps."""
-    if not HAS_PIL:
-        raise NotImplementedError(
-            "image decoding requires Pillow; use fake_decode for the "
-            "deterministic metadata path"
-        )
-    with _PILImage.open(io.BytesIO(bytes(content))) as im:
-        return im.width, im.height, im.mode
-
-
-def fake_decode(content: bytes) -> tuple[int, int]:
-    """Deterministic stand-in for decode: derive fake dimensions from the
-    byte length, so tests and oracles can verify the full pipeline."""
-    n = len(content)
-    return n % 1024 + 1, (n * 7) % 1024 + 1
 
 
 def _out_schema(df: DataFrame, id_col: str, fields: list[StructField]) -> StructType:
@@ -179,101 +144,3 @@ def sample_frames(
     return df.select(id_col, content_col).mapInPandas(_sample, schema)
 
 
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    id_col: str = "doc_id",
-    content_col: str = "content",
-) -> DataFrame:
-    """REAL resize path: decode, resize to (width, height), re-encode
-    PNG via Pillow — (id, resized binary, n_bytes), nulls for
-    undecodable payloads. Raises NotImplementedError at plan-build time
-    without Pillow (the deterministic plumbing twin is
-    ``sample_frames``/``extract_features``)."""
-    import pandas as pd
-
-    from pyspark.sql.types import BinaryType, LongType
-
-    if not HAS_PIL:
-        raise NotImplementedError(
-            "resize_images requires Pillow; use extract_features/"
-            "sample_frames for the deterministic metadata paths"
-        )
-
-    schema = _out_schema(
-        df,
-        id_col,
-        [StructField("resized", BinaryType()), StructField("n_bytes", LongType())],
-    )
-
-    def _resize_one(b):
-        try:
-            with _PILImage.open(io.BytesIO(bytes(b))) as im:
-                out = io.BytesIO()
-                im.resize((width, height)).save(out, format="PNG")
-                return out.getvalue()
-        except Exception:
-            return None
-
-    def _resize(batches):
-        for pdf in batches:
-            resized = pdf[content_col].map(_resize_one)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "resized": resized,
-                    "n_bytes": resized.map(
-                        lambda b: len(b) if b is not None else None
-                    ).astype("Int64"),
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(_resize, schema)
-
-
-def decode_dimensions(
-    df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
-    """REAL-decode twin of ``extract_features``: (id, width, height,
-    mode) via Pillow, null row values for undecodable payloads. Same
-    Arrow-batched mapInPandas shape; raises NotImplementedError up front
-    when Pillow is absent so the failure is at plan-build time, not
-    inside executors."""
-    import pandas as pd
-
-    if not HAS_PIL:
-        raise NotImplementedError(
-            "decode_dimensions requires Pillow; use extract_features for "
-            "the deterministic metadata path"
-        )
-
-    schema = _out_schema(
-        df,
-        id_col,
-        [
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("mode", StringType()),
-        ],
-    )
-
-    def _decode_one(b) -> tuple:
-        try:
-            return decode_image(bytes(b))
-        except Exception:
-            return (None, None, None)
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = pdf[content_col].map(_decode_one)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": decoded.map(lambda t: t[0]).astype("Int32"),
-                    "height": decoded.map(lambda t: t[1]).astype("Int32"),
-                    "mode": decoded.map(lambda t: t[2]),
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(_decode, schema)

@@ -24,6 +24,11 @@ from pyspark.sql import functions as F
 
 from sales_forecast_pyspark_spark.functions.vectors import cosine_similarity
 
+# Largest frame ``_ivfpq_search`` (its queries) and
+# ``exact_self_similarity_join`` (its batch) materialize driver-side and
+# broadcast: the ingest contract's batch ceiling (~50 MB at d=128).
+SEARCH_MAX_ROWS = 50_000
+
 
 def cosine_topk(
     df: DataFrame,
@@ -538,213 +543,6 @@ def _sparse_unwrap(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def lsh_band_load_ladder(
-    vecs: DataFrame,
-    bands: int,
-    rows_options: list[int],
-    bucket_length: float,
-    seed: int,
-    sample_mod: int = 20,
-    max_slice: int = 50_000,
-) -> dict[int, float]:
-    """Estimated candidate pairs PER ITEM at each AND-width, from a
-    deterministic ~1/``sample_mod`` id-hash slice (VERDICT r11 ask #3:
-    SCALING.md's measured finding is "scale the AND-width as density
-    grows", but nothing measured density — this is the cheap sampled
-    collision-mass estimate that closes the loop).
-
-    Method: bucket the slice ONCE with ``bands × max(rows_options)``
-    seeded projections, build every width's band keys as prefixes of
-    each band's projection block (row-local expressions, one explode),
-    and sum per-bucket C(c, 2) — the exact collision mass
-    ``_lsh_candidate_pairs`` would emit for that geometry, no join
-    needed. A uniform p-slice hits a c-item bucket Binomial(c, p), so
-    E[C(c_s, 2)] = p²·C(c, 2): scaling the slice mass by
-    ``sample_mod²`` is an unbiased estimate of the full collision
-    mass, divided by the (slice-estimated) corpus size to get
-    pairs/item — the ladder's own unit (6.4M candidates at 20k vectors
-    = 320/item). Slices under 200 ids fall back to the full frame
-    (the estimate must not be noisier than the thing it tunes);
-    slices over ``max_slice`` ids are re-sliced by a second hash
-    filter down to ~that size (a FIXED-cost estimate at any corpus
-    scale: 5% of a billion-row corpus is itself a corpus-scale job,
-    and ~50k ids already puts millions of collisions in every
-    realistic bucket mass — the p² scaling just grows).
-
-    Caveats, documented not hidden: the estimator's hyperplane draw
-    (one fit at ``bands × max(rows)``) differs from the draw the
-    operator will use at the chosen width (a fit at ``bands × r``) —
-    estimates are distributionally exact but not bit-tied to the run;
-    and a p²-scaled sample is an order-of-magnitude dial (relative
-    error grows when collision mass concentrates in few tight
-    buckets), which is all the width chooser needs — the measured
-    ladder moves 5.9× per width step. Driver cost: one tiny
-    aggregation job over the slice; the returned dict is
-    len(rows_options) scalars."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import vector_to_array
-
-    if not rows_options or min(rows_options) < 1:
-        raise ValueError(f"rows_options must be >= 1, got {rows_options}")
-    max_r = max(rows_options)
-    slice_df = vecs.select("id", "vec").filter(
-        F.pmod(F.xxhash64(F.lit("band-density"), F.col("id")), F.lit(sample_mod))
-        == 0
-    )
-    n_slice = slice_df.count()
-    if n_slice < 200 and sample_mod > 1:
-        slice_df = vecs.select("id", "vec")
-        n_slice = slice_df.count()
-        sample_mod = 1
-    elif n_slice > max_slice:
-        # second-stage hash cut: fixed estimate cost at any corpus
-        # scale; a different lit salt keeps the two filters independent
-        k = -(-n_slice // max_slice)  # ceil
-        slice_df = slice_df.filter(
-            F.pmod(
-                F.xxhash64(F.lit("band-density-2"), F.col("id")), F.lit(k)
-            )
-            == 0
-        )
-        n_slice = slice_df.count()
-        sample_mod = sample_mod * k
-    if n_slice < 2:
-        return {r: 0.0 for r in rows_options}
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="vec",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=bands * max_r,
-        seed=seed,
-    )
-    hashed = lsh.fit(slice_df).transform(slice_df)
-    keys = [
-        F.struct(
-            F.lit(r).alias("_r"),
-            F.lit(b).alias("_band"),
-            F.array(
-                *[
-                    vector_to_array(F.col("hashes")[b * max_r + j])
-                    .getItem(0)
-                    .cast("long")
-                    for j in range(r)
-                ]
-            ).alias("_key"),
-        )
-        for r in rows_options
-        for b in range(bands)
-    ]
-    mass = (
-        hashed.select(F.explode(F.array(*keys)).alias("_k"))
-        .groupBy("_k._r", "_k._band", "_k._key")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy("_r")
-        .agg(F.sum(F.col("_c") * (F.col("_c") - 1) / 2).alias("_pairs"))
-        .collect()
-    )
-    by_r = {row["_r"]: float(row["_pairs"]) for row in mass}
-    # slice mass × mod² ≈ full mass; full N ≈ n_slice × mod
-    return {
-        r: by_r.get(r, 0.0) * sample_mod / n_slice for r in rows_options
-    }
-
-
-def adapt_band_geometry(
-    vecs: DataFrame,
-    bands: int,
-    base_rows: int,
-    bucket_length: float,
-    seed: int,
-    max_pairs_per_item: float,
-    max_rows: int = 12,
-    max_bands: int = 64,
-    sample_mod: int = 20,
-) -> tuple[int, int]:
-    """(bands, rows_per_band) fitted to the corpus's MEASURED density
-    (VERDICT r11 ask #3 — encodes SCALING.md's density rule: fixed
-    band geometry does not ride a densifying corpus for free; rows
-    6 → 8 cut per-item load 5.9× at the 200k decade, where narrowing
-    the bucket instead dropped truth coverage to 0.80).
-
-    Two moves, both priced by the sampled ladder:
-    1. WIDEN the AND-rows to the smallest width >= ``base_rows`` whose
-       estimated pairs/item fits ``max_pairs_per_item`` — each +1 row
-       multiplies per-band collision (and per-pair recall) by p, so
-       this is the load-cutting move;
-    2. then SPEND the leftover budget on extra OR-bands — collision
-       mass per band is uniform in expectation (i.i.d. hyperplanes),
-       so load scales linearly in bands while each band multiplies the
-       per-pair MISS probability by (1 − p^rows). Measured on the
-       tight clustered fixture (bound 150/item, base 16×6 at ~198/item):
-       rows alone lands 16×8 at recall 0.94; the refill picks 20×8 at
-       est. 146/item, recall 0.976 — the bands refill is what keeps
-       the adapted geometry inside the >= 0.96 contract.
-
-    Geometry is UNCHANGED when the base already fits (a no-op call
-    must not silently re-tune a caller-pinned geometry) — and ALSO
-    when even ``max_rows`` cannot meet the bound. The unreachable
-    regime is diagnostic, not a dial to lean on: bounds go unreachable
-    on LOOSE corpora, where the ladder flattens (measured r12 on real
-    sf0.1 hashed TF-IDF: 6,792 → 1,714 pairs/item across five widths —
-    4× relief where the tight fixture gets 5.9× in two steps) and
-    every extra AND-row pays the full p^r recall price for weak load
-    relief; widening to ``max_rows`` there would maximize recall
-    damage while still missing the budget. So the chooser holds the
-    caller's base geometry, and the LOUD ``UserWarning`` says what the
-    load is and what actually helps (tighten the radius threshold, or
-    move to the query-bounded ANN tiers). When it DOES adapt, the same
-    warning is the audit trail for why a run used a different
-    geometry. Widening is safe in the TIGHT regime this knob exists
-    for and recall-fatal in loose regimes, which is why adaptation is
-    opt-in via ``max_pairs_per_item`` and never a default."""
-    import warnings
-
-    ladder = lsh_band_load_ladder(
-        vecs,
-        bands,
-        list(range(base_rows, max_rows + 1)),
-        bucket_length,
-        seed,
-        sample_mod=sample_mod,
-    )
-    chosen = next(
-        (r for r in sorted(ladder) if ladder[r] <= max_pairs_per_item),
-        max_rows,
-    )
-    est = {r: round(ladder[r], 1) for r in sorted(ladder)}
-    if ladder[chosen] > max_pairs_per_item:
-        warnings.warn(
-            f"adapt_band_geometry: even rows_per_band={max_rows} estimates "
-            f"{ladder[chosen]:.0f} candidate pairs/item > bound "
-            f"{max_pairs_per_item} (ladder {est}); AND-width alone cannot "
-            f"meet the bound — the flat ladder marks a LOOSE corpus where "
-            f"widening pays full recall price for weak relief, so the base "
-            f"geometry is kept ({ladder[base_rows]:.0f}/item); tighten the "
-            f"radius threshold or use the query-bounded ANN tiers",
-            UserWarning,
-            stacklevel=2,
-        )
-        return bands, base_rows
-    if chosen == base_rows:
-        return bands, base_rows
-    per_band = ladder[chosen] / bands
-    new_bands = (
-        min(max_bands, max(bands, int(max_pairs_per_item // per_band)))
-        if per_band > 0
-        else bands
-    )
-    warnings.warn(
-        f"adapt_band_geometry: corpus density exceeds the planted "
-        f"geometry — adapting (bands x rows) {bands}x{base_rows} -> "
-        f"{new_bands}x{chosen} (estimated pairs/item "
-        f"{ladder[base_rows]:.0f} -> {per_band * new_bands:.0f}, bound "
-        f"{max_pairs_per_item}; rows ladder at {bands} bands: {est})",
-        UserWarning,
-        stacklevel=2,
-    )
-    return new_bands, chosen
-
-
 def lsh_similarity_join(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -756,7 +554,6 @@ def lsh_similarity_join(
     vector_input: bool = False,
     rows_per_band: int = 1,
     n_salt: int = 16,
-    max_pairs_per_item: float | None = None,
 ) -> DataFrame:
     """Approximate all-pairs similarity via BRP-LSH bucketing (MLlib
     hash functions, OWNED candidate join — see ``_lsh_candidate_pairs``
@@ -787,15 +584,6 @@ def lsh_similarity_join(
     single-projection behavior. Applies to both the array path and
     ``vector_input=True``.
 
-    ``max_pairs_per_item`` (VERDICT r11 ask #3, opt-in): bound on the
-    estimated candidate pairs/item; when set, ``rows_per_band`` is
-    treated as the BASE width and adapted by ``adapt_band_geometry``
-    (loud warning) until the sampled collision-mass estimate fits —
-    the measured density remedy for tight-regime mining on a corpus
-    that densifies past the planted geometry. Never set by default:
-    widening is recall-fatal in loose regimes (see the chooser's
-    docstring).
-
     ``n_salt`` (ADVICE r11 #2 made it PUBLIC here): the candidate
     join's deterministic salt fan-out replicates the right side — with
     its carried payload (the full vector; for ``vector_input`` the
@@ -822,15 +610,6 @@ def lsh_similarity_join(
 
     if vector_input:
         vecs = _sparse_unwrap(df, id_col, vec_col)
-        if max_pairs_per_item is not None:
-            num_hash_tables, rows_per_band = adapt_band_geometry(
-                vecs,
-                num_hash_tables,
-                rows_per_band,
-                bucket_length,
-                seed,
-                max_pairs_per_item,
-            )
         pairs = _lsh_candidate_pairs(
             vecs,
             bucket_length,
@@ -866,15 +645,6 @@ def lsh_similarity_join(
         F.col(vec_col).cast("array<double>").alias("arr"),
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("vec"),
     )
-    if max_pairs_per_item is not None:
-        num_hash_tables, rows_per_band = adapt_band_geometry(
-            vecs,
-            num_hash_tables,
-            rows_per_band,
-            bucket_length,
-            seed,
-            max_pairs_per_item,
-        )
     pairs = _lsh_candidate_pairs(
         vecs,
         bucket_length,
@@ -907,7 +677,7 @@ def exact_self_similarity_join(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     distance_threshold: float = 1.2,
-    max_rows: int = 50_000,
+    max_rows: int = SEARCH_MAX_ROWS,
     num_slices: int | None = None,
 ) -> DataFrame:
     """EXACT all-pairs within a Euclidean ``distance_threshold`` over a
@@ -1104,7 +874,6 @@ def lsh_pairs_topk(
     seed: int = 42,
     rows_per_band: int = 1,
     n_salt: int = 16,
-    max_pairs_per_item: float | None = None,
 ) -> DataFrame:
     """Bounded-output per-item neighbor mining: every corpus item gets
     at most ``k`` nearest neighbors (by exact cosine) drawn from its
@@ -1169,8 +938,6 @@ def lsh_pairs_topk(
     loose-regime high recall under an IO budget.
     ``n_salt`` (ADVICE r11 #2): the candidate join's salt/replication
     knob, plumbed through — see ``lsh_similarity_join``.
-    ``max_pairs_per_item`` (VERDICT r11 ask #3, opt-in): density-aware
-    AND-width — see ``lsh_similarity_join`` / ``adapt_band_geometry``.
     Deterministic: seeded hyperplanes, scores rounded to 6 decimals
     before ranking, ties broken by neighbor id.
 
@@ -1222,20 +989,6 @@ def lsh_pairs_topk(
         .alias("arr"),
     )
     vecs = unit.select("id", "arr", array_to_vector(F.col("arr")).alias("vec"))
-    # density-aware band geometry (VERDICT r11 ask #3, opt-in):
-    # estimate the per-item candidate load on a hash slice, widen
-    # rows_per_band until it fits, refill the leftover budget with
-    # OR-bands — the measured SCALING.md remedy for a corpus that has
-    # densified past the planted geometry
-    if max_pairs_per_item is not None:
-        num_hash_tables, rows_per_band = adapt_band_geometry(
-            vecs,
-            num_hash_tables,
-            rows_per_band,
-            bucket_length,
-            seed,
-            max_pairs_per_item,
-        )
     # the owned candidate join replaces MLlib's approxSimilarityJoin
     # (see _lsh_candidate_pairs: its internal join is statically
     # broadcast-planned from post-explode fiction and no hint can
@@ -1652,11 +1405,6 @@ def _ivfpq_fit(
         F.array(*[F.col(f"_c{j}") for j in range(m)]).alias("codes"),
     )
     return cell_mat, books, enc, d, sub
-
-
-# Largest query frame ``_ivfpq_search`` materializes driver-side and
-# broadcasts: the ingest contract's batch ceiling (~50 MB at d=128).
-SEARCH_MAX_ROWS = 50_000
 
 
 def _vec_to_python_expr(df: DataFrame, vec_col: str):

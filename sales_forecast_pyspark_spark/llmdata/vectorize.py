@@ -1,21 +1,12 @@
 """TF-IDF text vectorization (SURVEY.md §7 step 9) and its cosine
 similarity hook.
 
-Two representations, each with the right scale shape:
+``term_tfidf`` holds the weighting as a (doc, term, weight) TABLE —
+terms stay strings (no hash collisions), weights unit-normalized per
+doc. This long form is what similarity joins want: sparse dot products
+become equality joins on the term, never densifying.
 
-- ``tfidf_vectors``: MLlib HashingTF + IDF sparse vectors for feeding
-  models (HashingTF is a stateless narrow map — murmur3 term hashing,
-  no vocabulary broadcast; ``IDF.fit`` is the ONLY corpus pass). The
-  hashing variant is chosen over CountVectorizer+IDF deliberately:
-  CountVectorizer's fit collects a vocabulary to the driver and
-  broadcasts it — fine at 1M terms, a scale hazard at web-corpus
-  cardinality.
-- ``term_tfidf``: the same weighting as a (doc, term, weight) TABLE —
-  terms stay strings (no hash collisions), weights unit-normalized per
-  doc. This long form is what similarity joins want: sparse dot
-  products become equality joins on the term, never densifying.
-
-``tfidf_near_pairs`` — the cosine hook — uses banded SIGNED RANDOM
+``tfidf_pair_stages`` — the cosine hook — uses banded SIGNED RANDOM
 PROJECTIONS over the long form, all JVM-side:
 
   sign-bit b,i of doc d = sign( Σ_t w(d,t) · (bit i of xxhash64(b, t)
@@ -52,34 +43,6 @@ from sales_forecast_pyspark_spark.functions.deterministic import (
     quantized_total_round,
 )
 from sales_forecast_pyspark_spark.llmdata.text import tokens_expr
-
-
-def tfidf_vectors(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_features: int = 4096,
-    min_doc_freq: int = 1,
-    out_col: str = "tfidf",
-) -> DataFrame:
-    """(id, n_tokens, tfidf) with ``out_col`` a sparse MLlib vector.
-
-    ``num_features`` is the hash-bucket count (power of two keeps the
-    murmur3 modulo well-distributed); ``min_doc_freq`` zeroes terms
-    rarer than the floor, the classic noise cut. Zero-token documents
-    come out as all-zero vectors — callers doing similarity should
-    filter on ``n_tokens > 0`` (a zero vector has no direction).
-    """
-    from pyspark.ml.feature import IDF, HashingTF
-
-    toks = df.select(
-        F.col(id_col), tokens_expr(text_col).alias("tokens")
-    ).withColumn("n_tokens", F.size("tokens"))
-    tf = HashingTF(
-        inputCol="tokens", outputCol="_tf", numFeatures=num_features
-    ).transform(toks)
-    idf_model = IDF(inputCol="_tf", outputCol=out_col, minDocFreq=min_doc_freq).fit(tf)
-    return idf_model.transform(tf).select(id_col, "n_tokens", out_col)
 
 
 def term_tfidf(
@@ -209,8 +172,8 @@ def tfidf_pair_stages(
     separate frames — ``weights`` (normalized quantized term table),
     ``sig`` (banded SRP buckets), ``cand`` (distinct bucket-mate
     pairs), ``scored`` (exact-cosine-verified pairs at the threshold).
-    Single source of truth for BOTH ``tfidf_near_pairs`` (which fuses
-    and caches them) and ``scripts/profile_tfidf.py`` (which times
+    Single source of truth for BOTH the ``tfidf_similar_docs`` query
+    (which caches them) and ``scripts/profile_tfidf.py`` (which times
     them stage-by-stage): a profiler with its own copy of these plans
     would silently drift from what the registered query actually runs
     (code-review r08). Caching policy belongs to the caller — these
@@ -389,64 +352,6 @@ def tfidf_banding_audit(
             ),
             F.lit(False),
         ).alias("sample_recall_ok"),
-    )
-
-
-def tfidf_near_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cos_threshold: float = 0.9,
-    bands: int = 8,
-    bits: int = 16,
-) -> DataFrame:
-    """Document pairs with TF-IDF cosine >= ``cos_threshold`` without an
-    all-pairs join: banded SRP buckets generate candidates (equality
-    joins only), then the exact cosine — an equality join over the two
-    docs' shared terms with an order-independent decimal dot product —
-    verifies each candidate. Precision exact; recall per the module
-    docstring curve. Returns (id_a, id_b, cos_sim), id_a < id_b."""
-    # The weights table is read TWICE (signature build + the verify
-    # doc-map fold) and the signature table twice (candidate self-join);
-    # both are persisted — they are far smaller than the corpus
-    # (|doc-term pairs| and bands×|docs| rows), and without the cache
-    # the whole tokenize→tf→idf→normalize chain re-executes per read
-    # (measured 4x end-to-end on the sf0.1 documents table). The verify
-    # quantization (round at 1e-7 → scaled long) is hoisted INTO the
-    # cached frame: it would otherwise re-run per candidate-expanded row
-    # (|candidates| × terms, ~20× the weights rows here) on the hot side
-    # of the verify join.
-    # Stage plans come from tfidf_pair_stages (shared with the
-    # profiler); this operator owns the caching policy. The verify
-    # stage uses per-doc term MAPS instead of a candidates×terms join:
-    # the join formulation expands |candidates| × (terms of doc_a) rows
-    # and shuffles them into a (doc_a, doc_b) hash aggregate — the
-    # largest frame in the query. Folding each doc's (term → scaled
-    # weight) map once (one small shuffle over the weights rows) turns
-    # verify into two broadcast-able map-table joins plus a per-pair
-    # in-row aggregate over ~|doc terms| entries — no candidate-grain
-    # shuffle at all. The exact long total Σ (a×10^7)(b×10^7) is the
-    # SAME integer the join version sums, so scores are bit-identical
-    # (pinned by tests/test_similarity.py's pair hashes).
-    stages = tfidf_pair_stages(
-        df,
-        text_col=text_col,
-        id_col=id_col,
-        cos_threshold=cos_threshold,
-        bands=bands,
-        bits=bits,
-    )
-    stages["weights"].cache()
-    stages["weights"].count()
-    stages["sig"].cache()
-    return (
-        stages["scored"]
-        .select(
-            F.col("doc_a").alias("id_a"),
-            F.col("doc_b").alias("id_b"),
-            "cos_sim",
-        )
-        .orderBy("id_a", "id_b")
     )
 
 

@@ -13,13 +13,6 @@ from sales_forecast_pyspark_spark.operators.densify import (
 )
 from sales_forecast_pyspark_spark.operators.interval import interval_join
 from sales_forecast_pyspark_spark.operators.joins import join_on, salted_join
-from sales_forecast_pyspark_spark.operators.layout import zorder_layout, zvalue
-from sales_forecast_pyspark_spark.operators.pandas_ops import (
-    weighted_mean_jvm,
-    weighted_mean_pandas,
-    zscore_jvm,
-    zscore_pandas,
-)
 from sales_forecast_pyspark_spark.operators.rowops import (
     dedup_exact,
     deterministic_sample,
@@ -29,27 +22,21 @@ from sales_forecast_pyspark_spark.operators.rowops import (
     time_split,
 )
 from sales_forecast_pyspark_spark.operators.setops import union_by_name
-from sales_forecast_pyspark_spark.operators.sketches import (
-    distinct_count,
-    quantile_exprs,
-)
+from sales_forecast_pyspark_spark.operators.sketches import quantile_exprs
 from sales_forecast_pyspark_spark.operators.windows import (
     add_lags,
     add_momentum,
-    add_rolling,
     ma_baseline,
 )
 
 __all__ = [
     "add_lags",
     "add_momentum",
-    "add_rolling",
     "asof_join",
     "daily_rollup",
     "dedup_exact",
     "densify_series",
     "deterministic_sample",
-    "distinct_count",
     "grouped_top_k",
     "interval_join",
     "join_on",
@@ -65,11 +52,5 @@ __all__ = [
     "stratified_sample",
     "time_split",
     "top_k",
-    "weighted_mean_jvm",
-    "weighted_mean_pandas",
     "union_by_name",
-    "zorder_layout",
-    "zscore_jvm",
-    "zscore_pandas",
-    "zvalue",
 ]

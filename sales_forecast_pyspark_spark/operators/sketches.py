@@ -10,8 +10,8 @@ The sketch twins — HyperLogLog++ (``approx_count_distinct``) and
 Greenwald-Khanna (``percentile_approx``) — are mergeable fixed-size
 aggregation buffers: ONE shuffle carrying kilobyte partials regardless
 of cardinality, the only shape that survives a 100-billion-row group.
-Accuracy is tunable (``rsd`` / ``accuracy``) and regression-tested
-against the exact tier in ``tests/test_sketches.py``.
+Accuracy is tunable and regression-tested against the exact tier in
+``tests/test_sketches.py``.
 """
 
 from __future__ import annotations
@@ -21,25 +21,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def distinct_count(
-    df: DataFrame,
-    keys: Sequence[str],
-    col: str,
-    rsd: float | None = None,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Per-group distinct cardinality. ``rsd=None`` → exact (two-shuffle
-    expand plan, O(distinct) state); ``rsd=0.01`` → HLL++ sketch with
-    ~1% relative standard deviation (one shuffle, ~kB state/group)."""
-    out_col = out_col or f"n_{col}"
-    agg = (
-        F.countDistinct(F.col(col))
-        if rsd is None
-        else F.approx_count_distinct(F.col(col), rsd)
-    )
-    return df.groupBy(*keys).agg(agg.alias(out_col))
 
 
 def quantile_exprs(
@@ -263,50 +244,6 @@ def kll_rollup(
             qcol.getItem(i).alias(f"{prefix}{100 * p:g}")
             for i, p in enumerate(probs)
         ],
-    )
-
-
-def hll_fine_sketches(
-    df: DataFrame,
-    fine_keys: Sequence[str],
-    col: str,
-    lg_k: int = 12,
-    sketch_col: str = "hll",
-) -> DataFrame:
-    """The persistable fine-grain stage of ``hll_rollup`` exposed on its
-    own: one HLL sketch binary per fine group. Write this table once
-    (parquet carries the binary column fine), then maintain it
-    INCREMENTALLY with ``hll_merge_rollups`` as new raw data lands —
-    the continuous-aggregate pattern: the raw 100 TB is scanned once
-    per new partition, never again for any rollup question."""
-    return df.groupBy(*fine_keys).agg(
-        F.hll_sketch_agg(F.col(col), F.lit(lg_k)).alias(sketch_col)
-    )
-
-
-def hll_merge_rollups(
-    existing: DataFrame,
-    delta: DataFrame,
-    keys: Sequence[str],
-    sketch_col: str = "hll",
-) -> DataFrame:
-    """Incremental rollup maintenance: merge a DELTA fine-sketch table
-    (the new day's/hour's ``hll_fine_sketches`` output) into an EXISTING
-    persisted one, yielding the updated table — same schema, ready to
-    overwrite-by-partition or append.
-
-    Because HLL union is register-wise max (associative, commutative,
-    idempotent-per-value), incremental maintenance is EXACTLY
-    equivalent to recomputing from all raw data — pinned in
-    tests/test_sketches.py including a parquet round-trip. Keys present
-    on only one side pass through unchanged (full outer semantics via
-    union + re-merge); one small shuffle over sketch rows, the raw data
-    is never touched."""
-    return (
-        existing.select(*keys, sketch_col)
-        .unionByName(delta.select(*keys, sketch_col))
-        .groupBy(*keys)
-        .agg(F.hll_union_agg(F.col(sketch_col)).alias(sketch_col))
     )
 
 

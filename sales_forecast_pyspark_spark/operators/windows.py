@@ -115,25 +115,6 @@ def rolling_exprs(
     return exprs
 
 
-def add_rolling(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    col: str,
-    windows: Sequence[int],
-    stats: Sequence[str] = ("mean", "std", "median"),
-    name_fmt: str = "roll_{stat}_{w}",
-    fill: float | None = 0,
-) -> DataFrame:
-    out = df.select("*", *rolling_exprs(keys, order_col, col, windows, stats, name_fmt))
-    if fill is not None:
-        new_cols = [
-            name_fmt.format(stat=s, w=w) for w in windows for s in stats
-        ]
-        out = out.fillna(fill, subset=new_cols)
-    return out
-
-
 def rolling_range_exprs(
     keys: Sequence[str],
     date_col: str,
@@ -438,8 +419,7 @@ def last_touch_rows(
     conversion with (user_id, event_id, channel, value, latency_us).
     Used as the reprocessing path when late/out-of-order events make the
     stream's O(1) per-user state unable to retro-correct an
-    already-emitted conversion (see
-    ``streaming.stream_ops.reconcile_late_attribution``).
+    already-emitted conversion.
 
     Plan shape: identical single WindowExec to ``touch_attribution`` —
     one exchange + per-user sort, no self-join."""

@@ -28,9 +28,8 @@ from sales_forecast_pyspark_spark.sources.readers import read_table
 PANEL_KEYS = ["country", "stock"]
 PANEL_ORDER = "ds"
 # Full rollup grain + measure expressions — THE panel definition.
-# daily_panel (batch), daily_panel_stream (streaming twin), and the
-# streaming rehearsal harness all consume these same objects, so a
-# change to the panel's grain or money math propagates to every
+# daily_panel (batch) and the streaming rehearsal harness both consume
+# these same objects, so a change to the panel's grain or money math propagates to every
 # surface that claims to compute "the panel" (code-review r08: the
 # definition was hand-copied in four places and could drift silently).
 PANEL_GRAIN = ["country", "stock", "ds"]

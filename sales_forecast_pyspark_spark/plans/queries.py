@@ -1475,18 +1475,6 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
 
 
-# `ngram_containment_pairs` RETIRED from the registry in r12 per
-# SCALING.md's retirement policy (second exercise of the ranked list,
-# slot spent on `ann_index_lifecycle`): it shared the exact co-shingle
-# self-join physical plan with the oracle-green `ngram_jaccard_pairs`
-# (deliberately un-benched for that same redundancy, see bench.py);
-# only the scoring expression differs, which
-# tests/test_llmdata.py pins (short-doc-in-long-doc containment where
-# Jaccard stays below threshold). The operator
-# (llmdata/dedup.py::ngram_containment_pairs) and its unit tests are
-# unchanged — only the driver-verification slot was reclaimed.
-
-
 @register(
     "dedup_clusters",
     _SHINGLE_CTE.replace("WITH tok", "WITH RECURSIVE tok", 1)
@@ -1778,9 +1766,8 @@ def q_tfidf_similar_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts so output stays bounded by |docs| regardless of pair
     density.
 
-    Built on ``tfidf_pair_stages`` directly (same plans + caching
-    policy as ``tfidf_near_pairs``) so the sampled-truth audit shares
-    the cached weights/sig frames instead of re-deriving the corpus
+    Built on ``tfidf_pair_stages`` directly so the sampled-truth audit
+    shares the cached weights/sig frames instead of re-deriving the corpus
     pass. Self-validating driver row (VERDICT r11 ask #2): on this
     corpus every truth regime sits ON the banding S-curve (max sample
     cosine ~0.91-0.95 — no deep-in-the-curve bar exists), so the audit
@@ -1797,10 +1784,9 @@ def q_tfidf_similar_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_table(spark, sf_dir, "documents")
     stages = tfidf_pair_stages(docs, cos_threshold=0.9)
-    # same caching policy as tfidf_near_pairs (weights read by the
-    # signature build, the verify doc-map fold AND the audit's truth
-    # pass; sig by the candidate self-join and the audit's sample
-    # restriction)
+    # cache: weights are read by the signature build, the verify
+    # doc-map fold AND the audit's truth pass; sig by the candidate
+    # self-join and the audit's sample restriction
     stages["weights"].cache()
     stages["weights"].count()
     stages["sig"].cache()
@@ -1938,9 +1924,8 @@ ORDER BY user_id, session_start
 )
 def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization with a 30-minute inactivity gap via the built-in
-    ``session_window`` (no custom stateful code needed in batch; the
-    streaming twin uses the same expression). The oracle reproduces the
-    semantics with a gaps-and-islands window query."""
+    ``session_window`` (no custom stateful code needed). The oracle
+    reproduces the semantics with a gaps-and-islands window query."""
     ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
@@ -2791,7 +2776,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("ann_index_lifecycle")  # rows-only: persisted KMeans quantizers + parquet
-# layout not SQL-expressible (slot reclaimed from ngram_containment_pairs, r12)
+# layout not SQL-expressible
 def q_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full lifecycle of the PERSISTED IVF-PQ index (llmdata/
     ann_index.py) — the production serving shape ivfpq_topk's
@@ -4854,7 +4839,7 @@ def q_order_cycle_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⋈ orders on the order key): both sides scale with SF, so the
     planner gets a genuine sort-merge/shuffle-join decision (dimension
     joins elsewhere broadcast). At 100 TB this is the join bucketing is
-    for (`write_bucketed` on l_orderkey/o_orderkey → zero exchanges).
+    for (both tables bucketed on the order key → zero exchanges).
     Day deltas are exact integers; the mean is an unrounded quotient."""
     li = read_table(spark, sf_dir, "lineitem")
     orders = read_table(spark, sf_dir, "orders")

@@ -1,33 +1,15 @@
 from sales_forecast_pyspark_spark.sources.readers import (
     ONLINE_RETAIL_SCHEMA,
     TESTDATA_TABLES,
-    load_tables,
     read_csv,
-    read_json,
     read_table,
-    register_views,
 )
-from sales_forecast_pyspark_spark.sources.docsgen import (
-    DocsGenDataSource,
-)
-from sales_forecast_pyspark_spark.sources.sinks import (
-    compact_parquet,
-    write_bucketed,
-    write_parquet,
-    write_zordered,
-)
+from sales_forecast_pyspark_spark.sources.sinks import write_parquet
 
 __all__ = [
-    "DocsGenDataSource",
     "ONLINE_RETAIL_SCHEMA",
     "TESTDATA_TABLES",
-    "compact_parquet",
-    "load_tables",
     "read_csv",
-    "read_json",
     "read_table",
-    "register_views",
-    "write_bucketed",
     "write_parquet",
-    "write_zordered",
 ]

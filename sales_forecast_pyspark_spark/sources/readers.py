@@ -126,37 +126,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Load the star schema as a dict of DataFrames."""
-    return {name: read_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for ``spark.sql``."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    multiline: bool = False,
-) -> DataFrame:
-    """JSON-lines source (S1 family). Like the CSV reader, a declared
-    schema is strongly preferred: schema inference on JSON costs a full
-    extra pass and silently widens types on dirty data. For JSON that
-    arrives INSIDE a column of another table, use ``from_json`` with a
-    declared schema (see the ``events_json_extract`` query) instead of
-    this file source."""
-    reader = spark.read.option("multiLine", multiline)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     """Hash-repartition a SMALL-FILE scan across the cluster before
     CPU-heavy per-row work (tokenization, shingling, hash projections).

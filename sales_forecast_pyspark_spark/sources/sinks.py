@@ -23,33 +23,6 @@ def to_report_frame(df: DataFrame, limit: int | None = 10000):
     return df.toPandas()
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed-table sink: pre-shuffles rows into
-    ``num_buckets`` files by hash of ``bucket_cols`` (optionally sorted
-    within each bucket) so that later equi-joins and aggregations on
-    those columns read co-located data and plan with ZERO exchanges —
-    the write-once-join-often amortization that matters when a fact
-    table is joined every day at 100 TB. Both join sides must be
-    bucketed on the join key; matching bucket counts avoid the
-    one-side-reshuffle fallback. Tested shuffle-free in
-    tests/test_io.py::test_bucketed_join_is_shuffle_free.
-
-    Spark's bucketing requires ``saveAsTable`` (metastore-tracked
-    managed table under ``spark.sql.warehouse.dir``), not a bare
-    ``.parquet(path)`` write."""
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table)
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -69,47 +42,3 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    num_files: int = 32,
-    mode: str = "overwrite",
-    bits: int = 16,
-) -> None:
-    """Z-order-clustered parquet sink: rows are Morton-clustered on
-    ``zorder_cols`` (operators/layout.py) before writing, so every
-    output file carries a tight min/max bounding box on ALL of those
-    columns and scans filtered on any of them prune files/row-groups —
-    the OPTIMIZE ZORDER pattern for multi-column data skipping."""
-    from sales_forecast_pyspark_spark.operators.layout import zorder_layout
-
-    zorder_layout(df, zorder_cols, num_files, bits).write.mode(mode).parquet(path)
-
-
-def compact_parquet(
-    spark,
-    src_path: str,
-    dst_path: str,
-    target_file_mb: int = 128,
-    mode: str = "overwrite",
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ~``target_file_mb`` files, sized from the SOURCE's on-disk bytes
-    (driver-side listing of file metadata, no data read). Streaming
-    ingests and fine-grained partition writes accumulate kilobyte
-    files whose per-file open/footer cost dominates scans at scale;
-    periodic compaction is the standard fix. Returns the file count
-    written. Compaction uses ``coalesce`` (no shuffle — merges input
-    splits); combine with ``write_zordered`` when clustering should be
-    (re)established instead."""
-    from py4j.java_gateway import java_import
-
-    jvm = spark.sparkContext._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    hpath = jvm.Path(src_path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    size = fs.getContentSummary(hpath).getLength()
-    n_files = max(1, -(-size // (target_file_mb * 1024 * 1024)))
-    spark.read.parquet(src_path).coalesce(n_files).write.mode(mode).parquet(dst_path)
-    return n_files

@@ -1,35 +1,17 @@
 """Structured Streaming operators (SURVEY.md §2.10 extension)."""
 
 from sales_forecast_pyspark_spark.streaming.stream_ops import (
-    daily_panel_stream,
-    dedup_stream,
-    enrich_stream_with_dim,
-    run_available_now,
     attribution_stream,
-    reconcile_late_attribution,
-    running_user_totals,
-    running_user_totals_v2,
-    sessionize_stream,
+    run_available_now,
     stream_events,
-    stream_join_near_errors,
-    stream_join_unanswered_errors,
     stream_lineitem,
     windowed_event_totals,
 )
 
 __all__ = [
-    "daily_panel_stream",
-    "dedup_stream",
-    "enrich_stream_with_dim",
-    "run_available_now",
     "attribution_stream",
-    "reconcile_late_attribution",
-    "running_user_totals",
-    "running_user_totals_v2",
-    "sessionize_stream",
+    "run_available_now",
     "stream_events",
-    "stream_join_near_errors",
-    "stream_join_unanswered_errors",
     "stream_lineitem",
     "windowed_event_totals",
 ]

@@ -1,6 +1,7 @@
-"""Structured Streaming over the events table: readStream source,
-watermarked tumbling-window aggregation, session windows, and an
-availableNow runner for batch-equivalence testing.
+"""Structured Streaming over the events and lineitem tables: readStream
+sources, watermarked tumbling-window aggregation, streaming last-touch
+attribution, foreachBatch maintenance of the panel's partial state, and
+an availableNow runner for batch-equivalence testing.
 
 The reference is batch-only (SURVEY.md §2.10); this module is the
 streaming extension the driver's events table invites. Design rules:
@@ -14,28 +15,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from sales_forecast_pyspark_spark.operators.windows import (
     DEFAULT_CONVERSION_TYPE,
     DEFAULT_TOUCH_TYPES,
 )
-
-# Streaming scans require a declared schema (no inference mid-stream).
-# The canonical post-normalization events schema; the physical parquet
-# may store ts as long nanos or timestamp[us] — stream_events reads the
-# footer once and normalizes exactly like the batch scan layer.
-EVENTS_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
-
 
 def _stream_source(
     spark: SparkSession,
@@ -107,444 +91,6 @@ def windowed_event_totals(
     )
 
 
-def sessionize_stream(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming sessionization with the built-in ``session_window`` —
-    the stateful-operator path without custom state code (dynamic gaps
-    are a gap EXPRESSION, see ``sessionize_stream_dynamic``; only custom
-    MERGE semantics need applyInPandasWithState)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(
-            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                "session_start"
-            ),
-            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                "last_event"
-            ),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select("user_id", "session_start", "last_event", "n_events")
-    )
-
-
-def sessionize_stream_dynamic(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming DYNAMIC-GAP sessionization — the same per-event
-    CalendarInterval gap expression as the batch
-    ``sessionization_dynamic`` query (engaged-browsing events extend
-    the session 30 min, transactional ones 10), run through the
-    stateful ``session_window`` operator with a watermark bounding the
-    open-session state. Batch-stream equivalence is asserted in tests;
-    no custom state code — the gap EXPRESSION is the extension point,
-    applyInPandasWithState is only needed for custom merge logic."""
-    gap = F.when(
-        F.col("event_type").isin("view", "click"),
-        F.expr("make_interval(0,0,0,0,0,30,0)"),
-    ).otherwise(F.expr("make_interval(0,0,0,0,0,10,0)"))
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(
-            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                "session_start"
-            ),
-            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-                "last_event"
-            ),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select("user_id", "session_start", "last_event", "n_events")
-    )
-
-
-def dedup_stream(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact dedup — the streaming twin of
-    ``operators/rowops.py::dedup_exact``. ``dropDuplicatesWithinWatermark``
-    keeps one row per key and, unlike plain ``dropDuplicates`` on a
-    stream, expires each key's dedup state once the watermark passes it:
-    state is bounded by keys-per-watermark-window, not stream lifetime —
-    the property that makes exact dedup viable on an unbounded stream.
-    Duplicates arriving later than the watermark are NOT caught (that
-    tail needs a periodic batch ``dedup_exact`` sweep — the classic
-    lambda split)."""
-    keys = keys or ["event_id"]
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def stream_join_near_errors(
-    events: DataFrame, horizon: str = "5 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Stream-stream inner join: pair every error event with the same
-    user's activity inside ``horizon`` after it — the streaming twin of
-    the batch ``events_near_errors`` range join (pair-level equivalence
-    is asserted in tests).
-
-    Both sides carry a watermark and the join condition bounds the event
-    times relative to each other, which is what lets Spark expire
-    buffered rows: an error older than (max event time − watermark −
-    horizon) can never match future activity, so its state is dropped.
-    Without the time-range condition the state store would grow
-    unboundedly — the stream-stream analogue of the cartesian trap the
-    batch operator's binning avoids. Append output mode only (matches
-    are final once the watermark passes)."""
-    errors = (
-        events.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("err_user"),
-            F.col("ts").alias("err_ts"),
-        )
-        .withWatermark("err_ts", watermark)
-    )
-    follows = events.select("event_id", "user_id", "ts", "value").withWatermark(
-        "ts", watermark
-    )
-    cond = (
-        (F.col("err_user") == F.col("user_id"))
-        & (F.col("ts") >= F.col("err_ts"))
-        & (F.col("ts") <= F.col("err_ts") + F.expr(f"INTERVAL {horizon}"))
-    )
-    return errors.join(follows, cond, "inner").select(
-        "error_id", "event_id", "user_id", "value"
-    )
-
-
-def stream_join_unanswered_errors(
-    events: DataFrame, horizon: str = "5 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Stream-stream LEFT OUTER join — the state machine the inner join
-    never exercises: an error with NO follow-up activity inside
-    ``horizon`` must still be emitted (null match side), but only once
-    the watermark PROVES no match can arrive. Spark buffers the left
-    row until max-event-time − watermark passes the end of its match
-    window, then emits the null-padded row and drops the state — so
-    "unanswered" results are exactly as late as the watermark, never
-    wrong. The join condition's time bounds are what make both the
-    outer-emission decision and state expiry possible; errors younger
-    than (stream end − watermark − horizon) at drain time stay buffered
-    and are NOT emitted (asserted in tests — the batch comparison
-    restricts to the closable set). Append mode only."""
-    errors = (
-        events.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("err_user"),
-            F.col("ts").alias("err_ts"),
-        )
-        .withWatermark("err_ts", watermark)
-    )
-    follows = events.select("event_id", "user_id", "ts", "value").withWatermark(
-        "ts", watermark
-    )
-    cond = (
-        (F.col("err_user") == F.col("user_id"))
-        & (F.col("ts") >= F.col("err_ts"))
-        & (F.col("ts") <= F.col("err_ts") + F.expr(f"INTERVAL {horizon}"))
-    )
-    return errors.join(follows, cond, "left_outer").select(
-        "error_id", F.col("err_user").alias("user"), "event_id", "value"
-    )
-
-
-def enrich_stream_with_dim(
-    events: DataFrame,
-    dim: DataFrame,
-    stream_key: str,
-    dim_key: str,
-    segment_col: str,
-) -> DataFrame:
-    """Stream-static enrichment: join the event stream against a BATCH
-    dimension table, then aggregate per segment — the canonical "attach
-    the customer profile to the clickstream" shape.
-
-    The static side is re-read per micro-batch by definition (Spark
-    plans the batch relation fresh each trigger, so a dim table updated
-    between triggers is picked up); ``F.broadcast`` pins the hash-join
-    strategy so no micro-batch ever shuffles the stream side. Stream-
-    static joins need NO watermark — the dim side never buffers state.
-    The aggregate's state is one row per segment (bounded by segment
-    cardinality, not stream length), so complete-mode output is safe.
-
-    Equivalence contract (asserted in tests): after an availableNow
-    drain this equals the batch ``salted_segment_value`` query — the
-    same join expressed salted-batch, stream-static, and as the plain
-    SQL oracle must agree row-for-row."""
-    d = dim.select(
-        F.col(dim_key).alias(stream_key), F.col(segment_col).alias("segment")
-    )
-    return (
-        events.join(F.broadcast(d), stream_key, "inner")
-        .groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(30,6)")), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
-
-
-try:  # optional dependency: transformWithState's driver-side runner
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    HAS_TWS_PROTOBUF = True
-except ImportError:  # pragma: no cover - exercised in protobuf-less containers
-    HAS_TWS_PROTOBUF = False
-
-
-def running_user_totals_v2(events: DataFrame) -> DataFrame:
-    """``running_user_totals`` on Spark 4's ``transformWithStateInPandas``
-    — the successor API to ``applyInPandasWithState`` (SPARK-49564 /
-    the arbitrary-state v2 design, public Spark source): a
-    ``StatefulProcessor`` class with NAMED, independently-typed state
-    variables (ValueState here; ListState/MapState for collections)
-    instead of one packed GroupState tuple, explicit timer registration
-    instead of timeoutConf, and per-variable TTL via ``TTLConfig``.
-    Same output contract as ``running_user_totals``: one (user_id,
-    n_events, total_value) row per key per micro-batch it appears in,
-    update mode.
-
-    Migration map from the v1 operators in this module (kept as the
-    production path until the environment supports v2):
-
-    - GroupState tuple        -> handle.getValueState(name, schema)
-    - GroupStateTimeout.*     -> timeMode= ('None' | 'ProcessingTime' |
-                                 'EventTime') + handle.registerTimer
-    - state.hasTimedOut batch -> handleExpiredTimer callback
-    - TTL-by-hand (expiring_user_stats' event-time timeout dance)
-      -> TTLConfig per state variable
-
-    ENVIRONMENT GATE (same pattern as the PIL-gated image decode,
-    multimodal.py): transformWithState's driver-side streaming runner
-    speaks protobuf to the JVM, so it requires the ``protobuf`` package
-    (and the RocksDB state-store provider, which ships inside Spark).
-    This container has no protobuf (and no pip), so construction raises
-    with the one-line remedy; the plumbing — processor class, state
-    schema, output contract — is real and the equivalence test in
-    tests/test_streaming.py activates unchanged the moment the
-    environment gains the package (verified against the v1 operator's
-    batch-equivalence fixture design). Throughput contract at scale is
-    the v1 operators' rows-per-group-instance model; v2 additionally
-    amortizes state codec setup per variable rather than per tuple."""
-    if not HAS_TWS_PROTOBUF:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the 'protobuf' package for "
-            "its streaming runner (pip install protobuf); this container "
-            "lacks it — use running_user_totals (applyInPandasWithState) "
-            "until then"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals",
-                T.StructType(
-                    [
-                        T.StructField("n", T.LongType()),
-                        T.StructField("total", T.DoubleType()),
-                    ]
-                ),
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                self._state.get() if self._state.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _Totals(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="update",
-        timeMode="None",
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    cumulative event count + value total, maintained in GroupState
-    across micro-batches and emitted on every update.
-
-    This is the escape hatch for stateful semantics the built-in
-    window/session operators can't express (custom merge logic, decaying
-    counters, cross-batch dedup). State is one tiny tuple per user key —
-    bounded by key cardinality, not stream length; with no timeout the
-    state lives for the query's lifetime, so keys must be bounded (use a
-    TTL timeout for unbounded key spaces).
-
-    THROUGHPUT CONTRACT (measured r08/r09 rehearsal ladder, SCALING.md
-    "streaming" section): per-row replay cost is flat; the bound is the
-    per-GROUP-PER-BATCH fixed overhead of ``applyInPandasWithState``
-    (state get/update, chunk handling, per-group dispatch), so
-    throughput tracks **rows per group instance** = batch_rows /
-    distinct_keys_in_batch — NOT corpus size. Size micro-batches so
-    instances stay in the thousands of rows: at the 100x decade,
-    8 files/trigger gave 8.3 rows/instance at 63.5k rows/s; 32
-    files/trigger gave 33 rows/instance at 185.6k rows/s (2.9x) with
-    identical results. ``scripts/stream_rehearsal.py`` defaults to the
-    measured 32; a production firehose reaches the same regime through
-    its natural batch interval."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def _update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update,
-        outputStructType="user_id long, n_events long, total_value double",
-        stateStructType="n long, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def expiring_user_stats(
-    events: DataFrame, ttl: str = "1 hour", watermark: str = "0 seconds"
-) -> DataFrame:
-    """TTL-expiring per-user stats via ``applyInPandasWithState`` with an
-    EVENT-TIME timeout — the state-lifecycle pattern
-    ``running_user_totals`` (NoTimeout) cannot provide for an UNBOUNDED
-    key space: every key's state would otherwise live for the query's
-    lifetime, and on a 100 TB stream the state store, not the data,
-    becomes the bottleneck.
-
-    Per user: count events and sum value across micro-batches; arm an
-    event-time timeout at (max event time seen for this key + ttl). When
-    the watermark passes that mark with no new events, Spark invokes the
-    handler once more with ``state.hasTimedOut`` set: the key emits a
-    FINAL row (``final=true``) and its state is removed — emit-on-expiry
-    with custom finalization logic, which no built-in window/session
-    operator expresses. Keys seen again later start fresh (a new
-    "visit"). Non-final rows stream out on every update, so downstream
-    gets both live running values and a terminal record per visit.
-
-    Timeouts only fire when the watermark ADVANCES, i.e. at micro-batch
-    boundaries — a single availableNow batch never expires anything
-    (the test drives two batches via maxFilesPerTrigger)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def _update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            n, total, last_ms = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                    "final": [True],
-                }
-            )
-            return
-        n, total, last_ms = state.get if state.exists else (0, 0.0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-            batch_max_ms = int(pdf["ts"].max().value // 1_000_000)
-            last_ms = max(last_ms, batch_max_ms)
-        state.update((n, total, last_ms))
-        # arm expiry at (latest event for this key + ttl); must exceed
-        # the current watermark or Spark rejects it
-        timeout_at = max(
-            last_ms + _TTL_MS[0], state.getCurrentWatermarkMs() + 1
-        )
-        state.setTimeoutTimestamp(timeout_at)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 2)],
-                "final": [False],
-            }
-        )
-
-    # Resolve the TTL interval to milliseconds once, driver-side, with
-    # Spark's own interval parser (so '1 hour', '90 seconds' etc. all
-    # work); smuggled into the closure via a 1-element list.
-    sess = events.sparkSession
-    _TTL_MS = [
-        int(
-            sess.range(1)
-            .select(
-                (
-                    F.unix_timestamp(
-                        F.lit("1970-01-01 00:00:00").cast("timestamp")
-                        + F.expr(f"INTERVAL {ttl}")
-                    )
-                    * 1000
-                ).alias("ms")
-            )
-            .first()["ms"]
-        )
-    ]
-
-    return events.withWatermark("ts", watermark).groupBy("user_id").applyInPandasWithState(
-        _update,
-        outputStructType="user_id long, n_events long, total_value double, final boolean",
-        stateStructType="n long, total double, last_ms long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def observe_quality(
-    df: DataFrame,
-    cols: list[str],
-    name: str = "quality",
-) -> DataFrame:
-    """Attach per-micro-batch data-quality metrics to a stream with
-    ``observe()`` — row count plus a null count per watched column,
-    evaluated INSIDE the running query (no second scan, no extra
-    action) and surfaced through ``StreamingQueryProgress
-    .observedMetrics[name]`` for alerting ("null-rate spiked in this
-    batch") without touching the data path.
-
-    This is the streaming face of the batch ``quality_report``
-    expectations: the batch operator audits a table at rest, this one
-    audits every batch in flight. Works identically on batch frames
-    (metrics arrive via QueryExecutionListener there)."""
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    metrics += [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"n_null_{c}") for c in cols
-    ]
-    return df.observe(name, *metrics)
-
-
 def run_available_now(
     df: DataFrame, query_name: str, output_mode: str = "complete"
 ) -> DataFrame:
@@ -571,40 +117,6 @@ def stream_lineitem(
     current contents drain as one bounded run, the standard
     backfill-then-tail pattern."""
     return _stream_source(spark, sf_dir, "lineitem", files_per_trigger)
-
-
-def daily_panel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of the flagship daily panel (plans/panel.py):
-    stream-STATIC joins against the supplier/nation dimension tables
-    (dims are batch DataFrames — Spark re-plans them per micro-batch, so
-    slowly-changing dims pick up updates between batches), then the
-    SAME ``daily_rollup`` aggregate the batch query uses — one code path
-    for both semantics, which is what makes the equivalence testable.
-
-    No watermark: the panel is keyed by ship-date, not arrival time, and
-    the rollup must absorb arbitrarily late rows — complete/update mode
-    with unbounded-but-small state (one row per (country, stock, day)
-    triple, the PANEL grain, not the event grain)."""
-    from sales_forecast_pyspark_spark.operators.aggregates import daily_rollup
-    from sales_forecast_pyspark_spark.plans.panel import (
-        PANEL_GRAIN,
-        PANEL_QTY_COL,
-        enrich_for_panel,
-        panel_price_expr,
-        panel_revenue_expr,
-    )
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-
-    li = stream_lineitem(spark, sf_dir)
-    sup = read_table(spark, sf_dir, "supplier")
-    nat = read_table(spark, sf_dir, "nation")
-    return daily_rollup(
-        enrich_for_panel(li, sup, nat),
-        keys=PANEL_GRAIN,
-        qty_col=PANEL_QTY_COL,
-        revenue_expr=panel_revenue_expr(),
-        price_expr=panel_price_expr(),
-    )
 
 
 def maintain_partials_stream(
@@ -701,7 +213,8 @@ def attribution_stream(
 
     Assumes in-order delivery per user ACROSS micro-batches (attribution
     state cannot retro-correct a touch that arrives after its
-    conversion; see ``reconcile_late_attribution`` for the remedy).
+    conversion; recompute an affected user from the full log with the
+    batch ``last_touch_rows``).
     WITHIN a micro-batch no ordering is assumed: Arrow hands a group's
     rows as multiple chunks (split at
     ``spark.sql.execution.arrow.maxRecordsPerBatch``, default 10k) with
@@ -790,74 +303,3 @@ def attribution_stream(
     )
 
 
-def reconcile_late_attribution(
-    stream_out: DataFrame,
-    events: DataFrame,
-    late_events: DataFrame,
-    touch_types: tuple[str, ...] = DEFAULT_TOUCH_TYPES,
-    conversion_type: str = DEFAULT_CONVERSION_TYPE,
-    max_affected_users: int = 2_000_000,
-) -> DataFrame:
-    """Batch reprocessing path for ``attribution_stream``'s documented
-    out-of-order limitation: the stream's O(1) per-user state cannot
-    retro-correct a conversion once a LATER micro-batch delivers a touch
-    whose event time precedes it. When the ingest layer knows which
-    arrivals were late (file provenance, Kafka ingestion-vs-event time —
-    here an explicit ``late_events`` frame), the fix is surgical: drop
-    the stream's emissions for the affected users only and recompute
-    those users from the full event log with the batch window operator
-    (``operators.windows.last_touch_rows`` — same single-WindowExec
-    shape), leaving every unaffected user's streaming rows untouched.
-
-    At 100 TB the economics are the point: late arrivals are a tiny
-    user subset, so the recompute is a semi-join-pruned window over that
-    subset (both the events scan and the window shuffle see only
-    affected users), not a full-log replay; the affected-user frame is
-    broadcast into both the semi and anti joins. That broadcast is an
-    ASSUMPTION the operator now enforces (ADVICE r07): the distinct
-    affected-user count is checked against ``max_affected_users`` —
-    the default 2M distinct longs is ~16 MB broadcast-side,
-    comfortably inside executor memory. Cost accounting (code-review
-    r08; bounded per ADVICE r08): the guard needs only "more than cap
-    distinct users?", so it counts ``limit(cap + 1)`` over the distinct
-    frame — the count a driver ever materializes is at most cap + 1
-    regardless of how pathological the late batch is (a cache would
-    avoid the second distinct pass but pins an un-unpersistable frame
-    per invocation on this per-batch remedy path, a session-lifetime
-    leak); the two joins share ONE broadcast build because
-    ReuseExchange dedups their identical broadcast subtrees inside
-    the single returned plan. A degenerate everything-was-late batch
-    fails LOUDLY with the remedy spelled out (full batch recompute via
-    ``last_touch_rows`` over the whole log — at that point pruning buys
-    nothing and a silent large-side broadcast would OOM executors)
-    instead of planning a pathological broadcast. Demonstrated
-    end-to-end (divergence, then reconciliation) in
-    tests/test_streaming.py."""
-    from sales_forecast_pyspark_spark.operators.windows import last_touch_rows
-
-    affected = late_events.select("user_id").distinct()
-    n_affected = affected.limit(max_affected_users + 1).count()
-    if n_affected > max_affected_users:
-        raise ValueError(
-            f"reconcile_late_attribution: > {max_affected_users} distinct "
-            "late users — the surgical broadcast-pruned recompute no longer "
-            "pays. Recompute the full log with operators.windows."
-            "last_touch_rows directly (or raise max_affected_users if the "
-            "cluster's broadcast budget genuinely allows it)."
-        )
-    affected = F.broadcast(affected)
-    kept = stream_out.join(affected, "user_id", "left_anti")
-    recomputed = last_touch_rows(
-        events.join(affected, "user_id", "left_semi"),
-        touch_types=touch_types,
-        conversion_type=conversion_type,
-    )
-    return kept.unionByName(
-        recomputed.select(
-            F.col("user_id").cast("long"),
-            F.col("event_id").cast("long"),
-            "channel",
-            F.col("value").cast("double"),
-            F.col("latency_us").cast("long"),
-        )
-    )

@@ -20,8 +20,8 @@ covered by pytest equivalence at sf0.001 only:
    grows. Output goes to the noop sink — this path measures the
    stateful engine, not a driver collect. No cross-batch ordering is
    assumed by the measurement: unordered part-files mean late touches
-   may mis-attribute (the documented limitation whose remedy is
-   ``reconcile_late_attribution``); emission COUNT still equals the
+   may mis-attribute (the documented limitation: recompute affected
+   users with the batch ``last_touch_rows``); emission COUNT still equals the
    conversion count, which is asserted via observe() metrics.
 3. ``partials_fold`` — the foreachBatch incremental panel maintenance
    (versioned decimal partials). The scale claims: per-fold cost is

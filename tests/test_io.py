@@ -9,7 +9,6 @@ import datetime
 import os
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from sales_forecast_pyspark_spark.functions.deterministic import stable_avg
 from sales_forecast_pyspark_spark.sources.readers import (
@@ -69,130 +68,6 @@ def test_stable_avg_reference_parity_mode(spark):
     assert got == 6.17  # HALF_UP of 6.165, the reference's rounding
     raw = df.agg(stable_avg(F.col("p")).alias("a")).first()["a"]
     assert abs(raw - 6.165) < 1e-12
-
-
-def test_bucketed_join_is_shuffle_free(spark):
-    """S6 scale extension: two tables bucketed on the join key with the
-    same bucket count join with ZERO exchanges — the write-once
-    pre-shuffle that pays for itself when the fact table is joined
-    every day."""
-    from sales_forecast_pyspark_spark.sources.sinks import write_bucketed
-
-    facts = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
-    )
-    dims = spark.range(0, 100).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("w")
-    )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        write_bucketed(facts, "t_bucket_facts", ["k"], num_buckets=4, sort_cols=["k"])
-        write_bucketed(dims, "t_bucket_dims", ["k"], num_buckets=4, sort_cols=["k"])
-        # broadcast would trivially avoid the exchange; force the
-        # shuffle-join path to prove bucketing removes it
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("t_bucket_facts").join(spark.table("t_bucket_dims"), "k")
-        rows = joined.count()
-        assert rows == 100
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS t_bucket_facts")
-        spark.sql("DROP TABLE IF EXISTS t_bucket_dims")
-
-
-def test_read_json_declared_schema(spark, tmp_path):
-    import json as _json
-
-    p = tmp_path / "rows.jsonl"
-    p.write_text("\n".join(_json.dumps({"a": i, "b": f"x{i}"}) for i in range(5)))
-    from sales_forecast_pyspark_spark.sources.readers import read_json
-
-    schema = T.StructType(
-        [T.StructField("a", T.LongType()), T.StructField("b", T.StringType())]
-    )
-    out = read_json(spark, str(p), schema)
-    assert out.schema == schema
-    assert sorted(r["a"] for r in out.collect()) == [0, 1, 2, 3, 4]
-
-
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    """50 tiny files compact to the size-derived count (1 at this data
-    volume) with no row loss."""
-    from sales_forecast_pyspark_spark.sources.sinks import compact_parquet
-
-    src, dst = str(tmp_path / "small"), str(tmp_path / "compact")
-    spark.range(10000).repartition(50).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 50
-    n = compact_parquet(spark, src, dst, target_file_mb=128)
-    assert n == 1
-    assert len(glob.glob(f"{dst}/part-*.parquet")) == 1
-    assert spark.read.parquet(dst).count() == 10000
-
-
-def test_write_zordered_files_have_tight_bboxes(spark, tmp_path):
-    """Each z-ordered output file spans a bounded box on BOTH columns
-    (checked via per-file min/max through input_file_name), which is
-    exactly the property file-skipping prunes on."""
-    from sales_forecast_pyspark_spark.sources.sinks import write_zordered
-
-    n, files = 64, 16
-    rows = [(x, y) for x in range(n) for y in range(n)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    path = str(tmp_path / "z")
-    write_zordered(df, path, ["x", "y"], num_files=files, bits=6)
-    spans = (
-        spark.read.parquet(path)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(
-            (F.max("x") - F.min("x")).alias("dx"),
-            (F.max("y") - F.min("y")).alias("dy"),
-        )
-        .collect()
-    )
-    assert len(spans) >= files // 2
-    worst = max(max(r["dx"], r["dy"]) for r in spans)
-    assert worst <= (n // 4) - 1
-    assert spark.read.parquet(path).count() == n * n
-
-
-def test_docsgen_python_datasource(spark):
-    """docsgen custom DataSource: declared schema, partitioned
-    executor-side generation, corpus bit-identical across partition
-    counts, and planted near-dups recoverable by the dedup tier."""
-    from sales_forecast_pyspark_spark.llmdata.dedup import minhash_near_dedup
-    from sales_forecast_pyspark_spark.sources.docsgen import DocsGenDataSource
-
-    spark.dataSource.register(DocsGenDataSource)
-
-    def gen(n, parts):
-        return (
-            spark.read.format("docsgen")
-            .option("num_docs", n)
-            .option("num_partitions", parts)
-            .load()
-        )
-
-    df = gen(500, 8)
-    assert df.columns == ["doc_id", "text", "lang", "source", "n_chars"]
-    assert df.count() == 500
-    assert df.rdd.getNumPartitions() == 8
-    a = sorted(map(tuple, gen(300, 3).collect()))
-    b = sorted(map(tuple, gen(300, 7).collect()))
-    assert a == b
-    # every 10th doc is its predecessor with a one-token edit: the
-    # MinHash tier must recover (almost all of) those planted pairs.
-    pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_near_dedup(gen(200, 4), threshold=0.7).collect()
-    }
-    planted = {(i - 1, i) for i in range(9, 200, 10)}
-    found = {p for p in planted if p in pairs or (p[1], p[0]) in pairs}
-    assert len(found) >= 0.8 * len(planted)
 
 
 def test_partitioned_scan_actually_prunes(spark, tmp_path):

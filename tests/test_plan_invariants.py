@@ -62,39 +62,48 @@ BNLJ_DECLARED = {
 AUDITABLE = [n for n in QUERIES if n not in SKIP]
 
 
-def _plan(spark, name):
-    q = QUERIES[name]
-    return q.builder(spark, SF_SMALL)._jdf.queryExecution().executedPlan().toString()
+@pytest.fixture(scope="session")
+def plans(spark):
+    """``plans(name)``: the query's executed-plan string, built once per
+    session, so the two all-query sweeps and the per-query pins below
+    share one build of each plan."""
+    cache: dict[str, str] = {}
+
+    def build(name: str) -> str:
+        if name not in cache:
+            df = QUERIES[name].builder(spark, SF_SMALL)
+            cache[name] = df._jdf.queryExecution().executedPlan().toString()
+        return cache[name]
+
+    return build
 
 
-@pytest.mark.slow
-def test_no_cartesian_products_anywhere(spark):
-    offenders = [n for n in AUDITABLE if "CartesianProduct" in _plan(spark, n)]
+def test_no_cartesian_products_anywhere(plans):
+    offenders = [n for n in AUDITABLE if "CartesianProduct" in plans(n)]
     assert offenders == [], offenders
 
 
-@pytest.mark.slow
-def test_nested_loop_joins_only_where_declared(spark):
+def test_nested_loop_joins_only_where_declared(plans):
     offenders = [
         n
         for n in AUDITABLE
-        if "BroadcastNestedLoopJoin" in _plan(spark, n) and n not in BNLJ_DECLARED
+        if "BroadcastNestedLoopJoin" in plans(n) and n not in BNLJ_DECLARED
     ]
     assert offenders == [], offenders
 
 
 @pytest.mark.parametrize("name", ["daily_rollup", "eval_join", "lag_features"])
-def test_flagship_scans_push_filters(spark, name):
+def test_flagship_scans_push_filters(plans, name):
     """The flagship fact-table plans must push at least one filter to
     the parquet scan (join-key IsNotNull counts — it prunes nulls
     before the shuffle)."""
     import re
 
-    plan = _plan(spark, name)
+    plan = plans(name)
     assert re.search(r"PushedFilters: \[[^\]]", plan), name
 
 
-def test_salted_join_fans_out_hot_keys(spark):
+def test_salted_join_fans_out_hot_keys(plans):
     """salted_segment_value: the salt fan-out must exist in the physical
     plan — a Generate(explode) replicating the right side across salt
     buckets, and the join keyed on (user_id, __salt), not user_id alone.
@@ -104,13 +113,13 @@ def test_salted_join_fans_out_hot_keys(spark):
     fictional-estimate class and defeated the salting — no shuffle,
     nothing to de-skew), so the join must be a sort-merge join at
     every SF."""
-    plan = _plan(spark, "salted_segment_value")
+    plan = plans("salted_segment_value")
     assert "Generate explode" in plan, plan
     assert "__salt" in plan, plan
     assert "SortMergeJoin" in plan, plan
 
 
-def test_graph_tier_has_no_static_broadcast_joins(spark):
+def test_graph_tier_has_no_static_broadcast_joins(plans):
     """copurchase_triangles / pagerank_parts: the r09 static-broadcast
     sweep (descending cached fill plans) found the planner statically
     BROADCASTING the edge/degree frames behind the basket-pair explode
@@ -122,17 +131,17 @@ def test_graph_tier_has_no_static_broadcast_joins(spark):
     key set these aren't — so the invariant is simply: zero BHJ, and
     the hinted strategies present."""
     for name in ("copurchase_triangles", "pagerank_parts"):
-        plan = _plan(spark, name)
+        plan = plans(name)
         assert "BroadcastHashJoin" not in plan, (name, plan)
         assert "ShuffledHashJoin" in plan, (name, plan)
-    assert "SortMergeJoin" in _plan(spark, "copurchase_triangles")
+    assert "SortMergeJoin" in plans("copurchase_triangles")
 
 
 @pytest.mark.parametrize(
     "name",
     ["tfidf_similar_docs", "doc_surprisal", "basket_lift", "ngram_jaccard_pairs"],
 )
-def test_aggregated_count_joins_are_shuffled_hash(spark, name):
+def test_aggregated_count_joins_are_shuffled_hash(plans, name):
     """The r09 aggregated-side hint policy: a one-row-per-key count
     frame (term df, token frequency, item basket counts, per-doc
     shingle counts) joined back into its corpus-scale source must be a
@@ -140,15 +149,15 @@ def test_aggregated_count_joins_are_shuffled_hash(spark, name):
     instead of sorting the data-scale side (and never a static
     broadcast, which the sweep pins separately). Hints force the
     strategy at every SF, so this is stable at sf0.001."""
-    assert "ShuffledHashJoin" in _plan(spark, name), name
+    assert "ShuffledHashJoin" in plans(name), name
 
 
-def test_flagship_rollup_is_single_exchange(spark):
+def test_flagship_rollup_is_single_exchange(plans):
     """daily_rollup: one hash-partitioning exchange (the groupBy), the
     dimension joins broadcast — the shape that holds at 100x."""
     import re
 
-    plan = _plan(spark, "daily_rollup")
+    plan = plans("daily_rollup")
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
 
 

@@ -1,6 +1,6 @@
 """Similarity-search + multimodal tests: exact top-k correctness, LSH
-recall against brute force, decode-stub behavior, and Arrow round-trip
-fidelity of the binary pipeline.
+recall against brute force, and Arrow round-trip fidelity of the binary
+pipeline.
 """
 
 from __future__ import annotations
@@ -14,10 +14,8 @@ from sales_forecast_pyspark_spark.llmdata import (
     attach_binary,
     cosine_topk,
     extract_features,
-    fake_decode,
     lsh_similarity_join,
 )
-from sales_forecast_pyspark_spark.llmdata.multimodal import HAS_PIL, decode_image
 
 from tests.conftest import SF_ORACLE
 
@@ -131,65 +129,6 @@ def test_sparse_vector_input_plan_is_broadcast_safe(spark):
     assert audit_frame(out) == []
 
 
-def _tiny_png(w: int = 3, h: int = 2) -> bytes:
-    """A valid RGB PNG built with stdlib only (correct CRCs)."""
-    import struct
-    import zlib
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + typ
-            + data
-            + struct.pack(">I", zlib.crc32(typ + data))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    raw = b"".join(b"\x00" + b"\x10\x20\x30" * w for _ in range(h))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-@pytest.mark.skipif(HAS_PIL, reason="Pillow installed: real decode active")
-def test_decode_without_pil_raises_and_fake_is_deterministic():
-    with pytest.raises(NotImplementedError):
-        decode_image(_tiny_png())
-    assert fake_decode(b"abc") == fake_decode(b"abc")
-    assert fake_decode(b"abc") == (4, 22)
-
-
-@pytest.mark.skipif(not HAS_PIL, reason="Pillow not installed")
-def test_decode_with_pil_real_dimensions(spark):
-    """With Pillow importable, decode_image returns true pixel dims and
-    decode_dimensions runs them through the Arrow pipeline."""
-    from sales_forecast_pyspark_spark.llmdata.multimodal import decode_dimensions
-
-    assert decode_image(_tiny_png(3, 2))[:2] == (3, 2)
-    df = spark.createDataFrame(
-        [(1, _tiny_png(3, 2)), (2, b"not an image")], "doc_id long, content binary"
-    )
-    out = {r["doc_id"]: r for r in decode_dimensions(df).collect()}
-    assert (out[1]["width"], out[1]["height"]) == (3, 2)
-    assert out[2]["width"] is None  # undecodable -> nulls, no executor crash
-
-
-def test_decode_dimensions_fails_fast_without_pil(spark):
-    """Without Pillow the real-decode twin raises at plan-build time."""
-    if HAS_PIL:
-        pytest.skip("Pillow installed")
-    df = spark.createDataFrame([(1, b"x")], "doc_id long, content binary")
-    with pytest.raises(NotImplementedError):
-        decode_dimensions_import = __import__(
-            "sales_forecast_pyspark_spark.llmdata.multimodal",
-            fromlist=["decode_dimensions"],
-        ).decode_dimensions
-        decode_dimensions_import(df)
-
-
 def test_extract_features_carries_id_name_and_type(spark):
     """Output id field copies the input's name AND type (a string id
     column named 'name' round-trips; previously hardcoded 'doc_id long')."""
@@ -258,31 +197,6 @@ def test_sample_frames_fanout_and_losslessness(spark):
         frame_decoder=lambda b: [b, b[::-1]],
     ).collect()
     assert sorted(bytes(r["frame_bytes"]) for r in got) == [b"abc", b"cba"]
-
-
-@pytest.mark.skipif(not HAS_PIL, reason="Pillow not installed")
-def test_resize_images_real_path(spark):
-    from sales_forecast_pyspark_spark.llmdata.multimodal import (
-        decode_image,
-        resize_images,
-    )
-
-    df = spark.createDataFrame(
-        [(1, _tiny_png(4, 4)), (2, b"junk")], "doc_id long, content binary"
-    )
-    out = {r["doc_id"]: r for r in resize_images(df, 2, 3).collect()}
-    assert decode_image(bytes(out[1]["resized"]))[:2] == (2, 3)
-    assert out[2]["resized"] is None
-
-
-def test_resize_images_fails_fast_without_pil(spark):
-    if HAS_PIL:
-        pytest.skip("Pillow installed")
-    from sales_forecast_pyspark_spark.llmdata.multimodal import resize_images
-
-    df = spark.createDataFrame([(1, b"x")], "doc_id long, content binary")
-    with pytest.raises(NotImplementedError):
-        resize_images(df, 2, 2)
 
 
 def test_quantize_roundtrip_error_bound(spark):

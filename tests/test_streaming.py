@@ -1,6 +1,7 @@
-"""Batch-stream equivalence: the streaming window/session aggregations
-must produce exactly the batch query's results once the stream drains
-(availableNow + complete mode).
+"""Batch-stream equivalence: the streaming window aggregation, the
+foreachBatch panel maintenance and the stateful attribution operator
+must produce exactly the batch results once the stream drains
+(availableNow).
 """
 
 from __future__ import annotations
@@ -12,7 +13,6 @@ from pyspark.sql import functions as F
 from sales_forecast_pyspark_spark.plans.queries import QUERIES
 from sales_forecast_pyspark_spark.streaming import (
     run_available_now,
-    sessionize_stream,
     stream_events,
     windowed_event_totals,
 )
@@ -31,478 +31,6 @@ def test_streaming_window_matches_batch(spark):
     cols = ["event_type", "win_start", "n_events", "total_value"]
     assert _rows(got, cols) == _rows(batch, cols)
     assert got.count() > 0
-
-
-def test_streaming_sessionization_matches_batch(spark):
-    stream = sessionize_stream(stream_events(spark, SF_SMALL))
-    got = run_available_now(stream, "stream_sess_test")
-    batch = QUERIES["sessionization"].builder(spark, SF_SMALL)
-    cols = ["user_id", "session_start", "last_event", "n_events"]
-    assert _rows(got, cols) == _rows(batch, cols)
-    assert got.count() > 0
-
-
-def test_stream_static_enrichment_matches_salted_batch(spark):
-    """Three-way agreement on the same join: the stream-static
-    broadcast enrichment, drained, must equal the batch
-    salted_segment_value query (itself oracle-checked against the
-    plain SQL join) — salting and streaming are both
-    correctness-neutral formulations."""
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-    from sales_forecast_pyspark_spark.streaming import (
-        enrich_stream_with_dim,
-        run_available_now,
-        stream_events,
-    )
-
-    cust = read_table(spark, SF_SMALL, "customer")
-    stream = enrich_stream_with_dim(
-        stream_events(spark, SF_SMALL), cust, "user_id", "c_custkey",
-        "c_mktsegment",
-    )
-    got = run_available_now(stream, "stream_enrich_test")
-    batch = QUERIES["salted_segment_value"].builder(spark, SF_SMALL)
-    cols = ["segment", "n_events", "total_value"]
-    assert _rows(got, cols) == _rows(batch, cols)
-    assert got.count() > 0
-
-
-def test_stateful_running_totals_match_batch(spark):
-    """applyInPandasWithState cumulative per-user totals: after the
-    stream drains (one availableNow pass), the latest emitted state per
-    user must equal the batch groupBy aggregate."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-    from sales_forecast_pyspark_spark.streaming import running_user_totals
-
-    stream = running_user_totals(stream_events(spark, SF_SMALL))
-    got = run_available_now(stream, "stream_state_test", output_mode="update")
-    # update mode may emit once per micro-batch; keep the last emit per user
-    latest = {r["user_id"]: (r["n_events"], r["total_value"]) for r in got.collect()}
-
-    batch = (
-        read_table(spark, SF_SMALL, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("v"))
-    )
-    expect = {r["user_id"]: (r["n"], r["v"]) for r in batch.collect()}
-    assert set(latest) == set(expect)
-    for uid, (n, v) in expect.items():
-        gn, gv = latest[uid]
-        assert gn == n, (uid, gn, n)
-        assert math.isclose(gv, v, abs_tol=0.05), (uid, gv, v)
-
-
-def test_stateful_running_totals_v2_matches_batch(spark):
-    """transformWithStateInPandas twin of the test above (r11): same
-    output contract, arbitrary-state v2 API. Skips (loudly) where the
-    environment lacks protobuf — Spark's TWS streaming runner needs it
-    — and activates unchanged the moment the package appears, same
-    harness-ready pattern as the PIL-gated image decode."""
-    import math
-
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-    from sales_forecast_pyspark_spark.streaming import running_user_totals_v2
-    from sales_forecast_pyspark_spark.streaming.stream_ops import (
-        HAS_TWS_PROTOBUF,
-    )
-
-    if not HAS_TWS_PROTOBUF:
-        with _pytest.raises(NotImplementedError, match="protobuf"):
-            running_user_totals_v2(stream_events(spark, SF_SMALL))
-        _pytest.skip(
-            "ENV-BLOCKED: transformWithStateInPandas needs the protobuf "
-            "package (absent, no pip in this container); the v1 "
-            "applyInPandasWithState operator above is the exercised path"
-        )
-
-    stream = running_user_totals_v2(stream_events(spark, SF_SMALL))
-    # transformWithState supports only the RocksDB state-store provider
-    # (ships inside Spark; per-query, picked up at stream start)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        got = run_available_now(
-            stream, "stream_state_v2_test", output_mode="update"
-        )
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-    latest = {
-        r["user_id"]: (r["n_events"], r["total_value"]) for r in got.collect()
-    }
-    batch = (
-        read_table(spark, SF_SMALL, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("v"))
-    )
-    expect = {r["user_id"]: (r["n"], r["v"]) for r in batch.collect()}
-    assert set(latest) == set(expect)
-    for uid, (n, v) in expect.items():
-        gn, gv = latest[uid]
-        assert gn == n, (uid, gn, n)
-        assert math.isclose(gv, v, abs_tol=0.05), (uid, gv, v)
-
-
-def test_stream_stream_join_matches_batch_interval_join(spark):
-    """Pair-level equivalence of the watermarked stream-stream join with
-    the batch binned range join feeding events_near_errors."""
-    from pyspark.sql import functions as F
-
-    from sales_forecast_pyspark_spark.operators.interval import interval_join
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-    from sales_forecast_pyspark_spark.streaming import stream_join_near_errors
-
-    stream = stream_join_near_errors(stream_events(spark, SF_SMALL))
-    got = run_available_now(stream, "stream_join_test", output_mode="append")
-
-    ev = read_table(spark, SF_SMALL, "events")
-    points = ev.select("event_id", "user_id", "ts", "value")
-    intervals = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"),
-        "user_id",
-        F.col("ts").alias("win_start"),
-        (F.col("ts") + F.expr("INTERVAL 5 MINUTES")).alias("win_end"),
-    )
-    batch = interval_join(
-        points, intervals, "ts", "win_start", "win_end",
-        on=["user_id"], bin_width=300,
-    )
-    got_pairs = _rows(got, ["error_id", "event_id"])
-    batch_pairs = _rows(batch, ["error_id", "event_id"])
-    assert got_pairs == batch_pairs
-    assert len(got_pairs) > 0
-
-
-def test_stream_dedup_matches_batch(spark):
-    """dedup_stream keeps exactly one row per key across micro-batches
-    (events are unique on event_id, so feeding the stream twice through
-    a union must still yield the batch-distinct count)."""
-    from sales_forecast_pyspark_spark.streaming import dedup_stream
-
-    base = stream_events(spark, SF_SMALL)
-    doubled = base.union(base)  # same file source twice -> every row duplicated
-    got = run_available_now(
-        dedup_stream(doubled), "stream_dedup_test", output_mode="append"
-    )
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-
-    batch_n = read_table(spark, SF_SMALL, "events").select("event_id").distinct().count()
-    assert got.count() == batch_n
-    assert got.select("event_id").distinct().count() == batch_n
-
-
-def test_streaming_daily_panel_matches_batch(spark):
-    """The flagship rollup's streaming twin: stream-static dimension
-    joins + the SAME daily_rollup aggregate must, once the lineitem
-    stream drains (availableNow, complete mode), equal the batch panel
-    bit-for-bit — including the exact-decimal money columns, which are
-    partitioning-independent by construction."""
-    from sales_forecast_pyspark_spark.plans.panel import daily_panel
-    from sales_forecast_pyspark_spark.streaming import daily_panel_stream
-
-    got = run_available_now(
-        daily_panel_stream(spark, SF_SMALL), "stream_panel_test"
-    )
-    batch = daily_panel(spark, SF_SMALL)
-    cols = ["country", "stock", "ds", "qty", "revenue", "avg_price"]
-    assert _rows(got, cols) == _rows(batch, cols)
-    assert got.count() > 0
-
-
-def test_docsgen_stream_reader_matches_batch(spark, tmp_path):
-    """The docsgen streaming reader delivers the corpus in
-    docs_per_batch micro-batches and the union of all batches is
-    bit-equal to the batch read — offset ranges are replayable id
-    spans, so content is exactly-once by construction."""
-    import time
-
-    from sales_forecast_pyspark_spark.sources.docsgen import DocsGenDataSource
-
-    spark.dataSource.register(DocsGenDataSource)
-    opts = {"num_docs": "300", "num_partitions": "4"}
-    stream = (
-        spark.readStream.format("docsgen")
-        .options(docs_per_batch="100", **opts)
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("docsgen_stream_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        for _ in range(90):
-            if spark.table("docsgen_stream_test").count() >= 300:
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-    got = sorted(map(tuple, spark.table("docsgen_stream_test").collect()))
-    batch = sorted(
-        map(tuple, spark.read.format("docsgen").options(**opts).load().collect())
-    )
-    assert got == batch
-    assert len(q.recentProgress) >= 3  # arrived as multiple micro-batches
-
-
-def test_docsgen_stream_restart_exactly_once(spark, tmp_path):
-    """Kill the stream mid-corpus and restart from the same checkpoint:
-    the COMMITTED output (the file sink's _spark_metadata manifest) must
-    hold every doc exactly once across the two runs — replayable id-span
-    offsets + WAL-committed positions. Files from killed/re-run batch
-    attempts may remain on disk as orphans; they are invisible to a
-    manifest-aware consumer, which is the sink's exactly-once contract
-    (Spark 4's plain batch parquet read lists raw files, so it is NOT
-    that consumer)."""
-    import json
-    import os
-    import time
-
-    from sales_forecast_pyspark_spark.sources.docsgen import DocsGenDataSource
-
-    spark.dataSource.register(DocsGenDataSource)
-    ckpt = str(tmp_path / "ckpt")
-
-    def start(sink_dir):
-        return (
-            spark.readStream.format("docsgen")
-            .options(num_docs="300", docs_per_batch="60", num_partitions="4")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", sink_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    sink = str(tmp_path / "out")
-    q1 = start(sink)
-    for _ in range(60):
-        if q1.recentProgress:
-            break
-        time.sleep(1)
-    q1.stop()  # mid-corpus: at least one batch committed, corpus unfinished
-
-    q2 = start(sink)
-    for _ in range(120):
-        try:
-            if (
-                spark.read.parquet(sink).select("doc_id").distinct().count()
-                >= 300
-            ):
-                break
-        except Exception:
-            pass
-        time.sleep(1)
-    q2.stop()
-    # No loss: every doc id reached the sink.
-    assert spark.read.parquet(sink).select("doc_id").distinct().count() == 300
-    # Exactly-once: the manifest's committed files hold each doc once.
-    meta = os.path.join(sink, "_spark_metadata")
-    committed = []
-    for name in os.listdir(meta):
-        if name.startswith(".") or name.endswith(".crc"):
-            continue
-        with open(os.path.join(meta, name)) as fh:
-            for line in fh:
-                line = line.strip()
-                if line.startswith("{"):
-                    committed.append(json.loads(line)["path"])
-    got = spark.read.parquet(*committed)
-    assert got.count() == 300
-    assert got.select("doc_id").distinct().count() == 300
-
-
-def test_ttl_stateful_expiry_emits_final_rows(spark, tmp_path):
-    """expiring_user_stats: state armed with an event-time TTL emits a
-    final row and drops its state once the watermark passes (last event
-    + ttl). Two parquet files drained one-per-trigger give two
-    micro-batches: batch 2's events advance the watermark far past
-    user 1's batch-1 activity, so user 1 finalizes; user 2 (active in
-    batch 2) stays live with running totals only."""
-    import pandas as pd
-
-    from sales_forecast_pyspark_spark.streaming.stream_ops import (
-        expiring_user_stats,
-    )
-
-    src = tmp_path / "events_src"
-    src.mkdir()
-    schema = "event_id long, ts timestamp, user_id long, value double"
-
-    def write_file(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(src / name))
-
-    t0 = datetime.fromisoformat("2024-01-01 10:00:00")
-
-    def at(minutes):
-        return datetime.fromisoformat("2024-01-01 10:00:00") + pd.Timedelta(
-            minutes=minutes
-        )
-
-    write_file("b1.parquet", [(1, t0, 1, 5.0), (2, at(1), 1, 7.0), (3, at(1), 2, 1.0)])
-    # batch 2: user 2 active 3 hours later -> watermark (max ts, 0s
-    # delay) passes user 1's (last event + 1h TTL) and expires it
-    write_file("b2.parquet", [(4, at(180), 2, 2.0)])
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*.parquet")
-    )
-    out = expiring_user_stats(stream, ttl="1 hour", watermark="0 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ttl_stats_test")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = [r.asDict() for r in spark.table("ttl_stats_test").collect()]
-
-    finals = [r for r in rows if r["final"]]
-    assert len(finals) == 1, rows
-    assert finals[0]["user_id"] == 1
-    assert finals[0]["n_events"] == 2
-    assert finals[0]["total_value"] == 12.0  # 5.0 + 7.0, frozen at expiry
-
-    live_u2 = [r for r in rows if r["user_id"] == 2 and not r["final"]]
-    assert [r["n_events"] for r in live_u2] == [1, 2]  # running update per batch
-    assert live_u2[-1]["total_value"] == 3.0
-    # user 2 never expired: no final row for it
-    assert not any(r["final"] for r in rows if r["user_id"] == 2)
-
-
-def test_streaming_dynamic_gap_sessionization_matches_batch(spark):
-    from sales_forecast_pyspark_spark.streaming.stream_ops import (
-        sessionize_stream_dynamic,
-    )
-
-    stream = sessionize_stream_dynamic(stream_events(spark, SF_SMALL))
-    got = run_available_now(stream, "stream_dynsess_test")
-    batch = QUERIES["sessionization_dynamic"].builder(spark, SF_SMALL)
-    cols = ["user_id", "session_start", "last_event", "n_events"]
-    assert _rows(got, cols) == _rows(batch, cols)
-    assert got.count() > 0
-
-
-def test_observe_quality_reports_per_batch_metrics(spark, tmp_path):
-    """observe_quality: every micro-batch's progress carries row and
-    per-column null counts summing to the input totals — the in-flight
-    twin of the batch quality_report."""
-    from sales_forecast_pyspark_spark.streaming.stream_ops import observe_quality
-
-    src = tmp_path / "obs_src"
-    src.mkdir()
-    spark.createDataFrame(
-        [(1, 5.0), (2, None), (3, 7.0)], "id long, v double"
-    ).coalesce(1).write.parquet(str(src / "a.parquet"))
-    spark.createDataFrame(
-        [(4, None)], "id long, v double"
-    ).coalesce(1).write.parquet(str(src / "b.parquet"))
-
-    stream = (
-        spark.readStream.schema("id long, v double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*.parquet")
-    )
-    q = (
-        observe_quality(stream, ["v"])
-        .writeStream.format("noop")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    batches = [
-        p["observedMetrics"]["quality"]
-        for p in q.recentProgress
-        if "quality" in p.get("observedMetrics", {}) and p["observedMetrics"]["quality"]["n_rows"] > 0
-    ]
-    assert len(batches) == 2
-    assert sum(b["n_rows"] for b in batches) == 4
-    assert sum(b["n_null_v"] for b in batches) == 2
-    # each batch individually audited, not just the total
-    assert sorted((b["n_rows"], b["n_null_v"]) for b in batches) == [(1, 1), (3, 1)]
-
-
-def test_stream_left_outer_join_emits_unanswered_errors(spark):
-    """LEFT OUTER stream-stream join: matched pairs equal the batch
-    left join, and errors with NO follow-up in the horizon surface as
-    null-padded rows — but only for errors the watermark could CLOSE
-    (older than stream end − watermark − horizon); younger unmatched
-    errors stay buffered at drain and must be absent."""
-    from pyspark.sql import functions as F
-
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-    from sales_forecast_pyspark_spark.streaming import (
-        stream_join_unanswered_errors,
-    )
-
-    got = run_available_now(
-        stream_join_unanswered_errors(stream_events(spark, SF_SMALL)),
-        "stream_louter_test",
-        output_mode="append",
-    )
-
-    ev = read_table(spark, SF_SMALL, "events")
-    max_ts = ev.agg(F.max("ts")).first()[0]
-    errors = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"),
-        F.col("user_id").alias("user"),
-        F.col("ts").alias("err_ts"),
-    )
-    follows = ev.select("event_id", "user_id", "ts", "value")
-    cond = (
-        (F.col("user") == F.col("user_id"))
-        & (F.col("ts") >= F.col("err_ts"))
-        & (F.col("ts") <= F.col("err_ts") + F.expr("INTERVAL 5 MINUTES"))
-    )
-    batch = errors.join(follows, cond, "left_outer").select(
-        "error_id", "user", "event_id", "value", "err_ts"
-    )
-
-    # matched rows are watermark-independent: exact pair equality
-    got_matched = sorted(
-        (r["error_id"], r["event_id"]) for r in got.collect() if r["event_id"] is not None
-    )
-    batch_matched = sorted(
-        (r["error_id"], r["event_id"]) for r in batch.collect() if r["event_id"] is not None
-    )
-    assert got_matched == batch_matched and got_matched
-
-    # null rows: exactly the CLOSABLE unanswered errors
-    import datetime
-
-    closable_cut = max_ts - datetime.timedelta(hours=2, minutes=5)
-    expect_null = sorted(
-        r["error_id"]
-        for r in batch.collect()
-        if r["event_id"] is None and r["err_ts"] <= closable_cut
-    )
-    got_null = sorted(r["error_id"] for r in got.collect() if r["event_id"] is None)
-    # every closable unanswered error must be emitted; nothing matched may be
-    assert set(expect_null) <= set(got_null)
-    assert not (set(got_null) & {e for e, _ in batch_matched})
 
 
 def test_foreachbatch_partials_maintenance_exactly_once(spark, tmp_path):
@@ -750,20 +278,13 @@ def test_streaming_attribution_hot_user_spans_arrow_chunks(spark, tmp_path):
 
 
 def test_streaming_attribution_late_touch_reprocessing(spark, tmp_path):
-    """Pins attribution_stream's documented out-of-order limitation AND
-    its remedy. A touch arriving in a LATER micro-batch with an EARLIER
-    event time cannot retro-correct a conversion the stream already
-    emitted (O(1) state keeps no timeline) — the stream and the batch
-    truth genuinely diverge, which this test asserts rather than hides.
-    reconcile_late_attribution then routes the late-affected user
-    through the batch window operator and must reproduce the batch
-    truth exactly, leaving the unaffected user's streaming rows
-    untouched."""
+    """Pins attribution_stream's documented out-of-order limitation. A
+    touch arriving in a LATER micro-batch with an EARLIER event time
+    cannot retro-correct a conversion the stream already emitted (O(1)
+    state keeps no timeline) — the stream and the batch truth
+    genuinely diverge, which this test asserts rather than hides."""
     from sales_forecast_pyspark_spark.operators.windows import last_touch_rows
-    from sales_forecast_pyspark_spark.streaming import (
-        attribution_stream,
-        reconcile_late_attribution,
-    )
+    from sales_forecast_pyspark_spark.streaming import attribution_stream
 
     src = tmp_path / "src"
     src.mkdir()
@@ -816,34 +337,7 @@ def test_streaming_attribution_late_touch_reprocessing(spark, tmp_path):
         batch1 + batch2,
         "user_id long, event_id long, event_type string, value double, ts timestamp",
     )
-    late = all_events.filter(F.col("event_id") == 3)
-    stream_out = spark.createDataFrame(
-        [
-            (r["user_id"], r["event_id"], r["channel"], r["value"], r["latency_us"])
-            for r in all_out
-        ],
-        "user_id long, event_id long, channel string, value double, latency_us long",
-    )
-    fixed = reconcile_late_attribution(stream_out, all_events, late)
-    cols = ["user_id", "event_id", "channel", "value", "latency_us"]
-    assert _rows(fixed, cols) == _rows(last_touch_rows(all_events), cols)
-    # and the batch truth indeed retro-corrects purchase 2 to the signup
+    # the batch truth retro-corrects purchase 2 to the signup
     truth = {r["event_id"]: r for r in last_touch_rows(all_events).collect()}
     assert truth[2]["channel"] == "signup"
     assert truth[2]["latency_us"] == 3600 * 1_000_000
-
-    # degenerate everything-was-late batch: the broadcast-pruned path
-    # must refuse LOUDLY (ADVICE r07 guard), not plan a large-side
-    # broadcast — and the guard's count is bounded (limit(cap+1)), so
-    # this costs one tiny action
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="distinct\\s+late users"):
-        reconcile_late_attribution(
-            stream_out, all_events, all_events, max_affected_users=1
-        )
-    # at-the-cap is still the surgical path (cap=1 here: one late user)
-    ok = reconcile_late_attribution(
-        stream_out, all_events, late, max_affected_users=1
-    )
-    assert _rows(ok, cols) == _rows(last_touch_rows(all_events), cols)

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from sales_forecast_pyspark_spark.operators.windows import (
     add_lags,
-    add_rolling,
     ma_baseline,
     rolling_exprs,
     rolling_range_exprs,
@@ -57,12 +56,14 @@ def test_lag_ignores_calendar_gaps(series):
 def test_trailing_frame_excludes_current_row(series):
     """rowsBetween(-2, -1): mean on 01-03 is avg(10, 20) = 15 — the
     current row's 30 must NOT contribute."""
-    out = add_rolling(series, ["k"], "ds", "v", [2], stats=("mean",), fill=None)
+    out = series.select(
+        "*", *rolling_exprs(["k"], "ds", "v", [2], stats=("mean",))
+    )
     got = _by_key(out, ["roll_mean_2"])
     assert got[("A", "2024-01-03")] == (15.0,)
     # frame has only 1 row on the second day
     assert got[("A", "2024-01-02")] == (10.0,)
-    # empty frame on day one -> null (fill=None keeps it)
+    # empty frame on day one -> null
     assert got[("A", "2024-01-01")] == (None,)
 
 
@@ -74,7 +75,7 @@ def test_stddev_samp_null_on_one_row_frame(series):
     )
     got = _by_key(raw, ["roll_std_2"])
     assert got[("A", "2024-01-02")] == (None,)  # 1-row frame
-    filled = add_rolling(series, ["k"], "ds", "v", [2], stats=("std",), fill=0)
+    filled = raw.fillna(0, subset=["roll_std_2"])
     gotf = _by_key(filled, ["roll_std_2"])
     assert gotf[("A", "2024-01-02")] == (0.0,)
     # 2-row frame {10, 20}: sample std = sqrt(50)
@@ -144,27 +145,6 @@ def test_densify_fills_calendar_gaps(series):
     assert dense.count() == 7  # 6 days for A + 1 for B
 
 
-def test_pandas_zscore_matches_jvm(series):
-    """applyInPandas grouped-map parity: per-group z-scores must equal
-    the JVM window twin (pandas ddof=1 == stddev_samp)."""
-    import math
-
-    from sales_forecast_pyspark_spark.operators.pandas_ops import (
-        zscore_jvm,
-        zscore_pandas,
-    )
-
-    jvm = _by_key(zscore_jvm(series, ["k"], "v"), ["zscore"])
-    pd_ = _by_key(zscore_pandas(series, ["k"], "v"), ["zscore"])
-    assert set(jvm) == set(pd_)
-    for key in jvm:
-        a, b = jvm[key][0], pd_[key][0]
-        if a is None or b is None:
-            assert a is None and b is None, (key, a, b)  # 1-row group B
-        else:
-            assert math.isclose(a, b, rel_tol=1e-12), (key, a, b)
-
-
 def test_range_frame_respects_calendar_gaps(series):
     """The RANGE (calendar) frame vs the ROW frame on the gapped series:
     at 2024-01-06 a 3-DAY trailing frame sees only 01-03/01-05 values
@@ -180,35 +160,6 @@ def test_range_frame_respects_calendar_gaps(series):
     assert got[("A", "2024-01-05")] == (25.0, 2, 20.0)  # 01-02..01-04 window
     assert got[("A", "2024-01-01")][1] == 0  # empty frame -> count 0
     assert got[("B", "2024-01-01")][1] == 0  # no cross-key leakage
-
-
-def test_weighted_mean_udaf_parity(spark):
-    """Grouped-agg pandas UDAF == JVM aggregate twin to 1e-12 — the
-    UDAF tier of the Arrow surface holds the same parity bar as the
-    grouped-map tier."""
-    from sales_forecast_pyspark_spark.operators.pandas_ops import (
-        weighted_mean_jvm,
-        weighted_mean_pandas,
-    )
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-    from tests.conftest import SF_ORACLE
-
-    ev = read_table(spark, SF_ORACLE, "events")
-    jvm = {
-        r["event_type"]: r["wmean"]
-        for r in weighted_mean_jvm(
-            ev, ["event_type"], "value", "user_id"
-        ).collect()
-    }
-    pd_ = {
-        r["event_type"]: r["wmean"]
-        for r in weighted_mean_pandas(
-            ev, ["event_type"], "value", "user_id"
-        ).collect()
-    }
-    assert set(jvm) == set(pd_)
-    for k in jvm:
-        assert abs(jvm[k] - pd_[k]) < 1e-9 * max(1.0, abs(jvm[k])), k
 
 
 def test_interp_fill_hand_computed_gaps_and_edges(spark):
