@@ -130,84 +130,19 @@ def _jaccard_on_pairs(
     )
 
 
-def _prefix_candidates(
-    df: DataFrame, id_col: str, text_col: str, n: int, threshold: float
-) -> DataFrame:
-    """Candidate pairs via PREFIX FILTERING (the AllPairs/PPJoin family:
-    Bayardo et al. WWW'07, Xiao et al. PPJoin — public literature):
-    under any global total order on shingles, two docs with
-    jaccard >= t MUST share an element within their first
-    ``|d| - ceil(t*|d|) + 1`` shingles (the smallest common element
-    pigeonholes into both prefixes), so only prefixes need to be
-    self-joined. The global order is DOCUMENT-FREQUENCY ASCENDING
-    (shingle as tie-break) — the point of that choice is that
-    corpus-ubiquitous shingles sort to the END of every doc and fall
-    OUT of the prefixes, so the candidate self-join only touches rare
-    shingles and the hot-shingle quadratic fan-out of the naive
-    co-shingle join disappears. Costs one extra frequency aggregate +
-    per-doc window; provably loses no pair at the threshold."""
-    from pyspark.sql.window import Window
-
-    sh = _exploded_shingles(df, id_col, text_col, n)
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_count"))
-    order_w = Window.partitionBy(id_col).orderBy("df_count", "shingle")
-    count_w = Window.partitionBy(id_col)
-    prefix = (
-        # shuffle_hash hint: shingle document-frequency is shingle-
-        # vocabulary-scale (unbounded with the corpus) and sits behind
-        # the shingle explode — static broadcast estimates are
-        # fiction. The df frame is an aggregate of `sh` (one row per
-        # shingle, strictly fewer rows, tiny uniform rows), so a
-        # per-partition hash build avoids sorting the corpus-token-
-        # scale side entirely
-        sh.join(freq.hint("shuffle_hash"), "shingle")
-        .withColumn("__rn", F.row_number().over(order_w))
-        .withColumn("__n", F.count(F.lit(1)).over(count_w))
-        .filter(
-            F.col("__rn")
-            <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
-        )
-        .select(F.col(id_col), "shingle")
-    )
-    a = prefix.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = prefix.select(F.col(id_col).alias("doc_b"), "shingle")
-    return (
-        a.join(b, ["shingle"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    prefix_filter: bool = False,
 ) -> DataFrame:
-    """Exact n-gram-Jaccard near-dup pairs — same result set either way:
-
-    - ``prefix_filter=False`` (default): one co-shingle self-join
-      grouped straight to shared counts. Optimal when the shingle
-      document-frequency distribution is FLAT (measured on the driver
-      corpus: max df 25, co-shingle join ~1.1M pairs vs 21M verify rows
-      for the prefix path — the naive join wins ~2x).
-    - ``prefix_filter=True``: AllPairs-style prefix filtering
-      (``_prefix_candidates``) + bounded verification. The scale path
-      when df is HEAVY-TAILED (web boilerplate, shared templates):
-      ubiquitous shingles fall out of every prefix, killing the df²
-      fan-out that makes the naive join quadratic on hot shingles.
-
-    Pick by df profile (one cheap groupBy to check); equality of the
-    two paths is pinned in tests. Fully SQL-expressible →
-    oracle-checked."""
+    """Exact n-gram-Jaccard near-dup pairs: one co-shingle self-join
+    grouped straight to shared counts. Measured on the driver corpus
+    (flat shingle document frequency, max df 25) the co-shingle join
+    is ~1.1M pairs. Fully SQL-expressible → oracle-checked."""
     sh = _exploded_shingles(df, id_col, text_col, n)
-    if not prefix_filter:
-        return _jaccard_on_pairs(sh, None, id_col, threshold)
-    cands = _prefix_candidates(df, id_col, text_col, n, threshold)
-    return _jaccard_on_pairs(sh, cands, id_col, threshold)
+    return _jaccard_on_pairs(sh, None, id_col, threshold)
 
 
 def _minhash_signatures(

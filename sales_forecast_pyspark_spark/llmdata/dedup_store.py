@@ -80,7 +80,6 @@ from pyspark.sql import functions as F
 from sales_forecast_pyspark_spark.llmdata.dedup import (
     _band_buckets,
     _exploded_shingles,
-    _jaccard_on_pairs,
     _minhash_signatures,
     fingerprint_expr,
 )
@@ -636,7 +635,6 @@ def stream_ingest_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    exact_verify_in_batch: bool = False,
     auto_compact_after: int | None = 64,
     lease_retry_s: float = 600.0,
 ):
@@ -655,10 +653,8 @@ def stream_ingest_dedup(
     SIGNATURE-ESTIMATE Jaccard (~0.09 stderr at the default 32 hashes)
     — the same doc pair can land on the other side of the threshold
     than the one-shot ``minhash_near_dedup``'s exact verify would put
-    it. ``exact_verify_in_batch=True`` re-checks the in-batch pairs
-    with exact shingle Jaccard from the batch text before the peel
-    (store-side candidates cannot be exact-checked: admitted text is
-    never retained — raise ``num_hashes`` at build time instead).
+    it (admitted text is never retained, so a tighter estimate means
+    raising ``num_hashes`` at build time).
 
     ``auto_compact_after=N`` (default 64) makes the loop consult
     ``lsm.should_compact`` after each append and fold the increments
@@ -717,15 +713,7 @@ def stream_ingest_dedup(
         # Store-dropped docs leave the pair graph BEFORE the peel: they
         # were never admitted, so sequential ingest never screens a
         # later doc against them.
-        pairs = _verified_in_batch_pairs(bsig, meta, threshold)
-        if exact_verify_in_batch:
-            sh = _exploded_shingles(
-                batch_df, "doc_id", "text", meta["n"]
-            )
-            pairs = _jaccard_on_pairs(sh, pairs, "doc_id", threshold).select(
-                "doc_a", "doc_b"
-            )
-        pairs = pairs.join(
+        pairs = _verified_in_batch_pairs(bsig, meta, threshold).join(
             dup_of_store.select(F.col("doc_id").alias("doc_a")),
             "doc_a",
             "left_anti",

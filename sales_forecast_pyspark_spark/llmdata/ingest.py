@@ -38,10 +38,7 @@ rows, on the same LSM layout as the MinHash store and the IVF-PQ
 index: a single ``fps`` table (fp, doc_id, src_batch), base +
 ``fps_inc/b=<id>`` increments, single-maintainer lease, fold ledger.
 At 100 TB the screen is an equality join on a 32-byte key against a
-fp-sorted store — and ``compact_fp_store(bucket_table=...)`` (r15)
-writes the base BUCKETED by fp and registers it, so the screen's
-base-leg join is co-located (store side exchange-free; plan-pinned),
-with the plain fp-sorted layout as the default for catalog-less runs.
+fp-sorted store.
 
 Zero-norm embeddings (no direction) pass the semantic stage
 unjudged and are never admitted to the index (its append drops
@@ -102,7 +99,6 @@ def build_fp_store(
     n = fps.count()
     n_files = max(1, -(-n * 48 // (target_file_mb * 1024 * 1024)))
     with lsm.maintenance_lease(spark, path, "build"):
-        _drop_bucket_claim(spark, path)
         (
             fps.repartitionByRange(int(n_files), "fp")
             .sortWithinPartitions("fp")
@@ -119,46 +115,6 @@ def _read_fp_store(spark: SparkSession, path: str) -> DataFrame:
     return lsm.read_tiered(spark, path, "fps")
 
 
-_BUCKET_MARKER = "_fp_bucket_table"
-
-
-def _fp_bucket_table(spark: SparkSession, path: str) -> str | None:
-    """The catalog table serving this store's BASE tier bucketed by fp,
-    if ``compact_fp_store(bucket_table=...)`` registered one AND the
-    current catalog still knows it (the default in-memory catalog
-    forgets tables across sessions; production runs a persistent
-    metastore — the marker file keeps the store self-describing either
-    way, and a stale marker degrades to the plain parquet read)."""
-    import json
-
-    marker = os.path.join(path, _BUCKET_MARKER)
-    try:
-        row = spark.read.json(marker).first()
-    except Exception:
-        return None
-    if row is None:
-        return None
-    name = row["table"]
-    try:
-        if spark.catalog.tableExists(name):
-            return name
-    except Exception:
-        return None
-    return None
-
-
-def _drop_bucket_claim(spark: SparkSession, path: str) -> None:
-    """Remove a prior compaction's bucket registration (marker + catalog
-    entry) — called by any rewrite of the base that does NOT bucket, so
-    stale CLUSTERED-BY metadata can never describe unbucketed files."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
-    name = _fp_bucket_table(spark, path)
-    if name is not None:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-    lsm.drop_dir(spark, path, _BUCKET_MARKER)
-
-
 def screen_against_fp_store(
     batch: DataFrame,
     path: str,
@@ -169,54 +125,15 @@ def screen_against_fp_store(
     """Which batch docs are EXACT copies of docs already in the store?
     One md5 per batch doc + an fp equality join. Returns (doc_id,
     dup_of, fp). ``exclude_batch`` is the replay guard, as in the
-    MinHash store's screen.
-
-    When the base was compacted with ``bucket_table=...`` (VERDICT r14
-    missing #2), the base-tier join reads the fp-bucketed catalog
-    table: the store side arrives pre-partitioned on the join key, so
-    the only exchange in the sort-merge plan is the BATCH side — the
-    co-located screen a 100 TB store needs once the base outgrows the
-    broadcast planner. Increments are screened as a separate (small,
-    broadcast-able) leg so their un-bucketed rows never drag the base
-    join back into a full shuffle; the two legs union after the
-    radius-free equality match. Plan-pinned in
-    tests/test_ingest_all.py."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
+    MinHash store's screen."""
     spark = batch.sparkSession
     fpb = _fp_frame(batch, id_col, text_col)
-    bucket_table = _fp_bucket_table(spark, path)
-    if bucket_table is None:
-        store = _read_fp_store(spark, path)
-        if exclude_batch is not None:
-            store = store.filter(F.col("src_batch") != int(exclude_batch))
-        return fpb.join(
-            store.select(F.col("doc_id").alias("dup_of"), "fp"), "fp"
-        ).select("doc_id", "dup_of", "fp")
-    base = spark.table(bucket_table)
-    from pyspark.errors import AnalysisException
-
-    try:
-        inc = spark.read.parquet(os.path.join(path, "fps_inc")).select(
-            *base.columns
-        )
-    except AnalysisException:
-        inc = None
-    legs = []
-    for store in (base, inc):
-        if store is None:
-            continue
-        if exclude_batch is not None:
-            store = store.filter(F.col("src_batch") != int(exclude_batch))
-        legs.append(
-            fpb.join(
-                store.select(F.col("doc_id").alias("dup_of"), "fp"), "fp"
-            ).select("doc_id", "dup_of", "fp")
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    store = _read_fp_store(spark, path)
+    if exclude_batch is not None:
+        store = store.filter(F.col("src_batch") != int(exclude_batch))
+    return fpb.join(
+        store.select(F.col("doc_id").alias("dup_of"), "fp"), "fp"
+    ).select("doc_id", "dup_of", "fp")
 
 
 def append_to_fp_store(
@@ -268,28 +185,13 @@ def compact_fp_store(
     spark: SparkSession,
     path: str,
     target_file_mb: int = DEFAULT_TARGET_FILE_MB,
-    bucket_table: str | None = None,
-    num_buckets: int = 32,
 ) -> dict:
     """Fold increment batches into the fp-sorted base. The store is a
     SINGLE table, so every increment dir present is a complete batch
     (one atomic overwrite-mode write) and all of them fold; dedupe on
     (fp, doc_id) self-heals a crashed prior fold's swap-but-not-drop
     window. ``src_batch`` provenance is preserved for the replay
-    guard. Fenced like the sibling compactors.
-
-    ``bucket_table`` (r15, VERDICT r14 missing #2): when given, the
-    folded base is written BUCKETED by fp (sorted within buckets) and
-    registered in the catalog under that name over the store's own
-    ``fps`` location, and a marker file makes the store self-describing
-    — ``screen_against_fp_store`` then joins the base exchange-free on
-    the store side instead of relying on the broadcast planner. The
-    write-once-screen-every-batch amortization is the bucketed-table
-    story (co-located buckets → exchange-free joins) applied to the
-    store's hottest join. Requires a catalog that survives as long as the
-    readers (production: a persistent metastore; the default in-memory
-    catalog forgets the name across sessions, and the screen then
-    degrades to the plain parquet read)."""
+    guard. Fenced like the sibling compactors."""
     from sales_forecast_pyspark_spark.llmdata import lsm
 
     with lsm.maintenance_lease(spark, path, "compact") as lease_token:
@@ -299,57 +201,15 @@ def compact_fp_store(
         n_files = max(1, -(-total // (target_file_mb * 1024 * 1024)))
         merged = _read_fp_store(spark, path).dropDuplicates(["fp", "doc_id"])
 
-        if bucket_table is None:
-
-            def _write(tmp):
-                (
-                    merged.repartitionByRange(int(n_files), "fp")
-                    .sortWithinPartitions("fp")
-                    .write.mode("overwrite")
-                    .parquet(tmp)
-                )
-
-        else:
-            stage = f"{bucket_table}__stage"
-
-            def _write(tmp):
-                # bucketing needs saveAsTable; write the files to the
-                # staging dir via a throwaway EXTERNAL table, then drop
-                # the metadata (files stay) — the real name registers
-                # over the final location after the swap
-                spark.sql(f"DROP TABLE IF EXISTS {stage}")
-                (
-                    merged.write.mode("overwrite")
-                    .bucketBy(int(num_buckets), "fp")
-                    .sortBy("fp")
-                    .option("path", tmp)
-                    .format("parquet")
-                    .saveAsTable(stage)
-                )
-                spark.sql(f"DROP TABLE {stage}")
+        def _write(tmp):
+            (
+                merged.repartitionByRange(int(n_files), "fp")
+                .sortWithinPartitions("fp")
+                .write.mode("overwrite")
+                .parquet(tmp)
+            )
 
         lsm.swap_dir(spark, path, "fps", _write)
-        if bucket_table is None:
-            # a plain rewrite invalidates any previous incarnation's
-            # bucket claim — deregister so no reader trusts stale
-            # CLUSTERED-BY metadata over unbucketed files
-            _drop_bucket_claim(spark, path)
-        if bucket_table is not None:
-            ddl = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in merged.schema.fields
-            )
-            loc = os.path.join(os.path.abspath(path), "fps")
-            spark.sql(f"DROP TABLE IF EXISTS {bucket_table}")
-            spark.sql(
-                f"CREATE TABLE {bucket_table} ({ddl}) USING PARQUET "
-                f"CLUSTERED BY (fp) SORTED BY (fp) "
-                f"INTO {int(num_buckets)} BUCKETS LOCATION '{loc}'"
-            )
-            marker = os.path.join(path, _BUCKET_MARKER)
-            spark.createDataFrame(
-                [(bucket_table, int(num_buckets))], "table string, n_buckets int"
-            ).coalesce(1).write.mode("overwrite").json(marker)
         lsm.verify_lease(spark, path, lease_token)
         lsm.record_folded(spark, path, folding)
         lsm.drop_inc_batches(spark, path, "fps", folding)
@@ -500,7 +360,6 @@ def stream_ingest_dedup_all(
     cos_threshold: float = 0.9,
     k: int = 5,
     n_probe: int = 6,
-    exact_verify_in_batch: bool = False,
     auto_compact_after: int | None = 64,
     lease_retry_s: float = 600.0,
 ):
@@ -592,18 +451,7 @@ def stream_ingest_dedup_all(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        pairs = _verified_in_batch_pairs(bsig, meta, text_threshold)
-        if exact_verify_in_batch:
-            from sales_forecast_pyspark_spark.llmdata.dedup import (
-                _exploded_shingles,
-                _jaccard_on_pairs,
-            )
-
-            sh = _exploded_shingles(s1, "doc_id", "text", meta["n"])
-            pairs = _jaccard_on_pairs(
-                sh, pairs, "doc_id", text_threshold
-            ).select("doc_a", "doc_b")
-        pairs = pairs.join(
+        pairs = _verified_in_batch_pairs(bsig, meta, text_threshold).join(
             text_store.select(F.col("doc_id").alias("doc_a")),
             "doc_a",
             "left_anti",

@@ -36,9 +36,9 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    include_self: bool = False,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-k cosine neighbors for each query vector (a query is
+    never its own neighbor).
 
     Scores are rounded to 6 decimals BEFORE ranking so the ordering is
     reproducible across engines and partitionings (ties broken by
@@ -53,9 +53,9 @@ def cosine_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    pairs = cand.join(F.broadcast(q))
-    if not include_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    pairs = cand.join(F.broadcast(q)).filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
     scored = pairs.select(
         "query_id",
         "neighbor_id",
@@ -227,10 +227,8 @@ def _lsh_candidate_pairs(
     bucket_length: float,
     num_hash_tables: int,
     seed: int,
-    ordered: bool = True,
     rows_per_band: int = 1,
     n_salt: int = 16,
-    payload: tuple = ("arr",),
 ) -> DataFrame:
     """Bucket-equality candidate pairs from a BRP-LSH bucketing, with
     full join-strategy control. Replaces MLlib ``approxSimilarityJoin``
@@ -246,18 +244,13 @@ def _lsh_candidate_pairs(
     (table, bucket), distinct pairs — lets the merge hint pin a
     sort-merge plan that survives any corpus size.
 
-    ``vecs`` must carry (id, vec) plus the ``payload`` columns
-    (default the dense ``arr``; the sparse path passes its unwrapped
-    (indices, values) arrays instead). Returns one row per bucket
-    COLLISION — (_ida, _va*, _idb, _vb*) with each payload column
-    carried through BOTH sides as _{col}_a/_{col}_b (the default
-    single "arr" keeps its historical _va/_vb names) so scoring needs
-    no second join; a pair colliding in k of
-    the hash tables appears k times, so callers dedupe AFTER their
+    ``vecs`` must carry (id, vec, arr). Returns one row per bucket
+    COLLISION — (_ida, _va, _idb, _vb) with ``arr`` carried through
+    BOTH sides so scoring needs no second join; a pair colliding in k
+    of the hash tables appears k times, so callers dedupe AFTER their
     radius filter (post-filter distinct is cheaper than pre-scoring
     distinct + two array re-joins — measured 4x on the topk row at
-    sf0.1). ``ordered=True`` emits each pair once (_ida < _idb),
-    ``ordered=False`` both orientations. Equivalence with
+    sf0.1). Each pair is emitted once, _ida < _idb. Equivalence with
     approxSimilarityJoin's candidate set: BRP's per-table hash is
     ``floor(proj / bucketLength)`` stored as a 1-element vector, so
     (pos, value[0]) equality IS MLlib's hash-entry equality. Carrying
@@ -308,14 +301,13 @@ def _lsh_candidate_pairs(
         seed=seed,
     )
     model = lsh.fit(vecs)
-    pay = list(payload)
     if rows_per_band == 1:
         ht = (
             model.transform(vecs)
-            .select("id", *pay, F.posexplode("hashes").alias("entry", "_hv"))
+            .select("id", "arr", F.posexplode("hashes").alias("entry", "_hv"))
             .select(
                 "id",
-                *pay,
+                "arr",
                 "entry",
                 vector_to_array("_hv").getItem(0).cast("long").alias("bucket"),
             )
@@ -342,8 +334,8 @@ def _lsh_candidate_pairs(
         ]
         ht = (
             model.transform(vecs)
-            .select("id", *pay, F.explode(F.array(*bands)).alias("_b"))
-            .select("id", *pay, "_b.entry", "_b.bucket")
+            .select("id", "arr", F.explode(F.array(*bands)).alias("_b"))
+            .select("id", "arr", "_b.entry", "_b.bucket")
         )
     # SALTED bucket join: LSH buckets are intrinsically skewed (a few
     # central buckets hold most of a normally-projected corpus, and the
@@ -357,41 +349,24 @@ def _lsh_candidate_pairs(
     # all of them — a hot bucket's many DISTINCT ids spread uniformly,
     # every (id_a, id_b) pair still meets in exactly one salt bucket,
     # and the result set is salt-invariant.
-    def _out_name(col: str, side: str) -> str:
-        # the historical single-payload names (_va/_vb) are load-bearing
-        # for _arrow_scored_pairs; multi-payload callers get _{col}_{side}
-        if pay == ["arr"]:
-            return f"_v{side}"
-        return f"_{col}_{side}"
-
     left = ht.select(
         F.col("id").alias("_ida"),
-        *[F.col(c).alias(_out_name(c, "a")) for c in pay],
+        F.col("arr").alias("_va"),
         "entry",
         "bucket",
     ).withColumn("_s", F.pmod(F.xxhash64("_ida", F.lit(seed)), F.lit(n_salt)))
     right = ht.select(
         F.col("id").alias("_idb"),
-        *[F.col(c).alias(_out_name(c, "b")) for c in pay],
+        F.col("arr").alias("_vb"),
         "entry",
         "bucket",
     ).withColumn(
         "_s", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
     )
-    cond = (
-        F.col("_ida") < F.col("_idb")
-        if ordered
-        else F.col("_ida") != F.col("_idb")
-    )
     return (
         left.join(right.hint("merge"), ["entry", "bucket", "_s"])
-        .filter(cond)
-        .select(
-            "_ida",
-            *[_out_name(c, "a") for c in pay],
-            "_idb",
-            *[_out_name(c, "b") for c in pay],
-        )
+        .filter(F.col("_ida") < F.col("_idb"))
+        .select("_ida", "_va", "_idb", "_vb")
     )
 
 
@@ -448,101 +423,6 @@ def _arrow_scored_pairs(pairs: DataFrame, metric: str) -> DataFrame:
     return pairs.mapInPandas(score, out_schema)
 
 
-def _arrow_scored_sparse_pairs(pairs: DataFrame) -> DataFrame:
-    """Sparse twin of ``_arrow_scored_pairs`` for the TF-IDF-style
-    vector_input path (r11, VERDICT r10 ask #5): candidates carry each
-    side's UNWRAPPED (indices, values) arrays — plain Arrow-safe array
-    columns, no VectorUDT crosses the boundary — and the Euclidean
-    distance is assembled sparsely per pair as
-    ``sqrt(|a|^2 + |b|^2 - 2 a.b)`` with the dot over the index
-    intersection only, matching MLlib ``Vectors.sqdist`` semantics
-    without densifying (a d=100k TF-IDF vocabulary stays ~doc-length
-    floats per row). Per-pair ``np.intersect1d`` inside the Arrow
-    batch is the same declared-Python-boundary cost class as the dense
-    scorer's einsum; only survivor rows return.
-
-    ``pairs`` must carry (_ida, _ia, _xa, _na, _idb, _ib, _xb, _nb)
-    with i=indices, x=values, n=the PRECOMPUTED squared norm (ADVICE
-    r11 #3: the norm is a per-ROW scalar — computing it JVM-side once
-    in the vecs frame and carrying it as a cheap payload column beats
-    recomputing ``x @ x`` per candidate PAIR, where an item colliding
-    in many buckets paid its norm once per collision; only the
-    index-intersection dot remains per-pair work). Returns
-    (_ida, _idb, _score) with _score the UNROUNDED Euclidean
-    distance."""
-    import numpy as np
-    import pandas as pd
-
-    dtypes = dict(pairs.dtypes)
-    out_schema = f"_ida {dtypes['_ida']}, _idb {dtypes['_idb']}, _score double"
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = np.empty(len(pdf), dtype=np.float64)
-            na = pdf["_na"].to_numpy()
-            nb = pdf["_nb"].to_numpy()
-            cols = zip(
-                pdf["_ia"].to_numpy(),
-                pdf["_xa"].to_numpy(),
-                pdf["_ib"].to_numpy(),
-                pdf["_xb"].to_numpy(),
-            )
-            for i, (ia, xa, ib, xb) in enumerate(cols):
-                xa = np.asarray(xa, dtype=np.float64)
-                xb = np.asarray(xb, dtype=np.float64)
-                _, pa, pb = np.intersect1d(
-                    np.asarray(ia), np.asarray(ib),
-                    assume_unique=True, return_indices=True,
-                )
-                dot = float(xa[pa] @ xb[pb]) if len(pa) else 0.0
-                sq = float(na[i]) + float(nb[i]) - 2.0 * dot
-                out[i] = np.sqrt(max(sq, 0.0))
-            yield pd.DataFrame(
-                {"_ida": pdf["_ida"], "_idb": pdf["_idb"], "_score": out}
-            )
-
-    return pairs.mapInPandas(score, out_schema)
-
-
-def _sparse_unwrap(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, vec, idx, val, nsq) from an MLlib-vector column, JVM-side:
-    ``unwrap_udt`` keeps sparse vectors sparse (indices/values arrays,
-    nothing densifies).
-
-    - dense UDT rows (type=1) carry null indices — synthesize the full
-      index range so the sparse scorer handles both layouts. Zero-size
-      guard (ADVICE r11 #1): ``sequence(0, -1)`` steps DOWNWARD to the
-      malformed [0, -1] for an empty dense vector, which would desync
-      idx/val lengths and crash the Arrow scorer worker-side — an
-      empty vector gets an empty index array instead (LSH fit rejects
-      zero-dim inputs anyway, but a clean empty row beats a worker
-      crash).
-    - ``nsq`` is the squared norm ONCE per row (ADVICE r11 #3): a
-      cheap scalar payload through the candidate join, so a hot item
-      colliding in many buckets never recomputes ``x @ x`` per pair.
-    """
-    vecs0 = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    u = F.unwrap_udt("vec")
-    dense_idx = F.when(
-        F.size(u["values"]) == 0, F.array().cast("array<int>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.size(u["values"]) - 1),
-            lambda i: i.cast("int"),
-        )
-    )
-    sq_norm = F.aggregate(u["values"], F.lit(0.0), lambda a, x: a + x * x)
-    return vecs0.select(
-        "id",
-        "vec",
-        F.when(u["type"] == 1, dense_idx).otherwise(u["indices"]).alias("idx"),
-        u["values"].alias("val"),
-        sq_norm.alias("nsq"),
-    )
-
-
 def lsh_similarity_join(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -551,7 +431,6 @@ def lsh_similarity_join(
     num_hash_tables: int = 3,
     distance_threshold: float = 1.2,
     seed: int = 42,
-    vector_input: bool = False,
     rows_per_band: int = 1,
     n_salt: int = 16,
 ) -> DataFrame:
@@ -581,65 +460,17 @@ def lsh_similarity_join(
     to a few percent of it with no pair loss at the tight radius
     (measured at 20k clustered vectors: 6.4M vs 301M candidates,
     recall 1.0; SCALING.md "LLM-data tier"). Default 1 = pre-r11
-    single-projection behavior. Applies to both the array path and
-    ``vector_input=True``.
+    single-projection behavior.
 
     ``n_salt`` (ADVICE r11 #2 made it PUBLIC here): the candidate
     join's deterministic salt fan-out replicates the right side — with
-    its carried payload (the full vector; for ``vector_input`` the
-    idx/val arrays) — ``n_salt`` times through the shuffle. 16 spreads
+    its carried vector — ``n_salt`` times through the shuffle. 16 spreads
     the measured hot-bucket mass at the rehearsal decades; LOWER it
     when vectors are wide enough that replication bytes, not bucket
     skew, are the binding cost (the documented remedy is now reachable
-    without editing library code).
-
-    ``vector_input=True`` means ``vec_col`` already holds MLlib vectors
-    (e.g. sparse TF-IDF from ``llmdata.vectorize``) — hashing keeps
-    the vectors sparse, and scoring unwraps them JVM-side into
-    (indices, values) arrays (``F.unwrap_udt``) so nothing densifies:
-    a d=100k vocabulary still costs ~doc-length floats per row. Since
-    r11 this path runs the SAME owned, salted, merge-hinted candidate
-    join as the array path (``_lsh_candidate_pairs`` with sparse
-    payload + ``_arrow_scored_sparse_pairs``) — it previously rode
-    MLlib's ``approxSimilarityJoin``, whose internal candidate join is
-    not hint-reachable and is statically broadcast-planned from
-    post-explode fiction, the exact OOM class the r09 sweep eliminated
-    everywhere else (VERDICT r10 ask #5; equivalence with the MLlib
-    results is test-pinned in tests/test_similarity.py)."""
+    without editing library code)."""
     from pyspark.ml.functions import array_to_vector
 
-    if vector_input:
-        vecs = _sparse_unwrap(df, id_col, vec_col)
-        pairs = _lsh_candidate_pairs(
-            vecs,
-            bucket_length,
-            num_hash_tables,
-            seed,
-            ordered=True,
-            rows_per_band=rows_per_band,
-            n_salt=n_salt,
-            payload=("idx", "val", "nsq"),
-        ).select(
-            "_ida",
-            F.col("_idx_a").alias("_ia"),
-            F.col("_val_a").alias("_xa"),
-            F.col("_nsq_a").alias("_na"),
-            "_idb",
-            F.col("_idx_b").alias("_ib"),
-            F.col("_val_b").alias("_xb"),
-            F.col("_nsq_b").alias("_nb"),
-        )
-        return (
-            _arrow_scored_sparse_pairs(pairs)
-            .filter(F.col("_score") < distance_threshold)
-            .select(
-                F.col("_ida").alias("id_a"),
-                F.col("_idb").alias("id_b"),
-                F.round("_score", 6).alias("dist"),
-            )
-            .distinct()
-            .orderBy("id_a", "id_b")
-        )
     vecs = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("arr"),
@@ -650,7 +481,6 @@ def lsh_similarity_join(
         bucket_length,
         num_hash_tables,
         seed,
-        ordered=True,
         rows_per_band=rows_per_band,
         n_salt=n_salt,
     )
@@ -678,7 +508,6 @@ def exact_self_similarity_join(
     vec_col: str = "embedding",
     distance_threshold: float = 1.2,
     max_rows: int = SEARCH_MAX_ROWS,
-    num_slices: int | None = None,
 ) -> DataFrame:
     """EXACT all-pairs within a Euclidean ``distance_threshold`` over a
     CONTRACT-BOUNDED frame — the drop-in replacement for
@@ -846,13 +675,11 @@ def exact_self_similarity_join(
                     }
                 )
 
-    # repartition spreads the GEMM across cores; the default follows
+    # repartition spreads the GEMM across cores, following
     # shuffle.partitions like every other fan-out in the package
-    slices = num_slices or int(
-        src.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    slices = int(src.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     out = (
-        src.repartition(min(int(slices), max(1, n // RB)))
+        src.repartition(min(slices, max(1, n // RB)))
         .mapInPandas(mine, f"id_a {id_dtype}, id_b {id_dtype}, dist double")
         .select(
             "id_a",
@@ -1002,7 +829,6 @@ def lsh_pairs_topk(
         bucket_length,
         num_hash_tables,
         seed,
-        ordered=True,
         rows_per_band=rows_per_band,
         n_salt=n_salt,
     )

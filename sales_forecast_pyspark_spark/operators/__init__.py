@@ -3,7 +3,6 @@ from sales_forecast_pyspark_spark.operators.aggregates import (
     grouped_top_k,
     multi_level_agg,
     profile_agg,
-    top_k,
 )
 from sales_forecast_pyspark_spark.operators.asof import asof_join
 from sales_forecast_pyspark_spark.operators.densify import (
@@ -51,6 +50,5 @@ __all__ = [
     "latest_snapshot",
     "stratified_sample",
     "time_split",
-    "top_k",
     "union_by_name",
 ]

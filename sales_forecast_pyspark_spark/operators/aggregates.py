@@ -68,13 +68,10 @@ def multi_level_agg(
     df: DataFrame,
     dims: list[str],
     aggs: list[Column],
-    kind: str = "cube",
     gid_col: str = "gid",
-    sets: list[list[str]] | None = None,
 ) -> DataFrame:
-    """Multi-level OLAP aggregation: one pass producing every grouping
-    level of ``dims`` — ``cube`` (all 2^n subsets), ``rollup``
-    (hierarchical prefixes), or plain ``groupby``.
+    """Multi-level OLAP aggregation: one ``cube`` pass producing every
+    grouping level of ``dims`` (all 2^n subsets).
 
     ``gid_col`` carries ``grouping_id()`` (bit i set ⟺ dim i is rolled
     up, first dim = high bit — the same bitmask DuckDB's
@@ -85,43 +82,10 @@ def multi_level_agg(
     map-side partial aggregation covers every level and the single
     shuffle carries partials keyed by (dims..., gid) — one exchange
     regardless of how many levels, rather than one job per level unioned
-    (the naive form). Row multiplication is bounded by the number of
-    grouping sets (n+1 for rollup, 2^n for cube, len(sets) for explicit
-    sets): keep ``dims`` short at scale, or name exactly the levels you
-    need with ``kind="sets"``.
-
-    ``kind="sets"`` computes only the listed levels: each entry of
-    ``sets`` is a subset of ``dims`` to keep un-rolled (e.g.
-    ``sets=[["country","year"], ["country"], []]`` — detail by year,
-    country subtotals, grand total), the cheap middle ground when a full
-    cube's 2^n levels are mostly unread."""
-    if kind == "cube":
-        grouped = df.cube(*dims)
-    elif kind == "rollup":
-        grouped = df.rollup(*dims)
-    elif kind == "groupby":
-        grouped = df.groupBy(*dims)
-    elif kind == "sets":
-        if sets is None:
-            raise ValueError('kind="sets" requires the sets parameter')
-        bad = [s for s in sets if not set(s) <= set(dims)]
-        if bad:
-            raise ValueError(f"grouping sets {bad} contain columns outside dims {dims}")
-        grouped = df.groupingSets(
-            [[F.col(c) for c in s] for s in sets], *[F.col(c) for c in dims]
-        )
-    else:
-        raise ValueError(f"kind must be cube|rollup|groupby|sets, got {kind!r}")
-    gid = F.grouping_id().cast("int").alias(gid_col) if kind != "groupby" else F.lit(0).alias(gid_col)
-    return grouped.agg(gid, *aggs)
-
-
-def top_k(df: DataFrame, order_col: str, k: int, ascending: bool = False) -> DataFrame:
-    """orderBy + limit — Spark plans TakeOrderedAndProject (per-partition
-    heap + single reduce), NOT a global sort, so top-k never range
-    shuffles the full table (reference O2/O3)."""
-    order = F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    return df.orderBy(order).limit(k)
+    (the naive form). Row multiplication is 2^n: keep ``dims`` short at
+    scale."""
+    gid = F.grouping_id().cast("int").alias(gid_col)
+    return df.cube(*dims).agg(gid, *aggs)
 
 
 def grouped_top_k(

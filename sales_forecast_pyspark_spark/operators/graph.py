@@ -158,7 +158,6 @@ def pagerank(
     iterations: int = 3,
     damping: float = 0.85,
     contrib_scale: int = 12,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """Fixed-iteration PageRank over the UNDIRECTED graph in ``edges``
     (canonicalized and deduped first; each undirected edge contributes
@@ -191,30 +190,9 @@ def pagerank(
     cache lifetime (unpersist via the same logical plan or
     ``spark.catalog.clearCache()``).
 
-    Deep iteration: each step nests the previous rank plan inside a new
-    join+aggregate, so the logical plan (and Catalyst re-optimization
-    cost) grows linearly with ``iterations``. ``checkpoint_every=k`` > 0
-    eagerly ``localCheckpoint``s the rank frame every k iterations,
-    truncating lineage to the last checkpoint — plan size stays O(k)
-    regardless of depth, and the materialized ranks are the SAME rows
-    the lazy plan would produce (values are partitioning-independent by
-    the decimal-contribution construction; pinned bit-exact in
-    tests/test_r06_ops.py). localCheckpoint stores blocks on executors
-    — fast, but not failure-tolerant; for very long runs on preemptible
-    fleets use a reliable ``spark.sparkContext.setCheckpointDir`` +
-    ``checkpoint()`` variant instead. Default 0 keeps the frame fully
-    lazy (the 3-iteration registered query needs no truncation).
-
-    Storage hygiene (ADVICE r07): once checkpoint i+k materializes,
-    checkpoint i's blocks are dead weight — left alone they linger
-    until the JVM ContextCleaner happens to GC the unreferenced RDD,
-    so a 100-iteration run could hold several full rank snapshots at
-    peak. Each superseded checkpoint's RDD is therefore explicitly
-    unpersisted right after its successor materializes (best-effort:
-    falls back to ContextCleaner timing if the internal LogicalRDD
-    accessor ever changes shape). Note localCheckpoint also severs any
-    future reliable-checkpoint recovery for the frame — executor loss
-    fails the job; that is the preemptible-fleet caveat above.
+    Each step nests the previous rank plan inside a new join+aggregate,
+    so the plan grows linearly with ``iterations``; the registered
+    query runs 3 and stays fully lazy.
     """
     # Canonical teleport double: 1 - 0.85 in binary is NOT the double
     # nearest decimal 0.15 (it is 0.150000000000000002...), while a SQL
@@ -231,8 +209,7 @@ def pagerank(
         "node", "degree", "_n", (F.lit(1.0) / F.col("_n")).alias("r")
     )
     dec = f"decimal(38,{contrib_scale})"
-    prev_ckpt: DataFrame | None = None
-    for _i in range(iterations):
+    for _ in range(iterations):
         # shuffle_hash hint on the RANK side (static-broadcast audit
         # r09): on a cold run the static planner BROADCAST the cached
         # edge frame into this join — edge-scale, fictional post-
@@ -261,24 +238,4 @@ def pagerank(
                 * F.coalesce(F.col("_s"), F.lit(0)).cast("double")
             ).alias("r"),
         )
-        if checkpoint_every > 0 and (_i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-            if prev_ckpt is not None:
-                _free_local_checkpoint(prev_ckpt)
-            prev_ckpt = ranks
     return ranks.select("node", "degree", F.col("r").alias("pagerank"))
-
-
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Unpersist the executor blocks behind a superseded
-    ``localCheckpoint`` frame. A checkpointed Dataset's analyzed plan
-    is a ``LogicalRDD`` wrapping the materialized internal RDD; its
-    successor checkpoint no longer depends on those blocks, so they
-    can be dropped immediately instead of waiting for the JVM
-    ContextCleaner to notice the RDD is unreferenced. Best-effort by
-    design: on any internal-API drift the blocks simply revert to
-    GC-timed cleanup (correctness is unaffected either way)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # pragma: no cover - py4j shape drift
-        pass

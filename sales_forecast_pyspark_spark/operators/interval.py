@@ -49,7 +49,6 @@ def interval_join(
     bin_width: int = 3600,
     max_bins: int = 10_000,
     validate: bool = True,
-    broadcast_intervals: bool = False,
 ) -> DataFrame:
     """Inner-join each point row to every interval row whose
     ``[start_col, end_col]`` (inclusive both ends) contains its
@@ -99,10 +98,9 @@ def interval_join(
     # estimates (audit r09): the Generate's fan-out is invisible to
     # Catalyst's stats, the interval COUNT is unbounded even though
     # per-interval fan-out is guarded, and a statically planned
-    # BroadcastExchange cannot be demoted by AQE. Default is a pinned
-    # bucket-key shuffle; callers whose interval set is provably
-    # bounded opt into broadcast explicitly.
-    iv = F.broadcast(iv) if broadcast_intervals else iv.hint("merge")
+    # BroadcastExchange cannot be demoted by AQE, so the bucket-key
+    # shuffle is pinned.
+    iv = iv.hint("merge")
     pt = points.withColumn(_BIN, F.floor(p_num / bin_width).cast("long"))
     exact = (F.col(point_time) >= F.col(start_col)) & (
         F.col(point_time) <= F.col(end_col)

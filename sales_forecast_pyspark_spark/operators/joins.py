@@ -2,9 +2,9 @@
 
 The reference uses only equi-joins with the ``on=[names]`` form: a 1-key
 left join of daily totals (py:530) and a 3-key left join of predictions
-to the MA baseline (py:1308-1317). The engine keeps those and adds the
-strategy knobs that matter at 100 TB: explicit broadcast for dimension
-tables and key-salting for skewed shuffle joins.
+to the MA baseline (py:1308-1317). The engine keeps those and adds
+key-salting for skewed shuffle joins, the strategy that matters at
+100 TB.
 """
 
 from __future__ import annotations
@@ -20,14 +20,9 @@ def join_on(
     right: DataFrame,
     on: str | Sequence[str],
     how: str = "left",
-    broadcast_right: bool = False,
 ) -> DataFrame:
-    """Equi-join on shared column names. ``broadcast_right=True`` pins a
-    broadcast-hash join for dimension tables regardless of size stats —
-    use when the optimizer can't see the small side's size (e.g. behind
-    an aggregate)."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, on=list(on) if not isinstance(on, str) else on, how=how)
+    """Equi-join on shared column names."""
+    return left.join(right, on=list(on) if not isinstance(on, str) else on, how=how)
 
 
 # Left-preserving join modes only: the right side is exploded across all

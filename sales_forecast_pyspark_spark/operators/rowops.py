@@ -42,22 +42,17 @@ def null_repair(
 
 
 def deterministic_sample(
-    df: DataFrame, key: str, modulus: int, keep: int = 0, hashed: bool = False
+    df: DataFrame, key: str, modulus: int, keep: int = 0
 ) -> DataFrame:
-    """Deterministic 1/modulus sample by key residue.
+    """Deterministic 1/modulus sample by the residue of a numeric key.
 
     The reference samples with ``df.sample(0.2, seed=42)`` (py:1971) —
     seed-stable within Spark but not reproducible by an external oracle.
     Keyed residue sampling gives cross-engine determinism and is
     partition-prunable; use ``df.sample`` when statistical randomness
     matters more than reproducibility.
-
-    ``hashed=True`` takes the residue of ``xxhash64(key)`` instead of the
-    raw key — required for non-numeric keys (the reference's StockCode is
-    alphanumeric) and better-spread for clustered numeric ones.
     """
-    expr = F.xxhash64(F.col(key)) if hashed else F.col(key)
-    return df.filter(F.pmod(expr, F.lit(modulus)) == keep)
+    return df.filter(F.pmod(F.col(key), F.lit(modulus)) == keep)
 
 
 def stratified_sample(

@@ -94,7 +94,7 @@ def evaluate_predictions(
 
 
 def build_eval(
-    spark: SparkSession, sf_dir: str, cutoff: str = CUTOFF, persist: bool = True
+    spark: SparkSession, sf_dir: str, cutoff: str = CUTOFF
 ) -> DataFrame:
     """The full spine with the MA3 stand-in model: windows computed BEFORE
     the time split (filters must not cut window history — SURVEY.md §4
@@ -105,12 +105,11 @@ def build_eval(
     Catalyst's column pruning narrows the two branches differently, so
     without the cache ReuseExchange does NOT merge them and the
     scan → 3-way join → rollup → WindowExec chain executes twice per
-    query. With ``persist=True`` the chain runs once into an
+    query. Persisted, the chain runs once into an
     InMemoryRelation both branches read. Spark's CacheManager matches by
     canonicalized plan, so every eval-spine query in a session shares
     ONE cached panel — memory is bounded by the daily panel
-    (|country × stock × day| rows), far smaller than the fact table.
-    Pass ``persist=False`` for one-shot plan inspection."""
+    (|country × stock × day| rows), far smaller than the fact table."""
     panel = daily_panel(spark, sf_dir)
     aug = ma_baseline(
         panel.select(
@@ -122,8 +121,7 @@ def build_eval(
         "qty",
         window=6,
     )
-    if persist:
-        aug = materialize(aug)
+    aug = materialize(aug)
     test_pred = aug.filter(F.col("ds") > F.lit(cutoff)).select(
         "country", "stock", "ds", "qty", "avg_price", "pred_qty"
     )

@@ -88,7 +88,7 @@ WITH panel AS (
 
 
 def daily_panel(
-    spark: SparkSession, sf_dir: str, calendar: bool = False, exact: bool = True
+    spark: SparkSession, sf_dir: str, calendar: bool = False
 ) -> DataFrame:
     """lineitem ⋈ supplier ⋈ nation → daily (country, stock) rollup.
 
@@ -107,6 +107,5 @@ def daily_panel(
         qty_col=PANEL_QTY_COL,
         revenue_expr=panel_revenue_expr(),
         price_expr=panel_price_expr(),
-        exact=exact,
     )
     return with_calendar_columns(panel, "ds") if calendar else panel

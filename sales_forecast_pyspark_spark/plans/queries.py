@@ -30,7 +30,6 @@ from sales_forecast_pyspark_spark.operators.aggregates import (
     grouped_top_k,
     multi_level_agg,
     profile_agg,
-    top_k,
 )
 from sales_forecast_pyspark_spark.operators.rowops import (
     dedup_exact,
@@ -387,7 +386,6 @@ def q_cube_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
             money_sum(F.col("revenue")).alias("total_revenue"),
             F.count(F.lit(1)).alias("n_days"),
         ],
-        kind="cube",
     )
     return out.select(
         "country", "year", "month", "gid", "total_qty", "total_revenue", "n_days"

@@ -51,7 +51,6 @@ def read_csv(
     spark: SparkSession,
     path: str,
     schema: T.StructType | None = ONLINE_RETAIL_SCHEMA,
-    header: bool = True,
     sep: str = ",",
     corrupt_col: str | None = None,
 ) -> DataFrame:
@@ -68,7 +67,7 @@ def read_csv(
     like any other (``filter(corrupt_col IS NOT NULL)`` is the reject
     file; route it to quarantine and fail the batch past a threshold).
     """
-    reader = spark.read.option("header", header).option("sep", sep)
+    reader = spark.read.option("header", True).option("sep", sep)
     if schema is None:
         reader = reader.option("inferSchema", True)
         return reader.csv(path)

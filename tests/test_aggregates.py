@@ -21,47 +21,22 @@ def df(spark):
     )
 
 
-def test_rollup_levels_and_gid(spark, df):
+def test_cube_adds_per_m_level(spark, df):
     rows = {
         (r["c"], r["m"], r["gid"]): r["s"]
-        for r in multi_level_agg(
-            df, ["c", "m"], [F.sum("x").alias("s")], kind="rollup"
-        ).collect()
+        for r in multi_level_agg(df, ["c", "m"], [F.sum("x").alias("s")]).collect()
     }
     # detail (gid 0), per-c subtotal (gid 1, low bit = m rolled up), grand (gid 3)
     assert rows[("a", 1, 0)] == 10.0
     assert rows[("a", None, 1)] == 30.0
     assert rows[(None, None, 3)] == 35.0
-    # rollup emits NO per-m level (that's cube's gid 2)
-    assert not any(gid == 2 for (_, _, gid) in rows)
-    assert len(rows) == 3 + 2 + 1
-
-
-def test_cube_adds_per_m_level(spark, df):
-    rows = {
-        (r["c"], r["m"], r["gid"]): r["s"]
-        for r in multi_level_agg(
-            df, ["c", "m"], [F.sum("x").alias("s")], kind="cube"
-        ).collect()
-    }
     assert rows[(None, 1, 2)] == 15.0
     assert rows[(None, 2, 2)] == 20.0
 
 
-def test_groupby_kind_gid_zero(spark, df):
-    rows = multi_level_agg(df, ["c"], [F.sum("x").alias("s")], kind="groupby").collect()
-    assert all(r["gid"] == 0 for r in rows)
-    assert len(rows) == 2
-
-
-def test_bad_kind_raises(spark, df):
-    with pytest.raises(ValueError, match="kind"):
-        multi_level_agg(df, ["c"], [F.sum("x").alias("s")], kind="windowed")
-
-
 def test_cube_is_single_exchange(spark, df):
     plan = (
-        multi_level_agg(df, ["c", "m"], [F.sum("x").alias("s")], kind="cube")
+        multi_level_agg(df, ["c", "m"], [F.sum("x").alias("s")])
         ._jdf.queryExecution().executedPlan().toString()
     )
     # grouping-set expansion happens before ONE shuffle (Expand node),
@@ -96,34 +71,6 @@ def test_grouped_top_k_tie_break_is_total(spark):
         df, ["g"], [F.col("score").desc(), F.col("item")], 1
     ).collect()
     assert [(r["item"], r["rank"]) for r in rows] == [("k", 1)]
-
-
-def test_explicit_grouping_sets(spark, df):
-    rows = {
-        (r["c"], r["m"], r["gid"]): r["s"]
-        for r in multi_level_agg(
-            df,
-            ["c", "m"],
-            [F.sum("x").alias("s")],
-            kind="sets",
-            sets=[["c"], []],
-        ).collect()
-    }
-    # only the two requested levels: per-c subtotals (gid 1) + grand (gid 3)
-    assert rows == {
-        ("a", None, 1): 30.0,
-        ("b", None, 1): 5.0,
-        (None, None, 3): 35.0,
-    }
-
-
-def test_grouping_sets_validation(spark, df):
-    with pytest.raises(ValueError, match="requires the sets"):
-        multi_level_agg(df, ["c"], [F.sum("x").alias("s")], kind="sets")
-    with pytest.raises(ValueError, match="outside dims"):
-        multi_level_agg(
-            df, ["c"], [F.sum("x").alias("s")], kind="sets", sets=[["m"]]
-        )
 
 
 def test_quality_report_detects_violations(spark):

@@ -111,7 +111,6 @@ def _candidate_count(df, **kw) -> int:
         kw.get("bucket_length", 0.5),
         kw.get("num_hash_tables", 3),
         42,
-        ordered=True,
         rows_per_band=kw.get("rows_per_band", 1),
     ).count()
 

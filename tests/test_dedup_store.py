@@ -345,46 +345,6 @@ def test_stream_ingest_keeps_nontransitive_chain_tail(
 
 
 @pytest.mark.slow
-def test_exact_verify_in_batch_rechecks_borderline_pairs(
-    spark, docs, tmp_path_factory
-):
-    """estimate(a,b)=0.5625 but exact jaccard(a,b)=0.494: at threshold
-    0.5 the estimate-only loop drops b, the exact re-verify keeps it —
-    the documented estimate-vs-exact boundary made opt-in checkable."""
-    root = tmp_path_factory.mktemp("mh_exact")
-    outcomes = {}
-    for label, exact in (("est", False), ("exact", True)):
-        path = str(root / f"store_{label}")
-        build_minhash_store(
-            docs.filter(F.col("doc_id") < 50), path, num_hashes=32, bands=16
-        )
-        batch = spark.createDataFrame(
-            [(1, _CHAIN_A), (2, _CHAIN_B)], "doc_id long, text string"
-        )
-        src = str(root / f"src_{label}")
-        batch.coalesce(1).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .parquet(src)
-        )
-        q = stream_ingest_dedup(
-            stream,
-            path,
-            survivors_dir=str(root / f"out_{label}"),
-            checkpoint_dir=str(root / f"ckpt_{label}"),
-            threshold=0.5,
-            exact_verify_in_batch=exact,
-        )
-        q.awaitTermination(180)
-        outcomes[label] = {
-            r["doc_id"]
-            for r in spark.read.parquet(str(root / f"out_{label}")).collect()
-        }
-    assert outcomes["est"] == {1}
-    assert outcomes["exact"] == {1, 2}
-
-
-@pytest.mark.slow
 def test_zero_token_docs_route_through_fingerprint_tier(
     spark, docs, tmp_path_factory
 ):

@@ -74,18 +74,41 @@ def test_salted_join_equals_plain_join(spark):
 
 
 def test_fast_rollup_mode_approximates_exact(spark):
-    """daily_panel(exact=False) — the ~2x-faster production path — must
-    agree with the exact mode to float tolerance (only last-ulp,
-    partitioning-dependent variation is permitted)."""
+    """The panel's daily_rollup with exact=False — the ~2x-faster path
+    the reference-parity table runs — must agree with the exact mode to
+    float tolerance (only last-ulp, partitioning-dependent variation is
+    permitted)."""
     import math
 
-    from sales_forecast_pyspark_spark.plans.panel import daily_panel
+    from sales_forecast_pyspark_spark.operators.aggregates import daily_rollup
+    from sales_forecast_pyspark_spark.plans.panel import (
+        PANEL_GRAIN,
+        PANEL_QTY_COL,
+        enrich_for_panel,
+        panel_price_expr,
+        panel_revenue_expr,
+    )
+    from sales_forecast_pyspark_spark.sources.readers import read_table
 
     sf = "/root/testdata/sf0.001"
+    enriched = enrich_for_panel(
+        *(read_table(spark, sf, t) for t in ("lineitem", "supplier", "nation"))
+    )
+
+    def panel(exact):
+        return daily_rollup(
+            enriched,
+            keys=PANEL_GRAIN,
+            qty_col=PANEL_QTY_COL,
+            revenue_expr=panel_revenue_expr(),
+            price_expr=panel_price_expr(),
+            exact=exact,
+        ).collect()
+
     exact = {(r["country"], r["stock"], str(r["ds"])): (r["qty"], r["revenue"], r["avg_price"])
-             for r in daily_panel(spark, sf).collect()}
+             for r in panel(True)}
     fast = {(r["country"], r["stock"], str(r["ds"])): (r["qty"], r["revenue"], r["avg_price"])
-            for r in daily_panel(spark, sf, exact=False).collect()}
+            for r in panel(False)}
     assert set(exact) == set(fast)
     for k, (q, rev, price) in exact.items():
         fq, frev, fprice = fast[k]

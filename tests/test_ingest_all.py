@@ -251,83 +251,6 @@ def test_triad_consistency_report_and_fp_maintenance(
     assert rep["mh_missing"] == 1 and rep["inc_batches"]["fp"] == []
 
 
-def test_fp_store_bucketed_base_screen_plan_and_fallback(
-    spark, corpus, tmp_path
-):
-    """VERDICT r14 missing #2: compacting with ``bucket_table=`` writes
-    the base fp-bucketed and registers it, and the screen's base-leg
-    sort-merge join then shuffles ONLY the batch side (the store side
-    arrives pre-partitioned on fp). Results are unchanged, increments
-    screen through their own (small) leg, and a later plain compaction
-    deregisters the claim so no reader ever trusts stale CLUSTERED-BY
-    metadata over unbucketed files."""
-    from sales_forecast_pyspark_spark.llmdata.ingest import (
-        _fp_bucket_table,
-        _read_fp_store,
-    )
-
-    path = str(tmp_path / "fpb")
-    seed = corpus.filter(F.col("doc_id") < 300)
-    build_fp_store(seed, path)
-    batch = spark.createDataFrame(
-        [(9_001, seed.first()["text"]), (9_002, "nothing like the corpus")],
-        "doc_id long, text string",
-    )
-    plain_hits = {
-        (r["doc_id"], r["dup_of"])
-        for r in screen_against_fp_store(batch, path).collect()
-    }
-    assert plain_hits == {(9_001, seed.first()["doc_id"])}
-
-    compact_fp_store(spark, path, bucket_table="t_fp_screen", num_buckets=8)
-    try:
-        assert _fp_bucket_table(spark, path) == "t_fp_screen"
-        assert _read_fp_store(spark, path).count() == 300
-        old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            screened = screen_against_fp_store(batch, path)
-            assert {
-                (r["doc_id"], r["dup_of"]) for r in screened.collect()
-            } == plain_hits
-            plan = (
-                screened._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-                .split("== Initial Plan ==")[0]  # AQE echoes both plans
-            )
-            assert "SortMergeJoin" in plan
-            assert "Bucketed: true" in plan
-            # single-exchange, batch-side-only: the bucketed store scan
-            # never re-shuffles
-            assert plan.count("Exchange hashpartitioning") == 1
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", old_thresh
-            )
-
-        # an appended increment screens through its own leg
-        fresh = corpus.filter(
-            (F.col("doc_id") >= 300) & (F.col("doc_id") < 350)
-        ).select((F.col("doc_id") + 70_000).alias("doc_id"), "text")
-        append_to_fp_store(fresh, path, batch_id=11)
-        assert screen_against_fp_store(fresh, path).count() == 50
-        assert (
-            screen_against_fp_store(fresh, path, exclude_batch=11).count()
-            == 0
-        )
-
-        # plain compaction folds the increment AND drops the claim
-        compact_fp_store(spark, path)
-        assert _fp_bucket_table(spark, path) is None
-        assert not spark.catalog.tableExists("t_fp_screen")
-        assert _read_fp_store(spark, path).count() == 350
-        assert screen_against_fp_store(fresh, path).count() == 50
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_fp_screen")
-        spark.sql("DROP TABLE IF EXISTS t_fp_screen__stage")
-
-
 @pytest.mark.slow
 def test_triad_report_recheck_flag(spark, corpus, tmp_path):
     """ADVICE r14: the report holds no lease, so before reporting

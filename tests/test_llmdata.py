@@ -294,38 +294,6 @@ def test_pii_scrub_detects_and_redacts(spark):
     assert out[3]["n_email"] == out[3]["n_phone"] == out[3]["n_ipv4"] == 0
 
 
-def test_prefix_filter_path_is_lossless(spark):
-    """Prefix filtering (AllPairs frequency-ascending prefixes) must
-    return EXACTLY the naive co-shingle join's pair set — the theorem
-    says no qualifying pair can be lost, and verification guarantees no
-    extra pair survives. Checked on the corpus and on a crafted set
-    where a ubiquitous shingle would dominate naive fan-out."""
-    from sales_forecast_pyspark_spark.llmdata import ngram_jaccard_pairs
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-
-    corpus = read_table(spark, SF_ORACLE, "documents")
-    key = lambda df: sorted(
-        (r["doc_a"], r["doc_b"], r["jaccard"]) for r in df.collect()
-    )
-    assert key(ngram_jaccard_pairs(corpus, prefix_filter=True)) == key(
-        ngram_jaccard_pairs(corpus, prefix_filter=False)
-    )
-
-    boiler = "the quick brown fox jumps over the lazy dog again and again"
-    crafted = spark.createDataFrame(
-        [
-            (1, boiler + " alpha beta gamma delta"),
-            (2, boiler + " alpha beta gamma epsilon"),
-            (3, boiler + " zeta eta theta iota"),
-            (4, "totally different words entirely unrelated content here"),
-        ],
-        "doc_id long, text string",
-    )
-    assert key(ngram_jaccard_pairs(crafted, threshold=0.4, prefix_filter=True)) == key(
-        ngram_jaccard_pairs(crafted, threshold=0.4, prefix_filter=False)
-    )
-
-
 def test_pack_sequences_invariants_and_determinism(spark):
     """Sequence packing: every item packed exactly once, no pack over
     budget, assignment identical across repartitionings (hashed shard +

@@ -3,8 +3,6 @@ EWMA baseline, streaks, mutual information, bigram surprisal."""
 
 from __future__ import annotations
 
-import pytest
-
 import math
 
 from pyspark.sql import Window
@@ -324,68 +322,6 @@ def test_pagerank_uniform_on_symmetric_graph(spark):
     assert len(rows) == 2
     for r in rows:
         assert abs(r["pagerank"] - 0.5) < 1e-10
-
-
-def test_pagerank_checkpoint_truncates_lineage_bit_exactly(spark):
-    """Deep-iteration lineage control: checkpoint_every=2 over 6
-    iterations must (a) return bit-identical ranks to the fully lazy
-    plan — localCheckpoint materializes the SAME rows, and the decimal
-    contribution sums make values partitioning-independent — and (b)
-    bound the final plan to the iterations SINCE the last checkpoint
-    (here 6 % 2 = 0 → zero rank-update joins above a LogicalRDD scan),
-    where the lazy plan nests all 6. This is the mechanism the operator
-    docstring sells for 100-iteration runs: without it Catalyst
-    re-optimizes a linearly growing tree every action."""
-    from sales_forecast_pyspark_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(0, 1), (0, 2), (0, 3), (1, 2), (2, 3), (3, 4), (4, 0)],
-        "src int, dst int",
-    )
-    lazy = pagerank(edges, iterations=6)
-    ckpt = pagerank(edges, iterations=6, checkpoint_every=2)
-    lazy_rows = sorted(map(tuple, lazy.collect()))
-    ckpt_rows = sorted(map(tuple, ckpt.collect()))
-    assert ckpt_rows == lazy_rows, "checkpointing changed values"
-
-    def n_joins(df):
-        return df._jdf.queryExecution().optimizedPlan().toString().count("Join")
-
-    assert n_joins(ckpt) == 0, "final plan should start at the checkpoint"
-    assert n_joins(lazy) >= 6, "lazy plan should nest every iteration"
-    assert "LogicalRDD" in ckpt._jdf.queryExecution().optimizedPlan().toString()
-    spark.catalog.clearCache()
-
-
-@pytest.mark.slow
-def test_pagerank_superseded_checkpoints_release_storage(spark):
-    """Storage hygiene (ADVICE r07): checkpoint_every=1 over 6
-    iterations materializes 6 rank snapshots; superseded ones must be
-    explicitly unpersisted as soon as their successor exists, not left
-    for ContextCleaner GC. After collecting, the executor store must
-    hold at most the LAST checkpoint plus the cached edge frame —
-    without the explicit free this run leaves ~6 persisted rank RDDs."""
-    from sales_forecast_pyspark_spark.operators.graph import pagerank
-
-    def live_ids():
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return {i.id() for i in infos if i.numCachedPartitions() > 0}
-
-    spark.catalog.clearCache()
-    # Delta, not absolute (code-review r08): earlier tests' checkpoint
-    # blocks are freed by ContextCleaner at GC-dependent times, so an
-    # absolute count is order/timing-flaky; blocks alive both before
-    # and after cancel out of the delta.
-    before = live_ids()
-    edges = spark.createDataFrame(
-        [(0, 1), (0, 2), (1, 2), (2, 3), (3, 4), (4, 0)],
-        "src int, dst int",
-    )
-    out = pagerank(edges, iterations=6, checkpoint_every=1)
-    out.collect()
-    new = live_ids() - before
-    assert len(new) <= 3, new
-    spark.catalog.clearCache()
 
 
 def test_curriculum_interleave_is_weighted_permutation(spark):

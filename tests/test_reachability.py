@@ -11,15 +11,25 @@ Imports and ``__all__`` strings do not count, so a re-export alone keeps
 nothing alive. Resolution is by name only, so the walk over-approximates
 reach and never flags a live def.
 
+A bare name that the enclosing function binds (a parameter or a local
+``Store`` target) refers to that binding, not to a def, so it reaches
+nothing.
+
 A def that the walk does not reach is test-only (or dead) code: delete
 it with its tests, or, if it is paper surface or the reference that a
 parity test checks live code against, name it in ``ALLOWED`` with its
 reason.
+
+The same holds one level down, for options: a ``True``/``False``-default
+parameter that no call site under the roots passes selects a branch
+only tests reach. Fold it into the value every caller gets, or name it
+in ``ALLOWED_SWITCHES`` with its reason.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -34,15 +44,60 @@ ALLOWED = {
     "run_available_now": "the harness that drives the live streaming operators in tests",
 }
 
+ALLOWED_SWITCHES = {
+    "interval_join.validate": "the off switch of the fan-out refusal",
+    "triad_consistency_report.recheck": (
+        "the single-pass verdict that the recheck test compares against"
+    ),
+}
+
+
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+
+
+def _bound(fn: ast.AST) -> set[str]:
+    """Names a function binds itself: its parameters plus every
+    ``Store`` target in its own body (nested scopes excluded)."""
+    a = fn.args
+    out = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+    out |= {x.arg for x in (a.vararg, a.kwarg) if x}
+    stack = [fn.body] if isinstance(fn, ast.Lambda) else list(fn.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+            out.add(node.id)
+        if not isinstance(node, _SCOPES):
+            stack.extend(ast.iter_child_nodes(node))
+    return out
+
 
 def _names(nodes) -> set[str]:
+    """Bare names and attribute names the nodes mention, minus a bare
+    name that the enclosing function binds (a parameter or a local
+    called ``top_k`` does not reach the def ``top_k``)."""
     out: set[str] = set()
+
+    def visit(node: ast.AST, local: frozenset[str]) -> None:
+        if isinstance(node, _SCOPES):
+            # decorators, defaults and annotations run in the outer scope
+            outer = [*getattr(node, "decorator_list", ()), node.args]
+            outer += [r for r in [getattr(node, "returns", None)] if r]
+            for part in outer:
+                visit(part, local)
+            inner = local | _bound(node)
+            body = [node.body] if isinstance(node, ast.Lambda) else node.body
+            for part in body:
+                visit(part, inner)
+            return
+        if isinstance(node, ast.Name) and node.id not in local:
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        for child in ast.iter_child_nodes(node):
+            visit(child, local)
+
     for node in nodes:
-        for sub in ast.walk(node):
-            if isinstance(sub, ast.Name):
-                out.add(sub.id)
-            elif isinstance(sub, ast.Attribute):
-                out.add(sub.attr)
+        visit(node, frozenset())
     return out
 
 
@@ -63,15 +118,30 @@ def _import_time_parts(node: ast.AST) -> list[ast.AST]:
     return parts
 
 
+@functools.cache
+def _parse() -> tuple[tuple[tuple[str, ast.Module], ...], tuple[ast.Module, ...]]:
+    """``(package, entry_points)``: every package module as
+    ``(relpath, tree)``, and the trees of the non-package roots."""
+    package = tuple(
+        (rel, ast.parse(path.read_text(), filename=rel))
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for rel in [str(path.relative_to(REPO))]
+    )
+    paths = [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    paths += sorted((REPO / "scripts").glob("*.py"))
+    paths += sorted((REPO / "perfbench").glob("*.py"))
+    entry = tuple(ast.parse(p.read_text(), filename=str(p)) for p in paths)
+    return package, entry
+
+
 def _walk_package():
     """Return ``(defs, root_names)``: every top-level def as
     ``name -> [(relpath, lineno, node)]`` and the names the roots use."""
     defs: dict[str, list[tuple[str, int, ast.AST]]] = {}
     roots: list[ast.AST] = []
     registered: set[str] = set()
-    for path in sorted(PACKAGE.rglob("*.py")):
-        rel = str(path.relative_to(REPO))
-        tree = ast.parse(path.read_text(), filename=rel)
+    package, entry = _parse()
+    for rel, tree in package:
         for stmt in tree.body:
             if isinstance(stmt, (ast.Import, ast.ImportFrom)):
                 continue
@@ -85,12 +155,7 @@ def _walk_package():
                 and any(isinstance(t, ast.Name) and t.id == "__all__" for t in stmt.targets)
             ):
                 roots.append(stmt)
-    entry_points = [REPO / "bench.py", REPO / "__spark_entry__.py"]
-    entry_points += sorted((REPO / "scripts").glob("*.py"))
-    entry_points += sorted((REPO / "perfbench").glob("*.py"))
-    for path in entry_points:
-        roots.append(ast.parse(path.read_text(), filename=str(path)))
-    return defs, _names(roots) | registered
+    return defs, _names(roots + list(entry)) | registered
 
 
 def _unreached() -> list[tuple[str, int, str]]:
@@ -125,3 +190,57 @@ def test_allowlist_names_only_unreached_defs():
     exists, is stale."""
     unreached = {name for _, _, name in _unreached()}
     assert set(ALLOWED) <= unreached, sorted(set(ALLOWED) - unreached)
+
+
+def _unset_switches() -> list[tuple[str, int, str]]:
+    """Every ``True``/``False``-default parameter of a package function
+    that no call site under the roots passes, as ``func.param``.
+
+    A call matches a def by name (a bare ``f(...)`` or an attribute
+    ``x.f(...)``), as in the def walk. It passes a parameter by keyword,
+    by position, or through any ``*``/``**`` splat."""
+    package, entry = _parse()
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in [t for _, t in package] + list(entry):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(node)
+    unset = []
+    for rel, tree in package:
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = fn.args
+            positional = a.posonlyargs + a.args
+            defaults = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+            defaults += [(x, d) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            for arg, default in defaults:
+                if not (isinstance(default, ast.Constant) and isinstance(default.value, bool)):
+                    continue
+                pos = positional.index(arg) if arg in positional else None
+                if not any(
+                    any(k.arg in (None, arg.arg) for k in call.keywords)
+                    or any(isinstance(x, ast.Starred) for x in call.args)
+                    or (pos is not None and len(call.args) > pos)
+                    for call in calls.get(fn.name, ())
+                ):
+                    unset.append((rel, fn.lineno, f"{fn.name}.{arg.arg}"))
+    return sorted(unset)
+
+
+def test_every_switch_is_set_by_a_root():
+    """A boolean option that no root ever passes only selects a branch
+    that tests reach: fold it into the default every caller gets, or
+    allowlist it with a reason."""
+    unset = [u for u in _unset_switches() if u[2] not in ALLOWED_SWITCHES]
+    assert not unset, (
+        f"{len(unset)} boolean switches are set only by tests:\n"
+        + "\n".join(f"  {rel}:{lineno} {name}" for rel, lineno, name in unset)
+    )
+
+
+def test_switch_allowlist_names_only_unset_switches():
+    unset = {name for _, _, name in _unset_switches()}
+    assert set(ALLOWED_SWITCHES) <= unset, sorted(set(ALLOWED_SWITCHES) - unset)

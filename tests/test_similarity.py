@@ -52,83 +52,6 @@ def test_lsh_pairs_subset_of_true_distances(emb):
     assert a.filter(F.col("dist") > 1.2).count() == 0
 
 
-def test_sparse_vector_input_matches_mllib_join(spark):
-    """r11 (VERDICT r10 ask #5): the vector_input=True path now runs
-    the OWNED salted candidate join + sparse Arrow scorer instead of
-    MLlib approxSimilarityJoin (whose internal candidate join is
-    statically broadcast-planned from post-explode fiction — the OOM
-    class the r09 sweep eliminated everywhere else). Same hash model,
-    same seed, same strict-< radius ⇒ the results must be IDENTICAL
-    to MLlib's on sparse and mixed sparse/dense corpora."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.linalg import Vectors
-
-    rng_rows = []
-    for i in range(60):
-        # deterministic sparse-ish TF-IDF-like vectors over d=50
-        idx = sorted({(i * 7 + j * 13) % 50 for j in range(5)})
-        vals = [1.0 + ((i + j) % 4) * 0.5 for j in range(len(idx))]
-        if i % 10 == 0:  # mix in dense layout rows
-            dense = [0.0] * 50
-            for p, v in zip(idx, vals):
-                dense[p] = v
-            rng_rows.append((i, Vectors.dense(dense)))
-        else:
-            rng_rows.append((i, Vectors.sparse(50, idx, vals)))
-    df = spark.createDataFrame(rng_rows, ["vec_id", "tfidf"])
-
-    ours = {
-        (r["id_a"], r["id_b"], r["dist"])
-        for r in lsh_similarity_join(
-            df, vec_col="tfidf", distance_threshold=3.0, vector_input=True
-        ).collect()
-    }
-
-    vecs = df.select(F.col("vec_id"), F.col("tfidf").alias("vec"))
-    model = BucketedRandomProjectionLSH(
-        inputCol="vec", outputCol="hashes", bucketLength=2.0,
-        numHashTables=3, seed=42,
-    ).fit(vecs)
-    mllib = {
-        (r["id_a"], r["id_b"], r["dist"])
-        for r in model.approxSimilarityJoin(vecs, vecs, 3.0, "dist")
-        .select(
-            F.col("datasetA.vec_id").alias("id_a"),
-            F.col("datasetB.vec_id").alias("id_b"),
-            F.round("dist", 6).alias("dist"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .collect()
-    }
-    assert ours == mllib and len(ours) > 0
-
-
-def test_sparse_vector_input_plan_is_broadcast_safe(spark):
-    """The point of the r11 rewrite: the sparse path's static plan
-    must carry no Generate-fed BroadcastExchange (the registry sweep
-    can't see through MLlib internals, so this pins the owned shape
-    directly)."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(__file__), "..", "scripts")
-    )
-    from audit_static_broadcasts import audit_frame
-
-    from pyspark.ml.linalg import Vectors
-
-    rows = [
-        (i, Vectors.sparse(20, sorted({i % 20, (i * 3 + 1) % 20}), [1.0, 2.0][: len({i % 20, (i * 3 + 1) % 20})]))
-        for i in range(30)
-    ]
-    df = spark.createDataFrame(rows, ["vec_id", "tfidf"])
-    out = lsh_similarity_join(
-        df, vec_col="tfidf", distance_threshold=3.0, vector_input=True
-    )
-    assert audit_frame(out) == []
-
-
 def test_extract_features_carries_id_name_and_type(spark):
     """Output id field copies the input's name AND type (a string id
     column named 'name' round-trips; previously hardcoded 'doc_id long')."""
@@ -487,38 +410,6 @@ def test_ann_lsh_sample_run_equals_full_run_restriction(spark):
         ).collect()
     }
     assert full == sample and len(full) > 0
-
-
-def test_sparse_unwrap_zero_size_dense_and_norm_payload(spark):
-    """ADVICE r11 #1 + #3: a zero-size dense vector must unwrap to an
-    EMPTY index array (sequence(0,-1) would produce the malformed
-    [0,-1] and desync idx/val in the Arrow scorer), and the squared
-    norm is carried as a per-row scalar payload."""
-    from pyspark.ml.linalg import Vectors, VectorUDT
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from sales_forecast_pyspark_spark.llmdata.similarity import (
-        _sparse_unwrap,
-    )
-
-    schema = StructType(
-        [StructField("vec_id", LongType()), StructField("v", VectorUDT())]
-    )
-    rows = [
-        (0, Vectors.dense([])),  # degenerate zero-size dense vector
-        (1, Vectors.dense([3.0, 4.0])),
-        (2, Vectors.sparse(2, [1], [2.0])),
-    ]
-    got = {
-        r["id"]: r
-        for r in _sparse_unwrap(
-            spark.createDataFrame(rows, schema), "vec_id", "v"
-        ).collect()
-    }
-    assert list(got[0]["idx"]) == [] and list(got[0]["val"]) == []
-    assert got[0]["nsq"] == 0.0
-    assert list(got[1]["idx"]) == [0, 1] and got[1]["nsq"] == 25.0
-    assert list(got[2]["idx"]) == [1] and got[2]["nsq"] == 4.0
 
 
 def test_lsh_join_result_set_is_salt_invariant(spark):
