@@ -27,27 +27,31 @@ def feature_pipeline(
     numeric: Sequence[str],
     output_col: str = "features",
 ) -> Pipeline:
-    """M1 + M2 + M6: one StringIndexer per categorical column
-    (frequency-ordered indices, "keep" for unseen values) feeding a
+    """M1 + M2 + M6: one multi-column StringIndexer over every
+    categorical column (``<c>_idx`` outputs; indices ordered by
+    frequency, then alphabetically; "keep" for unseen values) feeding a
     single VectorAssembler ("skip" drops rows with null features).
 
-    Kept as a separate pipeline from the model so it can be fit ONCE on
-    the train split and reused across every model (the reference's v3
-    idiom, py:1084-1087) — StringIndexer.fit runs a distinct+count job
-    per column, which at scale you do not want to repeat per model.
+    The one indexer fits every column's label map in a single
+    aggregation instead of one per column. The pipeline is kept apart
+    from the model so it can be fit ONCE on the train split and reused
+    across every model (the reference's v3 idiom, py:1084-1087).
     """
-    stages = [
-        StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep")
-        for c in categorical
-    ]
-    stages.append(
-        VectorAssembler(
-            inputCols=[f"{c}_idx" for c in categorical] + list(numeric),
-            outputCol=output_col,
-            handleInvalid="skip",
-        )
+    idx_cols = [f"{c}_idx" for c in categorical]
+    return Pipeline(
+        stages=[
+            StringIndexer(
+                inputCols=list(categorical),
+                outputCols=idx_cols,
+                handleInvalid="keep",
+            ),
+            VectorAssembler(
+                inputCols=idx_cols + list(numeric),
+                outputCol=output_col,
+                handleInvalid="skip",
+            ),
+        ]
     )
-    return Pipeline(stages=stages)
 
 
 def lr_preset(
@@ -114,7 +118,11 @@ def materialize(df: DataFrame) -> DataFrame:
     """M10 (py:650-651, :985-986): cache + count to force materialization
     at an expensive frontier before iterative ML — every L-BFGS/tree pass
     re-reads this lineage, so at scale the cache converts O(iterations)
-    window recomputes into one."""
+    window recomputes into one. The session lets AQE size the cached
+    plan's output (``canChangeCachedPlanOutputPartitioning``), so the
+    cache holds the coalesced partitions — one at sf0.001 — rather than
+    ``spark.sql.shuffle.partitions`` mostly empty ones, and each pass
+    over it runs that many tasks."""
     df.cache()
     df.count()
     return df

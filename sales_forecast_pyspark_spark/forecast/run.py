@@ -92,7 +92,6 @@ def rolling_origin_backtest(
     horizon_days: int = 60,
     label: str = "qty",
     cat_cols: tuple[str, str] = ("country", "stock"),
-    model_factory=None,
 ) -> DataFrame:
     """Walk-forward (rolling-origin) backtesting — the evaluation the
     reference's single 80/20 time split cannot give: one fit per fold,
@@ -106,7 +105,10 @@ def rolling_origin_backtest(
     The fold loop is a driver loop over k model fits (each fit is the
     cluster-scale operation; k is small by construction). Returns one
     row per fold: (fold, train_end, horizon_days, n_train, n_test,
-    mae, rmse, r2)."""
+    mae, rmse, r2), as a local table. The counts run no extra job:
+    n_train is the LR training summary's row count and n_test the
+    metrics pass's."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from sales_forecast_pyspark_spark.forecast.pipelines import (
@@ -114,7 +116,6 @@ def rolling_origin_backtest(
         lr_preset,
     )
 
-    factory = model_factory or (lambda: lr_preset(label))
     rows = []
     for i, end in enumerate(fold_ends):
         end_col = F.lit(end).cast("date")
@@ -125,21 +126,25 @@ def rolling_origin_backtest(
         )
         pipe = feature_pipeline(list(cat_cols), numeric)
         _, train_p, test_p = prepare_features(pipe, train, test)
-        res = train_and_eval(f"fold{i}", train_p, test_p, factory(), label=label)
+        res = train_and_eval(
+            f"fold{i}", train_p, test_p, lr_preset(label), label=label
+        )
         rows.append(
             (
                 i,
                 end,
                 horizon_days,
-                train_p.count(),
-                res.predictions.count(),
+                res.model.summary.numInstances,
+                res.metrics["n"],
                 round(res.metrics["mae"], 4),
                 round(res.metrics["rmse"], 4),
                 round(res.metrics["r2"], 4),
             )
         )
+    cols = ["fold", "train_end", "horizon_days", "n_train", "n_test",
+            "mae", "rmse", "r2"]
     return spark.createDataFrame(
-        rows,
+        pd.DataFrame(rows, columns=cols),
         "fold int, train_end string, horizon_days int, n_train long, "
         "n_test long, mae double, rmse double, r2 double",
     )

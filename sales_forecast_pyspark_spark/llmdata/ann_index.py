@@ -1387,9 +1387,7 @@ def _mark_zero_vec_admitted(
     jvm, fs = lsm._jvm_fs(spark, path)
     p = jvm.Path(os.path.join(path, ZERO_VEC_MARKER))
     with _ctx.suppress(Exception):
-        out = fs.create(p, False)
-        out.write(f"{int(batch_id)}\n".encode())
-        out.close()
+        lsm.create_new(fs, p, f"{int(batch_id)}\n")
 
 
 def stream_ingest_semantic_dedup(

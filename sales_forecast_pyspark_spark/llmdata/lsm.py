@@ -274,10 +274,42 @@ def _lease_token(fs, lock) -> str | None:
     return body.split()[0] if body else None
 
 
+def create_new(fs, p, body: str) -> bool:
+    """Create file ``p`` holding ``body`` unless it exists; return
+    whether this call created it. Of any number of concurrent callers
+    exactly one wins. Hadoop's local-filesystem ``create(p,
+    overwrite=False)`` is an exists-check followed by a plain open, so
+    two callers that both pass the check both "create" the file and the
+    later write replaces the earlier one; ``file:`` paths therefore
+    create with ``O_CREAT | O_EXCL``. Other schemes keep
+    ``fs.create(p, False)``, which is atomic on HDFS."""
+    if fs.getUri().getScheme() == "file":
+        local = fs.makeQualified(p).toUri().getPath()
+        os.makedirs(os.path.dirname(local), exist_ok=True)  # as fs.create does
+        try:
+            fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+        except FileExistsError:
+            return False
+        with os.fdopen(fd, "w", encoding="utf-8") as f:
+            f.write(body)
+        return True
+    try:
+        out = fs.create(p, False)
+    except Exception as e:  # py4j wraps FileAlreadyExistsException
+        if "FileAlreadyExists" not in str(
+            getattr(e, "java_exception", e)
+        ) and "already exists" not in str(e):
+            raise
+        return False
+    out.write(body.encode())
+    out.close()
+    return True
+
+
 def _try_takeover(jvm, fs, path: str, lock, stale_after_s: float) -> None:
     """Fenced recovery of a stale lease. The stale lock's removal is
-    guarded by a single-holder TAKEOVER-INTENT file (atomic
-    ``create(overwrite=False)``): while the lock file exists nobody can
+    guarded by a single-holder TAKEOVER-INTENT file (exclusive
+    ``create_new``): while the lock file exists nobody can
     re-create it, and only the intent holder deletes it, so the
     staleness re-check performed UNDER the intent cannot be invalidated
     before the delete — the r13 race (a contender's queued delete
@@ -296,13 +328,14 @@ def _try_takeover(jvm, fs, path: str, lock, stale_after_s: float) -> None:
         if time.time() - ist.getModificationTime() / 1000.0 > stale_after_s:
             fs.delete(intent, False)  # reap a crashed recoverer
     try:
-        out = fs.create(intent, False)
-        out.write(
-            f"takeover {socket.gethostname()}:{os.getpid()} "
-            f"{time.time():.0f}\n".encode()
+        created = create_new(
+            fs,
+            intent,
+            f"takeover {socket.gethostname()}:{os.getpid()} {time.time():.0f}\n",
         )
-        out.close()
     except Exception:
+        created = False
+    if not created:
         return  # another recoverer is already on it
     try:
         st = None
@@ -333,12 +366,11 @@ def acquire_lease(
     read and its increment delete would be dropped. Now it fails fast
     instead).
 
-    Mechanics: atomic create of an underscore-prefixed lock file
-    (``fs.create(overwrite=False)`` — one winner per path on HDFS and
-    local FS alike; the underscore keeps it invisible to Spark
-    readers). A unique token leads the file, then holder identity +
-    wall-clock for operators; the token is what ``release_lease`` and
-    ``verify_lease`` fence on.
+    Mechanics: exclusive create of an underscore-prefixed lock file
+    (``create_new`` — one winner per path on HDFS and local FS alike;
+    the underscore keeps it invisible to Spark readers). A unique token
+    leads the file, then holder identity + wall-clock for operators;
+    the token is what ``release_lease`` and ``verify_lease`` fence on.
 
     STALENESS TAKEOVER (fenced — VERDICT r13 wrong #2a): a holder that
     crashed without releasing would deadlock maintenance forever, so a
@@ -355,9 +387,9 @@ def acquire_lease(
     the winner is whoever's atomic create lands first (a brand-new
     acquirer sneaking into that window is fine — still exactly one
     winner). Each caller attempts takeover at most once per acquire,
-    so contention stays bounded; the race test hammers four
-    simultaneous takers five rounds and requires exactly one winner
-    every time.
+    so contention stays bounded; the race tests hammer four
+    simultaneous acquirers (fresh and stale lock alike) and require
+    exactly one winner every round.
 
     ``retry_s`` (ADVICE r13): a bounded retry-with-backoff budget for
     callers that can tolerate waiting — the streaming append path uses
@@ -376,19 +408,13 @@ def acquire_lease(
     deadline = time.monotonic() + max(0.0, retry_s)
     tried_takeover = False
     while True:
-        try:
-            out = fs.create(lock, False)
-            out.write(
-                f"{token} {purpose} {socket.gethostname()}:{os.getpid()} "
-                f"{time.time():.0f}\n".encode()
-            )
-            out.close()
+        if create_new(
+            fs,
+            lock,
+            f"{token} {purpose} {socket.gethostname()}:{os.getpid()} "
+            f"{time.time():.0f}\n",
+        ):
             return token
-        except Exception as e:  # py4j wraps FileAlreadyExistsException
-            if "FileAlreadyExists" not in str(
-                getattr(e, "java_exception", e)
-            ) and "already exists" not in str(e):
-                raise
         st = None
         with contextlib.suppress(Exception):
             if fs.exists(lock):

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sales_forecast_pyspark_spark.functions.vectors import cosine_similarity
+from sales_forecast_pyspark_spark.session import shuffle_partitions
 
 # Largest frame ``_ivfpq_search`` (its queries) and
 # ``exact_self_similarity_join`` (its batch) materialize driver-side and
@@ -677,7 +678,7 @@ def exact_self_similarity_join(
 
     # repartition spreads the GEMM across cores, following
     # shuffle.partitions like every other fan-out in the package
-    slices = int(src.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    slices = shuffle_partitions(src.sparkSession)
     out = (
         src.repartition(min(slices, max(1, n // RB)))
         .mapInPandas(mine, f"id_a {id_dtype}, id_b {id_dtype}, dist double")
@@ -1366,7 +1367,7 @@ def _ivfpq_search(
     # ~1 task and serialize the scan (measured ×4 at the 10× decade).
     # A user-specified partition count is exempt from AQE coalescing,
     # and the groupBy reuses this exchange.
-    n_scan_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_scan_parts = shuffle_partitions(spark)
     scan_rows = (
         codes.filter(F.col("cell").isin(sorted(cell_to_pos)))
         .select("neighbor_id", F.col("cell").cast("int").alias("cell"), "codes")

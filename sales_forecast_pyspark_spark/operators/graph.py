@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sales_forecast_pyspark_spark.session import shuffle_partitions
+
 
 def canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected edge list → deduped canonical (x < y) pairs; self
@@ -135,7 +137,11 @@ def pagerank_edges(
     The frame is hash-partitioned on the JOIN KEY before caching:
     InMemoryTableScan preserves outputPartitioning, so every
     iteration's edges⋈ranks join reads the cache exchange-free on the
-    edge side (only the small rank frame shuffles per step). Without
+    edge side (only the small rank frame shuffles per step). The
+    partition count is explicit because AQE leaves a user-specified
+    count alone: the session lets it coalesce cached plans, and a
+    coalesced edge cache would make the planner re-shuffle the degree
+    frame built over it. Without
     this the union's partitioning is whatever the basket expansion
     left, and each of the N iterations re-shuffles the full edge list
     — measured 1.5× end-to-end on the sf0.1 co-purchase graph, and
@@ -146,7 +152,7 @@ def pagerank_edges(
     return (
         e.select(F.col("x").alias("u"), F.col("y").alias("v"))
         .unionAll(e.select(F.col("y").alias("u"), F.col("x").alias("v")))
-        .repartition(F.col("u"))
+        .repartition(shuffle_partitions(e.sparkSession), F.col("u"))
         .cache()
     )
 

@@ -38,6 +38,13 @@ _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE coalesce a cached plan's output too. Off (Spark's default),
+    # every .cache() keeps all shuffle.partitions partitions however few
+    # rows they hold, and every later stage over the cache (each L-BFGS
+    # pass of a model fit) runs that many near-empty tasks. A cache whose
+    # hash partitioning later joins rely on repartitions to an explicit
+    # count, which AQE leaves alone (graph.pagerank_edges).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.driver.memory": "8g",
@@ -103,6 +110,16 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # Connect-mode sessions have no _jvm; conf above still applies
     return spark
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as a count for an explicit
+    repartition. A non-numeric value (``auto``, which some platforms
+    set) falls back to the context's ``defaultParallelism``."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
 
 
 def get_spark(

@@ -1,6 +1,7 @@
 """Forecast-pipeline tests (M1-M10): indexer/assembler semantics, preset
 configs, one-pass-vs-MLlib evaluator parity, coefficient introspection,
-segmented fit, and run-to-run stability of the flagship LR query.
+segmented fit, run-to-run stability of the flagship LR query, and the
+Spark job counts of one model fit and one backtest fold.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from sales_forecast_pyspark_spark.forecast import (
     gbt_preset,
     lr_coefficients,
     lr_preset,
+    materialize,
     mllib_metrics,
     prepare_features,
     rf_preset,
@@ -231,3 +233,80 @@ def test_rolling_origin_backtest_folds_and_determinism(spark):
         assert r[4] > 0  # non-empty test window
         assert all(math.isfinite(x) for x in r[5:8])
     assert [tuple(r) for r in b(spark, SF_SMALL).collect()] == rows
+
+
+def _jobs_in(spark, fn):
+    """(fn(), number of Spark jobs fn ran), read back from the status
+    tracker through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def cached_feats(spark):
+    """The benchmark's forecast frontier: the sf0.001 daily panel with
+    the reduced feature preset, materialized."""
+    from sales_forecast_pyspark_spark.plans.panel import daily_panel
+    from sales_forecast_pyspark_spark.plans.queries import REDUCED_PRESET
+
+    panel = daily_panel(spark, SF_SMALL, calendar=True)
+    feats, cols = build_features(panel, **REDUCED_PRESET)
+    feats = materialize(feats)
+    yield feats, [*cols, "year", "month", "week", "day", "dow"]
+    feats.unpersist()
+
+
+def test_materialized_frontier_keeps_coalesced_partitions(spark, cached_feats):
+    """The cache holds AQE's coalesced partitions, not one per
+    ``spark.sql.shuffle.partitions``, so every pass over it runs that
+    few tasks."""
+    feats, _ = cached_feats
+    assert feats.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+
+
+def test_model_fit_job_count_is_pinned(spark, cached_feats):
+    """One split fit over the cached sf0.001 frontier runs exactly 6
+    Spark jobs: the one indexer fit, the LR fit and the one-pass
+    metrics."""
+    from sales_forecast_pyspark_spark.operators.rowops import time_split
+
+    feats, numeric = cached_feats
+    train, test = time_split(feats, "ds", "1998-06-30")
+
+    def fit():
+        pipe = feature_pipeline(["country", "stock"], numeric)
+        _, train_p, test_p = prepare_features(pipe, train, test)
+        return train_and_eval("lr", train_p, test_p, lr_preset("qty"))
+
+    res, jobs = _jobs_in(spark, fit)
+    assert jobs == 6
+    assert res.metrics["n"] > 0
+
+
+def test_backtest_fold_job_count_is_pinned(spark, cached_feats):
+    """One backtest fold runs the same 6 jobs as a split fit: its row
+    counts come from the fit and the metrics pass, and its fold table is
+    a local relation that collects without a job."""
+    from sales_forecast_pyspark_spark.forecast.run import rolling_origin_backtest
+
+    feats, numeric = cached_feats
+
+    def fold():
+        out = rolling_origin_backtest(spark, feats, numeric, ["1998-07-31"])
+        return out, out.collect()
+
+    (out, rows), jobs = _jobs_in(spark, fold)
+    assert jobs == 6
+    assert out._jdf.queryExecution().logical().getClass().getSimpleName() == (
+        "LocalRelation"
+    )
+    assert len(rows) == 1 and rows[0].n_train > 0 and rows[0].n_test > 0

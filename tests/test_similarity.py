@@ -567,3 +567,22 @@ def test_exact_self_pairs_contract_guard_and_degenerate_frames(spark):
 
     sig = _inspect.signature(exact_self_similarity_join)
     assert sig.parameters["max_rows"].default == 50_000
+
+
+def test_shuffle_partitions_falls_back_on_non_numeric_conf():
+    """The explicit repartitions of the exact join and the IVF-PQ scan
+    size themselves from ``spark.sql.shuffle.partitions``; a value such
+    as ``auto`` falls back to ``defaultParallelism`` instead of raising."""
+    from types import SimpleNamespace
+
+    from sales_forecast_pyspark_spark.session import shuffle_partitions
+
+    def stub(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: {
+                "spark.sql.shuffle.partitions": value}[key]),
+            sparkContext=SimpleNamespace(defaultParallelism=3),
+        )
+
+    assert shuffle_partitions(stub("12")) == 12
+    assert shuffle_partitions(stub("auto")) == 3
