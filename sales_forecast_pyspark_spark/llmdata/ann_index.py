@@ -59,13 +59,20 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sales_forecast_pyspark_spark.functions.vectors import l2_norm
+from sales_forecast_pyspark_spark.llmdata import lsm
+from sales_forecast_pyspark_spark.llmdata.dedup_store import _peel
 from sales_forecast_pyspark_spark.llmdata.lsm import DEFAULT_TARGET_FILE_MB
 from sales_forecast_pyspark_spark.llmdata.similarity import (
     SEARCH_MAX_ROWS,
     _ivfpq_fit,
     _ivfpq_search,
     _vec_to_python_expr,
+    exact_self_similarity_join,
 )
+
+# every table an index keeps in base + increment tiers
+INDEX_TABLES = ("codes", "vectors", "stats_live")
 
 
 # process-local memo of the IMMUTABLE quantizer tables (cells +
@@ -81,8 +88,6 @@ _QUANTIZER_MEMO: dict[str, tuple] = {}
 
 
 def _quantizer_fingerprint(spark: SparkSession, path: str):
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     sig = []
     for sub in ("cells", "codebooks"):
         p = os.path.join(path, sub)
@@ -147,8 +152,6 @@ def _read_index_table(spark: SparkSession, path: str, table: str) -> DataFrame:
     idempotent landing zone of ``append_to_ivfpq_index(...,
     batch_id=)`` / the streaming ingest). Shared LSM plumbing —
     ``llmdata/lsm.py`` — used identically by the MinHash store."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     return lsm.read_tiered(spark, path, table)
 
 
@@ -499,8 +502,6 @@ def build_ivfpq_index(
     increment tiers and the fold ledger of any prior incarnation are
     dropped — a rebuild starts from a clean tier map). Holds the
     single-maintainer mutation lease for the duration."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     spark = df.sparkSession
     with lsm.maintenance_lease(spark, path, "build"):
         return _build_locked(
@@ -519,10 +520,8 @@ def _build_locked(
     seed: int,
 ) -> dict:
     """Body of ``build_ivfpq_index`` under the held maintenance lease."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     spark = df.sparkSession
-    for t in ("codes", "vectors", "stats_live"):
+    for t in INDEX_TABLES:
         lsm.drop_inc(spark, path, t)
     lsm.drop_ledger(spark, path)
     cell_mat, books, enc, d, sub = _ivfpq_fit(
@@ -657,11 +656,10 @@ def append_to_ivfpq_index(
     concurrent compaction fails loudly at acquire instead of folding
     increments out from under the append (VERDICT r12 ask #4a).
     ``lease_retry_s`` bounds a retry-with-backoff wait at acquire
-    (ADVICE r13): the streaming loops pass a budget so an external
-    cron compaction holding the lease between micro-batches delays
-    the append instead of crashing the StreamingQuery."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
+    (ADVICE r13): the streaming loops pass ``lsm.STREAM_LEASE_RETRY_S``
+    so an external cron compaction holding the lease between
+    micro-batches delays the append instead of crashing the
+    StreamingQuery."""
     spark = df.sparkSession
     with lsm.maintenance_lease(
         spark, path, "append", retry_s=lease_retry_s
@@ -679,8 +677,6 @@ def _append_locked(
     """Body of ``append_to_ivfpq_index`` under the held lease."""
     import numpy as np
     import pandas as pd
-
-    from sales_forecast_pyspark_spark.llmdata import lsm
 
     spark = df.sparkSession
     # replay-after-fold guard (code-review r12): if a past compaction
@@ -862,7 +858,6 @@ def stream_append_to_ivfpq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     auto_compact_after: int | None = 64,
-    lease_retry_s: float = 600.0,
 ):
     """Continuous ingest into a persisted IVF-PQ index — the
     production loop that keeps the index current between rebuilds:
@@ -882,52 +877,33 @@ def stream_append_to_ivfpq_index(
     remains the rebuild trigger when the streamed distribution drifts
     from the codebooks.
 
-    ``auto_compact_after=N`` (default 64) makes the loop consult
-    ``lsm.should_compact`` after each append and run
-    ``compact_ivfpq_index`` once any table accumulates N increment
-    dirs — long-running ingest bounds its own serve-path listing cost
+    ``auto_compact_after=N`` (default 64) runs ``compact_ivfpq_index``
+    once any table accumulates N increment dirs (``lsm.auto_compact``)
+    — long-running ingest bounds its own serve-path listing cost
     instead of relying on an operator hand-scheduling folds (VERDICT
     r12 ask #4b; ``None`` disables, which tier-depth-comparing
-    rehearsals use). The fold runs inside the same single-writer loop,
-    so the lease never contends.
+    rehearsals use). The append waits up to
+    ``lsm.STREAM_LEASE_RETRY_S`` for a lease an EXTERNAL maintainer
+    holds.
 
-    ``lease_retry_s`` (ADVICE r13, default 10 min): how long an append
-    waits out a lease held by an EXTERNAL maintainer (a cron-driven
-    ``scripts/store_maintenance.py`` fold landing between micro-
-    batches) before the loud ``LeaseHeldError`` kills the stream —
-    fail-fast stays the backstop, but a routine maintenance fold no
-    longer crashes a live ingest loop.
-
-    Uses ``trigger(availableNow=True)`` — drain everything available,
-    then stop — the rehearsal-friendly default the streaming tier
-    standardizes on; a deployment swaps in a processing-time trigger.
-    Returns the started StreamingQuery (caller awaits/stops)."""
+    Uses availableNow (``lsm.start_ingest_loop``); returns the started
+    StreamingQuery (caller awaits/stops)."""
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from sales_forecast_pyspark_spark.llmdata import lsm
-
         append_to_ivfpq_index(
             batch_df,
             path,
             id_col=id_col,
             vec_col=vec_col,
             batch_id=batch_id,
-            lease_retry_s=lease_retry_s,
+            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
         )
-        if auto_compact_after is not None and lsm.should_compact(
-            batch_df.sparkSession,
-            path,
-            ["codes", "vectors", "stats_live"],
-            max_inc_batches=auto_compact_after,
-        ):
-            compact_ivfpq_index(batch_df.sparkSession, path)
+        lsm.auto_compact(
+            batch_df.sparkSession, path, INDEX_TABLES, auto_compact_after,
+            compact_ivfpq_index,
+        )
 
-    return (
-        stream_df.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return lsm.start_ingest_loop(stream_df, _ingest, checkpoint_dir)
 
 
 def compact_ivfpq_index(
@@ -981,40 +957,8 @@ def compact_ivfpq_index(
     batch between the fold's read and the increment delete (VERDICT
     r12 ask #4a). Returns {table: (files_before, files_after)} with
     increments counted on both sides."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     with lsm.maintenance_lease(spark, path, "compact") as lease_token:
         return _compact_locked(spark, path, target_file_mb, lease_token)
-
-
-def _complete_index_view(
-    spark: SparkSession,
-    path: str,
-    table: str,
-    folding: set[int],
-    cols: list[str],
-) -> DataFrame:
-    """Base ∪ COMPLETE increment batches only — what a fold may absorb.
-    Index increment rows carry no provenance column; the ``b=<id>``
-    directory name IS the provenance, discovered by the parquet reader
-    as partition column ``b``. A TORN batch (codes/vectors written,
-    ``stats_live`` — the LAST table appends write — not) stays OUT of
-    the fold and keeps its increment dirs: folding it would absorb
-    rows the stats ledger never saw, and its completing replay would
-    then re-append them — the transient double-count window ADVICE r12
-    flagged on the MinHash store, fixed for both stores in r13. Left
-    in place, the replay overwrites the torn dirs into a complete
-    batch and the NEXT fold absorbs it exactly once."""
-    from pyspark.errors import AnalysisException
-
-    base = spark.read.parquet(os.path.join(path, table)).select(*cols)
-    try:
-        inc = spark.read.parquet(os.path.join(path, f"{table}_inc"))
-    except AnalysisException:
-        return base
-    return base.unionByName(
-        inc.filter(F.col("b").isin([int(x) for x in folding])).select(*cols)
-    )
 
 
 def _compact_locked(
@@ -1024,8 +968,6 @@ def _compact_locked(
     lease_token: str | None = None,
 ) -> dict:
     """Body of ``compact_ivfpq_index`` under the held lease."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
     target_bytes = target_file_mb * 1024 * 1024
     # snapshot the COMPLETE batch ids this fold will absorb BEFORE
@@ -1046,13 +988,13 @@ def _compact_locked(
         1, -(-codes_bytes // max(1, meta["n_centroids"]) // target_bytes)
     )
     # fold base + COMPLETE increments (torn batches stay on disk for
-    # their replay — _complete_index_view), deduped on the declared
+    # their replay — lsm.complete_view), deduped on the declared
     # key. The only duplicates this can see are bit-identical rows
     # from a crashed prior fold's swap-but-not-drop window (the ledger
     # makes replay-after-fold a no-op, and re-appending an EXISTING id
     # is a documented contract violation), so an arbitrary per-key
     # pick is safe — both copies are the same row.
-    codes = _complete_index_view(
+    codes = lsm.complete_view(
         spark, path, "codes", folding, ["neighbor_id", "cell", "codes"]
     ).dropDuplicates(["neighbor_id"])
 
@@ -1077,7 +1019,7 @@ def _compact_locked(
     before_vecs = lsm.tier_files(spark, path, "vectors")
     vec_bytes = lsm.tier_bytes(spark, path, "vectors")
     n_vec_files = max(1, -(-vec_bytes // target_bytes))
-    vectors = _complete_index_view(
+    vectors = lsm.complete_view(
         spark, path, "vectors", folding, ["neighbor_id", "v"]
     ).dropDuplicates(["neighbor_id"])
 
@@ -1349,6 +1291,70 @@ def screen_against_ivfpq_index(
     return out
 
 
+def _semantic_stage(
+    spark: SparkSession,
+    path: str,
+    docs: DataFrame,
+    threshold: float,
+    k: int,
+    n_probe: int,
+) -> DataFrame:
+    """The embedding-cosine tier of one (doc_id, embedding)
+    micro-batch — the stage ``stream_ingest_semantic_dedup`` and
+    ``ingest.stream_ingest_dedup_all`` both run, the twin of
+    ``dedup_store._text_stage``. (1) Screen the batch against the
+    serving index with its own ids excluded (the replay guard);
+    zero-norm rows have no direction and match nothing, and an empty
+    batch screens to nothing. (2) Mine EXACT in-batch pairs
+    (``exact_self_similarity_join``, the blocked GEMM; the per-batch
+    BRP-LSH re-fit it replaced was 88% of the loop's measured
+    per-batch cost) over the L2-normalized non-zero rows at the
+    cosine-equivalent radius √(2·(1−threshold)) — ‖a−b‖² = 2(1−cos)
+    for unit vectors. (3) ``_peel`` the pairs. Returns the
+    checkpointed (doc_id) losers."""
+    dup_of_index = (
+        screen_against_ivfpq_index(
+            spark,
+            path,
+            docs,
+            id_col="doc_id",
+            threshold=threshold,
+            k=k,
+            n_probe=n_probe,
+            exclude_ids=docs.select("doc_id"),
+        )
+        .select(F.col("vec_id").alias("doc_id"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    # try_divide + eager localCheckpoint: the `_n > 0` filter guards
+    # the SEMANTICS, but a self-join re-deriving this lineage on both
+    # sides can evaluate the projection's division on a zero row
+    # before the filter lands (observed: ANSI DIVIDE_BY_ZERO, then a
+    # NOT_NULL assert inside array_to_vector) — so the expression
+    # tolerates the zero and the checkpoint pins the filtered, bounded
+    # micro-batch before any re-derivation can reorder around it
+    normed = (
+        docs.withColumn("_n", l2_norm("embedding"))
+        .filter(F.col("_n") > 0)
+        .select(
+            "doc_id",
+            F.transform(
+                "embedding",
+                lambda x: F.try_divide(x, F.col("_n")).cast("float"),
+            ).alias("embedding"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    pairs = exact_self_similarity_join(
+        normed,
+        "doc_id",
+        "embedding",
+        distance_threshold=(2.0 * (1.0 - threshold)) ** 0.5,
+    ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+    return _peel(pairs, dup_of_index)
+
+
 ZERO_VEC_MARKER = "_zero_vec_admitted"
 
 
@@ -1360,8 +1366,6 @@ def _zero_vec_admitted_batch(spark: SparkSession, path: str) -> int | None:
     corpus-scale lookup (ADVICE r13: without it, repeated zero vectors
     survived every batch forever — an unbounded bypass)."""
     import contextlib as _ctx
-
-    from sales_forecast_pyspark_spark.llmdata import lsm
 
     jvm, fs = lsm._jvm_fs(spark, path)
     p = jvm.Path(os.path.join(path, ZERO_VEC_MARKER))
@@ -1382,8 +1386,6 @@ def _mark_zero_vec_admitted(
     bit-stable; later batches see a foreign id and drop theirs)."""
     import contextlib as _ctx
 
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     jvm, fs = lsm._jvm_fs(spark, path)
     p = jvm.Path(os.path.join(path, ZERO_VEC_MARKER))
     with _ctx.suppress(Exception):
@@ -1401,25 +1403,20 @@ def stream_ingest_semantic_dedup(
     k: int = 5,
     n_probe: int = 6,
     auto_compact_after: int | None = 64,
-    lease_retry_s: float = 600.0,
 ):
-    """The composed SEMANTIC-dedup ingest loop — the embedding twin of
-    ``stream_ingest_dedup``: per micro-batch, (1) screen the batch
-    against every vector already admitted to the index (own ids
-    excluded — the replay guard), (2) drop in-batch near-dups under
-    the same sequential-greedy semantics (EXACT blocked-GEMM pairs —
-    ``exact_self_similarity_join`` — over the L2-normalized batch at
-    the cosine-equivalent radius √(2·(1−threshold)), peeled by
-    ``_greedy_losers``; store-dropped vectors leave the pair graph
-    first; exact replaced the r14 per-batch BRP-LSH re-fit, which was
-    88% of the measured per-batch cost), (3) append the survivors to
-    the index under the batch id (idempotent versioned increments,
-    fold-ledger replay guard, drift stats maintained), (4) publish the
-    surviving rows to ``survivors_dir/b=<id>`` (overwrite —
-    idempotent). Exactly-once end to end by the same argument as the
-    MinHash loop; the admitted survivors are immediately SERVABLE via
-    ``query_ivfpq_index`` — dedup store and ANN serving index are one
-    structure.
+    """The composed SEMANTIC-dedup ingest loop: per micro-batch,
+    (1)+(2) ``_semantic_stage`` — screen the batch against every
+    vector already admitted to the index (own ids excluded), then drop
+    in-batch near-dups under sequential-greedy semantics over EXACT
+    pairs — plus the zero-vector tier below, (3) append the survivors
+    to the index under the batch id (idempotent versioned increments,
+    fold-ledger replay guard, drift stats maintained; the append waits
+    up to ``lsm.STREAM_LEASE_RETRY_S`` for an external maintainer's
+    lease), (4) publish the surviving rows to ``survivors_dir/b=<id>``
+    (overwrite — idempotent). Exactly-once end to end by the same
+    argument as the MinHash loop; the admitted survivors are
+    immediately SERVABLE via ``query_ivfpq_index`` — dedup store and
+    ANN serving index are one structure.
 
     Zero-norm vectors have no direction and cannot be cosine-screened,
     but zero norm means THE all-zeros vector, so exact equality still
@@ -1445,155 +1442,56 @@ def stream_ingest_semantic_dedup(
     The recovery is a smaller trigger (e.g. ``maxFilesPerTrigger`` on
     the source) that keeps every micro-batch under the ceiling; a batch
     already in the checkpoint's offset log replays at its logged size."""
-    from sales_forecast_pyspark_spark.llmdata.dedup_store import (
-        _greedy_losers,
-    )
-    from sales_forecast_pyspark_spark.llmdata.similarity import (
-        exact_self_similarity_join,
-    )
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from sales_forecast_pyspark_spark.llmdata import lsm
-
         spark = batch_df.sparkSession
         b = batch_df.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+            F.col(id_col).alias("doc_id"), F.col(vec_col).alias("embedding")
         )
         b.cache()
-        # (1) near-dups of the admitted corpus, own ids excluded
-        dup_store = (
-            screen_against_ivfpq_index(
-                spark,
-                path,
-                b,
-                threshold=threshold,
-                k=k,
-                n_probe=n_probe,
-                exclude_ids=b.select("vec_id"),
-            )
-            .select("vec_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # (2) in-batch near-dups at the cosine-equivalent L2 radius on
-        # normalized vectors: ||a-b||² = 2(1-cos) for unit vectors
-        norm = F.sqrt(
-            F.aggregate(
-                "embedding",
-                F.lit(0.0),
-                lambda acc, x: acc + x * x,
-            )
-        )
-        # try_divide + eager localCheckpoint: the `_n > 0` filter
-        # guards the SEMANTICS, but the LSH self-join re-derives this
-        # lineage on both sides and can evaluate the projection's
-        # division on a zero row before the filter lands (observed:
-        # ANSI DIVIDE_BY_ZERO, then a NOT_NULL assert inside
-        # array_to_vector) — so the expression tolerates the zero and
-        # the checkpoint pins the filtered, bounded micro-batch before
-        # the join re-derivation can reorder around it
-        normed = (
-            b.withColumn("_n", norm)
-            .filter(F.col("_n") > 0)
-            .select(
-                "vec_id",
-                F.transform(
-                    "embedding",
-                    lambda x: F.try_divide(x, F.col("_n")).cast("float"),
-                ).alias("embedding"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        losers = _semantic_stage(spark, path, b, threshold, k, n_probe)
         # zero-norm exact-equality tier (ADVICE r13): all zero-norm
         # rows are the same (all-zeros) vector — first id in THIS
         # batch wins, and the marker file closes the class across
         # batches (its recording batch republishes on replay; any
         # other batch drops all of them)
-        zero_ids = (
-            b.withColumn("_n", norm)
-            .filter(F.col("_n") <= 0)
-            .select("vec_id")
-        )
+        zero_ids = b.filter(l2_norm("embedding") <= 0).select("doc_id")
         zero_ids.cache()
-        n_zero = zero_ids.count()
         zero_losers = zero_ids.limit(0)
         publishes_zero = False
-        if n_zero:
+        if zero_ids.count():
             admitted_by = _zero_vec_admitted_batch(spark, path)
             if admitted_by is None or admitted_by == int(batch_id):
-                keep = zero_ids.orderBy("vec_id").limit(1)
-                zero_losers = zero_ids.join(keep, "vec_id", "left_anti")
+                keep = zero_ids.orderBy("doc_id").limit(1)
+                zero_losers = zero_ids.join(keep, "doc_id", "left_anti")
                 publishes_zero = True
             else:
                 zero_losers = zero_ids
-        dist_t = (2.0 * (1.0 - threshold)) ** 0.5
-        # EXACT in-batch pair mine (r15, VERDICT r14 wrong #1): the
-        # per-batch MLlib BRP re-fit was 88% of the loop's measured
-        # per-batch cost (320.9 s of ~363 s at the 10x decade); the
-        # batch is contract-bounded, so the exact blocked GEMM is both
-        # cheaper and recall-1.0 — which also upgrades the replay
-        # bit-stability argument below from "LSH found the pair" to a
-        # guarantee (survivors are PROVABLY mutually non-near-dup)
-        in_pairs = exact_self_similarity_join(
-            normed, "vec_id", "embedding", distance_threshold=dist_t
-        ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-        pairs = (
-            in_pairs
-            .join(
-                dup_store.select(F.col("vec_id").alias("doc_a")),
-                "doc_a",
-                "left_anti",
-            )
-            .join(
-                dup_store.select(F.col("vec_id").alias("doc_b")),
-                "doc_b",
-                "left_anti",
-            )
-        )
-        losers = _greedy_losers(pairs)
-        survivors = (
-            b.join(dup_store, "vec_id", "left_anti")
-            .join(
-                losers.select(F.col("doc_id").alias("vec_id")),
-                "vec_id",
-                "left_anti",
-            )
-            .join(zero_losers, "vec_id", "left_anti")
+        survivors = b.join(losers, "doc_id", "left_anti").join(
+            zero_losers, "doc_id", "left_anti"
         )
         survivors.cache()
-        # (3) admit survivors — versioned, replay/fold guarded, drift
-        # stats folded (zero-norm rows dropped inside, the documented
-        # bypass)
         append_to_ivfpq_index(
             survivors,
             path,
-            id_col="vec_id",
-            vec_col="embedding",
+            id_col="doc_id",
             batch_id=batch_id,
-            lease_retry_s=lease_retry_s,
+            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
         )
-        # (4) publish — overwrite-mode per batch, idempotent; the
-        # marker lands AFTER the publish (a crash in between replays
-        # into the marker-less branch and re-records — idempotent)
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(survivors_dir, f"b={int(batch_id)}")
-        )
+        # the marker lands AFTER the publish (a crash in between
+        # replays into the marker-less branch and re-records —
+        # idempotent)
+        survivors.withColumnRenamed("doc_id", "vec_id").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(survivors_dir, f"b={int(batch_id)}"))
         if publishes_zero:
             _mark_zero_vec_admitted(spark, path, batch_id)
         survivors.unpersist()
         zero_ids.unpersist()
         b.unpersist()
-        if auto_compact_after is not None and lsm.should_compact(
-            spark,
-            path,
-            ["codes", "vectors", "stats_live"],
-            max_inc_batches=auto_compact_after,
-        ):
-            compact_ivfpq_index(spark, path)
+        lsm.auto_compact(
+            spark, path, INDEX_TABLES, auto_compact_after,
+            compact_ivfpq_index,
+        )
 
-    return (
-        stream_df.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return lsm.start_ingest_loop(stream_df, _ingest, checkpoint_dir)

@@ -47,13 +47,20 @@ row):
   replay-safe: a replayed batch screens with ``exclude_batch=<its own
   id>`` so it can never be screened out by its OWN first attempt.
 
+- ``_text_stage(spark, path, docs, threshold, batch_id)`` is the
+  tier's ONE stage function: sign the micro-batch once, screen it
+  against the store (``_screen_store``, own batch excluded), and peel
+  its verified in-batch pairs under EXACT sequential-greedy semantics
+  (``_peel`` → ``_greedy_losers``). ``stream_ingest_dedup`` and the
+  triad loop (``ingest.stream_ingest_dedup_all``) both call it; the
+  semantic tier's twin is ``ann_index._semantic_stage``.
+
 - ``stream_ingest_dedup(stream_df, path, survivors_dir, checkpoint)``
-  is the composed loop: per micro-batch, screen → drop in-batch dups
-  under EXACT sequential-greedy semantics (see ``_greedy_losers``) →
-  append survivors to the store → publish survivors to
-  ``survivors_dir/b=<id>`` (overwrite — idempotent). Exactly-once end
-  to end without a transactional sink, by the same argument as
-  ``stream_append_to_ivfpq_index``.
+  is the composed loop: per micro-batch, ``_text_stage`` → first-wins
+  among zero-token copies (``_first_wins``) → append survivors to the
+  store → publish survivors to ``survivors_dir/b=<id>`` (overwrite —
+  idempotent). Exactly-once end to end without a transactional sink,
+  by the same argument as ``stream_append_to_ivfpq_index``.
 
 Every mutating entry point (build / append / compact) takes the
 store's single-maintainer lease (``lsm.maintenance_lease``), so the
@@ -77,6 +84,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sales_forecast_pyspark_spark.llmdata import lsm
 from sales_forecast_pyspark_spark.llmdata.dedup import (
     _band_buckets,
     _exploded_shingles,
@@ -85,6 +93,9 @@ from sales_forecast_pyspark_spark.llmdata.dedup import (
 )
 from sales_forecast_pyspark_spark.llmdata.lsm import DEFAULT_TARGET_FILE_MB
 from sales_forecast_pyspark_spark.llmdata.text import tokens_expr
+
+# every table a MinHash store keeps in base + increment tiers
+MINHASH_TABLES = ("signatures", "buckets", "fingerprints", "doc_counts")
 
 
 def _sig_frame(
@@ -129,8 +140,6 @@ def _zero_token_fps(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def _read_store_table(spark: SparkSession, path: str, table: str) -> DataFrame:
     """Base ∪ batch-versioned increments — the shared LSM reader
     (``llmdata/lsm.py``), identical to the IVF-PQ index's."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     return lsm.read_tiered(spark, path, table)
 
 
@@ -140,8 +149,6 @@ def _read_store_fps(
     """The fingerprints tier, tolerating absence on EITHER side: a
     store built from a corpus with no zero-token docs has no base
     table, yet a later streamed batch may have written increments."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     return lsm.read_tiered_opt(
         spark, path, "fingerprints",
         f"doc_id {id_dtype}, fp string, src_batch long",
@@ -155,8 +162,6 @@ def _doc_count(spark: SparkSession, path: str) -> int:
     alternative — counting the signatures table — is an O(files) job
     per batch, the exact pattern ann_index.py rejects for
     ``meta.n_vectors`` (code-review r12)."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     return int(
         lsm.read_tiered(spark, path, "doc_counts")
         .agg(F.coalesce(F.sum("n"), F.lit(0)).alias("t"))
@@ -182,13 +187,11 @@ def build_minhash_store(
             f"num_hashes ({num_hashes}) must divide evenly into bands "
             f"({bands}); leftover hashes would be silently dropped"
         )
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     spark = df.sparkSession
     with lsm.maintenance_lease(spark, path, "build"):
         # rebuild-in-place starts from a clean tier map: drop any prior
         # incarnation's increment dirs and fold ledger
-        for t in ("signatures", "buckets", "fingerprints", "doc_counts"):
+        for t in MINHASH_TABLES:
             lsm.drop_inc(spark, path, t)
         lsm.drop_ledger(spark, path)
         sig = _sig_frame(df, id_col, text_col, n, num_hashes)
@@ -263,32 +266,36 @@ def screen_against_minhash_store(
     # here could never be unpersisted and a long-lived driver screening
     # many batches would accrete one pinned frame per call (code-review
     # r12). The cost is signing the batch twice inside the one action —
-    # batches are small by contract; the streaming loop, which screens
-    # at cadence, uses _screen_signed with an explicitly managed cache.
+    # batches are small by contract; the streaming loops, which screen
+    # at cadence, go through _text_stage's explicitly managed cache.
     bsig = _sig_frame(batch, id_col, text_col, meta["n"], meta["num_hashes"])
-    sig_hits = _screen_signed(spark, path, bsig, meta, threshold, exclude_batch)
-    fp_hits = _screen_fps(
+    return _screen_store(
         spark,
         path,
+        bsig,
         _zero_token_fps(batch, id_col, text_col),
-        meta["num_hashes"],
+        meta,
+        threshold,
         exclude_batch,
     )
-    return sig_hits.unionByName(fp_hits)
 
 
-def _screen_signed(
+def _screen_store(
     spark: SparkSession,
     path: str,
     bsig: DataFrame,
+    unsigned: DataFrame,
     meta: dict,
     threshold: float,
     exclude_batch: int | None,
 ) -> DataFrame:
-    """Screening body over an ALREADY-SIGNED batch — split out so the
-    streaming loop can sign a micro-batch once and reuse the cached
-    signatures for both the store screen and the in-batch dedup
-    (and unpersist them when the batch completes)."""
+    """Screening body over an ALREADY-SIGNED batch — ``bsig`` (doc_id,
+    sig) for the token-bearing docs, ``unsigned`` (doc_id, fp) for the
+    zero-token ones — so a streaming loop can sign a micro-batch once
+    and reuse the cached signatures for the store screen, the in-batch
+    dedup and the admission. Rows: signature-estimate hits ∪ exact
+    fingerprint hits, the latter with the values an exact match
+    implies (all hashes agree)."""
     num_hashes, bands = meta["num_hashes"], meta["bands"]
     b_buckets = _band_buckets(
         _sig_cols(bsig, num_hashes), "doc_id", num_hashes, bands
@@ -296,9 +303,11 @@ def _screen_signed(
 
     s_buckets = _read_store_table(spark, path, "buckets")
     s_sigs = _read_store_table(spark, path, "signatures")
+    s_fps = _read_store_fps(spark, path, dict(unsigned.dtypes)["doc_id"])
     if exclude_batch is not None:
         s_buckets = s_buckets.filter(F.col("src_batch") != int(exclude_batch))
         s_sigs = s_sigs.filter(F.col("src_batch") != int(exclude_batch))
+        s_fps = s_fps.filter(F.col("src_batch") != int(exclude_batch))
 
     # bucket-key equality join, merge-hinted for the same reason as
     # minhash_near_dedup: both sides sit behind signature aggs +
@@ -322,7 +331,7 @@ def _screen_signed(
             lambda x: x,
         )
     )
-    return (
+    sig_hits = (
         cand.join(bsig, "doc_id")
         .join(
             s_sigs.select(
@@ -339,30 +348,15 @@ def _screen_signed(
         )
         .filter(F.col("est_jaccard") >= threshold)
     )
-
-
-def _screen_fps(
-    spark: SparkSession,
-    path: str,
-    ufps: DataFrame,
-    num_hashes: int,
-    exclude_batch: int | None,
-) -> DataFrame:
-    """Exact-fingerprint screen for the zero-token tier: an fp equality
-    join against the store's fingerprints. A match is an exact copy of
-    an admitted doc, reported in the screen's common row shape with
-    the values an exact match implies (all hashes agree)."""
-    store = _read_store_fps(spark, path, dict(ufps.dtypes)["doc_id"])
-    if exclude_batch is not None:
-        store = store.filter(F.col("src_batch") != int(exclude_batch))
-    return ufps.join(
-        store.select(F.col("doc_id").alias("dup_of"), "fp"), "fp"
+    fp_hits = unsigned.join(
+        s_fps.select(F.col("doc_id").alias("dup_of"), "fp"), "fp"
     ).select(
         "doc_id",
         "dup_of",
         F.lit(num_hashes).alias("n_agree"),
         F.lit(1.0).alias("est_jaccard"),
     )
+    return sig_hits.unionByName(fp_hits)
 
 
 def append_to_minhash_store(
@@ -412,8 +406,6 @@ def _append_signed(
     store's single-maintainer lease for the duration of the writes;
     ``lease_retry_s`` bounds a wait at acquire so streaming callers
     outlast an external cron fold instead of crashing (ADVICE r13)."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     with lsm.maintenance_lease(spark, path, "append", retry_s=lease_retry_s):
         # replay-after-fold guard (code-review r12, same as the IVF-PQ
         # index): a batch a past compaction already folded into the base
@@ -588,7 +580,7 @@ def _verified_in_batch_pairs(
 ) -> DataFrame:
     """DISTINCT verified (doc_a < doc_b) near-dup pairs WITHIN one
     signed batch: bucket-mate candidates, signature-estimate verify —
-    the in-batch mirror of ``_screen_signed``."""
+    the in-batch mirror of ``_screen_store``'s signature route."""
     bb = _band_buckets(
         _sig_cols(bsig, meta["num_hashes"]),
         "doc_id",
@@ -627,6 +619,73 @@ def _verified_in_batch_pairs(
     )
 
 
+def _peel(pairs: DataFrame, dup_of_store: DataFrame) -> DataFrame:
+    """A batch's losers under EXACT sequential-greedy semantics: its
+    store dups (``dup_of_store``, a (doc_id) frame) ∪ the
+    ``_greedy_losers`` of its verified in-batch ``pairs`` once the
+    store dups have left the pair graph — they were never admitted, so
+    sequential ingest never screens a later doc against them. The one
+    peel of every dedup tier's stage; returns an eagerly checkpointed
+    (doc_id) frame."""
+    for side in ("doc_a", "doc_b"):
+        pairs = pairs.join(
+            dup_of_store.select(F.col("doc_id").alias(side)), side, "left_anti"
+        )
+    return (
+        dup_of_store.unionByName(_greedy_losers(pairs))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _first_wins(fps: DataFrame) -> DataFrame:
+    """(doc_id) of the in-batch exact copies in a (doc_id, fp) frame
+    that sequential first-wins ingest drops: every doc but the smallest
+    id of its ``fp``."""
+    return (
+        fps.join(fps.groupBy("fp").agg(F.min("doc_id").alias("keep")), "fp")
+        .filter(F.col("doc_id") != F.col("keep"))
+        .select("doc_id")
+    )
+
+
+def _text_stage(
+    spark: SparkSession,
+    path: str,
+    docs: DataFrame,
+    threshold: float,
+    batch_id: int,
+):
+    """The MinHash tier of one (doc_id, text) micro-batch — the stage
+    ``stream_ingest_dedup`` and ``stream_ingest_dedup_all`` both run.
+    Signs the batch ONCE with the store's geometry and caches the
+    signatures and the zero-token fingerprints, screens the store with
+    the batch's own prior attempt excluded (``src_batch`` — the replay
+    guard), and peels the verified in-batch pairs (``_peel``).
+
+    Returns (losers, bsig, unsigned, meta): the checkpointed (doc_id)
+    losers, the cached (doc_id, sig) and (doc_id, fp) frames — the
+    caller admits its survivors from them instead of re-shingling,
+    then unpersists them — and the store meta. In-batch exact copies
+    among zero-token docs are not judged here (they carry no
+    signature); the caller decides them with ``_first_wins``."""
+    meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
+    bsig = _sig_frame(docs, "doc_id", "text", meta["n"], meta["num_hashes"])
+    bsig.cache()
+    unsigned = _zero_token_fps(docs, "doc_id", "text")
+    unsigned.cache()
+    dup_of_store = (
+        _screen_store(spark, path, bsig, unsigned, meta, threshold, batch_id)
+        .select("doc_id")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    losers = _peel(
+        _verified_in_batch_pairs(bsig, meta, threshold), dup_of_store
+    )
+    return losers, bsig, unsigned, meta
+
+
 def stream_ingest_dedup(
     stream_df: DataFrame,
     path: str,
@@ -636,18 +695,18 @@ def stream_ingest_dedup(
     text_col: str = "text",
     threshold: float = 0.5,
     auto_compact_after: int | None = 64,
-    lease_retry_s: float = 600.0,
 ):
     """The composed incremental-dedup ingest loop: per micro-batch,
-    (1) screen the batch against everything already accepted (signature
-    estimate for token-bearing docs, exact fingerprint for zero-token
-    docs), (2) drop in-batch dups under EXACT sequential-greedy
-    semantics — store-dropped docs are removed from the pair graph
-    first (a doc that was never admitted cannot defeat a later one),
-    then ``_greedy_losers`` peels the verified pairs so non-transitive
-    chains keep exactly what one-at-a-time ingest would keep —
-    (3) append the survivors to the store, (4) publish the surviving
-    rows to ``survivors_dir/b=<batch_id>``.
+    (1)+(2a) ``_text_stage`` — screen the batch against everything
+    already accepted (signature estimate for token-bearing docs, exact
+    fingerprint for zero-token docs), then drop in-batch near-dups
+    under EXACT sequential-greedy semantics (``_peel``: store-dropped
+    docs leave the pair graph first, then ``_greedy_losers`` keeps
+    exactly what one-at-a-time ingest would keep on non-transitive
+    chains) — (2b) drop in-batch exact copies among zero-token docs
+    (``_first_wins``), (3) append the survivors to the store from
+    their already-computed signatures, (4) publish the surviving rows
+    to ``survivors_dir/b=<batch_id>``.
 
     ``threshold`` note: in-batch and store verification both use the
     SIGNATURE-ESTIMATE Jaccard (~0.09 stderr at the default 32 hashes)
@@ -656,18 +715,14 @@ def stream_ingest_dedup(
     it (admitted text is never retained, so a tighter estimate means
     raising ``num_hashes`` at build time).
 
-    ``auto_compact_after=N`` (default 64) makes the loop consult
-    ``lsm.should_compact`` after each append and fold the increments
-    tier once any table accumulates N batch dirs — long-running ingest
-    bounds its own listing costs instead of relying on an operator
-    hand-scheduling ``compact_minhash_store`` (VERDICT r12 ask #4b).
-    ``None`` disables (rehearsals comparing tier depth use that); the
-    fold runs inside this same single-writer loop, so the maintenance
-    lease never contends. ``lease_retry_s`` (ADVICE r13, default
-    10 min) bounds a retry-with-backoff wait when an EXTERNAL cron
-    maintainer holds the lease between micro-batches — the append
-    delays instead of crashing the StreamingQuery; fail-fast stays the
-    backstop past the budget.
+    ``auto_compact_after=N`` (default 64) folds the increments tier
+    once any table accumulates N batch dirs (``lsm.auto_compact``) —
+    long-running ingest bounds its own listing costs instead of
+    relying on an operator hand-scheduling ``compact_minhash_store``
+    (VERDICT r12 ask #4b); ``None`` disables (rehearsals comparing tier
+    depth use that). The append waits up to
+    ``lsm.STREAM_LEASE_RETRY_S`` for a lease an external maintainer
+    holds.
 
     Exactly-once end to end without a transactional sink: the store
     append and the survivors publish are both overwrite-mode keyed by
@@ -678,70 +733,20 @@ def stream_ingest_dedup(
     stop); returns the started StreamingQuery."""
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from sales_forecast_pyspark_spark.llmdata import lsm
-
         spark = batch_df.sparkSession
         batch_df = batch_df.select(
             F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
         )
         batch_df.cache()
-        # sign the micro-batch ONCE; the same cached signatures feed
-        # the store screen, the in-batch dedup, AND the survivor
-        # admission (no re-shingling, and unpersisted when the batch
-        # completes — no cache accretion across thousands of batches)
-        meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
-        bsig = _sig_frame(
-            batch_df, "doc_id", "text", meta["n"], meta["num_hashes"]
+        losers, bsig, unsigned, meta = _text_stage(
+            spark, path, batch_df, threshold, batch_id
         )
-        bsig.cache()
-        unsigned = _zero_token_fps(batch_df, "doc_id", "text")
-        unsigned.cache()
-        # (1) dups of the accepted corpus (own batch excluded — the
-        # replay guard): signature route + zero-token fingerprint route
-        dup_of_store = (
-            _screen_signed(spark, path, bsig, meta, threshold, batch_id)
-            .select("doc_id")
-            .unionByName(
-                _screen_fps(
-                    spark, path, unsigned, meta["num_hashes"], batch_id
-                ).select("doc_id")
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # (2a) in-batch near-dups among signed docs, sequential-greedy.
-        # Store-dropped docs leave the pair graph BEFORE the peel: they
-        # were never admitted, so sequential ingest never screens a
-        # later doc against them.
-        pairs = _verified_in_batch_pairs(bsig, meta, threshold).join(
-            dup_of_store.select(F.col("doc_id").alias("doc_a")),
-            "doc_a",
-            "left_anti",
-        ).join(
-            dup_of_store.select(F.col("doc_id").alias("doc_b")),
-            "doc_b",
-            "left_anti",
-        )
-        in_batch_losers = _greedy_losers(pairs)
-        # (2b) in-batch exact dups among zero-token docs: first id wins
-        # (same-fp docs share the store verdict, so no graph filter is
-        # needed — either the whole fp group matched the store or none)
-        u_losers = (
-            unsigned.join(
-                unsigned.groupBy("fp").agg(F.min("doc_id").alias("keep")),
-                "fp",
-            )
-            .filter(F.col("doc_id") != F.col("keep"))
-            .select("doc_id")
-        )
-        survivors = (
-            batch_df.join(dup_of_store, "doc_id", "left_anti")
-            .join(in_batch_losers, "doc_id", "left_anti")
-            .join(u_losers, "doc_id", "left_anti")
+        # (2b) same-fp docs share the store verdict, so no graph filter
+        # is needed — either the whole fp group matched the store or none
+        survivors = batch_df.join(losers, "doc_id", "left_anti").join(
+            _first_wins(unsigned), "doc_id", "left_anti"
         )
         survivors.cache()
-        # (3) admit survivors from their ALREADY-COMPUTED signatures /
-        # fingerprints, idempotently under this batch id
         _append_signed(
             spark,
             bsig.join(survivors.select("doc_id"), "doc_id"),
@@ -749,9 +754,8 @@ def stream_ingest_dedup(
             meta,
             batch_id,
             fps=unsigned.join(survivors.select("doc_id"), "doc_id"),
-            lease_retry_s=lease_retry_s,
+            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
         )
-        # (4) publish — overwrite-mode per batch, idempotent
         survivors.write.mode("overwrite").parquet(
             os.path.join(survivors_dir, f"b={int(batch_id)}")
         )
@@ -759,20 +763,12 @@ def stream_ingest_dedup(
         unsigned.unpersist()
         bsig.unpersist()
         batch_df.unpersist()
-        if auto_compact_after is not None and lsm.should_compact(
-            spark,
-            path,
-            ["signatures", "buckets", "fingerprints", "doc_counts"],
-            max_inc_batches=auto_compact_after,
-        ):
-            compact_minhash_store(spark, path)
+        lsm.auto_compact(
+            spark, path, MINHASH_TABLES, auto_compact_after,
+            compact_minhash_store,
+        )
 
-    return (
-        stream_df.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return lsm.start_ingest_loop(stream_df, _ingest, checkpoint_dir)
 
 
 def minhash_store_stats(spark: SparkSession, path: str) -> DataFrame:
@@ -867,45 +863,6 @@ def should_rescale_bands(
     }
 
 
-def _complete_view(
-    spark: SparkSession,
-    path: str,
-    table: str,
-    folding: set[int],
-    cols: list[str],
-) -> DataFrame:
-    """Base ∪ COMPLETE increment batches only — what a fold may absorb.
-    A TORN batch (some tables written, ``doc_counts`` not) must stay
-    OUT of the fold and keep its increment dirs: folding it would count
-    rows the ledger never saw, and its eventual replay would then
-    re-append them — the transient double-count window ADVICE r12
-    flagged. Left in place, the replay overwrites the torn dirs into a
-    complete batch and the NEXT fold absorbs it exactly once. At least
-    one tier must exist (callers guard); column types come from the
-    parquet schema, never hardcoded."""
-    from pyspark.errors import AnalysisException
-
-    parts = []
-    try:
-        parts.append(
-            spark.read.parquet(os.path.join(path, table)).select(*cols)
-        )
-    except AnalysisException:
-        pass
-    try:
-        parts.append(
-            spark.read.parquet(os.path.join(path, f"{table}_inc"))
-            .filter(F.col("src_batch").isin([int(b) for b in folding]))
-            .select(*cols)
-        )
-    except AnalysisException:
-        pass
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def compact_minhash_store(
     spark: SparkSession,
     path: str,
@@ -921,14 +878,12 @@ def compact_minhash_store(
     ((doc_id, band, bucket) / doc_id) makes a crashed prior fold
     self-heal on re-run; ``src_batch`` provenance is PRESERVED so the
     replay guard keeps working for any batch id that could still be
-    re-delivered. Only COMPLETE batches fold (see ``_complete_view``);
+    re-delivered. Only COMPLETE batches fold (see ``lsm.complete_view``);
     a torn batch's increment dirs survive the fold untouched so its
     replay completes it. Holds the single-maintainer lease for the
     duration — concurrent ingest fails loudly at acquire instead of
     losing a batch in the fold's read→delete window. Returns
     {table: (files_before, files_after)}."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     with lsm.maintenance_lease(spark, path, "compact") as lease_token:
         target_bytes = target_file_mb * 1024 * 1024
         # COMPLETE batches only (lsm.record_folded's contract):
@@ -942,7 +897,7 @@ def compact_minhash_store(
         before_sig = lsm.tier_files(spark, path, "signatures")
         sig_bytes = lsm.tier_bytes(spark, path, "signatures")
         n_sig_files = max(1, -(-sig_bytes // target_bytes))
-        sigs = _complete_view(
+        sigs = lsm.complete_view(
             spark, path, "signatures", folding,
             ["doc_id", "sig", "src_batch"],
         ).dropDuplicates(["doc_id"])
@@ -961,7 +916,7 @@ def compact_minhash_store(
         before_bkt = lsm.tier_files(spark, path, "buckets")
         bkt_bytes = lsm.tier_bytes(spark, path, "buckets")
         n_bkt_files = max(1, -(-bkt_bytes // target_bytes))
-        bkts = _complete_view(
+        bkts = lsm.complete_view(
             spark, path, "buckets", folding,
             ["doc_id", "band", "bucket", "src_batch"],
         ).dropDuplicates(["doc_id", "band", "bucket"])
@@ -986,7 +941,7 @@ def compact_minhash_store(
             lsm.list_inc_batches(spark, path, "fingerprints") & folding
         )
         if fp_folds:
-            fps = _complete_view(
+            fps = lsm.complete_view(
                 spark, path, "fingerprints", folding,
                 ["doc_id", "fp", "src_batch"],
             ).dropDuplicates(["doc_id"])

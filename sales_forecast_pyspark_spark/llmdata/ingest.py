@@ -14,6 +14,12 @@ composes them with the cost structure a 100 TB pipeline needs:
   dup never pays an index probe — the short-circuit is test-pinned by
   verdict precedence (an exact copy of an admitted doc is always
   ``exact_dup``, even though the later stages would also flag it).
+- **One stage function per tier.** Stage 2 is
+  ``dedup_store._text_stage`` and stage 3 is
+  ``ann_index._semantic_stage`` — the same calls the standalone
+  ``stream_ingest_dedup`` and ``stream_ingest_semantic_dedup`` loops
+  make, so screen, pair and peel code exists once per tier. Only the
+  exact tier (stage 1) and the three-store admission live here.
 - **One batch cache.** The batch is cached once and every stage reads
   it; signatures are computed once on stage-1 survivors and reused for
   the store screen, the in-batch peel, AND the admission.
@@ -45,7 +51,10 @@ unjudged and are never admitted to the index (its append drops
 them) — but unlike the standalone semantic loop, repeated copies are
 BOUNDED here by construction: stage 1's whole-text fingerprint
 catches every exact re-offer, which is why this module needs no
-zero-vector marker file.
+zero-vector marker file. For the same reason the MinHash loop's
+zero-token first-wins tier has no counterpart here: identical
+zero-token texts share a whole-text fp, so stage 1 has already
+collapsed them.
 """
 
 from __future__ import annotations
@@ -55,18 +64,28 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sales_forecast_pyspark_spark.llmdata.lsm import DEFAULT_TARGET_FILE_MB
-
+from sales_forecast_pyspark_spark.llmdata import lsm
+from sales_forecast_pyspark_spark.llmdata.ann_index import (
+    INDEX_TABLES,
+    _read_index_table,
+    _semantic_stage,
+    append_to_ivfpq_index,
+    compact_ivfpq_index,
+)
 from sales_forecast_pyspark_spark.llmdata.dedup import fingerprint_expr
 from sales_forecast_pyspark_spark.llmdata.dedup_store import (
+    MINHASH_TABLES,
     _append_signed,
-    _greedy_losers,
-    _screen_fps,
-    _screen_signed,
-    _sig_frame,
-    _verified_in_batch_pairs,
-    _zero_token_fps,
+    _first_wins,
+    _read_store_fps,
+    _read_store_table,
+    _text_stage,
+    compact_minhash_store,
 )
+from sales_forecast_pyspark_spark.llmdata.lsm import DEFAULT_TARGET_FILE_MB
+
+# the fp store's one table (base + increment tiers)
+FP_TABLES = ("fps",)
 
 
 def _fp_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -89,8 +108,6 @@ def build_fp_store(
     """Fingerprint the seed corpus and persist the ``fps`` table,
     fp-sorted for row-group locality on the join key. Returns the
     number of rows written. Holds the single-maintainer lease."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     spark = df.sparkSession
     fps = _fp_frame(df, id_col, text_col).withColumn(
         "src_batch", F.lit(-1).cast("long")
@@ -110,8 +127,6 @@ def build_fp_store(
 
 
 def _read_fp_store(spark: SparkSession, path: str) -> DataFrame:
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     return lsm.read_tiered(spark, path, "fps")
 
 
@@ -148,8 +163,6 @@ def append_to_fp_store(
     is IDEMPOTENT (overwrite-mode ``fps_inc/b=<id>``) and fold-ledger
     guarded — same versioned-increments contract as the sibling
     stores."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     spark = df.sparkSession
     with lsm.maintenance_lease(spark, path, "append", retry_s=lease_retry_s):
         if batch_id is not None and int(batch_id) in lsm.folded_batches(
@@ -192,8 +205,6 @@ def compact_fp_store(
     (fp, doc_id) self-heals a crashed prior fold's swap-but-not-drop
     window. ``src_batch`` provenance is preserved for the replay
     guard. Fenced like the sibling compactors."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
     with lsm.maintenance_lease(spark, path, "compact") as lease_token:
         folding = lsm.list_inc_batches(spark, path, "fps")
         before = lsm.tier_files(spark, path, "fps")
@@ -262,14 +273,6 @@ def triad_consistency_report(
     divergence is stable across both. A clean verdict from a single
     pass never rechecks. For a hard guarantee, run it on a quiesced
     pipeline (drained stream, no maintainer)."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-    from sales_forecast_pyspark_spark.llmdata.ann_index import (
-        _read_index_table,
-    )
-    from sales_forecast_pyspark_spark.llmdata.dedup_store import (
-        _read_store_fps,
-        _read_store_table,
-    )
 
     def _once() -> dict:
         fp_ids = (
@@ -361,7 +364,6 @@ def stream_ingest_dedup_all(
     k: int = 5,
     n_probe: int = 6,
     auto_compact_after: int | None = 64,
-    lease_retry_s: float = 600.0,
 ):
     """The composed triad ingest loop — see the module docstring for
     the cost-ladder / exactly-once / verdict-column contracts. Per
@@ -369,17 +371,17 @@ def stream_ingest_dedup_all(
 
     1. EXACT: whole-text fingerprint vs the fp store (own batch
        excluded) + in-batch first-wins on identical fps → ``exact_dup``.
-    2. TEXT: stage-1 survivors signed ONCE with the MinHash store's
-       geometry; store screen (signature-estimate + zero-token fp
-       tier) + exact-sequential-greedy in-batch peel → ``text_dup``.
-    3. SEMANTIC: stage-2 survivors probed against the serving IVF-PQ
-       index (own ids excluded) + EXACT in-batch pairs (blocked GEMM,
-       ``exact_self_similarity_join``) at the cosine-equivalent L2
-       radius, greedy-peeled → ``semantic_dup``.
+    2. TEXT: ``dedup_store._text_stage`` on the stage-1 survivors
+       (signed ONCE; store screen + sequential-greedy in-batch peel)
+       → ``text_dup``.
+    3. SEMANTIC: ``ann_index._semantic_stage`` on the stage-2
+       survivors (index screen, own ids excluded + EXACT in-batch
+       pairs, greedy-peeled) → ``semantic_dup``.
     4. ADMIT the final survivors to ALL THREE stores under the batch id
-       (fingerprints; the already-computed signatures; the index) and
-       publish every batch row with its verdict to
-       ``survivors_dir/b=<id>`` (overwrite — idempotent).
+       (fingerprints; the already-computed signatures; the index; each
+       append waits up to ``lsm.STREAM_LEASE_RETRY_S`` for an external
+       maintainer's lease) and publish every batch row with its
+       verdict to ``survivors_dir/b=<id>`` (overwrite — idempotent).
 
     Uses availableNow; returns the started StreamingQuery.
 
@@ -390,21 +392,8 @@ def stream_ingest_dedup_all(
     ``maxFilesPerTrigger`` on the source) that keeps every micro-batch
     under the ceiling; a batch already in the checkpoint's offset log
     replays at its logged size."""
-    from sales_forecast_pyspark_spark.llmdata.ann_index import (
-        append_to_ivfpq_index,
-        compact_ivfpq_index,
-        screen_against_ivfpq_index,
-    )
-    from sales_forecast_pyspark_spark.llmdata.dedup_store import (
-        compact_minhash_store,
-    )
-    from sales_forecast_pyspark_spark.llmdata.similarity import (
-        exact_self_similarity_join,
-    )
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from sales_forecast_pyspark_spark.llmdata import lsm
-
         spark = batch_df.sparkSession
         b = batch_df.select(
             F.col(id_col).alias("doc_id"),
@@ -414,115 +403,27 @@ def stream_ingest_dedup_all(
         b.cache()
 
         # ---- stage 1: exact fingerprint (cheapest screen first) ----
-        bfp = _fp_frame(b, "doc_id", "text")
-        bfp = bfp.localCheckpoint(eager=True)  # one md5 pass, reused 3x
-        exact_store = (
-            screen_against_fp_store(
-                b, fp_store, exclude_batch=batch_id
-            )
+        bfp = _fp_frame(b, "doc_id", "text").localCheckpoint(eager=True)
+        exact_losers = (
+            screen_against_fp_store(b, fp_store, exclude_batch=batch_id)
             .select("doc_id")
-            .distinct()
-        )
-        exact_in_batch = (
-            bfp.join(bfp.groupBy("fp").agg(F.min("doc_id").alias("keep")), "fp")
-            .filter(F.col("doc_id") != F.col("keep"))
-            .select("doc_id")
-        )
-        exact_losers = exact_store.unionByName(exact_in_batch).distinct()
-        exact_losers = exact_losers.localCheckpoint(eager=True)
-        s1 = b.join(exact_losers, "doc_id", "left_anti")
-
-        # ---- stage 2: MinHash text (stage-1 survivors only) ----
-        meta = spark.read.parquet(os.path.join(mh_store, "meta")).first().asDict()
-        bsig = _sig_frame(s1, "doc_id", "text", meta["n"], meta["num_hashes"])
-        bsig.cache()
-        unsigned = _zero_token_fps(s1, "doc_id", "text")
-        unsigned.cache()
-        text_store = (
-            _screen_signed(
-                spark, mh_store, bsig, meta, text_threshold, batch_id
-            )
-            .select("doc_id")
-            .unionByName(
-                _screen_fps(
-                    spark, mh_store, unsigned, meta["num_hashes"], batch_id
-                ).select("doc_id")
-            )
+            .unionByName(_first_wins(bfp))
             .distinct()
             .localCheckpoint(eager=True)
         )
-        pairs = _verified_in_batch_pairs(bsig, meta, text_threshold).join(
-            text_store.select(F.col("doc_id").alias("doc_a")),
-            "doc_a",
-            "left_anti",
-        ).join(
-            text_store.select(F.col("doc_id").alias("doc_b")),
-            "doc_b",
-            "left_anti",
+        s1 = b.join(exact_losers, "doc_id", "left_anti")
+
+        # ---- stage 2: MinHash text (stage-1 survivors only) ----
+        text_losers, bsig, unsigned, meta = _text_stage(
+            spark, mh_store, s1, text_threshold, batch_id
         )
-        # NOTE: no zero-token first-wins tier here — identical
-        # zero-token texts share a whole-text fp and stage 1 already
-        # collapsed them
-        text_losers = text_store.unionByName(
-            _greedy_losers(pairs)
-        ).distinct()
-        text_losers = text_losers.localCheckpoint(eager=True)
         s2 = s1.join(text_losers, "doc_id", "left_anti")
         s2.cache()
 
         # ---- stage 3: embedding cosine (stage-2 survivors only) ----
-        norm = F.sqrt(
-            F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x * x)
+        sem_losers = _semantic_stage(
+            spark, index_path, s2, cos_threshold, k, n_probe
         )
-        probeable = s2.withColumn("_n", norm).filter(F.col("_n") > 0)
-        sem_store = (
-            screen_against_ivfpq_index(
-                spark,
-                index_path,
-                probeable.select("doc_id", "embedding"),
-                id_col="doc_id",
-                vec_col="embedding",
-                threshold=cos_threshold,
-                k=k,
-                n_probe=n_probe,
-                exclude_ids=s2.select("doc_id"),
-            )
-            .select(F.col("vec_id").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-            if probeable.limit(1).count()
-            else s2.select("doc_id").limit(0)
-        )
-        normed = probeable.select(
-            "doc_id",
-            F.transform(
-                "embedding",
-                lambda x: F.try_divide(x, F.col("_n")).cast("float"),
-            ).alias("embedding"),
-        ).localCheckpoint(eager=True)
-        # EXACT in-batch pair mine (r15, VERDICT r14 wrong #1; see
-        # exact_self_similarity_join — the batch is contract-bounded,
-        # so the exact blocked GEMM beats the per-batch BRP-LSH re-fit
-        # it replaced by ~two orders of magnitude, at recall 1.0)
-        dist_t = (2.0 * (1.0 - cos_threshold)) ** 0.5
-        sem_pairs = exact_self_similarity_join(
-            normed, "doc_id", "embedding", distance_threshold=dist_t
-        ).select(
-            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-        )
-        sem_pairs = sem_pairs.join(
-            sem_store.select(F.col("doc_id").alias("doc_a")),
-            "doc_a",
-            "left_anti",
-        ).join(
-            sem_store.select(F.col("doc_id").alias("doc_b")),
-            "doc_b",
-            "left_anti",
-        )
-        sem_losers = sem_store.unionByName(
-            _greedy_losers(sem_pairs)
-        ).distinct()
-        sem_losers = sem_losers.localCheckpoint(eager=True)
         survivors = s2.join(sem_losers, "doc_id", "left_anti")
         survivors.cache()
         surv_ids = survivors.select("doc_id")
@@ -532,7 +433,7 @@ def stream_ingest_dedup_all(
             survivors,
             fp_store,
             batch_id=batch_id,
-            lease_retry_s=lease_retry_s,
+            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
         )
         _append_signed(
             spark,
@@ -541,15 +442,14 @@ def stream_ingest_dedup_all(
             meta,
             batch_id,
             fps=unsigned.join(surv_ids, "doc_id"),
-            lease_retry_s=lease_retry_s,
+            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
         )
         append_to_ivfpq_index(
             survivors.select("doc_id", "embedding"),
             index_path,
             id_col="doc_id",
-            vec_col="embedding",
             batch_id=batch_id,
-            lease_retry_s=lease_retry_s,
+            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
         )
 
         # ---- publish: every row, per-stage verdict ----
@@ -582,29 +482,11 @@ def stream_ingest_dedup_all(
         bsig.unpersist()
         b.unpersist()
 
-        if auto_compact_after is not None:
-            if lsm.should_compact(
-                spark, fp_store, ["fps"], max_inc_batches=auto_compact_after
-            ):
-                compact_fp_store(spark, fp_store)
-            if lsm.should_compact(
-                spark,
-                mh_store,
-                ["signatures", "buckets", "fingerprints", "doc_counts"],
-                max_inc_batches=auto_compact_after,
-            ):
-                compact_minhash_store(spark, mh_store)
-            if lsm.should_compact(
-                spark,
-                index_path,
-                ["codes", "vectors", "stats_live"],
-                max_inc_batches=auto_compact_after,
-            ):
-                compact_ivfpq_index(spark, index_path)
+        for path, tables, compact in (
+            (fp_store, FP_TABLES, compact_fp_store),
+            (mh_store, MINHASH_TABLES, compact_minhash_store),
+            (index_path, INDEX_TABLES, compact_ivfpq_index),
+        ):
+            lsm.auto_compact(spark, path, tables, auto_compact_after, compact)
 
-    return (
-        stream_df.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return lsm.start_ingest_loop(stream_df, _ingest, checkpoint_dir)

@@ -31,6 +31,7 @@ import socket
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 # One target for every sized write in the LSM family (ADVICE r15): the
@@ -40,6 +41,15 @@ from pyspark.sql import DataFrame, SparkSession
 # cannot drift apart. Scale-adaptive by construction — a tiny batch
 # lands 1 file, a 100 GB batch lands ~800 — not tuned to local cores.
 DEFAULT_TARGET_FILE_MB = 128
+
+# How long a streaming loop's store append waits out a lease held by an
+# EXTERNAL maintainer (a cron-driven ``scripts/store_maintenance.py``
+# fold landing between micro-batches) before the loud
+# ``LeaseHeldError`` fails the StreamingQuery (ADVICE r13): a routine
+# fold delays the append instead of crashing a live loop, and
+# fail-fast stays the backstop past the budget. Direct append callers
+# keep their own ``lease_retry_s`` (default 0: fail fast).
+STREAM_LEASE_RETRY_S = 600.0
 
 
 class LeaseHeldError(RuntimeError):
@@ -88,6 +98,45 @@ def read_tiered_opt(
     out = parts[0].select(*cols)
     for p in parts[1:]:
         out = out.unionByName(p.select(*cols))
+    return out
+
+
+def complete_view(
+    spark: SparkSession,
+    path: str,
+    table: str,
+    folding: set[int],
+    cols: list[str],
+) -> DataFrame:
+    """Base ∪ COMPLETE increment batches only — what a fold may absorb.
+    The ``b=<id>`` directory name is every increment row's provenance,
+    discovered by the parquet reader as partition column ``b`` (for
+    tables that also carry ``src_batch``, the append writes
+    ``src_batch=<id>`` into ``b=<id>``, so the two agree). A TORN batch
+    (some tables written, the store's last-written table not) stays
+    OUT of the fold and keeps its increment dirs: folding it would
+    absorb rows the store's ledger never saw, and its completing
+    replay would then re-append them — the transient double-count
+    window ADVICE r12 flagged. Left in place, the replay overwrites the
+    torn dirs into a complete batch and the NEXT fold absorbs it
+    exactly once. Either tier may be absent (the MinHash store's
+    optional ``fingerprints`` table can have increments and no base);
+    at least one must exist (callers guard). Column types come from the
+    parquet schema, never hardcoded."""
+    from pyspark.errors import AnalysisException
+
+    parts = []
+    for sub, keep in ((table, None), (f"{table}_inc", folding)):
+        try:
+            df = spark.read.parquet(os.path.join(path, sub))
+        except AnalysisException:
+            continue
+        if keep is not None:
+            df = df.filter(F.col("b").isin([int(x) for x in keep]))
+        parts.append(df.select(*cols))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
     return out
 
 
@@ -499,7 +548,7 @@ def maintenance_lease(
 def should_compact(
     spark: SparkSession,
     path: str,
-    tables: list[str],
+    tables: tuple[str, ...] | list[str],
     max_inc_batches: int = 16,
     max_inc_bytes: int | None = None,
 ) -> bool:
@@ -526,3 +575,35 @@ def should_compact(
         if total >= max_inc_bytes:
             return True
     return False
+
+
+def auto_compact(
+    spark: SparkSession,
+    path: str,
+    tables: tuple[str, ...],
+    auto_compact_after: int | None,
+    compact,
+) -> None:
+    """The streaming loops' ``auto_compact_after=N`` policy, run after
+    each batch's append: fold with ``compact(spark, path)`` once any of
+    ``tables`` holds N increment dirs (``should_compact``). ``None``
+    disables. The fold runs inside the loop's own single-writer
+    ``foreachBatch``, so the maintenance lease never contends."""
+    if auto_compact_after is not None and should_compact(
+        spark, path, tables, max_inc_batches=auto_compact_after
+    ):
+        compact(spark, path)
+
+
+def start_ingest_loop(stream_df: DataFrame, ingest, checkpoint_dir: str):
+    """Start ``ingest(batch_df, batch_id)`` as a ``foreachBatch`` loop
+    under the availableNow trigger — drain everything available,
+    then stop: the rehearsal-friendly default every streaming ingest
+    loop shares (a deployment swaps in a processing-time trigger).
+    Returns the started StreamingQuery (caller awaits/stops)."""
+    return (
+        stream_df.writeStream.foreachBatch(ingest)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )

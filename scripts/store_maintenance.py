@@ -57,13 +57,17 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from sales_forecast_pyspark_spark.llmdata.ann_index import INDEX_TABLES  # noqa: E402
+from sales_forecast_pyspark_spark.llmdata.dedup_store import MINHASH_TABLES  # noqa: E402
+from sales_forecast_pyspark_spark.llmdata.ingest import FP_TABLES  # noqa: E402
+
 TABLES = {
-    "index": ["codes", "vectors", "stats_live"],
-    "minhash": ["signatures", "buckets", "fingerprints", "doc_counts"],
+    "index": INDEX_TABLES,
+    "minhash": MINHASH_TABLES,
     # the composed triad's whole-text exact-fingerprint store
     # (llmdata/ingest.py) — fold-only: a single hash table has no
     # rebuild-class failure mode (no geometry, no quantizer)
-    "fp": ["fps"],
+    "fp": FP_TABLES,
 }
 
 

@@ -346,11 +346,12 @@ def run_index_ingest(spark, sf_dir, files_per_trigger) -> dict:
         # what the serve path pays before a compaction folds it — the
         # quantity lsm.should_compact bounds in a long-running loop
         from sales_forecast_pyspark_spark.llmdata import lsm
+        from sales_forecast_pyspark_spark.llmdata.ann_index import INDEX_TABLES
 
         out["inc_batches"] = len(lsm.list_inc_batches(spark, p_stream, "codes"))
         out["inc_files"] = sum(
             lsm.data_files(spark, os.path.join(p_stream, f"{t}_inc"))
-            for t in ("codes", "vectors", "stats_live")
+            for t in INDEX_TABLES
         )
         # equivalence vs a batch append of the same rows
         p_batch = os.path.join(tmp, "idx_batch")
@@ -444,13 +445,16 @@ def run_dedup_ingest(spark, sf_dir, files_per_trigger) -> dict:
         out["input_rows"] = spark.read.parquet(src).count()
         # increment-tier depth after the drain (VERDICT r12 ask #5)
         from sales_forecast_pyspark_spark.llmdata import lsm
+        from sales_forecast_pyspark_spark.llmdata.dedup_store import (
+            MINHASH_TABLES,
+        )
 
         out["inc_batches"] = len(
             lsm.list_inc_batches(spark, store, "doc_counts")
         )
         out["inc_files"] = sum(
             lsm.data_files(spark, os.path.join(store, f"{t}_inc"))
-            for t in ("signatures", "buckets", "fingerprints", "doc_counts")
+            for t in MINHASH_TABLES
         )
         survivors = spark.read.parquet(os.path.join(tmp, "out"))
         n_surv = survivors.count()
@@ -572,11 +576,12 @@ def run_semantic_ingest(spark, sf_dir, files_per_trigger) -> dict:
         out["screen_batch"] = 500
         out["screen_hits"] = screen_hits
         from sales_forecast_pyspark_spark.llmdata import lsm
+        from sales_forecast_pyspark_spark.llmdata.ann_index import INDEX_TABLES
 
         out["inc_batches"] = len(lsm.list_inc_batches(spark, path, "codes"))
         out["inc_files"] = sum(
             lsm.data_files(spark, os.path.join(path, f"{t}_inc"))
-            for t in ("codes", "vectors", "stats_live")
+            for t in INDEX_TABLES
         )
         survivors = spark.read.parquet(os.path.join(tmp, "out"))
         n_surv = survivors.count()
@@ -740,24 +745,23 @@ def run_ingest_all(spark, sf_dir, files_per_trigger) -> dict:
         out["input_rows"] = n_incoming  # source truth, as in the siblings
         out["build_s"] = round(build_s, 2)
         from sales_forecast_pyspark_spark.llmdata import lsm
+        from sales_forecast_pyspark_spark.llmdata.ann_index import INDEX_TABLES
+        from sales_forecast_pyspark_spark.llmdata.dedup_store import (
+            MINHASH_TABLES,
+        )
+        from sales_forecast_pyspark_spark.llmdata.ingest import FP_TABLES
 
         out["inc_batches"] = (
             len(lsm.list_inc_batches(spark, fp, "fps"))
             + len(lsm.list_inc_batches(spark, mh, "doc_counts"))
             + len(lsm.list_inc_batches(spark, idx, "codes"))
         )
-        out["inc_files"] = (
-            lsm.data_files(spark, os.path.join(fp, "fps_inc"))
-            + sum(
-                lsm.data_files(spark, os.path.join(mh, f"{t}_inc"))
-                for t in (
-                    "signatures", "buckets", "fingerprints", "doc_counts"
-                )
+        out["inc_files"] = sum(
+            lsm.data_files(spark, os.path.join(p, f"{t}_inc"))
+            for p, tables in (
+                (fp, FP_TABLES), (mh, MINHASH_TABLES), (idx, INDEX_TABLES)
             )
-            + sum(
-                lsm.data_files(spark, os.path.join(idx, f"{t}_inc"))
-                for t in ("codes", "vectors", "stats_live")
-            )
+            for t in tables
         )
         verdicts = (
             spark.read.parquet(os.path.join(tmp, "out"))

@@ -207,6 +207,28 @@ def test_screen_contract_guard_and_dimension_check(spark, emb, index_path):
         screen_against_ivfpq_index(spark, index_path, bad)
 
 
+def test_semantic_stage_empty_and_zero_norm_batches(spark, emb, index_path):
+    """The semantic tier's one stage function screens whatever it is
+    given, with no probe first: an empty batch and an all-zero-norm
+    batch (no direction, so nothing to screen or pair) both yield no
+    losers and no error, and in a mixed batch only the copy of a
+    stored vector loses."""
+    from sales_forecast_pyspark_spark.llmdata.ann_index import _semantic_stage
+
+    schema = "doc_id long, embedding array<float>"
+    v7 = emb.filter(F.col("vec_id") == 7).first()["embedding"]
+    zero = [0.0] * len(v7)
+
+    def losers(rows):
+        batch = spark.createDataFrame(rows, schema)
+        out = _semantic_stage(spark, index_path, batch, 0.9, 5, 6)
+        return sorted(r["doc_id"] for r in out.collect())
+
+    assert losers([]) == []
+    assert losers([(9_001, zero), (9_002, zero)]) == []
+    assert losers([(9_003, v7), (9_004, zero)]) == [9_003]
+
+
 def test_quantizer_memo_hits_and_invalidates_on_rebuild(
     spark, emb, tmp_path_factory
 ):
@@ -716,7 +738,7 @@ def test_torn_batch_stays_unfolded_and_replay_completes_it(
     TORN batch (first table's increment written, later ones not) must
     NOT be recorded as folded — its replay is the only thing that can
     complete it. Since r13 the fold also does NOT absorb the torn
-    batch's orphan rows at all (``_complete_index_view``): its
+    batch's orphan rows at all (``lsm.complete_view``): its
     increment dirs survive the compaction untouched, so the replay
     overwrites them in place and no transient duplicates ever exist —
     the stronger form of the ADVICE r12 double-count fix."""

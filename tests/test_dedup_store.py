@@ -306,6 +306,45 @@ def test_greedy_losers_matches_sequential_semantics(spark):
     assert losers([(1, 2), (1, 3), (1, 4)]) == [2, 3, 4]
 
 
+def test_text_stage_losers_on_a_tiny_store(spark, tmp_path):
+    """The MinHash tier's one stage function, outside any stream: a
+    copy of a stored doc loses to the store, the larger id of an
+    in-batch near-dup pair loses to the smaller, and a fresh doc and
+    the pair's smaller id survive. The cached signatures come back for
+    the caller's admission."""
+    from sales_forecast_pyspark_spark.llmdata.dedup_store import _text_stage
+
+    path = str(tmp_path / "store")
+    stored = _CHAIN_A
+    build_minhash_store(
+        spark.createDataFrame(
+            [(1, stored), (2, _CHAIN_C)], "doc_id long, text string"
+        ),
+        path,
+    )
+    pair = " ".join(f"quartz{i} meadow{i} lantern{i}" for i in range(20))
+    batch = spark.createDataFrame(
+        [
+            (101, stored),  # store dup of 1
+            (102, pair),
+            (103, pair + " coda"),  # in-batch near-dup of 102
+            (104, "an unrelated fresh sentence about harbour ferries"),
+        ],
+        "doc_id long, text string",
+    )
+    losers, bsig, unsigned, meta = _text_stage(spark, path, batch, 0.5, 0)
+    try:
+        assert sorted(r["doc_id"] for r in losers.collect()) == [101, 103]
+        assert sorted(r["doc_id"] for r in bsig.collect()) == [
+            101, 102, 103, 104
+        ]
+        assert unsigned.count() == 0
+        assert meta["n_docs"] == 2
+    finally:
+        bsig.unpersist()
+        unsigned.unpersist()
+
+
 @pytest.mark.slow
 def test_stream_ingest_keeps_nontransitive_chain_tail(
     spark, docs, tmp_path_factory
