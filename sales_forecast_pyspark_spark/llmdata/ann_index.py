@@ -62,7 +62,6 @@ from pyspark.sql import functions as F
 from sales_forecast_pyspark_spark.functions.vectors import l2_norm
 from sales_forecast_pyspark_spark.llmdata import lsm
 from sales_forecast_pyspark_spark.llmdata.dedup_store import _peel
-from sales_forecast_pyspark_spark.llmdata.lsm import DEFAULT_TARGET_FILE_MB
 from sales_forecast_pyspark_spark.llmdata.similarity import (
     SEARCH_MAX_ROWS,
     _ivfpq_fit,
@@ -73,6 +72,56 @@ from sales_forecast_pyspark_spark.llmdata.similarity import (
 
 # every table an index keeps in base + increment tiers
 INDEX_TABLES = ("codes", "vectors", "stats_live")
+_META_SCHEMA = (
+    "d int, sub int, m int, codebook_k int, n_centroids int, "
+    "seed int, n_vectors long"
+)
+
+
+def _tables(meta: dict) -> tuple[lsm.Table, lsm.Table]:
+    """The sized tables' write decisions (``lsm.Table``), both keyed
+    on the id. ``vectors`` is neighbor_id-sorted: the exact refine's
+    point lookups prune on parquet min/max row-group stats. ``codes``
+    is ``partitionBy(cell)``: a query probes n_probe cells, so its
+    scan prunes to n_probe/n_centroids of the files statically. Row
+    estimates: vectors ≈ id 8B + d float64 + overhead; codes ≈ id 8B +
+    m int32 + overhead."""
+    return (
+        lsm.Table(
+            "vectors", ("neighbor_id", "v"), ("neighbor_id",),
+            24 + 8 * meta["d"], ("neighbor_id",),
+        ),
+        lsm.Table(
+            "codes", ("neighbor_id", "cell", "codes"), ("neighbor_id",),
+            16 + 4 * meta["m"], cells=meta["n_centroids"],
+        ),
+    )
+
+
+def _write_data(
+    enc: DataFrame,
+    path: str,
+    meta: dict,
+    n: int,
+    batch_id: int | None,
+    build: bool = False,
+) -> None:
+    """Write an encoded frame's ``vectors`` then ``codes`` rows, sized
+    for ``n`` rows, to a build's or an append's ``lsm.destination``.
+
+    Crash-consistency ordering: vectors BEFORE codes. An orphan
+    vectors row (append died between the writes) is harmless — it is
+    never ADC-scanned, so it can never surface; the reverse order
+    would leave code rows whose exact-refine join silently drops
+    them, i.e. an invisible recall loss. Stats and meta go after both,
+    so a torn append is at worst an undercount, never a claim of rows
+    that are not fully queryable."""
+    for t in _tables(meta):
+        lsm.write_sized(
+            t, enc.select(*t.cols),
+            *lsm.destination(path, t.name, batch_id, build),
+            n * t.row_bytes,
+        )
 
 
 # process-local memo of the IMMUTABLE quantizer tables (cells +
@@ -119,7 +168,7 @@ def _load_quantizers(spark: SparkSession, path: str):
     later load."""
     import numpy as np
 
-    meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
+    meta = lsm.read_meta(spark, path)
     key = os.path.abspath(path)
     fp = None
     try:
@@ -521,46 +570,25 @@ def _build_locked(
 ) -> dict:
     """Body of ``build_ivfpq_index`` under the held maintenance lease."""
     spark = df.sparkSession
-    for t in INDEX_TABLES:
-        lsm.drop_inc(spark, path, t)
-    lsm.drop_ledger(spark, path)
+    lsm.reset(spark, path, INDEX_TABLES)
     cell_mat, books, enc, d, sub = _ivfpq_fit(
         df, id_col, vec_col, n_centroids, m, codebook_k, seed
     )
     # cache before the count, as in _append_locked (ADVICE r15): the
-    # count, the codes shuffle-write, repartitionByRange's sampling
-    # pass and the vectors write would otherwise each re-run the
+    # count, the codes shuffle-write, the vectors' range-sampling pass
+    # and the vectors write would otherwise each re-run the
     # m KMeans-transform encode pipeline
     enc.cache()
-    n_vectors = enc.count()
-    # Sized writes, same math and layout as the compactor and the
-    # append path (see _append_locked): unsized, partitionBy(cell)
-    # emitted one file per (input partition × cell) — 320 files for a
-    # 20k-vector build — whose listing/open cost every probe scan then
-    # pays until the first compaction.
-    target_bytes = DEFAULT_TARGET_FILE_MB * 1024 * 1024
-    files_per_cell = max(
-        1,
-        -(-(n_vectors * (16 + 4 * m)) // max(1, n_centroids) // target_bytes),
-    )
-    n_vec_files = max(1, -(-(n_vectors * (24 + 8 * d)) // target_bytes))
-    (
-        enc.select("neighbor_id", "cell", "codes")
-        .repartition(
-            F.col("cell"),
-            F.pmod(F.xxhash64("neighbor_id"), F.lit(int(files_per_cell))),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(os.path.join(path, "codes"))
-    )
-    (
-        enc.select("neighbor_id", "v")
-        .repartitionByRange(int(n_vec_files), "neighbor_id")
-        .sortWithinPartitions("neighbor_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "vectors"))
-    )
+    meta = {
+        "d": d,
+        "sub": sub,
+        "m": m,
+        "codebook_k": codebook_k,
+        "n_centroids": n_centroids,
+        "seed": seed,
+        "n_vectors": enc.count(),
+    }
+    _write_data(enc, path, meta, meta["n_vectors"], None, build=True)
     enc.unpersist()
     spark.createDataFrame(
         list(enumerate(cell_mat.tolist())), "cell int, cv array<double>"
@@ -573,20 +601,7 @@ def _build_locked(
         ],
         "j int, code int, cen array<double>",
     ).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
-    meta = {
-        "d": d,
-        "sub": sub,
-        "m": m,
-        "codebook_k": codebook_k,
-        "n_centroids": n_centroids,
-        "seed": seed,
-        "n_vectors": n_vectors,
-    }
-    spark.createDataFrame(
-        [tuple(meta.values())],
-        "d int, sub int, m int, codebook_k int, n_centroids int, "
-        "seed int, n_vectors long",
-    ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
+    lsm.write_meta(spark, path, meta, _META_SCHEMA)
     # Drift bookkeeping, two tables from ONE scan of the tables just
     # written (one code path, so baseline and report can never disagree
     # on the error definition; one extra O(N) pass on the build-once
@@ -618,21 +633,14 @@ def append_to_ivfpq_index(
     touch of already-written partitions beyond parquet append.
 
     With ``batch_id`` set, the append is IDEMPOTENT: the batch lands
-    in its own overwrite-mode increment directories
-    (``codes_inc/b=<id>``, ``vectors_inc/b=<id>`` — same ``cell``
-    partition layout as the base, so pruning holds), so a REPLAY of
-    the same batch overwrites itself instead of double-appending.
-    That is exactly the guarantee Structured Streaming's
-    at-least-once ``foreachBatch`` needs for exactly-once ingest
-    (``stream_append_to_ivfpq_index``; same versioned-state design as
-    ``streaming/stream_ops.py::maintain_partials_stream``). Readers
-    see base ∪ increments transparently; ``compact_ivfpq_index``
-    folds increments back into the base. Without ``batch_id`` the
-    rows append into the base tables directly (the ad-hoc one-shot
-    flow; replaying THAT duplicates, which is why the streaming path
-    always versions). ``meta.n_vectors`` is recomputed from the
-    stored code rows after the write rather than incremented, so it
-    is correct under replays and torn appends alike.
+    in its own overwrite-mode increment directories in the base's
+    layout (``lsm.destination``, ``_tables``), so a REPLAY of the same
+    batch overwrites itself instead of double-appending — the
+    guarantee ``stream_append_to_ivfpq_index`` needs for exactly-once
+    ingest. Without ``batch_id`` the rows append into the base tables
+    directly (the ad-hoc one-shot flow). ``meta.n_vectors`` is
+    recomputed after the write rather than incremented, so it is
+    correct under replays and torn appends alike.
 
     Encoding is a single Arrow-batched pass (the declared-Python-
     boundary class): the cell centers and residual codebooks are
@@ -679,13 +687,7 @@ def _append_locked(
     import pandas as pd
 
     spark = df.sparkSession
-    # replay-after-fold guard (code-review r12): if a past compaction
-    # already folded this batch into the base, its increments are gone
-    # but its ROWS are not — re-appending them would serve duplicates.
-    # The fold ledger makes the replay the no-op it must be.
-    if batch_id is not None and int(batch_id) in lsm.folded_batches(
-        spark, path
-    ):
+    if lsm.already_folded(spark, path, batch_id):
         return 0
     meta, cell_mat, books = _load_quantizers(spark, path)
     d, sub, m = meta["d"], meta["sub"], meta["m"]
@@ -755,60 +757,7 @@ def _append_locked(
             detail = str(e).split(_DIM_ERR + ": ", 1)[-1].split("\n", 1)[0]
             raise ValueError(detail) from None
         raise
-    # Size the increment writes like the compactor sizes the base
-    # (guide: small files hurt twice — commit cost now, listing + open
-    # cost on every later screen/serve scan). Unsized, partitionBy(cell)
-    # emits one file per (input partition × cell) — measured 512 files
-    # for ONE 12.5k-row append at 32 partitions × 16 cells — and a
-    # 64-batch auto-compaction window accumulates tens of thousands.
-    # Rows-based byte estimates (the compactor re-sizes from real bytes
-    # at fold time): codes ≈ id 8B + m int32 + overhead; vectors ≈
-    # id 8B + d float64 + overhead.
-    target_bytes = DEFAULT_TARGET_FILE_MB * 1024 * 1024
-    files_per_cell = max(
-        1,
-        -(-(n_new * (16 + 4 * m)) // max(1, meta["n_centroids"]) // target_bytes),
-    )
-    n_vec_files = max(1, -(-(n_new * (24 + 8 * d)) // target_bytes))
-    # Crash-consistency ordering: vectors BEFORE codes. An orphan
-    # vectors row (append died between the writes) is harmless — it is
-    # never ADC-scanned, so it can never surface; the reverse order
-    # would leave code rows whose exact-refine join silently drops
-    # them, i.e. an invisible recall loss. meta goes last so a torn
-    # append is at worst an undercount, never a claim of rows that
-    # are not fully queryable.
-    if batch_id is None:
-        vec_dst, code_dst, mode = (
-            os.path.join(path, "vectors"),
-            os.path.join(path, "codes"),
-            "append",
-        )
-    else:
-        vec_dst, code_dst, mode = (
-            os.path.join(path, "vectors_inc", f"b={int(batch_id)}"),
-            os.path.join(path, "codes_inc", f"b={int(batch_id)}"),
-            "overwrite",
-        )
-    (
-        enc.select("neighbor_id", "v")
-        .repartitionByRange(int(n_vec_files), "neighbor_id")
-        .sortWithinPartitions("neighbor_id")
-        .write.mode(mode)
-        .parquet(vec_dst)
-    )
-    (
-        enc.select("neighbor_id", "cell", "codes")
-        # whole (cell, salt) groups per task → partitionBy(cell) emits
-        # at most files_per_cell files per cell (the compactor's exact
-        # layout, so a fold is a no-op on an already-clean tier shape)
-        .repartition(
-            F.col("cell"),
-            F.pmod(F.xxhash64("neighbor_id"), F.lit(int(files_per_cell))),
-        )
-        .write.mode(mode)
-        .partitionBy("cell")
-        .parquet(code_dst)
-    )
+    _write_data(enc, path, meta, n_new, batch_id)
     # Fold this batch's drift-stat contribution into the live tier —
     # the additive (n, Σqerr) statistic computed from the SAME cached
     # enc frame just written, so ivfpq_index_stats never needs a data
@@ -820,9 +769,8 @@ def _append_locked(
     # never over-claims rows that are not stored.
     batch_stats = _cell_stat_agg(_qerr_per_row(enc, cell_mat, books, m))
     if batch_id is not None:
-        batch_stats.write.mode("overwrite").parquet(
-            os.path.join(path, "stats_live_inc", f"b={int(batch_id)}")
-        )
+        dst, mode = lsm.destination(path, "stats_live", batch_id)
+        batch_stats.write.mode(mode).parquet(dst)
     else:
         live = os.path.join(path, "stats_live")
         merged = _merge_cell_stats(
@@ -842,11 +790,7 @@ def _append_locked(
         .agg(F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n"))
         .first()["n"]
     )
-    spark.createDataFrame(
-        [tuple(meta.values())],
-        "d int, sub int, m int, codebook_k int, n_centroids int, "
-        "seed int, n_vectors long",
-    ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
+    lsm.write_meta(spark, path, meta, _META_SCHEMA)
     enc.unpersist()
     return n_new
 
@@ -906,183 +850,89 @@ def stream_append_to_ivfpq_index(
     return lsm.start_ingest_loop(stream_df, _ingest, checkpoint_dir)
 
 
-def compact_ivfpq_index(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = DEFAULT_TARGET_FILE_MB,
-) -> dict:
+def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
     """Small-file compaction for a persisted IVF-PQ index — the
-    maintenance op that pairs with ``append_to_ivfpq_index``: every
-    append adds up-to-shuffle-partitions new files per touched cell
-    partition, so an hourly-ingest index accumulates thousands of
-    kilobyte files per cell whose per-file open/footer cost comes to
-    dominate the probed scan (the classic small-files failure mode,
-    handled here under this index's two layout contracts):
-
-    - ``codes`` is rewritten cell-by-cell with a size-aware file
-      count (total bytes / n_centroids / target_file_mb, floor 1),
-      PRESERVING ``partitionBy(cell)`` — the static PartitionFilter
-      pruning that justifies the layout survives compaction
-      unchanged (plan-pinned in tests);
-    - ``vectors`` is rewritten range-partitioned on ``neighbor_id``
-      and re-sorted within files — appends interleave id ranges
-      across files, so compaction RESTORES the parquet min/max
-      row-group pruning the exact-refine point lookups rely on
-      (fresh-build quality or better, since ranges are now globally
-      disjoint).
+    maintenance op that pairs with ``append_to_ivfpq_index``: an
+    hourly-ingest index accumulates increment files per cell whose
+    per-file open/footer cost comes to dominate the probed scan (the
+    classic small-files failure mode). Each data table is rewritten in
+    its own layout (``_tables`` → ``lsm.fold``), sized from real bytes:
+    ``codes`` keeps ``partitionBy(cell)``, so the static
+    PartitionFilter pruning survives compaction unchanged
+    (plan-pinned in tests); ``vectors`` comes out range-partitioned and
+    sorted on ``neighbor_id`` — appends interleave id ranges across
+    files, so compaction RESTORES the row-group pruning the
+    exact-refine point lookups rely on.
 
     Batch-versioned increments (the idempotent streaming-ingest
-    landing zone, ``<table>_inc/b=<id>``) are FOLDED into the base in
-    the same pass and their directories removed — compaction is the
-    LSM merge step that keeps the increments tier shallow. Contents
-    are untouched — query results are bit-identical before and after
-    (test-pinned), and the drift baseline in ``stats`` remains valid.
-    The swap is write-to-staging + delete + rename via the Hadoop FS
-    API (staging dirs are underscore-prefixed, so concurrent Spark
-    readers never list them); the delete→rename window is NOT atomic
-    — production deployments wanting atomic swap put the index tables
-    behind a table format (Delta/Iceberg) or flip a pointer to a
-    fresh ``build_ivfpq_index`` path, which is also the rebuild flow
-    ``ivfpq_index_stats`` triggers. Crash-safety of the fold: each
-    increment directory is dropped only AFTER the base that absorbed
-    it is in place (no window where increment data exists nowhere
-    readable), and the fold dedupes on the id — the index's declared
-    key — so the one bad window (crash after the swap, before the
-    increment delete: readers transiently see fold ∪ increment
-    duplicates) is SELF-HEALING: re-running compaction converges to
-    exact contents instead of folding the duplicates in permanently.
-    Single-maintainer rule, now ENFORCED: compaction holds the
-    mutation lease (``lsm.maintenance_lease``) for its whole run, so a
+    landing zone) are FOLDED into the base in the same pass and their
+    directories removed — compaction is the LSM merge step that keeps
+    the increments tier shallow. Contents are untouched — query
+    results are bit-identical before and after (test-pinned), and the
+    drift baseline in ``stats`` remains valid. The swap is
+    write-to-staging + delete + rename (``lsm.swap_dir``); the
+    delete→rename window is NOT atomic — production deployments
+    wanting atomic swap put the index tables behind a table format
+    (Delta/Iceberg) or flip a pointer to a fresh ``build_ivfpq_index``
+    path, which is also the rebuild flow ``ivfpq_index_stats``
+    triggers. Crash-safety of the fold: each increment directory is
+    dropped only AFTER the base that absorbed it is in place, and the
+    fold dedupes on the id, so a crash after the swap and before the
+    increment delete is SELF-HEALING: re-running compaction converges
+    to exact contents. Compaction holds the single-maintainer mutation
+    lease (``lsm.maintenance_lease``) for its whole run, so a
     concurrent ingest fails loudly at acquire instead of landing a
     batch between the fold's read and the increment delete (VERDICT
     r12 ask #4a). Returns {table: (files_before, files_after)} with
-    increments counted on both sides."""
+    increments counted before."""
     with lsm.maintenance_lease(spark, path, "compact") as lease_token:
-        return _compact_locked(spark, path, target_file_mb, lease_token)
-
-
-def _compact_locked(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int,
-    lease_token: str | None = None,
-) -> dict:
-    """Body of ``compact_ivfpq_index`` under the held lease."""
-    meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
-    target_bytes = target_file_mb * 1024 * 1024
-    # snapshot the COMPLETE batch ids this fold will absorb BEFORE
-    # folding — recorded in the fold ledger afterwards so a replay of
-    # any of them (crashed-uncommitted batch re-delivered after this
-    # compaction) is a no-op in append_to_ivfpq_index instead of a
-    # duplicate. Completeness test = presence in stats_live_inc, the
-    # LAST table the append writes: recording a union would mark a
-    # TORN batch folded and its replay would never write the missing
-    # tables (see lsm.record_folded's contract)
-    folding = lsm.list_inc_batches(spark, path, "stats_live")
-
-    out = {}
-    codes_path = os.path.join(path, "codes")
-    before_codes = lsm.tier_files(spark, path, "codes")
-    codes_bytes = lsm.tier_bytes(spark, path, "codes")
-    files_per_cell = max(
-        1, -(-codes_bytes // max(1, meta["n_centroids"]) // target_bytes)
-    )
-    # fold base + COMPLETE increments (torn batches stay on disk for
-    # their replay — lsm.complete_view), deduped on the declared
-    # key. The only duplicates this can see are bit-identical rows
-    # from a crashed prior fold's swap-but-not-drop window (the ledger
-    # makes replay-after-fold a no-op, and re-appending an EXISTING id
-    # is a documented contract violation), so an arbitrary per-key
-    # pick is safe — both copies are the same row.
-    codes = lsm.complete_view(
-        spark, path, "codes", folding, ["neighbor_id", "cell", "codes"]
-    ).dropDuplicates(["neighbor_id"])
-
-    def _write_codes(tmp):
-        # repartition on (cell, salt): each output task holds whole
-        # (cell, salt) groups, and partitionBy(cell) then emits at most
-        # files_per_cell files per cell — size-bounded without breaking
-        # the one-directory-per-cell pruning layout
-        (
-            codes.repartition(
-                F.col("cell"),
-                F.pmod(F.xxhash64("neighbor_id"), F.lit(files_per_cell)),
-            )
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(tmp)
+        meta = lsm.read_meta(spark, path)
+        # snapshot the COMPLETE batch ids this fold will absorb BEFORE
+        # folding — recorded in the fold ledger afterwards so a replay of
+        # any of them (crashed-uncommitted batch re-delivered after this
+        # compaction) is a no-op in append_to_ivfpq_index instead of a
+        # duplicate. Completeness test = presence in stats_live_inc, the
+        # LAST table the append writes: recording a union would mark a
+        # TORN batch folded and its replay would never write the missing
+        # tables (see lsm.record_folded's contract)
+        folding = lsm.list_inc_batches(spark, path, "stats_live")
+        vectors, codes = _tables(meta)
+        out = {
+            t.name: lsm.fold(spark, path, t, folding) for t in (codes, vectors)
+        }
+        lsm.finish_fold(
+            spark, path, lease_token, folding, (codes.name, vectors.name)
         )
 
-    lsm.swap_dir(spark, path, "codes", _write_codes)
-
-    vec_path = os.path.join(path, "vectors")
-    before_vecs = lsm.tier_files(spark, path, "vectors")
-    vec_bytes = lsm.tier_bytes(spark, path, "vectors")
-    n_vec_files = max(1, -(-vec_bytes // target_bytes))
-    vectors = lsm.complete_view(
-        spark, path, "vectors", folding, ["neighbor_id", "v"]
-    ).dropDuplicates(["neighbor_id"])
-
-    def _write_vectors(tmp):
-        (
-            vectors.repartitionByRange(int(n_vec_files), "neighbor_id")
-            .sortWithinPartitions("neighbor_id")
-            .write.mode("overwrite")
-            .parquet(tmp)
+        # Consolidate the drift-stat live tier by RECOMPUTING it from the
+        # just-folded data rather than folding the stat increments — the
+        # stats are aggregates (no per-row key to dedupe on), so recompute
+        # is the form that self-heals from any crash window: whatever
+        # state a torn compaction or torn append left, one clean
+        # compaction makes stats_live exactly agree with the data again.
+        # BASE-ONLY: surviving increment dirs are torn batches whose rows
+        # must not pre-count against their completing replay's own stats
+        # increment (see _cell_error_scan)
+        fresh = _cell_error_scan(spark, path, base_only=True)
+        fresh.cache()
+        # increments BEFORE the base overwrite: a crash in between leaves
+        # an UNDERCOUNT (stale base, no increments) — the module invariant
+        # — where the reverse order would double-count every folded batch
+        # (full-recount base PLUS still-present increments) and could raise
+        # spurious skew flags (code-review r12, second pass)
+        lsm.drop_inc(spark, path, "stats_live")
+        fresh.write.mode("overwrite").parquet(os.path.join(path, "stats_live"))
+        # refresh meta.n_vectors from the same recompute (code-review r12):
+        # the fold may have removed transient duplicates a prior append's
+        # recount had absorbed, and meta must agree with the data the
+        # function just made consistent
+        meta["n_vectors"] = int(
+            fresh.agg(F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n"))
+            .first()["n"]
         )
-
-    lsm.swap_dir(spark, path, "vectors", _write_vectors)
-
-    # ledger BEFORE the increment drops: if we crash in between, the
-    # batches are marked folded while their increments still exist —
-    # readers see transient duplicates that the next fold's key dedupe
-    # heals, and the append-side no-op verdict is already correct.
-    # Only the FOLDED batch dirs drop — torn ones stay for their replay.
-    # FENCE first: a maintainer that stalled past staleness and lost a
-    # takeover must abort here — the swaps above are key-deduped and
-    # self-healing, the increment drop is the one irreversible act
-    if lease_token is not None:
-        lsm.verify_lease(spark, path, lease_token)
-    lsm.record_folded(spark, path, folding)
-    lsm.drop_inc_batches(spark, path, "codes", folding)
-    lsm.drop_inc_batches(spark, path, "vectors", folding)
-    out["codes"] = (before_codes, lsm.data_files(spark, codes_path))
-    out["vectors"] = (before_vecs, lsm.data_files(spark, vec_path))
-
-    # Consolidate the drift-stat live tier by RECOMPUTING it from the
-    # just-folded data rather than folding the stat increments — the
-    # stats are aggregates (no per-row key to dedupe on), so recompute
-    # is the form that self-heals from any crash window: whatever
-    # state a torn compaction or torn append left, one clean
-    # compaction makes stats_live exactly agree with the data again.
-    # BASE-ONLY: surviving increment dirs are torn batches whose rows
-    # must not pre-count against their completing replay's own stats
-    # increment (see _cell_error_scan)
-    fresh = _cell_error_scan(spark, path, base_only=True)
-    fresh.cache()
-    # increments BEFORE the base overwrite: a crash in between leaves
-    # an UNDERCOUNT (stale base, no increments) — the module invariant
-    # — where the reverse order would double-count every folded batch
-    # (full-recount base PLUS still-present increments) and could raise
-    # spurious skew flags (code-review r12, second pass)
-    lsm.drop_inc(spark, path, "stats_live")
-    fresh.write.mode("overwrite").parquet(os.path.join(path, "stats_live"))
-    # refresh meta.n_vectors from the same recompute (code-review r12):
-    # the fold may have removed transient duplicates a prior append's
-    # recount had absorbed, and meta must agree with the data the
-    # function just made consistent
-    meta["n_vectors"] = int(
-        fresh.agg(F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n")).first()[
-            "n"
-        ]
-    )
-    fresh.unpersist()
-    spark.createDataFrame(
-        [tuple(meta.values())],
-        "d int, sub int, m int, codebook_k int, n_centroids int, "
-        "seed int, n_vectors long",
-    ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
-    return out
+        fresh.unpersist()
+        lsm.write_meta(spark, path, meta, _META_SCHEMA)
+        return out
 
 
 def recommend_n_probe(
@@ -1118,7 +968,7 @@ def recommend_n_probe(
         topk_recall_audit,
     )
 
-    meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
+    meta = lsm.read_meta(spark, path)
     n_centroids = meta["n_centroids"]
     if ladder is None:
         ladder, p = [], 1

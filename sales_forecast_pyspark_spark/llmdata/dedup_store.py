@@ -40,12 +40,12 @@ row):
 - ``append_to_minhash_store(df, path, batch_id=None)`` admits accepted
   docs (signatures+buckets for token-bearing docs, fingerprints for
   zero-token docs). With ``batch_id`` the append is IDEMPOTENT
-  (overwrite-mode increment dirs ``signatures_inc/b=<id>`` /
-  ``buckets_inc/b=<id>`` / ``fingerprints_inc/b=<id>``, same
-  versioned-increments design as the IVF-PQ index), and every row
+  (overwrite-mode increment dirs, ``lsm.destination``), and every row
   carries ``src_batch`` — which is what makes the composed ingest loop
   replay-safe: a replayed batch screens with ``exclude_batch=<its own
   id>`` so it can never be screened out by its OWN first attempt.
+  Build, append and fold write each table in the one layout
+  ``_tables`` names (``lsm.write_sized``).
 
 - ``_text_stage(spark, path, docs, threshold, batch_id)`` is the
   tier's ONE stage function: sign the micro-batch once, screen it
@@ -91,11 +91,48 @@ from sales_forecast_pyspark_spark.llmdata.dedup import (
     _minhash_signatures,
     fingerprint_expr,
 )
-from sales_forecast_pyspark_spark.llmdata.lsm import DEFAULT_TARGET_FILE_MB
 from sales_forecast_pyspark_spark.llmdata.text import tokens_expr
 
-# every table a MinHash store keeps in base + increment tiers
+# every table a MinHash store keeps in base + increment tiers, in the
+# order an append writes them (see _write_tables)
 MINHASH_TABLES = ("signatures", "buckets", "fingerprints", "doc_counts")
+_META_SCHEMA = "n int, num_hashes int, bands int, n_docs long"
+
+
+def _tables(num_hashes: int) -> tuple[lsm.Table, lsm.Table, lsm.Table]:
+    """The sized tables' write decisions (``lsm.Table``): signatures
+    doc_id-sorted for the verify join's point lookups, buckets
+    (band, bucket)-sorted for row-group locality on the screen's join
+    key, and the small zero-token fingerprints tier unsorted."""
+    return (
+        lsm.Table(
+            "signatures", ("doc_id", "sig", "src_batch"), ("doc_id",),
+            24 + 8 * num_hashes, ("doc_id",),
+        ),
+        lsm.Table(
+            "buckets", ("doc_id", "band", "bucket", "src_batch"),
+            ("doc_id", "band", "bucket"), 40, ("band", "bucket"),
+        ),
+        lsm.Table(
+            "fingerprints", ("doc_id", "fp", "src_batch"), ("doc_id",), 64
+        ),
+    )
+
+
+def _write_doc_count(
+    spark: SparkSession,
+    path: str,
+    n: int,
+    batch_id: int | None,
+    build: bool = False,
+) -> None:
+    """One ``doc_counts`` ledger row (see ``_doc_count``), written to
+    ``lsm.destination`` (a build or a fold overwrites the base)."""
+    dst, mode = lsm.destination(path, "doc_counts", batch_id, build)
+    spark.createDataFrame(
+        [(int(n), -1 if batch_id is None else int(batch_id))],
+        "n long, src_batch long",
+    ).write.mode(mode).parquet(dst)
 
 
 def _sig_frame(
@@ -189,51 +226,23 @@ def build_minhash_store(
         )
     spark = df.sparkSession
     with lsm.maintenance_lease(spark, path, "build"):
-        # rebuild-in-place starts from a clean tier map: drop any prior
-        # incarnation's increment dirs and fold ledger
-        for t in MINHASH_TABLES:
-            lsm.drop_inc(spark, path, t)
-        lsm.drop_ledger(spark, path)
+        lsm.reset(spark, path, MINHASH_TABLES)
+        meta = {"n": n, "num_hashes": num_hashes, "bands": bands}
         sig = _sig_frame(df, id_col, text_col, n, num_hashes)
         sig.cache()
-        n_signed = sig.count()
-        sig.withColumn("src_batch", F.lit(-1).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(path, "signatures"))
-        (
-            _band_buckets(
-                _sig_cols(sig, num_hashes), "doc_id", num_hashes, bands
-            )
-            .withColumn("src_batch", F.lit(-1).cast("long"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "buckets"))
+        n_sig, n_fp = _write_tables(
+            sig, _zero_token_fps(df, id_col, text_col), path, meta, None,
+            build=True,
         )
+        meta["n_docs"] = n_sig + n_fp
         sig.unpersist()
-        fps = _zero_token_fps(df, id_col, text_col)
-        n_fp = fps.count()
-        if n_fp:
-            fps.withColumn("src_batch", F.lit(-1).cast("long")).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, "fingerprints"))
-        else:
+        if not n_fp:
             # no zero-token docs: clear any stale tier from a prior
             # incarnation (an empty overwrite would leave a
             # schema-less, unreadable directory instead)
             lsm.drop_dir(spark, path, "fingerprints")
-        n_docs = n_signed + n_fp
-        spark.createDataFrame(
-            [(n_docs, -1)], "n long, src_batch long"
-        ).write.mode("overwrite").parquet(os.path.join(path, "doc_counts"))
-        meta = {
-            "n": n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "n_docs": n_docs,
-        }
-        spark.createDataFrame(
-            [tuple(meta.values())],
-            "n int, num_hashes int, bands int, n_docs long",
-        ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
+        _write_doc_count(spark, path, meta["n_docs"], None, build=True)
+        lsm.write_meta(spark, path, meta, _META_SCHEMA)
         return meta
 
 
@@ -261,7 +270,7 @@ def screen_against_minhash_store(
     appended. Cost: |batch|-proportional signing + one equality join;
     the corpus text is never read."""
     spark = batch.sparkSession
-    meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
+    meta = lsm.read_meta(spark, path)
     # deliberately NOT cached: the returned frame is lazy, so a cache
     # here could never be unpersisted and a long-lived driver screening
     # many batches would accrete one pinned frame per call (code-review
@@ -369,15 +378,14 @@ def append_to_minhash_store(
 ) -> int:
     """Admit accepted docs into the store (sign with the store's
     geometry, append signatures + buckets; zero-token docs append
-    fingerprints). With ``batch_id`` the write is IDEMPOTENT —
-    overwrite-mode increment dirs keyed by the batch, so foreachBatch
-    replays overwrite themselves — and rows carry the batch as
-    ``src_batch`` for the screen-time replay guard. Returns the number
+    fingerprints). With ``batch_id`` the write is IDEMPOTENT
+    (``lsm.destination``) and rows carry the batch as ``src_batch``
+    for the screen-time replay guard. Returns the number
     of docs admitted (both classes). ``meta.n_docs`` derives from the
     kilobyte ``doc_counts`` ledger (see ``_doc_count``), correct under
     replays and O(ledger) per batch."""
     spark = df.sparkSession
-    meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
+    meta = lsm.read_meta(spark, path)
     sig = _sig_frame(df, id_col, text_col, meta["n"], meta["num_hashes"])
     sig.cache()
     n_new = _append_signed(
@@ -395,7 +403,7 @@ def _append_signed(
     path: str,
     meta: dict,
     batch_id: int | None,
-    fps: DataFrame | None = None,
+    fps: DataFrame,
     lease_retry_s: float = 0.0,
 ) -> int:
     """Append body over an ALREADY-SIGNED (doc_id, sig) frame — split
@@ -407,89 +415,59 @@ def _append_signed(
     ``lease_retry_s`` bounds a wait at acquire so streaming callers
     outlast an external cron fold instead of crashing (ADVICE r13)."""
     with lsm.maintenance_lease(spark, path, "append", retry_s=lease_retry_s):
-        # replay-after-fold guard (code-review r12, same as the IVF-PQ
-        # index): a batch a past compaction already folded into the base
-        # must not re-append — its rows are in the base (with src_batch
-        # provenance preserved), only its increment dirs are gone
-        if batch_id is not None and int(batch_id) in lsm.folded_batches(
-            spark, path
-        ):
+        if lsm.already_folded(spark, path, batch_id):
             return 0
-        num_hashes, bands = meta["num_hashes"], meta["bands"]
-        n_sig = sig.count()
-        src = -1 if batch_id is None else int(batch_id)
-        if batch_id is None:
-            sig_dst = os.path.join(path, "signatures")
-            bkt_dst = os.path.join(path, "buckets")
-            fp_dst = os.path.join(path, "fingerprints")
-            mode = "append"
-        else:
-            sig_dst = os.path.join(path, "signatures_inc", f"b={int(batch_id)}")
-            bkt_dst = os.path.join(path, "buckets_inc", f"b={int(batch_id)}")
-            fp_dst = os.path.join(
-                path, "fingerprints_inc", f"b={int(batch_id)}"
-            )
-            mode = "overwrite"
-        # signatures before buckets: an orphan signature row (torn
-        # append) is never joined as a candidate, while an orphan bucket
-        # row would produce candidates whose verify join silently drops
-        # them; fingerprints third, doc_counts LAST — presence of a
-        # batch's doc_counts row is the compactor's completeness test
-        # Sized writes, compactor layout (r15, guide small-files): an
-        # unsized batch append emitted one file per input partition and
-        # table — ~3 × |partitions| files per micro-batch that every
-        # later screen lists and opens until a fold. Rows-based byte
-        # estimates; the compactor re-sizes from real bytes at fold.
-        target_bytes = DEFAULT_TARGET_FILE_MB * 1024 * 1024
-        n_sig_files = max(
-            1, -(-(n_sig * (24 + 8 * num_hashes)) // target_bytes)
-        )
-        n_bkt_files = max(1, -(-(n_sig * bands * 40) // target_bytes))
-        (
-            sig.select("doc_id", "sig")
-            .withColumn("src_batch", F.lit(src).cast("long"))
-            .repartitionByRange(int(n_sig_files), "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode(mode)
-            .parquet(sig_dst)
-        )
-        (
-            _band_buckets(_sig_cols(sig, num_hashes), "doc_id", num_hashes, bands)
-            .withColumn("src_batch", F.lit(src).cast("long"))
-            .repartitionByRange(int(n_bkt_files), "band", "bucket")
-            .sortWithinPartitions("band", "bucket")
-            .write.mode(mode)
-            .parquet(bkt_dst)
-        )
-        n_fp = 0
-        if fps is not None:
-            n_fp = fps.count()
-            if n_fp:
-                n_fp_files = max(1, -(-(n_fp * 64) // target_bytes))
-                fps.select("doc_id", "fp").withColumn(
-                    "src_batch", F.lit(src).cast("long")
-                ).repartition(int(n_fp_files)).write.mode(mode).parquet(fp_dst)
+        n_sig, n_fp = _write_tables(sig, fps, path, meta, batch_id)
         n_new = n_sig + n_fp
         # fold this batch's count into the kilobyte ledger (versioned →
         # its own overwrite-idempotent row; ad-hoc → base append), then
         # derive n_docs from the ledger — O(ledger), not O(files)
-        if batch_id is None:
-            spark.createDataFrame(
-                [(n_new, -1)], "n long, src_batch long"
-            ).write.mode("append").parquet(os.path.join(path, "doc_counts"))
-        else:
-            spark.createDataFrame(
-                [(n_new, int(batch_id))], "n long, src_batch long"
-            ).write.mode("overwrite").parquet(
-                os.path.join(path, "doc_counts_inc", f"b={int(batch_id)}")
-            )
-        meta = dict(meta)
-        meta["n_docs"] = _doc_count(spark, path)
-        spark.createDataFrame(
-            [tuple(meta.values())],
-            "n int, num_hashes int, bands int, n_docs long",
-        ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
+        _write_doc_count(spark, path, n_new, batch_id)
+        meta = dict(meta, n_docs=_doc_count(spark, path))
+        lsm.write_meta(spark, path, meta, _META_SCHEMA)
         return n_new
+
+
+def _write_tables(
+    sig: DataFrame,
+    fps: DataFrame,
+    path: str,
+    meta: dict,
+    batch_id: int | None,
+    build: bool = False,
+) -> tuple[int, int]:
+    """Write a signed batch's sized tables for a build (base,
+    overwrite) or an append (``lsm.destination``): ``sig`` is the
+    cached (doc_id, sig) frame, ``fps`` the zero-token (doc_id, fp)
+    rows. Returns (signed rows, fingerprint rows).
+
+    Signatures before buckets: an orphan signature row (torn append)
+    is never joined as a candidate, while an orphan bucket row would
+    produce candidates whose verify join silently drops them;
+    fingerprints third, and the caller writes doc_counts LAST —
+    presence of a batch's doc_counts row is the compactor's
+    completeness test."""
+    num_hashes, bands = meta["num_hashes"], meta["bands"]
+    t_sig, t_bkt, t_fp = _tables(num_hashes)
+
+    def write(t: lsm.Table, frame: DataFrame, rows: int) -> None:
+        lsm.write_sized(
+            t, frame.withColumn("src_batch", lsm.src_batch(batch_id)),
+            *lsm.destination(path, t.name, batch_id, build),
+            rows * t.row_bytes,
+        )
+
+    n_sig = sig.count()
+    write(t_sig, sig.select("doc_id", "sig"), n_sig)
+    write(
+        t_bkt,
+        _band_buckets(_sig_cols(sig, num_hashes), "doc_id", num_hashes, bands),
+        n_sig * bands,
+    )
+    n_fp = fps.count()
+    if n_fp:
+        write(t_fp, fps.select("doc_id", "fp"), n_fp)
+    return n_sig, n_fp
 
 
 def _greedy_losers(pairs: DataFrame, max_rounds: int = 64) -> DataFrame:
@@ -669,7 +647,7 @@ def _text_stage(
     then unpersists them — and the store meta. In-batch exact copies
     among zero-token docs are not judged here (they carry no
     signature); the caller decides them with ``_first_wins``."""
-    meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
+    meta = lsm.read_meta(spark, path)
     bsig = _sig_frame(docs, "doc_id", "text", meta["n"], meta["num_hashes"])
     bsig.cache()
     unsigned = _zero_token_fps(docs, "doc_id", "text")
@@ -863,110 +841,45 @@ def should_rescale_bands(
     }
 
 
-def compact_minhash_store(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = DEFAULT_TARGET_FILE_MB,
-) -> dict:
+def compact_minhash_store(spark: SparkSession, path: str) -> dict:
     """Fold the batch-versioned increments into the base tables — the
     LSM merge for the signature store, same role and same crash
     posture as ``compact_ivfpq_index``: after thousands of streamed
     batches the per-batch increment dirs dominate listing cost, so
-    maintenance folds them into size-targeted base files (buckets
-    re-sorted by (band, bucket) for row-group locality on the join
-    key; signatures by doc_id). Dedupe on the declared keys
-    ((doc_id, band, bucket) / doc_id) makes a crashed prior fold
-    self-heal on re-run; ``src_batch`` provenance is PRESERVED so the
-    replay guard keeps working for any batch id that could still be
-    re-delivered. Only COMPLETE batches fold (see ``lsm.complete_view``);
-    a torn batch's increment dirs survive the fold untouched so its
-    replay completes it. Holds the single-maintainer lease for the
-    duration — concurrent ingest fails loudly at acquire instead of
-    losing a batch in the fold's read→delete window. Returns
-    {table: (files_before, files_after)}."""
+    maintenance folds them into size-targeted base files in each
+    table's layout (``lsm.fold``). ``src_batch`` provenance is
+    PRESERVED so the replay guard keeps working for any batch id that
+    could still be re-delivered. Only COMPLETE batches fold (see
+    ``lsm.complete_view``); a torn batch's increment dirs survive the
+    fold untouched so its replay completes it. Holds the
+    single-maintainer lease for the duration — concurrent ingest fails
+    loudly at acquire instead of losing a batch in the fold's
+    read→delete window. Returns {table: (files_before, files_after)}."""
     with lsm.maintenance_lease(spark, path, "compact") as lease_token:
-        target_bytes = target_file_mb * 1024 * 1024
+        meta = lsm.read_meta(spark, path)
         # COMPLETE batches only (lsm.record_folded's contract):
         # presence in doc_counts_inc — the LAST table the append
         # writes — implies the batch's signatures, buckets and
         # fingerprints landed too
         folding = lsm.list_inc_batches(spark, path, "doc_counts")
-        out = {}
-
-        sig_path = os.path.join(path, "signatures")
-        before_sig = lsm.tier_files(spark, path, "signatures")
-        sig_bytes = lsm.tier_bytes(spark, path, "signatures")
-        n_sig_files = max(1, -(-sig_bytes // target_bytes))
-        sigs = lsm.complete_view(
-            spark, path, "signatures", folding,
-            ["doc_id", "sig", "src_batch"],
-        ).dropDuplicates(["doc_id"])
-
-        def _write_sigs(tmp):
-            (
-                sigs.repartitionByRange(int(n_sig_files), "doc_id")
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-
-        lsm.swap_dir(spark, path, "signatures", _write_sigs)
-
-        bkt_path = os.path.join(path, "buckets")
-        before_bkt = lsm.tier_files(spark, path, "buckets")
-        bkt_bytes = lsm.tier_bytes(spark, path, "buckets")
-        n_bkt_files = max(1, -(-bkt_bytes // target_bytes))
-        bkts = lsm.complete_view(
-            spark, path, "buckets", folding,
-            ["doc_id", "band", "bucket", "src_batch"],
-        ).dropDuplicates(["doc_id", "band", "bucket"])
-
-        def _write_bkts(tmp):
-            (
-                bkts.repartitionByRange(int(n_bkt_files), "band", "bucket")
-                .sortWithinPartitions("band", "bucket")
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-
-        lsm.swap_dir(spark, path, "buckets", _write_bkts)
-
+        t_sig, t_bkt, t_fp = _tables(meta["num_hashes"])
+        out = {
+            t.name: lsm.fold(spark, path, t, folding) for t in (t_sig, t_bkt)
+        }
         # fingerprints tier: fold only when there is something COMPLETE
         # to fold (optional table — absent when no zero-token doc was
         # ever admitted; a tier holding only TORN increments is left
         # alone, else the swap would write an empty, unreadable base)
-        fp_path = os.path.join(path, "fingerprints")
-        before_fp = lsm.tier_files(spark, path, "fingerprints")
+        fp_path = os.path.join(path, t_fp.name)
         fp_folds = bool(lsm.data_files(spark, fp_path)) or bool(
-            lsm.list_inc_batches(spark, path, "fingerprints") & folding
+            lsm.list_inc_batches(spark, path, t_fp.name) & folding
         )
         if fp_folds:
-            fps = lsm.complete_view(
-                spark, path, "fingerprints", folding,
-                ["doc_id", "fp", "src_batch"],
-            ).dropDuplicates(["doc_id"])
-
-            def _write_fps(tmp):
-                fps.repartition(1).write.mode("overwrite").parquet(tmp)
-
-            lsm.swap_dir(spark, path, "fingerprints", _write_fps)
-
-        # ledger before the increment drops (same crash posture as the
-        # index compactor: marked-folded-but-present increments read as
-        # transient duplicates the next fold's key dedupe heals); only
-        # the FOLDED batch dirs drop — torn ones stay for their replay.
-        # FENCE first: if this maintainer stalled past staleness and
-        # was taken over, abort here — everything above is key-deduped
-        # and self-healing, the increment drop is not
-        lsm.verify_lease(spark, path, lease_token)
-        lsm.record_folded(spark, path, folding)
-        lsm.drop_inc_batches(spark, path, "signatures", folding)
-        lsm.drop_inc_batches(spark, path, "buckets", folding)
-        lsm.drop_inc_batches(spark, path, "fingerprints", folding)
-        out["signatures"] = (before_sig, lsm.data_files(spark, sig_path))
-        out["buckets"] = (before_bkt, lsm.data_files(spark, bkt_path))
-        if fp_folds:
-            out["fingerprints"] = (before_fp, lsm.data_files(spark, fp_path))
+            out[t_fp.name] = lsm.fold(spark, path, t_fp, folding)
+        lsm.finish_fold(
+            spark, path, lease_token, folding,
+            (t_sig.name, t_bkt.name, t_fp.name),
+        )
 
         # consolidate the count ledger by RECOUNTING the just-deduped
         # bases (aggregates cannot be deduped by key, so recompute is
@@ -974,7 +887,7 @@ def compact_minhash_store(
         # Torn batches' rows are NOT in the bases and not in the count
         # — the module invariant: torn state undercounts, never
         # over-claims (their doc_counts row never landed either).
-        n_docs = spark.read.parquet(sig_path).count()
+        n_docs = spark.read.parquet(os.path.join(path, t_sig.name)).count()
         if fp_folds:
             n_docs += spark.read.parquet(fp_path).count()
         # increments before the base overwrite — crash in between reads
@@ -982,13 +895,6 @@ def compact_minhash_store(
         # the index's stats_live consolidation). Every doc_counts_inc
         # dir belongs to a COMPLETE batch by definition, so all drop.
         lsm.drop_inc(spark, path, "doc_counts")
-        spark.createDataFrame(
-            [(n_docs, -1)], "n long, src_batch long"
-        ).write.mode("overwrite").parquet(os.path.join(path, "doc_counts"))
-        meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
-        meta["n_docs"] = n_docs
-        spark.createDataFrame(
-            [tuple(meta.values())],
-            "n int, num_hashes int, bands int, n_docs long",
-        ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
+        _write_doc_count(spark, path, n_docs, None, build=True)
+        lsm.write_meta(spark, path, dict(meta, n_docs=n_docs), _META_SCHEMA)
         return out

@@ -20,9 +20,11 @@ composes them with the cost structure a 100 TB pipeline needs:
   ``stream_ingest_dedup`` and ``stream_ingest_semantic_dedup`` loops
   make, so screen, pair and peel code exists once per tier. Only the
   exact tier (stage 1) and the three-store admission live here.
-- **One batch cache.** The batch is cached once and every stage reads
-  it; signatures are computed once on stage-1 survivors and reused for
-  the store screen, the in-batch peel, AND the admission.
+- **One batch cache.** The batch is cached once, with its whole-text
+  md5, and every stage reads it: the md5 feeds the fp screen, the
+  in-batch first-wins AND the fp admission; signatures are computed
+  once on stage-1 survivors and reused for the store screen, the
+  in-batch peel, AND the admission.
 - **One survivors dir, per-stage verdict.** Every batch row publishes
   to ``survivors_dir/b=<id>`` with a ``verdict`` column in
   {``exact_dup``, ``text_dup``, ``semantic_dup``, ``admitted``} —
@@ -82,10 +84,13 @@ from sales_forecast_pyspark_spark.llmdata.dedup_store import (
     _text_stage,
     compact_minhash_store,
 )
-from sales_forecast_pyspark_spark.llmdata.lsm import DEFAULT_TARGET_FILE_MB
 
-# the fp store's one table (base + increment tiers)
-FP_TABLES = ("fps",)
+# the fp store's one table (base + increment tiers): fp-sorted for
+# row-group locality on the screen's join key
+FPS = lsm.Table(
+    "fps", ("doc_id", "fp", "src_batch"), ("fp", "doc_id"), 48, ("fp",)
+)
+FP_TABLES = (FPS.name,)
 
 
 def _fp_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -103,31 +108,29 @@ def build_fp_store(
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    target_file_mb: int = DEFAULT_TARGET_FILE_MB,
 ) -> int:
-    """Fingerprint the seed corpus and persist the ``fps`` table,
-    fp-sorted for row-group locality on the join key. Returns the
-    number of rows written. Holds the single-maintainer lease."""
+    """Fingerprint the seed corpus and persist the ``fps`` table.
+    Returns the number of rows written. Holds the single-maintainer
+    lease; a rebuild in place drops the prior incarnation's increments
+    and fold ledger (``lsm.reset``)."""
     spark = df.sparkSession
     fps = _fp_frame(df, id_col, text_col).withColumn(
-        "src_batch", F.lit(-1).cast("long")
+        "src_batch", lsm.src_batch(None)
     )
     fps.cache()
     n = fps.count()
-    n_files = max(1, -(-n * 48 // (target_file_mb * 1024 * 1024)))
     with lsm.maintenance_lease(spark, path, "build"):
-        (
-            fps.repartitionByRange(int(n_files), "fp")
-            .sortWithinPartitions("fp")
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "fps"))
+        lsm.reset(spark, path, FP_TABLES)
+        lsm.write_sized(
+            FPS, fps, *lsm.destination(path, FPS.name, None, build=True),
+            n * FPS.row_bytes,
         )
     fps.unpersist()
     return n
 
 
 def _read_fp_store(spark: SparkSession, path: str) -> DataFrame:
-    return lsm.read_tiered(spark, path, "fps")
+    return lsm.read_tiered(spark, path, FPS.name)
 
 
 def screen_against_fp_store(
@@ -141,8 +144,21 @@ def screen_against_fp_store(
     One md5 per batch doc + an fp equality join. Returns (doc_id,
     dup_of, fp). ``exclude_batch`` is the replay guard, as in the
     MinHash store's screen."""
-    spark = batch.sparkSession
-    fpb = _fp_frame(batch, id_col, text_col)
+    return _screen_fps(
+        batch.sparkSession, path, _fp_frame(batch, id_col, text_col),
+        exclude_batch,
+    )
+
+
+def _screen_fps(
+    spark: SparkSession,
+    path: str,
+    fpb: DataFrame,
+    exclude_batch: int | None,
+) -> DataFrame:
+    """Screening body over an already-fingerprinted (doc_id, fp) batch,
+    so the triad loop screens and admits from the one md5 pass it
+    checkpoints."""
     store = _read_fp_store(spark, path)
     if exclude_batch is not None:
         store = store.filter(F.col("src_batch") != int(exclude_batch))
@@ -163,70 +179,46 @@ def append_to_fp_store(
     is IDEMPOTENT (overwrite-mode ``fps_inc/b=<id>``) and fold-ledger
     guarded — same versioned-increments contract as the sibling
     stores."""
-    spark = df.sparkSession
+    return _append_fps(
+        df.sparkSession, _fp_frame(df, id_col, text_col), path, batch_id,
+        lease_retry_s,
+    )
+
+
+def _append_fps(
+    spark: SparkSession,
+    fps: DataFrame,
+    path: str,
+    batch_id: int | None,
+    lease_retry_s: float = 0.0,
+) -> int:
+    """Append body over already-fingerprinted (doc_id, fp) rows."""
     with lsm.maintenance_lease(spark, path, "append", retry_s=lease_retry_s):
-        if batch_id is not None and int(batch_id) in lsm.folded_batches(
-            spark, path
-        ):
+        if lsm.already_folded(spark, path, batch_id):
             return 0
-        src = -1 if batch_id is None else int(batch_id)
-        fps = _fp_frame(df, id_col, text_col).withColumn(
-            "src_batch", F.lit(src).cast("long")
-        )
+        fps = fps.withColumn("src_batch", lsm.src_batch(batch_id))
         fps.cache()
         n = fps.count()
-        # sized like build_fp_store (one file per ~target for a
-        # batch-bounded increment, fp-sorted for join-key row-group
-        # locality) instead of one file per input partition
-        n_files = max(
-            1, -(-n * 48 // (DEFAULT_TARGET_FILE_MB * 1024 * 1024))
+        lsm.write_sized(
+            FPS, fps, *lsm.destination(path, FPS.name, batch_id),
+            n * FPS.row_bytes,
         )
-        sized = fps.repartitionByRange(int(n_files), "fp").sortWithinPartitions(
-            "fp"
-        )
-        if batch_id is None:
-            sized.write.mode("append").parquet(os.path.join(path, "fps"))
-        else:
-            sized.write.mode("overwrite").parquet(
-                os.path.join(path, "fps_inc", f"b={int(batch_id)}")
-            )
         fps.unpersist()
         return n
 
 
-def compact_fp_store(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = DEFAULT_TARGET_FILE_MB,
-) -> dict:
-    """Fold increment batches into the fp-sorted base. The store is a
-    SINGLE table, so every increment dir present is a complete batch
-    (one atomic overwrite-mode write) and all of them fold; dedupe on
-    (fp, doc_id) self-heals a crashed prior fold's swap-but-not-drop
-    window. ``src_batch`` provenance is preserved for the replay
-    guard. Fenced like the sibling compactors."""
+def compact_fp_store(spark: SparkSession, path: str) -> dict:
+    """Fold increment batches into the fp-sorted base (``lsm.fold``).
+    The store is a SINGLE table, so every increment dir present is a
+    complete batch (one atomic overwrite-mode write) and all of them
+    fold; ``src_batch`` provenance is preserved for the replay guard.
+    Fenced like the sibling compactors. Returns {"fps": (files_before,
+    files_after)}."""
     with lsm.maintenance_lease(spark, path, "compact") as lease_token:
-        folding = lsm.list_inc_batches(spark, path, "fps")
-        before = lsm.tier_files(spark, path, "fps")
-        total = lsm.tier_bytes(spark, path, "fps")
-        n_files = max(1, -(-total // (target_file_mb * 1024 * 1024)))
-        merged = _read_fp_store(spark, path).dropDuplicates(["fp", "doc_id"])
-
-        def _write(tmp):
-            (
-                merged.repartitionByRange(int(n_files), "fp")
-                .sortWithinPartitions("fp")
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-
-        lsm.swap_dir(spark, path, "fps", _write)
-        lsm.verify_lease(spark, path, lease_token)
-        lsm.record_folded(spark, path, folding)
-        lsm.drop_inc_batches(spark, path, "fps", folding)
-        return {
-            "fps": (before, lsm.data_files(spark, os.path.join(path, "fps")))
-        }
+        folding = lsm.list_inc_batches(spark, path, FPS.name)
+        out = {FPS.name: lsm.fold(spark, path, FPS, folding)}
+        lsm.finish_fold(spark, path, lease_token, folding, FP_TABLES)
+        return out
 
 
 def triad_consistency_report(
@@ -399,13 +391,14 @@ def stream_ingest_dedup_all(
             F.col(id_col).alias("doc_id"),
             F.col(text_col).alias("text"),
             F.col(vec_col).alias("embedding"),
+            fingerprint_expr(text_col).alias("fp"),
         )
         b.cache()
 
         # ---- stage 1: exact fingerprint (cheapest screen first) ----
-        bfp = _fp_frame(b, "doc_id", "text").localCheckpoint(eager=True)
+        bfp = b.select("doc_id", "fp").localCheckpoint(eager=True)
         exact_losers = (
-            screen_against_fp_store(b, fp_store, exclude_batch=batch_id)
+            _screen_fps(spark, fp_store, bfp, batch_id)
             .select("doc_id")
             .unionByName(_first_wins(bfp))
             .distinct()
@@ -429,10 +422,11 @@ def stream_ingest_dedup_all(
         surv_ids = survivors.select("doc_id")
 
         # ---- admit to all three stores, batch-versioned ----
-        append_to_fp_store(
-            survivors,
+        _append_fps(
+            spark,
+            survivors.select("doc_id", "fp"),
             fp_store,
-            batch_id=batch_id,
+            batch_id,
             lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
         )
         _append_signed(
@@ -469,7 +463,8 @@ def stream_ingest_dedup_all(
             )
         )
         (
-            b.join(verdicts, "doc_id", "left")
+            b.drop("fp")
+            .join(verdicts, "doc_id", "left")
             .withColumn(
                 "verdict", F.coalesce("verdict", F.lit("admitted"))
             )

@@ -1,12 +1,26 @@
-"""Shared LSM-layout plumbing for the persisted stores (the IVF-PQ
-index in ``ann_index.py``, the MinHash signature store in
-``dedup_store.py``). Both follow the same tier map — compacted BASE
-parquet tables + batch-keyed OVERWRITE-mode increment dirs
-(``<table>_inc/b=<id>``) — so the reader, the Hadoop-FS helpers, the
-staged swap, and the folded-batch ledger live once here; a fix to the
-swap or the ledger semantics cannot drift between the two stores
+"""Shared LSM-layout plumbing for the three persisted stores: the
+exact-fingerprint store in ``ingest.py``, the MinHash signature store
+in ``dedup_store.py`` and the IVF-PQ index in ``ann_index.py``. All
+three follow the same tier map — compacted BASE parquet tables +
+batch-keyed OVERWRITE-mode increment dirs (``<table>_inc/b=<id>``) —
+so everything that decides how a store table is read, written and
+folded lives once here, and a fix cannot drift between the stores
 (code-review r12 finding: the first copies had already diverged on an
-``fs.exists`` guard).
+``fs.exists`` guard; later the build, append and fold of one table had
+drifted to three layouts):
+
+- the tiered readers (``read_tiered``, ``read_tiered_opt``,
+  ``complete_view``) and the Hadoop-FS helpers;
+- the WRITER: each store names each table once as a ``Table`` (layout,
+  row-byte estimate, fold key), and its build, append and fold all
+  write it through ``write_sized``; ``destination`` is the one rule
+  for where an append lands (base or ``<table>_inc/b=<id>``);
+- the REBUILD RESET (``reset``: every increment tier and the fold
+  ledger) that every build runs;
+- the FOLD: ``fold`` per table (staged ``swap_dir`` of the deduped
+  base ∪ complete increments) and ``finish_fold`` (fence, ledger,
+  increment drops — in that order);
+- the single-maintainer lease and the compaction policy.
 
 The FOLDED-BATCH LEDGER closes the one real exactly-once hole the
 increments design leaves open: a streaming batch that wrote its
@@ -19,8 +33,9 @@ increment dirs deleted; a naive replay would re-append them and
 readers would serve duplicates until the next fold. Compaction
 therefore records every batch id it folds in a tiny append-only
 ``folded_batches`` table, and the versioned append path checks it
-first: a replay of a folded batch is a NO-OP. The ledger is one row
-per folded batch — kilobytes over the life of an index.
+first (``already_folded``): a replay of a folded batch is a NO-OP. The
+ledger is one row per folded batch — kilobytes over the life of a
+store.
 """
 
 from __future__ import annotations
@@ -29,17 +44,17 @@ import contextlib
 import os
 import socket
 import time
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-# One target for every sized write in the LSM family (ADVICE r15): the
-# compactors' target_file_mb defaults AND the append/build increment
-# sizing derive from here, so an operator compacting at the default
-# never gets increments sized to a different target, and the constants
-# cannot drift apart. Scale-adaptive by construction — a tiny batch
-# lands 1 file, a 100 GB batch lands ~800 — not tuned to local cores.
+# One target for every sized write in the LSM family (ADVICE r15):
+# builds, appends and folds all size through ``write_sized``, so a fold
+# never re-cuts increments to a different target than the append that
+# wrote them. Scale-adaptive by construction — a tiny batch lands 1
+# file, a 100 GB batch lands ~800 — not tuned to local cores.
 DEFAULT_TARGET_FILE_MB = 128
 
 # How long a streaming loop's store append waits out a lease held by an
@@ -140,6 +155,100 @@ def complete_view(
     return out
 
 
+@dataclass(frozen=True)
+class Table:
+    """One store table's write decisions, named once per store and used
+    by its build, its appends and its fold alike:
+
+    - ``cols`` / ``key``: the fold's projection and dedupe key. The
+      only duplicates a fold can see are bit-identical rows from a
+      crashed prior fold's swap-but-not-drop window (the ledger makes
+      replay-after-fold a no-op, and re-appending an EXISTING id is a
+      documented contract violation), so any per-key pick is safe;
+    - ``row_bytes``: one row's on-disk estimate, what a build or an
+      append sizes from before its bytes exist (a fold re-sizes from
+      the tier's real bytes);
+    - the layout: ``sort`` keys → range-partitioned and sorted on
+      them, so parquet min/max row-group stats prune point lookups and
+      equality joins on the key; ``cells`` > 0 → ``partitionBy("cell")``
+      with each task holding whole ``(cell, xxhash64(key) mod
+      files_per_cell)`` groups, so a cell directory gets at most
+      ``files_per_cell`` files and the one-directory-per-cell static
+      PartitionFilter pruning holds; neither → plain ``repartition(n)``.
+    """
+
+    name: str
+    cols: tuple[str, ...]
+    key: tuple[str, ...]
+    row_bytes: int
+    sort: tuple[str, ...] = ()
+    cells: int = 0
+
+
+def write_sized(
+    table: Table, df: DataFrame, dst: str, mode: str, est_bytes: int
+) -> None:
+    """Write ``df`` to ``dst`` in ``table``'s layout, one file per
+    ``DEFAULT_TARGET_FILE_MB`` of ``est_bytes`` (per cell for the cell
+    layout; floor 1). Unsized, a write emits one file per input
+    partition (× cell) — measured 512 code files for ONE 12.5k-row
+    index append — whose listing and open cost every later screen and
+    serve scan pays until a fold."""
+    target = DEFAULT_TARGET_FILE_MB * 1024 * 1024
+    n = max(1, -(-int(est_bytes) // max(1, table.cells) // target))
+    if table.cells:
+        w = df.repartition(
+            F.col("cell"), F.pmod(F.xxhash64(*table.key), F.lit(n))
+        ).write.partitionBy("cell")
+    elif table.sort:
+        w = (
+            df.repartitionByRange(n, *table.sort)
+            .sortWithinPartitions(*table.sort)
+            .write
+        )
+    else:
+        w = df.repartition(n).write
+    w.mode(mode).parquet(dst)
+
+
+def destination(
+    path: str, table: str, batch_id: int | None, build: bool = False
+) -> tuple[str, str]:
+    """(dir, mode) of a write to ``table``: the base in ``overwrite``
+    mode for a ``build``; for an append, the batch's own
+    ``<table>_inc/b=<id>`` in ``overwrite`` mode when it is versioned
+    — a foreachBatch replay overwrites itself, which turns
+    at-least-once into exactly-once — or the base in ``append`` mode
+    for the ad-hoc one-shot path (replaying THAT duplicates, which is
+    why the streaming loops always version)."""
+    if build or batch_id is None:
+        return os.path.join(path, table), "overwrite" if build else "append"
+    inc = os.path.join(path, f"{table}_inc", f"b={int(batch_id)}")
+    return inc, "overwrite"
+
+
+def src_batch(batch_id: int | None):
+    """The ``src_batch`` provenance column of a write: the batch id, or
+    -1 for seed rows and ad-hoc appends. The stores' screens filter on
+    it to exclude a replayed batch's own first attempt."""
+    return F.lit(-1 if batch_id is None else int(batch_id)).cast("long")
+
+
+def read_meta(spark: SparkSession, path: str) -> dict:
+    """A store's one-row ``meta`` table as a dict."""
+    return spark.read.parquet(os.path.join(path, "meta")).first().asDict()
+
+
+def write_meta(
+    spark: SparkSession, path: str, meta: dict, schema: str
+) -> None:
+    """Overwrite a store's one-row ``meta`` table (``schema`` lists the
+    dict's fields in order)."""
+    spark.createDataFrame([tuple(meta.values())], schema).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(path, "meta"))
+
+
 def _jvm_fs(spark: SparkSession, p: str):
     from py4j.java_gateway import java_import
 
@@ -226,9 +335,7 @@ def drop_inc_batches(
     never saw (the ADVICE r12 double-count window)."""
     jvm, fs = _jvm_fs(spark, path)
     for b in batch_ids:
-        fs.delete(
-            jvm.Path(os.path.join(path, f"{table}_inc", f"b={int(b)}")), True
-        )
+        fs.delete(jvm.Path(destination(path, table, b)[0]), True)
     # an increments root emptied of its last batch dir is removed too,
     # so the tiered readers' existence probe stays meaningful
     inc_root = jvm.Path(os.path.join(path, f"{table}_inc"))
@@ -253,9 +360,15 @@ def list_inc_batches(spark: SparkSession, path: str, table: str) -> set[int]:
     return out
 
 
-def drop_ledger(spark: SparkSession, path: str) -> None:
-    """Remove the fold ledger — rebuild-in-place resets it together
-    with the increment tiers (one helper, both stores, no drift)."""
+def reset(spark: SparkSession, path: str, tables) -> None:
+    """Rebuild-in-place starts from a clean tier map: drop every
+    table's increment dirs and the fold ledger of any prior
+    incarnation. Every store's build runs this; without it a rebuilt
+    store serves the old increments on top of its new base, and the
+    stale ledger silently turns a fresh batch that reuses a folded id
+    into a no-op."""
+    for t in tables:
+        drop_inc(spark, path, t)
     jvm, fs = _jvm_fs(spark, path)
     fs.delete(jvm.Path(os.path.join(path, "folded_batches")), True)
 
@@ -272,6 +385,19 @@ def folded_batches(spark: SparkSession, path: str) -> set[int]:
     except AnalysisException:
         return set()
     return {r["batch_id"] for r in rows}
+
+
+def already_folded(
+    spark: SparkSession, path: str, batch_id: int | None
+) -> bool:
+    """The replay-after-fold guard (code-review r12) every versioned
+    append runs first: a batch a past compaction already folded has
+    its ROWS in the base (``src_batch`` provenance preserved) and only
+    its increment dirs gone — re-appending it would serve duplicates,
+    so its replay must be a no-op."""
+    return batch_id is not None and int(batch_id) in folded_batches(
+        spark, path
+    )
 
 
 def record_folded(
@@ -301,6 +427,53 @@ def record_folded(
     spark.createDataFrame(
         [(int(b),) for b in sorted(batch_ids)], "batch_id long"
     ).write.mode("append").parquet(os.path.join(path, "folded_batches"))
+
+
+def fold(
+    spark: SparkSession, path: str, table: Table, folding: set[int]
+) -> tuple[int, int]:
+    """Fold one table: its base ∪ the COMPLETE increment batches
+    ``folding`` (``complete_view`` — torn batches stay on disk for
+    their replay), deduped on the table's key (so a crashed prior
+    fold's swap-but-not-drop window self-heals on re-run), sized from
+    the tier's real bytes and written in the table's layout through
+    the staged ``swap_dir``. The increment dirs stay until
+    ``finish_fold``. Returns (files_before, files_after), increments
+    counted before."""
+    before = tier_files(spark, path, table.name)
+    est = tier_bytes(spark, path, table.name)
+    merged = complete_view(
+        spark, path, table.name, folding, list(table.cols)
+    ).dropDuplicates(list(table.key))
+    swap_dir(
+        spark,
+        path,
+        table.name,
+        lambda tmp: write_sized(table, merged, tmp, "overwrite", est),
+    )
+    return before, data_files(spark, os.path.join(path, table.name))
+
+
+def finish_fold(
+    spark: SparkSession,
+    path: str,
+    lease_token: str,
+    folding: set[int],
+    tables,
+) -> None:
+    """The fold's destructive tail, once every ``fold`` swap landed.
+    FENCE first: a maintainer that stalled past staleness and lost
+    its lease to a takeover aborts here — the swaps are key-deduped
+    and self-healing, the increment drop is the one irreversible act.
+    Ledger BEFORE the increment drops: a crash in between leaves
+    batches marked folded whose increments still exist — readers see
+    transient duplicates the next fold's key dedupe heals, and the
+    append-side no-op verdict is already right. Only the FOLDED batch
+    dirs drop; torn ones stay for their replay."""
+    verify_lease(spark, path, lease_token)
+    record_folded(spark, path, folding)
+    for t in tables:
+        drop_inc_batches(spark, path, t, folding)
 
 
 LEASE_FILE = "_maintenance_lease"

@@ -18,7 +18,11 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import tempfile
+import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -116,6 +120,23 @@ def _anchored_audit_crossjoin(out: DataFrame, audit: DataFrame) -> DataFrame:
         *audit.columns,
     )
     return combined.unionByName(anchor)
+
+
+def _fresh_scratch_dir(prefix: str) -> str:
+    """A new temp dir for a lifecycle row's persisted store, after
+    reaping PRIOR runs' dirs of the same prefix: the returned frame
+    reads the new dir lazily, so only the NEXT run can clean it, and
+    repeated runs of a row must not accumulate stores in the temp dir.
+    The reap is age-gated to one hour, so a concurrent invocation's
+    live store (or this process's still-unevaluated previous frame) is
+    never deleted mid-flight."""
+    for old in glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*")):
+        try:
+            if time.time() - os.path.getmtime(old) > 3600:
+                shutil.rmtree(old, ignore_errors=True)
+        except OSError:
+            pass
+    return tempfile.mkdtemp(prefix=prefix)
 
 
 # ---------------------------------------------------------------------------
@@ -2800,8 +2821,6 @@ def q_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit-at-plan-time rows (scripts/audit_plans.py,
     scripts/audit_static_broadcasts.py); the persisted read path's
     plan shape is pinned by tests/test_ann_index.py instead."""
-    import tempfile
-
     from sales_forecast_pyspark_spark.llmdata import (
         append_to_ivfpq_index,
         build_ivfpq_index,
@@ -2814,26 +2833,7 @@ def q_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = spread_scan(read_table(spark, sf_dir, "embeddings"), "vec_id")
-    # reap PRIOR checks' index dirs before building this one (the
-    # returned frame reads the new dir lazily, so the current dir can
-    # only be cleaned by the NEXT run) — repeated driver checks must
-    # not accumulate indexes in /tmp (code-review r12). AGE-GATED to
-    # one hour: a concurrent invocation's live index (or this
-    # process's still-unevaluated previous frame) must not be deleted
-    # mid-flight (code-review r12, second pass)
-    import glob
-    import shutil
-    import time as _time
-
-    for old in glob.glob(
-        os.path.join(tempfile.gettempdir(), "spark_ivfpq_lifecycle_*")
-    ):
-        try:
-            if _time.time() - os.path.getmtime(old) > 3600:
-                shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass
-    path = tempfile.mkdtemp(prefix="spark_ivfpq_lifecycle_") + "/idx"
+    path = _fresh_scratch_dir("spark_ivfpq_lifecycle_") + "/idx"
     build_ivfpq_index(emb.filter(F.col("vec_id") % 5 != 0), path)
     append_to_ivfpq_index(emb.filter(F.col("vec_id") % 5 == 0), path)
     q = emb.filter(F.col("vec_id") < 20)
@@ -2884,11 +2884,6 @@ def q_minhash_store_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     by tests/test_dedup_store.py instead. Like the sibling, it is not
     benched — its dominant stage (corpus signature build + bucket
     join) is the one `near_dedup_minhash` already prices."""
-    import glob
-    import shutil
-    import tempfile
-    import time as _time
-
     from sales_forecast_pyspark_spark.llmdata.dedup import minhash_near_dedup
     from sales_forecast_pyspark_spark.llmdata.dedup_store import (
         append_to_minhash_store,
@@ -2896,19 +2891,7 @@ def q_minhash_store_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         screen_against_minhash_store,
     )
 
-    # age-gated reap of PRIOR checks' store dirs (same discipline as
-    # ann_index_lifecycle): repeated driver checks must not accumulate
-    # stores in /tmp, and a concurrent invocation's live store must
-    # not be deleted mid-flight
-    for old in glob.glob(
-        os.path.join(tempfile.gettempdir(), "spark_mhstore_lifecycle_*")
-    ):
-        try:
-            if _time.time() - os.path.getmtime(old) > 3600:
-                shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass
-    path = tempfile.mkdtemp(prefix="spark_mhstore_lifecycle_") + "/store"
+    path = _fresh_scratch_dir("spark_mhstore_lifecycle_") + "/store"
 
     docs = spread_scan(
         read_table(spark, sf_dir, "documents").select("doc_id", "text"),
@@ -3040,11 +3023,6 @@ def q_semantic_dedup_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     both siblings it is not benched — its dominant stages (seeded
     KMeans fits + probe joins) are the ones `ann_ivfpq_topk` and
     `ann_index_lifecycle` already price."""
-    import glob
-    import shutil
-    import tempfile
-    import time as _time
-
     from sales_forecast_pyspark_spark.llmdata.ann_index import (
         append_to_ivfpq_index,
         build_ivfpq_index,
@@ -3052,19 +3030,7 @@ def q_semantic_dedup_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sales_forecast_pyspark_spark.llmdata.similarity import cosine_topk
 
-    # age-gated reap of PRIOR checks' index dirs (same discipline as
-    # the sibling lifecycles): repeated driver checks must not
-    # accumulate stores in /tmp, and a concurrent invocation's live
-    # index must not be deleted mid-flight
-    for old in glob.glob(
-        os.path.join(tempfile.gettempdir(), "spark_semidx_lifecycle_*")
-    ):
-        try:
-            if _time.time() - os.path.getmtime(old) > 3600:
-                shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass
-    path = tempfile.mkdtemp(prefix="spark_semidx_lifecycle_") + "/idx"
+    path = _fresh_scratch_dir("spark_semidx_lifecycle_") + "/idx"
 
     emb = spread_scan(read_table(spark, sf_dir, "embeddings"), "vec_id")
     seed = emb.filter(F.col("vec_id") % 5 != 0)

@@ -3,7 +3,7 @@ point over the r13 policy surface (VERDICT r12 asks #3/#4):
 
     python scripts/store_maintenance.py PATH --kind {index,minhash,fp}
         [--max-inc-batches 16] [--max-inc-bytes BYTES]
-        [--target-file-mb 128] [--dry-run]
+        [--dry-run]
         [--triad MH_STORE INDEX_PATH]   # with --kind fp
 
 Consults ``lsm.should_compact`` over the store's tables and runs the
@@ -77,7 +77,6 @@ def maintain(
     kind: str,
     max_inc_batches: int = 16,
     max_inc_bytes: int | None = None,
-    target_file_mb: int = 128,
     dry_run: bool = False,
     tune_n_probe: bool = True,
     recall_target: float = 0.9,
@@ -113,12 +112,7 @@ def maintain(
             "minhash": compact_minhash_store,
             "fp": compact_fp_store,
         }[kind]
-        out["files"] = {
-            t: list(c)
-            for t, c in compactor(
-                spark, path, target_file_mb=target_file_mb
-            ).items()
-        }
+        out["files"] = {t: list(c) for t, c in compactor(spark, path).items()}
         out["compacted"] = True
     # each store's rebuild-class verdict rides along: drift for the
     # index, screening-load densification for the MinHash store — both
@@ -147,7 +141,6 @@ def main() -> int:
     ap.add_argument("--kind", choices=list(TABLES), required=True)
     ap.add_argument("--max-inc-batches", type=int, default=16)
     ap.add_argument("--max-inc-bytes", type=int, default=None)
-    ap.add_argument("--target-file-mb", type=int, default=128)
     ap.add_argument("--dry-run", action="store_true")
     ap.add_argument("--no-tune", action="store_true")
     ap.add_argument("--recall-target", type=float, default=0.9)
@@ -176,7 +169,6 @@ def main() -> int:
             args.kind,
             max_inc_batches=args.max_inc_batches,
             max_inc_bytes=args.max_inc_bytes,
-            target_file_mb=args.target_file_mb,
             dry_run=args.dry_run,
             tune_n_probe=not args.no_tune,
             recall_target=args.recall_target,

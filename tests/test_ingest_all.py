@@ -76,6 +76,36 @@ def test_fp_store_lifecycle(spark, corpus, tmp_path):
     assert append_to_fp_store(fresh, path, batch_id=3) == 0  # folded
 
 
+def test_fp_store_rebuild_resets_increments_and_ledger(
+    spark, corpus, tmp_path
+):
+    """A rebuild in place starts from a clean tier map, as the MinHash
+    and index builds do: an old incarnation's unfolded increments must
+    not be served on top of the new base, and its fold ledger must not
+    turn a fresh batch that reuses a folded id into a no-op."""
+    from sales_forecast_pyspark_spark.llmdata.ingest import _read_fp_store
+
+    path = str(tmp_path / "fp_rebuild")
+    seed = corpus.filter(F.col("doc_id") < 10).select("doc_id", "text")
+
+    def batch(lo: int):
+        return corpus.filter(
+            (F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 5)
+        ).select((F.col("doc_id") + 50_000).alias("doc_id"), "text")
+
+    assert build_fp_store(seed, path) == 10
+    assert append_to_fp_store(batch(100), path, batch_id=3) == 5
+    compact_fp_store(spark, path)
+    assert append_to_fp_store(batch(200), path, batch_id=4) == 5  # unfolded
+    assert _read_fp_store(spark, path).count() == 20
+
+    assert build_fp_store(seed, path) == 10
+    assert _read_fp_store(spark, path).count() == 10
+    # batch 3 was folded by the OLD incarnation; the new one admits it
+    assert append_to_fp_store(batch(100), path, batch_id=3) == 5
+    assert _read_fp_store(spark, path).count() == 15
+
+
 @pytest.mark.slow
 def test_triad_loop_verdicts_and_exactly_once(spark, corpus, tmp_path):
     """One engineered batch, four dedup classes, each with a distinct

@@ -276,3 +276,68 @@ def test_store_maintenance_cli_maintains_both_stores(spark, tmp_path):
     finally:
         lsm.release_lease(spark, idx)
 
+
+
+def test_write_sized_layouts_and_destination(spark, tmp_path):
+    """The one store-table writer (``lsm.write_sized``) on tiny frames,
+    one table per layout: range-sorted files come out in key order,
+    the cell layout writes at most ``files_per_cell`` files per cell
+    directory, the plain layout its sized file count; and the
+    destination rule picks the base or the batch's increment dir with
+    the right mode."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "store")
+    target = lsm.DEFAULT_TARGET_FILE_MB * 1024 * 1024
+    df = spark.createDataFrame(
+        [(i, i % 5) for i in range(200)], "neighbor_id long, cell int"
+    ).repartition(8)
+
+    def files(p: str) -> list[str]:
+        return sorted(
+            glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True)
+        )
+
+    # range-sorted, sized to three target files: three files whose
+    # ranges are disjoint and ascending, each sorted within
+    key = ("neighbor_id",)
+    ranged = lsm.Table("r", key, key, 1, key)
+    lsm.write_sized(
+        ranged, df.select(*key), f"{d}/r", "overwrite", 3 * target
+    )
+    chunks = sorted(
+        (
+            pq.read_table(f).column("neighbor_id").to_pylist()
+            for f in files(f"{d}/r")
+        ),
+        key=lambda c: c[0],
+    )
+    assert len(chunks) == 3
+    assert [x for c in chunks for x in c] == list(range(200))
+
+    # cell layout, two target files per cell: partitionBy(cell) dirs,
+    # each holding at most two files, every row kept
+    cells = lsm.Table("c", ("neighbor_id", "cell"), key, 1, cells=5)
+    lsm.write_sized(cells, df, f"{d}/c", "overwrite", 10 * target)
+    cell_dirs = sorted(glob.glob(f"{d}/c/cell=*"))
+    assert len(cell_dirs) == 5
+    assert all(1 <= len(files(c)) <= 2 for c in cell_dirs)
+    assert spark.read.parquet(f"{d}/c").count() == 200
+
+    # plain layout: repartition(n) to the sized count; a tiny estimate
+    # still writes one file
+    plain = lsm.Table("p", key, key, 1)
+    lsm.write_sized(plain, df, f"{d}/p", "overwrite", 2 * target)
+    assert len(files(f"{d}/p")) == 2
+    lsm.write_sized(plain, df, f"{d}/p1", "overwrite", 1)
+    assert len(files(f"{d}/p1")) == 1
+
+    assert lsm.destination(d, "codes", None) == (f"{d}/codes", "append")
+    assert lsm.destination(d, "codes", 7) == (
+        os.path.join(d, "codes_inc", "b=7"), "overwrite"
+    )
+    assert lsm.destination(d, "codes", None, build=True) == (
+        f"{d}/codes", "overwrite"
+    )
