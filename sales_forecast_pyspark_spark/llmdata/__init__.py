@@ -30,7 +30,6 @@ from sales_forecast_pyspark_spark.llmdata.dedup_store import (
     minhash_store_stats,
     screen_against_minhash_store,
     should_rescale_bands,
-    stream_ingest_dedup,
 )
 from sales_forecast_pyspark_spark.llmdata.ann_index import (
     append_to_ivfpq_index,
@@ -41,8 +40,6 @@ from sales_forecast_pyspark_spark.llmdata.ann_index import (
     recommend_n_probe,
     screen_against_ivfpq_index,
     should_rebuild,
-    stream_append_to_ivfpq_index,
-    stream_ingest_semantic_dedup,
 )
 from sales_forecast_pyspark_spark.llmdata.ingest import (
     append_to_fp_store,
@@ -82,7 +79,6 @@ __all__ = [
     "minhash_store_stats",
     "screen_against_minhash_store",
     "should_rescale_bands",
-    "stream_ingest_dedup",
     "build_ivfpq_index",
     "compact_ivfpq_index",
     "ivfpq_index_stats",
@@ -90,8 +86,6 @@ __all__ = [
     "recommend_n_probe",
     "screen_against_ivfpq_index",
     "should_rebuild",
-    "stream_append_to_ivfpq_index",
-    "stream_ingest_semantic_dedup",
     "chunk_documents",
     "connected_components",
     "cosine_topk",

@@ -20,8 +20,8 @@ shared ``_ivfpq_fit`` build stage, similarity.py):
   | ``stats_live`` (+ ``stats_live_inc/b=<id>``) | (cell, n_rows, sum_qerr) | the EVOLVING additive tier every append folds its contribution into, so the drift report needs zero data scan |
 
 - ``codes_inc/b=<id>`` / ``vectors_inc/b=<id>`` are the batch-keyed
-  OVERWRITE-mode increments of the streaming ingest
-  (``stream_append_to_ivfpq_index`` → ``append_to_ivfpq_index(...,
+  OVERWRITE-mode increments of the streaming ingest (the triad loop,
+  ``ingest.stream_ingest_dedup_all`` → ``append_to_ivfpq_index(...,
   batch_id=)``) — replays overwrite themselves, which is what turns
   foreachBatch's at-least-once into exactly-once; readers union base ∪
   increments transparently and ``compact_ivfpq_index`` is the LSM
@@ -636,8 +636,8 @@ def append_to_ivfpq_index(
     in its own overwrite-mode increment directories in the base's
     layout (``lsm.destination``, ``_tables``), so a REPLAY of the same
     batch overwrites itself instead of double-appending — the
-    guarantee ``stream_append_to_ivfpq_index`` needs for exactly-once
-    ingest. Without ``batch_id`` the rows append into the base tables
+    guarantee the triad loop (``ingest.stream_ingest_dedup_all``)
+    needs for exactly-once ingest. Without ``batch_id`` the rows append into the base tables
     directly (the ad-hoc one-shot flow). ``meta.n_vectors`` is
     recomputed after the write rather than incremented, so it is
     correct under replays and torn appends alike.
@@ -664,7 +664,7 @@ def append_to_ivfpq_index(
     concurrent compaction fails loudly at acquire instead of folding
     increments out from under the append (VERDICT r12 ask #4a).
     ``lease_retry_s`` bounds a retry-with-backoff wait at acquire
-    (ADVICE r13): the streaming loops pass ``lsm.STREAM_LEASE_RETRY_S``
+    (ADVICE r13): the triad loop passes ``lsm.STREAM_LEASE_RETRY_S``
     so an external cron compaction holding the lease between
     micro-batches delays the append instead of crashing the
     StreamingQuery."""
@@ -793,61 +793,6 @@ def _append_locked(
     lsm.write_meta(spark, path, meta, _META_SCHEMA)
     enc.unpersist()
     return n_new
-
-
-def stream_append_to_ivfpq_index(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    auto_compact_after: int | None = 64,
-):
-    """Continuous ingest into a persisted IVF-PQ index — the
-    production loop that keeps the index current between rebuilds:
-    a stream of (id, embedding) rows lands batch-by-batch through
-    ``append_to_ivfpq_index(..., batch_id=)``.
-
-    Exactly-once without a transactional sink: ``foreachBatch`` is
-    at-least-once (a failure between the sink write and the
-    checkpoint commit replays the batch), and plain parquet append
-    would double-ingest on replay — so every batch writes its own
-    overwrite-mode increment directory keyed by ``batch_id``, and a
-    replay overwrites itself (the same versioned-state design as
-    ``maintain_partials_stream``; replay idempotence is test-pinned).
-    Serve-path cost of the increments tier is bounded by running
-    ``compact_ivfpq_index`` at maintenance cadence (folds increments
-    into the base and restores file sizing), and ``ivfpq_index_stats``
-    remains the rebuild trigger when the streamed distribution drifts
-    from the codebooks.
-
-    ``auto_compact_after=N`` (default 64) runs ``compact_ivfpq_index``
-    once any table accumulates N increment dirs (``lsm.auto_compact``)
-    — long-running ingest bounds its own serve-path listing cost
-    instead of relying on an operator hand-scheduling folds (VERDICT
-    r12 ask #4b; ``None`` disables, which tier-depth-comparing
-    rehearsals use). The append waits up to
-    ``lsm.STREAM_LEASE_RETRY_S`` for a lease an EXTERNAL maintainer
-    holds.
-
-    Uses availableNow (``lsm.start_ingest_loop``); returns the started
-    StreamingQuery (caller awaits/stops)."""
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        append_to_ivfpq_index(
-            batch_df,
-            path,
-            id_col=id_col,
-            vec_col=vec_col,
-            batch_id=batch_id,
-            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
-        )
-        lsm.auto_compact(
-            batch_df.sparkSession, path, INDEX_TABLES, auto_compact_after,
-            compact_ivfpq_index,
-        )
-
-    return lsm.start_ingest_loop(stream_df, _ingest, checkpoint_dir)
 
 
 def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
@@ -1150,9 +1095,8 @@ def _semantic_stage(
     n_probe: int,
 ) -> DataFrame:
     """The embedding-cosine tier of one (doc_id, embedding)
-    micro-batch — the stage ``stream_ingest_semantic_dedup`` and
-    ``ingest.stream_ingest_dedup_all`` both run, the twin of
-    ``dedup_store._text_stage``. (1) Screen the batch against the
+    micro-batch — stage 3 of ``ingest.stream_ingest_dedup_all``, the
+    twin of ``dedup_store._text_stage``. (1) Screen the batch against the
     serving index with its own ids excluded (the replay guard);
     zero-norm rows have no direction and match nothing, and an empty
     batch screens to nothing. (2) Mine EXACT in-batch pairs
@@ -1203,145 +1147,3 @@ def _semantic_stage(
         distance_threshold=(2.0 * (1.0 - threshold)) ** 0.5,
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
     return _peel(pairs, dup_of_index)
-
-
-ZERO_VEC_MARKER = "_zero_vec_admitted"
-
-
-def _zero_vec_admitted_batch(spark: SparkSession, path: str) -> int | None:
-    """Batch id that first published a zero vector through the semantic
-    loop (None if never). Zero NORM means the all-zeros vector, so all
-    zero-norm rows are exact copies of each other — one kilobyte marker
-    file IS the exact-equality dedup tier for the entire class, with no
-    corpus-scale lookup (ADVICE r13: without it, repeated zero vectors
-    survived every batch forever — an unbounded bypass)."""
-    import contextlib as _ctx
-
-    jvm, fs = lsm._jvm_fs(spark, path)
-    p = jvm.Path(os.path.join(path, ZERO_VEC_MARKER))
-    with _ctx.suppress(Exception):
-        if fs.exists(p):
-            stream = fs.open(p)
-            body = bytes(stream.readAllBytes()).decode(errors="replace")
-            stream.close()
-            return int(body.split()[0])
-    return None
-
-
-def _mark_zero_vec_admitted(
-    spark: SparkSession, path: str, batch_id: int
-) -> None:
-    """Record which batch published the one-and-only zero vector
-    (create-once — a replay of that batch sees its own id and stays
-    bit-stable; later batches see a foreign id and drop theirs)."""
-    import contextlib as _ctx
-
-    jvm, fs = lsm._jvm_fs(spark, path)
-    p = jvm.Path(os.path.join(path, ZERO_VEC_MARKER))
-    with _ctx.suppress(Exception):
-        lsm.create_new(fs, p, f"{int(batch_id)}\n")
-
-
-def stream_ingest_semantic_dedup(
-    stream_df: DataFrame,
-    path: str,
-    survivors_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    k: int = 5,
-    n_probe: int = 6,
-    auto_compact_after: int | None = 64,
-):
-    """The composed SEMANTIC-dedup ingest loop: per micro-batch,
-    (1)+(2) ``_semantic_stage`` — screen the batch against every
-    vector already admitted to the index (own ids excluded), then drop
-    in-batch near-dups under sequential-greedy semantics over EXACT
-    pairs — plus the zero-vector tier below, (3) append the survivors
-    to the index under the batch id (idempotent versioned increments,
-    fold-ledger replay guard, drift stats maintained; the append waits
-    up to ``lsm.STREAM_LEASE_RETRY_S`` for an external maintainer's
-    lease), (4) publish the surviving rows to ``survivors_dir/b=<id>``
-    (overwrite — idempotent). Exactly-once end to end by the same
-    argument as the MinHash loop; the admitted survivors are
-    immediately SERVABLE via ``query_ivfpq_index`` — dedup store and
-    ANN serving index are one structure.
-
-    Zero-norm vectors have no direction and cannot be cosine-screened,
-    but zero norm means THE all-zeros vector, so exact equality still
-    means something — and the exact-equality tier for the whole class
-    is one marker file (ADVICE r13; the prior pure bypass let repeated
-    zero vectors publish every batch forever, unbounded). Per batch:
-    first-wins in-batch (min id publishes, the rest drop), and the
-    marker under the index path records which batch published — later
-    batches drop ALL their zero-norm rows, while a replay of the
-    recording batch sees its own id and republishes identically
-    (bit-stable). Zero-norm rows are still never ADMITTED to the index
-    (no direction to serve; append drops them, build parity). Replays
-    of the cosine path are bit-stable because survivors are mutually
-    non-near-dup by stage (2), so on re-delivery each survivor's only
-    store match above threshold is itself — excluded by id.
-
-    ``auto_compact_after`` as in ``stream_append_to_ivfpq_index``.
-    Uses availableNow; returns the started StreamingQuery.
-
-    Batch ceiling: the screen and the in-batch pair mine each
-    materialize the batch driver-side, so a micro-batch over
-    ``SEARCH_MAX_ROWS`` rows raises ``ValueError`` and fails the query.
-    The recovery is a smaller trigger (e.g. ``maxFilesPerTrigger`` on
-    the source) that keeps every micro-batch under the ceiling; a batch
-    already in the checkpoint's offset log replays at its logged size."""
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        b = batch_df.select(
-            F.col(id_col).alias("doc_id"), F.col(vec_col).alias("embedding")
-        )
-        b.cache()
-        losers = _semantic_stage(spark, path, b, threshold, k, n_probe)
-        # zero-norm exact-equality tier (ADVICE r13): all zero-norm
-        # rows are the same (all-zeros) vector — first id in THIS
-        # batch wins, and the marker file closes the class across
-        # batches (its recording batch republishes on replay; any
-        # other batch drops all of them)
-        zero_ids = b.filter(l2_norm("embedding") <= 0).select("doc_id")
-        zero_ids.cache()
-        zero_losers = zero_ids.limit(0)
-        publishes_zero = False
-        if zero_ids.count():
-            admitted_by = _zero_vec_admitted_batch(spark, path)
-            if admitted_by is None or admitted_by == int(batch_id):
-                keep = zero_ids.orderBy("doc_id").limit(1)
-                zero_losers = zero_ids.join(keep, "doc_id", "left_anti")
-                publishes_zero = True
-            else:
-                zero_losers = zero_ids
-        survivors = b.join(losers, "doc_id", "left_anti").join(
-            zero_losers, "doc_id", "left_anti"
-        )
-        survivors.cache()
-        append_to_ivfpq_index(
-            survivors,
-            path,
-            id_col="doc_id",
-            batch_id=batch_id,
-            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
-        )
-        # the marker lands AFTER the publish (a crash in between
-        # replays into the marker-less branch and re-records —
-        # idempotent)
-        survivors.withColumnRenamed("doc_id", "vec_id").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(survivors_dir, f"b={int(batch_id)}"))
-        if publishes_zero:
-            _mark_zero_vec_admitted(spark, path, batch_id)
-        survivors.unpersist()
-        zero_ids.unpersist()
-        b.unpersist()
-        lsm.auto_compact(
-            spark, path, INDEX_TABLES, auto_compact_after,
-            compact_ivfpq_index,
-        )
-
-    return lsm.start_ingest_loop(stream_df, _ingest, checkpoint_dir)

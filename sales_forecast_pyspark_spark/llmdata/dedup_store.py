@@ -51,16 +51,10 @@ row):
   tier's ONE stage function: sign the micro-batch once, screen it
   against the store (``_screen_store``, own batch excluded), and peel
   its verified in-batch pairs under EXACT sequential-greedy semantics
-  (``_peel`` → ``_greedy_losers``). ``stream_ingest_dedup`` and the
-  triad loop (``ingest.stream_ingest_dedup_all``) both call it; the
-  semantic tier's twin is ``ann_index._semantic_stage``.
-
-- ``stream_ingest_dedup(stream_df, path, survivors_dir, checkpoint)``
-  is the composed loop: per micro-batch, ``_text_stage`` → first-wins
-  among zero-token copies (``_first_wins``) → append survivors to the
-  store → publish survivors to ``survivors_dir/b=<id>`` (overwrite —
-  idempotent). Exactly-once end to end without a transactional sink,
-  by the same argument as ``stream_append_to_ivfpq_index``.
+  (``_peel`` → ``_greedy_losers``). Its streaming caller is stage 2
+  of the one ingest loop, ``ingest.stream_ingest_dedup_all``, which
+  admits the survivors from the cached signatures (``_append_signed``);
+  the semantic tier's twin is ``ann_index._semantic_stage``.
 
 Every mutating entry point (build / append / compact) takes the
 store's single-maintainer lease (``lsm.maintenance_lease``), so the
@@ -275,8 +269,8 @@ def screen_against_minhash_store(
     # here could never be unpersisted and a long-lived driver screening
     # many batches would accrete one pinned frame per call (code-review
     # r12). The cost is signing the batch twice inside the one action —
-    # batches are small by contract; the streaming loops, which screen
-    # at cadence, go through _text_stage's explicitly managed cache.
+    # batches are small by contract; the triad loop, which screens at
+    # cadence, goes through _text_stage's explicitly managed cache.
     bsig = _sig_frame(batch, id_col, text_col, meta["n"], meta["num_hashes"])
     return _screen_store(
         spark,
@@ -634,9 +628,8 @@ def _text_stage(
     threshold: float,
     batch_id: int,
 ):
-    """The MinHash tier of one (doc_id, text) micro-batch — the stage
-    ``stream_ingest_dedup`` and ``stream_ingest_dedup_all`` both run.
-    Signs the batch ONCE with the store's geometry and caches the
+    """The MinHash tier of one (doc_id, text) micro-batch — stage 2 of
+    ``ingest.stream_ingest_dedup_all``. Signs the batch ONCE with the store's geometry and caches the
     signatures and the zero-token fingerprints, screens the store with
     the batch's own prior attempt excluded (``src_batch`` — the replay
     guard), and peels the verified in-batch pairs (``_peel``).
@@ -646,7 +639,8 @@ def _text_stage(
     caller admits its survivors from them instead of re-shingling,
     then unpersists them — and the store meta. In-batch exact copies
     among zero-token docs are not judged here (they carry no
-    signature); the caller decides them with ``_first_wins``."""
+    signature); the triad's stage 1 has already collapsed them, since
+    identical texts share a whole-text fingerprint."""
     meta = lsm.read_meta(spark, path)
     bsig = _sig_frame(docs, "doc_id", "text", meta["n"], meta["num_hashes"])
     bsig.cache()
@@ -662,91 +656,6 @@ def _text_stage(
         _verified_in_batch_pairs(bsig, meta, threshold), dup_of_store
     )
     return losers, bsig, unsigned, meta
-
-
-def stream_ingest_dedup(
-    stream_df: DataFrame,
-    path: str,
-    survivors_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    auto_compact_after: int | None = 64,
-):
-    """The composed incremental-dedup ingest loop: per micro-batch,
-    (1)+(2a) ``_text_stage`` — screen the batch against everything
-    already accepted (signature estimate for token-bearing docs, exact
-    fingerprint for zero-token docs), then drop in-batch near-dups
-    under EXACT sequential-greedy semantics (``_peel``: store-dropped
-    docs leave the pair graph first, then ``_greedy_losers`` keeps
-    exactly what one-at-a-time ingest would keep on non-transitive
-    chains) — (2b) drop in-batch exact copies among zero-token docs
-    (``_first_wins``), (3) append the survivors to the store from
-    their already-computed signatures, (4) publish the surviving rows
-    to ``survivors_dir/b=<batch_id>``.
-
-    ``threshold`` note: in-batch and store verification both use the
-    SIGNATURE-ESTIMATE Jaccard (~0.09 stderr at the default 32 hashes)
-    — the same doc pair can land on the other side of the threshold
-    than the one-shot ``minhash_near_dedup``'s exact verify would put
-    it (admitted text is never retained, so a tighter estimate means
-    raising ``num_hashes`` at build time).
-
-    ``auto_compact_after=N`` (default 64) folds the increments tier
-    once any table accumulates N batch dirs (``lsm.auto_compact``) —
-    long-running ingest bounds its own listing costs instead of
-    relying on an operator hand-scheduling ``compact_minhash_store``
-    (VERDICT r12 ask #4b); ``None`` disables (rehearsals comparing tier
-    depth use that). The append waits up to
-    ``lsm.STREAM_LEASE_RETRY_S`` for a lease an external maintainer
-    holds.
-
-    Exactly-once end to end without a transactional sink: the store
-    append and the survivors publish are both overwrite-mode keyed by
-    batch_id (replays overwrite themselves), and the screen excludes
-    the current batch's own ``src_batch`` rows, so a replayed batch is
-    judged ONLY against prior state — the same verdict as its first
-    attempt, bit-for-bit (test-pinned). Uses availableNow (drain, then
-    stop); returns the started StreamingQuery."""
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-        )
-        batch_df.cache()
-        losers, bsig, unsigned, meta = _text_stage(
-            spark, path, batch_df, threshold, batch_id
-        )
-        # (2b) same-fp docs share the store verdict, so no graph filter
-        # is needed — either the whole fp group matched the store or none
-        survivors = batch_df.join(losers, "doc_id", "left_anti").join(
-            _first_wins(unsigned), "doc_id", "left_anti"
-        )
-        survivors.cache()
-        _append_signed(
-            spark,
-            bsig.join(survivors.select("doc_id"), "doc_id"),
-            path,
-            meta,
-            batch_id,
-            fps=unsigned.join(survivors.select("doc_id"), "doc_id"),
-            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
-        )
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(survivors_dir, f"b={int(batch_id)}")
-        )
-        survivors.unpersist()
-        unsigned.unpersist()
-        bsig.unpersist()
-        batch_df.unpersist()
-        lsm.auto_compact(
-            spark, path, MINHASH_TABLES, auto_compact_after,
-            compact_minhash_store,
-        )
-
-    return lsm.start_ingest_loop(stream_df, _ingest, checkpoint_dir)
 
 
 def minhash_store_stats(spark: SparkSession, path: str) -> DataFrame:

@@ -3,9 +3,9 @@ legs — exact fingerprint, MinHash text, embedding cosine — over the
 SAME micro-batch, in short-circuit order (VERDICT r13 ask #6).
 
 A real training-corpus pipeline runs all three dedup classes at ingest
-cadence; until r14 that meant wiring three separate ``foreachBatch``
-loops by hand, each re-reading the batch. ``stream_ingest_dedup_all``
-composes them with the cost structure a 100 TB pipeline needs:
+cadence over one stream. ``stream_ingest_dedup_all`` is the engine's
+one streaming dedup loop, with the cost structure a 100 TB pipeline
+needs:
 
 - **Stage order is a cost ladder.** Exact fingerprinting is one md5
   per doc; MinHash signing is shingle+hash work; an index probe is the
@@ -16,10 +16,9 @@ composes them with the cost structure a 100 TB pipeline needs:
   ``exact_dup``, even though the later stages would also flag it).
 - **One stage function per tier.** Stage 2 is
   ``dedup_store._text_stage`` and stage 3 is
-  ``ann_index._semantic_stage`` — the same calls the standalone
-  ``stream_ingest_dedup`` and ``stream_ingest_semantic_dedup`` loops
-  make, so screen, pair and peel code exists once per tier. Only the
-  exact tier (stage 1) and the three-store admission live here.
+  ``ann_index._semantic_stage``, so each tier's screen, pair and peel
+  code lives in its store's module. Only the exact tier (stage 1) and
+  the three-store admission live here.
 - **One batch cache.** The batch is cached once, with its whole-text
   md5, and every stage reads it: the md5 feeds the fp screen, the
   in-batch first-wins AND the fp admission; signatures are computed
@@ -50,13 +49,13 @@ fp-sorted store.
 
 Zero-norm embeddings (no direction) pass the semantic stage
 unjudged and are never admitted to the index (its append drops
-them) — but unlike the standalone semantic loop, repeated copies are
-BOUNDED here by construction: stage 1's whole-text fingerprint
-catches every exact re-offer, which is why this module needs no
-zero-vector marker file. For the same reason the MinHash loop's
-zero-token first-wins tier has no counterpart here: identical
-zero-token texts share a whole-text fp, so stage 1 has already
-collapsed them.
+them), yet repeated copies are BOUNDED by construction: stage 1's
+whole-text fingerprint catches every exact re-offer, so an exact
+re-offer reads ``exact_dup`` whatever its embedding. For the same
+reason stage 2 needs no first-wins step for zero-token texts (no
+shingles, hence no MinHash signature): identical texts share a
+whole-text fp, so stage 1 has already collapsed them, in-batch by
+first-wins and across batches by the fp store.
 """
 
 from __future__ import annotations
@@ -375,7 +374,16 @@ def stream_ingest_dedup_all(
        maintainer's lease) and publish every batch row with its
        verdict to ``survivors_dir/b=<id>`` (overwrite — idempotent).
 
-    Uses availableNow; returns the started StreamingQuery.
+    ``auto_compact_after=N`` (default 64) folds a store once any of
+    its tables holds N increment dirs (``lsm.should_compact``), so
+    long-running ingest bounds its own listing cost; ``None``
+    disables (runs that measure tier depth use that). The fold runs
+    inside the loop's own ``foreachBatch``, so its lease never
+    contends with the appends.
+
+    Uses availableNow (drain everything available, then stop; a
+    deployment swaps in a processing-time trigger); returns the
+    started StreamingQuery.
 
     Batch ceiling: stage 3 materializes its input driver-side, so a
     micro-batch that brings more than ``SEARCH_MAX_ROWS`` rows
@@ -477,11 +485,21 @@ def stream_ingest_dedup_all(
         bsig.unpersist()
         b.unpersist()
 
+        if auto_compact_after is None:
+            return
         for path, tables, compact in (
             (fp_store, FP_TABLES, compact_fp_store),
             (mh_store, MINHASH_TABLES, compact_minhash_store),
             (index_path, INDEX_TABLES, compact_ivfpq_index),
         ):
-            lsm.auto_compact(spark, path, tables, auto_compact_after, compact)
+            if lsm.should_compact(
+                spark, path, tables, max_inc_batches=auto_compact_after
+            ):
+                compact(spark, path)
 
-    return lsm.start_ingest_loop(stream_df, _ingest, checkpoint_dir)
+    return (
+        stream_df.writeStream.foreachBatch(_ingest)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )

@@ -220,7 +220,7 @@ def destination(
     — a foreachBatch replay overwrites itself, which turns
     at-least-once into exactly-once — or the base in ``append`` mode
     for the ad-hoc one-shot path (replaying THAT duplicates, which is
-    why the streaming loops always version)."""
+    why the triad ingest loop always versions)."""
     if build or batch_id is None:
         return os.path.join(path, table), "overwrite" if build else "append"
     inc = os.path.join(path, f"{table}_inc", f"b={int(batch_id)}")
@@ -727,11 +727,11 @@ def should_compact(
 ) -> bool:
     """The compaction POLICY (VERDICT r12 ask #4b): fold when any
     table's increment tier is ≥ ``max_inc_batches`` dirs deep, or when
-    the increments' combined bytes pass ``max_inc_bytes``. Long-running
-    ingest loops consult this after each append (their
-    ``auto_compact_after`` knob) so the increments tier — whose
-    per-file open/footer cost is what degrades the serve path — stays
-    bounded without an operator hand-scheduling folds. Cost: one
+    the increments' combined bytes pass ``max_inc_bytes``. The
+    long-running triad ingest loop consults this for each store after
+    every batch (its ``auto_compact_after`` knob) so the increments
+    tier — whose per-file open/footer cost is what degrades the serve
+    path — stays bounded without an operator hand-scheduling folds. Cost: one
     directory listing per table (no data read). The dir-count trigger
     is the primary signal because listing cost scales with DIRS, not
     bytes; the bytes trigger exists for fat-batch ingests where a few
@@ -748,35 +748,3 @@ def should_compact(
         if total >= max_inc_bytes:
             return True
     return False
-
-
-def auto_compact(
-    spark: SparkSession,
-    path: str,
-    tables: tuple[str, ...],
-    auto_compact_after: int | None,
-    compact,
-) -> None:
-    """The streaming loops' ``auto_compact_after=N`` policy, run after
-    each batch's append: fold with ``compact(spark, path)`` once any of
-    ``tables`` holds N increment dirs (``should_compact``). ``None``
-    disables. The fold runs inside the loop's own single-writer
-    ``foreachBatch``, so the maintenance lease never contends."""
-    if auto_compact_after is not None and should_compact(
-        spark, path, tables, max_inc_batches=auto_compact_after
-    ):
-        compact(spark, path)
-
-
-def start_ingest_loop(stream_df: DataFrame, ingest, checkpoint_dir: str):
-    """Start ``ingest(batch_df, batch_id)`` as a ``foreachBatch`` loop
-    under the availableNow trigger — drain everything available,
-    then stop: the rehearsal-friendly default every streaming ingest
-    loop shares (a deployment swaps in a processing-time trigger).
-    Returns the started StreamingQuery (caller awaits/stops)."""
-    return (
-        stream_df.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -512,8 +512,9 @@ def exact_self_similarity_join(
 ) -> DataFrame:
     """EXACT all-pairs within a Euclidean ``distance_threshold`` over a
     CONTRACT-BOUNDED frame — the drop-in replacement for
-    ``lsh_similarity_join`` in the streaming loops' in-batch peel
-    (VERDICT r14 wrong #1). Same output contract: (id_a, id_b, dist)
+    ``lsh_similarity_join`` in the in-batch peel of the triad loop's
+    semantic stage (``ann_index._semantic_stage``; VERDICT r14 wrong
+    #1). Same output contract: (id_a, id_b, dist)
     with id_a < id_b, strict ``dist < distance_threshold`` on the
     unrounded distance, ``dist`` rounded to 6.
 

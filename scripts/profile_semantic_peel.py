@@ -1,12 +1,13 @@
-"""Per-batch cost decomposition of the semantic ingest loop — the
+"""Per-batch cost decomposition of the semantic dedup stage (stage 3 of
+the triad loop, ``ann_index._semantic_stage``) — the
 measurement behind SCALING.md's r14 finding (index screen 28.4 s /
 in-batch BRP-LSH peel 320.9 s / admission 13.7 s at the 10x decade)
 made re-runnable, so the r15 fix (the exact blocked-GEMM peel,
 ``exact_self_similarity_join``) is graded against the same protocol
 instead of an ad-hoc session.
 
-Replicates one representative micro-batch of the ``semantic_ingest``
-rehearsal leg: a contract-bounded ~25k-row half-dup / half-hash-random
+Replicates one representative micro-batch of the former
+``semantic_ingest`` rehearsal leg: a contract-bounded ~25k-row half-dup / half-hash-random
 batch against an index built on the full embeddings table of ``--dir``
 (the 10x decade at .rehearsal/sf1x: 25k rows vs 20k vectors). Times the
 loop's three stages IN ISOLATION on the same cached batch:

@@ -30,27 +30,15 @@ covered by pytest equivalence at sf0.001 only:
    here via an exceptAll diff at full scale, the same gate the sf0.001
    pytest pins.
 
-4. ``index_ingest`` — exactly-once streaming append into the persisted
-   IVF-PQ index (batch-versioned increments). Claims: the drained index
-   serves exactly what a batch append serves, the O(batches) live-stats
-   report stays bit-equal to the full scan, same-distribution drift
-   reads green.
-5. ``dedup_ingest`` — the composed incremental-dedup loop against a
-   persisted MinHash store over a half-dup / half-constructed-fresh
-   stream. Claims: exact dedup (every re-keyed dup screened, every
-   disjoint-shingle fresh doc survives) and batch-proportional cost.
-6. ``semantic_ingest`` — the composed SEMANTIC-dedup loop against the
-   serving IVF-PQ index over a half-dup / half-hash-random vector
-   stream (VERDICT r13 ask #3). Claims: exact dedup at the 0.9 cosine
-   threshold, bounded ~25k-row micro-batches by contract, and the
-   isolated 500-vector screen cost per decade — the probe-cost growth
-   term measured, not argued.
-7. ``ingest_all`` — the composed TRIAD loop (stream_ingest_dedup_all,
-   VERDICT r13 ask #6) over a four-class engineered stream (exact /
-   text / semantic / fresh, one class per verdict). Claims: per-class
-   verdict exactness — the short-circuit stage order holds under real
-   micro-batching at every decade — plus end-to-end throughput and
-   post-drain increment depth across all three stores.
+4. ``ingest_all`` — the composed TRIAD loop (stream_ingest_dedup_all,
+   VERDICT r13 ask #6; the engine's one streaming dedup loop) over a
+   four-class engineered stream (exact / text / semantic / fresh, one
+   class per verdict). Claims: per-class verdict exactness — the
+   short-circuit stage order holds under real micro-batching at every
+   decade — plus end-to-end throughput and post-drain increment depth
+   across all three stores.
+5. ``dedup_screen_ratio`` — a 500-doc MinHash store screen against
+   the one-shot ``minhash_near_dedup`` it replaces, per decade.
 
 Usage (generate rehearsal data first — scripts/scale_rehearsal.py gen):
 
@@ -282,323 +270,6 @@ def run_partials_fold(spark, sf_dir, files_per_trigger) -> dict:
 
 
 
-def run_index_ingest(spark, sf_dir, files_per_trigger) -> dict:
-    """Streaming ingest into the persisted IVF-PQ index
-    (stream_append_to_ivfpq_index): a same-distribution re-keyed copy
-    of the embeddings table streams into an index built on the
-    originals. Scale claims measured: per-batch cost is flat in corpus
-    size (encode + increment writes touch only the batch), the drained
-    index serves EXACTLY what a batch append of the same rows serves,
-    the O(batches) live-stats report stays bit-equal to the full scan,
-    and the same-distribution drift report is green."""
-    from sales_forecast_pyspark_spark.llmdata import (
-        append_to_ivfpq_index,
-        build_ivfpq_index,
-        ivfpq_index_stats,
-        query_ivfpq_index,
-        stream_append_to_ivfpq_index,
-    )
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # collision-FREE re-key: negative ids can never collide with any
-    # base id at any scale. A fixed positive offset collided with the
-    # 10x generator's own key offsets (base ids reach 9e7) — and the
-    # live-vs-full-scan flag below caught it: duplicate ids fan out the
-    # full scan's vectors ⋈ codes join while the live tier stays right,
-    # so that bit-equality flag doubles as an id-is-key-contract
-    # violation detector.
-    new_rows = emb.select(
-        (-F.col("vec_id") - 1).alias("vec_id"), "embedding"
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_rehearsal_idx_")
-    try:
-        src = os.path.join(tmp, "src")
-        new_rows.repartition(8).write.parquet(src)
-        p_stream = os.path.join(tmp, "idx_stream")
-        build_ivfpq_index(emb, p_stream)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", str(files_per_trigger))
-            .parquet(src)
-        )
-        _raise_progress_retention(spark)
-        t0 = time.time()
-        q = stream_append_to_ivfpq_index(
-            stream,
-            p_stream,
-            checkpoint_dir=os.path.join(tmp, "ckpt"),
-            # the rehearsal MEASURES post-drain increment-tier depth;
-            # the self-compaction default would fold it mid-drain
-            auto_compact_after=None,
-        )
-        q.awaitTermination()
-        wall = time.time() - t0
-        out = {"path": "index_ingest", "wall_s": round(wall, 2)}
-        out.update(_progress_stats(_collect_progress(q)))
-        # foreachBatch runs several actions per batch (dimension-check
-        # first(), encode, counts), and FileStreamSource's numInputRows
-        # aggregates the source rows each of them touched — measured
-        # 2250 for a 2000-row batch. Report the SOURCE truth instead.
-        out["input_rows"] = spark.read.parquet(src).count()
-        # increment-tier depth after the drain (VERDICT r12 ask #5):
-        # what the serve path pays before a compaction folds it — the
-        # quantity lsm.should_compact bounds in a long-running loop
-        from sales_forecast_pyspark_spark.llmdata import lsm
-        from sales_forecast_pyspark_spark.llmdata.ann_index import INDEX_TABLES
-
-        out["inc_batches"] = len(lsm.list_inc_batches(spark, p_stream, "codes"))
-        out["inc_files"] = sum(
-            lsm.data_files(spark, os.path.join(p_stream, f"{t}_inc"))
-            for t in INDEX_TABLES
-        )
-        # equivalence vs a batch append of the same rows
-        p_batch = os.path.join(tmp, "idx_batch")
-        build_ivfpq_index(emb, p_batch)
-        append_to_ivfpq_index(new_rows, p_batch)
-        # deterministic query set: limit() without an ordering may pick
-        # different rows per job, and the two serve calls below each
-        # re-evaluate it — a nondeterministic subset would flap the
-        # equivalence flag on a healthy index
-        queries = emb.filter(F.col("vec_id") < 200)
-        out["matches_batch_append"] = _frames_equal(
-            query_ivfpq_index(spark, p_stream, queries, k=5),
-            query_ivfpq_index(spark, p_batch, queries, k=5),
-        )
-        live = ivfpq_index_stats(spark, p_stream)
-        full = ivfpq_index_stats(spark, p_stream, full_scan=True)
-        out["live_stats_match_full_scan"] = _frames_equal(live, full)
-        out["drift_flags"] = sum(
-            r["drift_flag"] for r in live.collect()
-        )
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def run_dedup_ingest(spark, sf_dir, files_per_trigger) -> dict:
-    """The composed incremental-dedup loop (stream_ingest_dedup) over a
-    half-dup / half-fresh incoming stream against a store seeded with
-    the documents table. Scale claims measured: per-batch cost is flat
-    in corpus size (the screen is a bucket-equality join + estimate
-    verify, never a corpus re-shingle), every re-keyed dup of the seed
-    corpus is screened, and every constructed-fresh doc (disjoint
-    shingle sets by construction) survives — exact survivor counts,
-    not a tolerance."""
-    from sales_forecast_pyspark_spark.llmdata import (
-        build_minhash_store,
-        stream_ingest_dedup,
-    )
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # collision-free re-keys (see index_ingest): dups on the odd
-    # negatives (-2id-1), fresh on the even negatives (-2id-2) —
-    # STRUCTURALLY disjoint from the base and from each other at any
-    # generator scale. The first form of this (-id-1 / -id-200M) only
-    # looked scale-proof: at k>=20 the generator's key offsets push
-    # base ids past 2e8, the two negative ranges overlap, and the
-    # colliding ids merge a dup text and a fresh text into ONE
-    # corrupted signature — the 100x run's own dedup_exactness flag
-    # went false and caught it, the harness's second id-collision
-    # bug surfaced by its own audit (the first was r12's +1e7 offset
-    # in index_ingest).
-    dups = docs.select((-F.col("doc_id") * 2 - 1).alias("doc_id"), "text")
-    fresh = docs.select(
-        (-F.col("doc_id") * 2 - 2).alias("doc_id"),
-        F.expr(
-            "array_join(transform(sequence(1, 60), "
-            "i -> concat('w', doc_id, 'x', i)), ' ')"
-        ).alias("text"),
-    )
-    n_dups, n_fresh = dups.count(), fresh.count()
-    tmp = tempfile.mkdtemp(prefix="stream_rehearsal_mh_")
-    try:
-        src = os.path.join(tmp, "src")
-        dups.unionByName(fresh).repartition(8).write.parquet(src)
-        store = os.path.join(tmp, "store")
-        build_minhash_store(docs, store)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", str(files_per_trigger))
-            .parquet(src)
-        )
-        _raise_progress_retention(spark)
-        t0 = time.time()
-        q = stream_ingest_dedup(
-            stream,
-            store,
-            survivors_dir=os.path.join(tmp, "out"),
-            checkpoint_dir=os.path.join(tmp, "ckpt"),
-            threshold=0.5,
-            auto_compact_after=None,  # measuring post-drain tier depth
-        )
-        q.awaitTermination()
-        wall = time.time() - t0
-        out = {"path": "dedup_ingest", "wall_s": round(wall, 2)}
-        out.update(_progress_stats(_collect_progress(q)))
-        # source-truth rows, same correction as index_ingest: the loop
-        # runs several actions per batch and numInputRows aggregates
-        # the source rows each touched
-        out["input_rows"] = spark.read.parquet(src).count()
-        # increment-tier depth after the drain (VERDICT r12 ask #5)
-        from sales_forecast_pyspark_spark.llmdata import lsm
-        from sales_forecast_pyspark_spark.llmdata.dedup_store import (
-            MINHASH_TABLES,
-        )
-
-        out["inc_batches"] = len(
-            lsm.list_inc_batches(spark, store, "doc_counts")
-        )
-        out["inc_files"] = sum(
-            lsm.data_files(spark, os.path.join(store, f"{t}_inc"))
-            for t in MINHASH_TABLES
-        )
-        survivors = spark.read.parquet(os.path.join(tmp, "out"))
-        n_surv = survivors.count()
-        n_fresh_surv = survivors.filter(
-            F.pmod(F.col("doc_id"), F.lit(2)) == 0  # even negatives = fresh
-        ).count()
-        out["incoming_dups"] = n_dups
-        out["incoming_fresh"] = n_fresh
-        out["survivors"] = n_surv
-        # exact contract: all fresh survive, all dups screened
-        out["dedup_exactness"] = bool(
-            n_surv == n_fresh and n_fresh_surv == n_fresh
-        )
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def run_semantic_ingest(spark, sf_dir, files_per_trigger) -> dict:
-    """The composed incremental SEMANTIC-dedup loop
-    (stream_ingest_semantic_dedup) over a half-dup / half-fresh vector
-    stream against a serving IVF-PQ index built on the embeddings
-    table — the embedding twin of run_dedup_ingest, closing the
-    rehearsal gap VERDICT r13 flagged: of the three ingest loops this
-    is the one whose per-batch screen cost has a plausible growth term
-    (|batch| probes over cells whose SIZE grows with the corpus), so
-    the decade ladder must measure it rather than argue it.
-
-    Claims measured:
-    - exactness: every re-keyed exact dup of the corpus (odd negative
-      ids) screens out at cos 1.0; every constructed-fresh vector
-      (even negative ids, hash-random per (id, dim) — pairwise cosine
-      concentrates at 0 ± 1/√d, far below the 0.9 threshold at any
-      rehearsed scale) survives. Exact counts, not a tolerance.
-    - isolated probe cost: a FIXED 500-vector batch screened against
-      the pre-ingest index, timed per decade (`screen_s`) — the direct
-      measurement of the growth term (cell size scales with corpus/
-      n_centroids; the probed-cell PartitionFilter keeps it to
-      n_probe/n_centroids of the codes bytes).
-    - bounded micro-batches BY CONTRACT: the screen broadcasts
-      per-(query, cell) ADC state, |batch|-scale — so the source is
-      written in ~3k-row files and drained 8 files/trigger (~25k-row
-      batches) at EVERY decade instead of letting one batch swallow a
-      decade; a production loop sizes batches the same way. The passed
-      files_per_trigger is deliberately not used here.
-    - post-drain increment-tier depth, same as the sibling loops."""
-    from sales_forecast_pyspark_spark.llmdata import (
-        build_ivfpq_index,
-        screen_against_ivfpq_index,
-        stream_ingest_semantic_dedup,
-    )
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n_vecs = emb.count()
-    d = len(emb.select("embedding").first()[0])
-    # collision-free re-keys (same discipline as run_dedup_ingest):
-    # dups on the odd negatives, fresh on the even negatives —
-    # structurally disjoint from the base and each other at any scale
-    dups = emb.select((-F.col("vec_id") * 2 - 1).alias("vec_id"), "embedding")
-    fresh = emb.select(
-        (-F.col("vec_id") * 2 - 2).alias("vec_id"),
-        F.expr(
-            f"transform(sequence(1, {d}), i -> "
-            "cast((pmod(xxhash64(concat('fresh', cast(vec_id as string), "
-            "'x', cast(i as string))), 2000001) - 1000000) / 1000000.0 "
-            "as float))"
-        ).alias("embedding"),
-    )
-    n_incoming = 2 * n_vecs
-    tmp = tempfile.mkdtemp(prefix="stream_rehearsal_sem_")
-    try:
-        src = os.path.join(tmp, "src")
-        n_files = max(8, -(-n_incoming // 3125))
-        dups.unionByName(fresh).repartition(int(n_files)).write.parquet(src)
-        path = os.path.join(tmp, "idx")
-        t0 = time.time()
-        build_ivfpq_index(emb, path)
-        build_s = time.time() - t0
-        # isolated probe cost BEFORE the ingest mutates the index: a
-        # fixed 500-vector batch (disjoint id range) against the
-        # corpus-sized serving index
-        probe = (
-            emb.orderBy("vec_id")
-            .limit(500)
-            .select((-F.col("vec_id") - 1_000_000_001).alias("vec_id"),
-                    "embedding")
-            .localCheckpoint(eager=True)
-        )
-        t0 = time.time()
-        screen_hits = screen_against_ivfpq_index(
-            spark, path, probe, threshold=0.9
-        ).select("vec_id").distinct().count()
-        screen_s = time.time() - t0
-
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "8")
-            .parquet(src)
-        )
-        _raise_progress_retention(spark)
-        t0 = time.time()
-        q = stream_ingest_semantic_dedup(
-            stream,
-            path,
-            survivors_dir=os.path.join(tmp, "out"),
-            checkpoint_dir=os.path.join(tmp, "ckpt"),
-            threshold=0.9,
-            auto_compact_after=None,  # measuring post-drain tier depth
-        )
-        q.awaitTermination()
-        wall = time.time() - t0
-        out = {"path": "semantic_ingest", "wall_s": round(wall, 2)}
-        out.update(_progress_stats(_collect_progress(q)))
-        out["input_rows"] = n_incoming  # source truth, as in the siblings
-        out["build_s"] = round(build_s, 2)
-        out["screen_s"] = round(screen_s, 2)
-        out["screen_batch"] = 500
-        out["screen_hits"] = screen_hits
-        from sales_forecast_pyspark_spark.llmdata import lsm
-        from sales_forecast_pyspark_spark.llmdata.ann_index import INDEX_TABLES
-
-        out["inc_batches"] = len(lsm.list_inc_batches(spark, path, "codes"))
-        out["inc_files"] = sum(
-            lsm.data_files(spark, os.path.join(path, f"{t}_inc"))
-            for t in INDEX_TABLES
-        )
-        survivors = spark.read.parquet(os.path.join(tmp, "out"))
-        n_surv = survivors.count()
-        n_fresh_surv = survivors.filter(
-            F.pmod(F.col("vec_id"), F.lit(2)) == 0  # even negatives = fresh
-        ).count()
-        out["incoming_dups"] = n_vecs
-        out["incoming_fresh"] = n_vecs
-        out["survivors"] = n_surv
-        out["semantic_exactness"] = bool(
-            n_surv == n_vecs and n_fresh_surv == n_vecs
-        )
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def run_ingest_all(spark, sf_dir, files_per_trigger) -> dict:
     """The composed TRIAD loop (stream_ingest_dedup_all) — all three
     dedup legs over the same stream, the entry point a real corpus
@@ -615,12 +286,12 @@ def run_ingest_all(spark, sf_dir, files_per_trigger) -> dict:
       embedding. The store is built with UNIGRAM shingles (n=1) for
       this leg, so doubling the text preserves the shingle SET exactly
       — identical tokens ⇒ identical MinHash signature ⇒ the store
-      screen is deterministic (the same exactness discipline the
-      sibling legs get from verbatim re-keys) — while the whole-text
-      md5 differs, so stage 1 CANNOT catch it: every row must read
-      ``text_dup``, which pins the stage order at scale. Geometry-level
-      (probabilistic) recall is the sibling legs' and the one-shot
-      row's concern, deliberately not re-measured here.
+      screen is deterministic (the exactness the other classes get
+      from verbatim copies) — while the whole-text md5 differs, so
+      stage 1 CANNOT catch it: every row must read ``text_dup``, which
+      pins the stage order at scale. Geometry-level (probabilistic)
+      recall is the one-shot rows' concern, deliberately not
+      re-measured here.
     - SEMANTIC (pmod 1): constructed-fresh disjoint text (so stages
       1-2 pass it) with a verbatim embedding copy — the serving-index
       screen must flag it at cos 1.0: every row must read
@@ -632,9 +303,10 @@ def run_ingest_all(spark, sf_dir, files_per_trigger) -> dict:
     Claims measured: per-class verdict EXACTNESS (the short-circuit
     cost ladder holds under real micro-batching), end-to-end wall /
     throughput per decade, and post-drain increment-tier depth across
-    ALL THREE stores. Micro-batches are bounded by contract like the
-    semantic leg (~3k-row source files, 8 files/trigger) — the passed
-    files_per_trigger is deliberately not used."""
+    ALL THREE stores. Micro-batches are bounded by contract (the
+    semantic stage's ``SEARCH_MAX_ROWS``; ~3k-row source files, 8
+    files/trigger) — the passed files_per_trigger is deliberately not
+    used."""
     from sales_forecast_pyspark_spark.llmdata import (
         build_fp_store,
         build_ivfpq_index,
@@ -742,7 +414,7 @@ def run_ingest_all(spark, sf_dir, files_per_trigger) -> dict:
         wall = time.time() - t0
         out = {"path": "ingest_all", "wall_s": round(wall, 2)}
         out.update(_progress_stats(_collect_progress(q)))
-        out["input_rows"] = n_incoming  # source truth, as in the siblings
+        out["input_rows"] = n_incoming  # source truth
         out["build_s"] = round(build_s, 2)
         from sales_forecast_pyspark_spark.llmdata import lsm
         from sales_forecast_pyspark_spark.llmdata.ann_index import INDEX_TABLES
@@ -865,9 +537,6 @@ PATHS = {
     "windowed_totals": run_windowed,
     "attribution": run_attribution,
     "partials_fold": run_partials_fold,
-    "index_ingest": run_index_ingest,
-    "dedup_ingest": run_dedup_ingest,
-    "semantic_ingest": run_semantic_ingest,
     "ingest_all": run_ingest_all,
     "dedup_screen_ratio": run_dedup_screen_ratio,
 }

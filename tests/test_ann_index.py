@@ -588,68 +588,6 @@ def test_versioned_append_replay_is_idempotent(spark, emb, tmp_path_factory):
 
 
 @pytest.mark.slow
-def test_streamed_ingest_matches_batch_append_and_compacts(
-    spark, emb, tmp_path_factory
-):
-    """End-to-end streaming ingest: a file-source stream drained with
-    availableNow must leave the index serving EXACTLY what a batch
-    append of the same rows yields; compaction then folds the
-    increment tier away (dirs removed) without changing results."""
-    import os
-
-    from sales_forecast_pyspark_spark.llmdata import (
-        append_to_ivfpq_index,
-        compact_ivfpq_index,
-        stream_append_to_ivfpq_index,
-    )
-
-    root = tmp_path_factory.mktemp("ivfpq_stream")
-    src_dir = str(root / "src")
-    new_rows = emb.filter(F.col("vec_id") >= 400).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    # several small files -> several micro-batches under maxFilesPerTrigger
-    new_rows.repartition(4).write.parquet(src_dir)
-
-    base = emb.filter(F.col("vec_id") < 400)
-    p_stream = str(root / "idx_stream")
-    build_ivfpq_index(base, p_stream)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = stream_append_to_ivfpq_index(
-        stream, p_stream, checkpoint_dir=str(root / "ckpt")
-    )
-    q.awaitTermination(120)
-    assert os.path.isdir(f"{p_stream}/codes_inc")  # landed as increments
-
-    p_batch = str(root / "idx_batch")
-    build_ivfpq_index(base, p_batch)
-    append_to_ivfpq_index(new_rows, p_batch)
-
-    queries = emb.filter(F.col("vec_id") < 10)
-    streamed = sorted(
-        map(tuple, query_ivfpq_index(spark, p_stream, queries, k=5).collect())
-    )
-    batched = sorted(
-        map(tuple, query_ivfpq_index(spark, p_batch, queries, k=5).collect())
-    )
-    assert streamed == batched and len(streamed) == 50
-
-    counts = compact_ivfpq_index(spark, p_stream)
-    assert not os.path.isdir(f"{p_stream}/codes_inc")
-    assert not os.path.isdir(f"{p_stream}/vectors_inc")
-    assert counts["codes"][1] <= counts["codes"][0]
-    after = sorted(
-        map(tuple, query_ivfpq_index(spark, p_stream, queries, k=5).collect())
-    )
-    assert after == streamed
-
-
-@pytest.mark.slow
 def test_live_stats_tier_matches_full_scan_exactly(
     spark, emb, tmp_path_factory
 ):
@@ -878,65 +816,6 @@ def test_index_mutations_fail_loudly_under_lease(
 
 
 @pytest.mark.slow
-def test_streamed_index_auto_compacts_and_serves_identically(
-    spark, emb, tmp_path_factory
-):
-    """Soak shape (VERDICT r12 ask #4b): the streaming ingest loop
-    with ``auto_compact_after=2`` folds its own increments mid-drain;
-    final served results and counts match the never-compacted twin."""
-    from sales_forecast_pyspark_spark.llmdata import (
-        lsm,
-        stream_append_to_ivfpq_index,
-    )
-
-    results = {}
-    for label, auto in (("plain", None), ("auto", 2)):
-        root = tmp_path_factory.mktemp(f"ivfpq_soak_{label}")
-        path = str(root / "idx")
-        build_ivfpq_index(emb.filter(F.col("vec_id") < 300), path)
-        src = str(root / "src")
-        for i in range(5):
-            emb.filter(
-                (F.col("vec_id") >= 300 + i * 20)
-                & (F.col("vec_id") < 320 + i * 20)
-            ).select(
-                (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-            ).coalesce(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = stream_append_to_ivfpq_index(
-            stream,
-            path,
-            checkpoint_dir=str(root / "ckpt"),
-            auto_compact_after=auto,
-        )
-        q.awaitTermination(300)
-        queries = emb.filter(F.col("vec_id") < 10)
-        results[label] = {
-            "topk": sorted(
-                map(
-                    tuple,
-                    query_ivfpq_index(spark, path, queries, k=5).collect(),
-                )
-            ),
-            "n_vectors": spark.read.parquet(f"{path}/meta").first()[
-                "n_vectors"
-            ],
-            "inc_batches": len(lsm.list_inc_batches(spark, path, "codes")),
-            "folded": len(lsm.folded_batches(spark, path)),
-        }
-    assert results["auto"]["topk"] == results["plain"]["topk"]
-    assert results["auto"]["n_vectors"] == results["plain"]["n_vectors"] == 400
-    assert results["auto"]["folded"] > 0
-    assert results["auto"]["inc_batches"] < results["plain"]["inc_batches"]
-
-
-@pytest.mark.slow
 def test_should_rebuild_verdict_tracks_the_drift_monitor(
     spark, emb, tmp_path_factory
 ):
@@ -1013,16 +892,13 @@ def test_recommend_n_probe_picks_cheapest_rung_meeting_target(
 def test_semantic_dedup_screen_and_stream_loop(
     spark, emb, tmp_path_factory
 ):
-    """Incremental SEMANTIC dedup against the serving index — the
-    embedding twin of the MinHash ingest loop, completing the
-    incremental dedup triad: an exact copy of a stored vector is
-    screened at cos 1.0, an in-batch dup pair collapses to the
-    smallest id under greedy semantics, a cross-batch re-offer of an
-    admitted survivor is screened (first-wins), and admitted
-    survivors are immediately servable from the same index."""
+    """Incremental SEMANTIC dedup against the serving index, screened
+    directly: an exact copy of a stored vector is flagged at cos 1.0
+    and a vector the index never stored passes. The streaming loop
+    around this screen (``ann_index._semantic_stage`` inside the
+    triad) is tested in tests/test_ingest_all.py."""
     from sales_forecast_pyspark_spark.llmdata import (
         screen_against_ivfpq_index,
-        stream_ingest_semantic_dedup,
     )
 
     root = tmp_path_factory.mktemp("sem_dedup")
@@ -1031,7 +907,6 @@ def test_semantic_dedup_screen_and_stream_loop(
 
     v7 = emb.filter(F.col("vec_id") == 7).first()["embedding"]
     v400 = emb.filter(F.col("vec_id") == 400).first()["embedding"]
-    v450 = emb.filter(F.col("vec_id") == 450).first()["embedding"]
     schema = "vec_id long, embedding array<float>"
 
     # direct screen: exact copy flagged at 1.0, non-stored vector passes
@@ -1044,112 +919,6 @@ def test_semantic_dedup_screen_and_stream_loop(
         for r in hits
     )
     assert not any(r["vec_id"] == 9_002 for r in hits)
-
-    # composed loop over two micro-batches
-    b1 = spark.createDataFrame(
-        [
-            (1_001, v7),  # dup of stored 7 -> screened
-            (1_002, v450),  # fresh -> survives
-            (1_003, v400),  # fresh, smaller id -> survives
-            (1_004, v400),  # in-batch dup of 1_003 -> screened
-        ],
-        schema,
-    )
-    b2 = spark.createDataFrame([(2_001, v450)], schema)  # dup of survivor
-    src = str(root / "src")
-    b1.coalesce(1).write.mode("overwrite").parquet(src)
-    b2.coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = stream_ingest_semantic_dedup(
-        stream,
-        path,
-        survivors_dir=str(root / "out"),
-        checkpoint_dir=str(root / "ckpt"),
-        threshold=0.9,
-    )
-    q.awaitTermination(180)
-    survivors = {
-        r["vec_id"]
-        for r in spark.read.parquet(str(root / "out")).collect()
-    }
-    assert 1_001 not in survivors
-    assert 1_004 not in survivors
-    assert (1_002 in survivors) != (2_001 in survivors)  # first-wins
-    assert 1_003 in survivors
-    # admitted == survivors, and they are immediately servable
-    meta = spark.read.parquet(f"{path}/meta").first()
-    assert meta["n_vectors"] == 300 + len(survivors)
-    served = query_ivfpq_index(
-        spark,
-        path,
-        spark.createDataFrame([(8_000, v400)], schema),
-        k=1,
-    ).first()
-    assert served["neighbor_id"] == 1_003 and served["cos_sim"] >= 0.999
-
-
-@pytest.mark.slow
-def test_semantic_loop_zero_norm_exact_tier(spark, emb, tmp_path_factory):
-    """ADVICE r13: zero norm means THE all-zeros vector, so the loop's
-    marker-file exact-equality tier bounds the class to ONE published
-    row ever — first id wins within the recording batch, every later
-    batch drops its zero-norm rows outright — while the index never
-    admits any of them (no direction to serve), and a full replay
-    republishes bit-identically."""
-    from sales_forecast_pyspark_spark.llmdata import (
-        stream_ingest_semantic_dedup,
-    )
-
-    root = tmp_path_factory.mktemp("sem_zero")
-    path = str(root / "idx")
-    build_ivfpq_index(emb.filter(F.col("vec_id") < 300), path)
-    d = len(emb.first()["embedding"])
-    z = [0.0] * d
-    v400 = emb.filter(F.col("vec_id") == 400).first()["embedding"]
-    schema = "vec_id long, embedding array<float>"
-
-    src = str(root / "src")
-    spark.createDataFrame(
-        [(1_002, z), (1_001, z), (1_003, v400)], schema
-    ).coalesce(1).write.mode("overwrite").parquet(src)
-    spark.createDataFrame([(2_001, z)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    def run(ckpt: str) -> set[int]:
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = stream_ingest_semantic_dedup(
-            stream,
-            path,
-            survivors_dir=str(root / "out"),
-            checkpoint_dir=ckpt,
-            threshold=0.9,
-        )
-        q.awaitTermination(180)
-        return {
-            r["vec_id"]
-            for r in spark.read.parquet(str(root / "out")).collect()
-        }
-
-    survivors = run(str(root / "ckpt"))
-    assert 1_001 in survivors  # first-wins (min id) publishes
-    assert 1_002 not in survivors  # in-batch zero dup dropped
-    assert 2_001 not in survivors  # later batch: marker drops the class
-    assert 1_003 in survivors
-    # zero rows are published (once) but never admitted to the index
-    assert spark.read.parquet(f"{path}/meta").first()["n_vectors"] == 301
-    # full replay (fresh checkpoint, same files/batch ids): the
-    # recording batch sees its own id in the marker and republishes
-    # identically — bit-stable, still exactly one zero row
-    assert run(str(root / "ckpt2")) == survivors
 
 
 def test_sized_writes_bound_files_per_append_and_build(

@@ -1,7 +1,8 @@
 """Persisted MinHash signature store (llmdata/dedup_store.py):
 signature parity with the one-shot operator, screening correctness on
-planted dups, replay-safe append provenance, and the composed
-exactly-once streaming ingest-dedup loop.
+planted dups, replay-safe append provenance, the text stage's
+sequential-greedy peel, folds and the maintenance lease. The streaming
+loop that drives the text stage is tested in tests/test_ingest_all.py.
 """
 
 from __future__ import annotations
@@ -15,7 +16,6 @@ from sales_forecast_pyspark_spark.llmdata import (
     append_to_minhash_store,
     build_minhash_store,
     screen_against_minhash_store,
-    stream_ingest_dedup,
 )
 
 from tests.conftest import SF_ORACLE
@@ -114,72 +114,6 @@ def test_append_then_screen_finds_new_docs_and_replay_guard(
     assert (
         spark.read.parquet(f"{path}/meta").first()["n_docs"] == 201
     )
-
-
-@pytest.mark.slow
-def test_stream_ingest_dedup_end_to_end(spark, docs, tmp_path_factory):
-    """The composed loop over a multi-batch drain: a later batch's dup
-    of an earlier batch's survivor is screened out, in-batch dups
-    collapse to the smallest id, and the survivors output contains
-    exactly the accepted docs."""
-    root = tmp_path_factory.mktemp("mh_stream")
-    path = str(root / "store")
-    build_minhash_store(docs.filter(F.col("doc_id") < 100), path)
-
-    t7 = docs.filter(F.col("doc_id") == 7).first()["text"]
-    # synthetic fresh texts: the driver corpus plants near-dup
-    # FAMILIES across the id range (doc 450 is a 0.94-estimate dup of
-    # seed doc 92 — verified), so "fresh" must be constructed, not
-    # sampled from the corpus
-    fresh_a = " ".join(f"aurora{i} basalt{i} cinder{i}" for i in range(40))
-    fresh_b = " ".join(f"quartz{i} lagoon{i} meteor{i}" for i in range(40))
-    # file 1 (one micro-batch): a dup of the seed corpus, a fresh doc,
-    # and an in-batch dup pair of another fresh doc
-    b1 = spark.createDataFrame(
-        [
-            (1_001, t7),  # dup of seed doc 7 -> screened
-            (1_002, fresh_a),  # fresh -> survives
-            (1_003, fresh_b),  # fresh, smaller id -> survives
-            (1_004, fresh_b),  # in-batch dup of 1_003 -> screened
-        ],
-        "doc_id long, text string",
-    )
-    # file 2 (later micro-batch): a dup of batch 1's survivor
-    b2 = spark.createDataFrame(
-        [(2_001, fresh_a)],  # dup of admitted 1_002 -> screened
-        "doc_id long, text string",
-    )
-    src = str(root / "src")
-    b1.coalesce(1).write.mode("overwrite").parquet(src)
-    b2.coalesce(1).write.mode("append").parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = stream_ingest_dedup(
-        stream,
-        path,
-        survivors_dir=str(root / "out"),
-        checkpoint_dir=str(root / "ckpt"),
-        threshold=0.5,
-    )
-    q.awaitTermination(180)
-
-    out = spark.read.parquet(str(root / "out"))
-    survivors = {r["doc_id"] for r in out.select("doc_id").collect()}
-    # NOTE: file order into micro-batches follows modification time;
-    # both orders are valid dedup outcomes for the cross-batch dup
-    # (first-wins), but the planted ids make either order checkable
-    assert 1_001 not in survivors  # seed dup always screened
-    assert 1_004 not in survivors  # in-batch dup always screened
-    assert (1_002 in survivors) != (2_001 in survivors)  # first-wins
-    assert 1_003 in survivors
-    # the store admitted exactly the survivors
-    n_docs = spark.read.parquet(f"{path}/meta").first()["n_docs"]
-    assert n_docs == 100 + len(survivors)
 
 
 @pytest.mark.slow
@@ -346,44 +280,6 @@ def test_text_stage_losers_on_a_tiny_store(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_stream_ingest_keeps_nontransitive_chain_tail(
-    spark, docs, tmp_path_factory
-):
-    """End-to-end: a micro-batch holding the a~b~c chain keeps a AND c
-    — b loses to a, and since b was never admitted it cannot defeat c.
-    The pre-fix behavior (drop doc_b of every verified pair) would
-    delete c permanently."""
-    root = tmp_path_factory.mktemp("mh_chain")
-    path = str(root / "store")
-    build_minhash_store(
-        docs.filter(F.col("doc_id") < 50), path, num_hashes=32, bands=16
-    )
-    batch = spark.createDataFrame(
-        [(1, _CHAIN_A), (2, _CHAIN_B), (3, _CHAIN_C)],
-        "doc_id long, text string",
-    )
-    src = str(root / "src")
-    batch.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .parquet(src)
-    )
-    q = stream_ingest_dedup(
-        stream,
-        path,
-        survivors_dir=str(root / "out"),
-        checkpoint_dir=str(root / "ckpt"),
-        threshold=0.35,
-    )
-    q.awaitTermination(180)
-    survivors = {
-        r["doc_id"]
-        for r in spark.read.parquet(str(root / "out")).collect()
-    }
-    assert survivors == {1, 3}
-
-
-@pytest.mark.slow
 def test_zero_token_docs_route_through_fingerprint_tier(
     spark, docs, tmp_path_factory
 ):
@@ -391,9 +287,10 @@ def test_zero_token_docs_route_through_fingerprint_tier(
     signature; pre-fix they bypassed the store entirely — repeated
     exact copies survived every batch and were never admitted (ADVICE
     r12). Now they ride an exact-fingerprint tier: build admits them,
-    screens flag exact copies at est_jaccard 1.0, appends are
-    replay-idempotent, and the streaming loop dedups them first-wins
-    both in-batch and across batches."""
+    screens flag exact copies at est_jaccard 1.0, and appends are
+    replay-idempotent. (In the triad loop, in-batch and cross-batch
+    copies are decided earlier, by stage 1's whole-text fingerprint —
+    tests/test_ingest_all.py.)"""
     root = tmp_path_factory.mktemp("mh_zero")
     path = str(root / "store")
     seed = docs.filter(F.col("doc_id") < 50).unionByName(
@@ -436,42 +333,6 @@ def test_zero_token_docs_route_through_fingerprint_tier(
         exclude_batch=3,
     ).collect()
     assert not any(r["dup_of"] == 9_200 for r in hidden)
-
-    # streaming: batch 1 plants two copies of a new empty-ish doc (the
-    # smaller id wins) plus a copy of the SEED empty doc (screened);
-    # batch 2 replays the surviving fingerprint (screened cross-batch)
-    b1 = spark.createDataFrame(
-        [(10_001, "!!!"), (10_002, "!!!"), (10_003, "")],
-        "doc_id long, text string",
-    )
-    b2 = spark.createDataFrame([(11_001, "!!!")], "doc_id long, text string")
-    src = str(root / "src")
-    b1.coalesce(1).write.mode("overwrite").parquet(src)
-    b2.coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = stream_ingest_dedup(
-        stream,
-        path,
-        survivors_dir=str(root / "out"),
-        checkpoint_dir=str(root / "ckpt"),
-    )
-    q.awaitTermination(180)
-    survivors = {
-        r["doc_id"]
-        for r in spark.read.parquet(str(root / "out")).collect()
-    }
-    assert 10_003 not in survivors  # exact copy of stored seed doc
-    assert (10_001 in survivors) != (11_001 in survivors)  # first-wins
-    assert 10_002 not in survivors  # in-batch fp dup, larger id
-    # survivors and the admitted count agree (published == admitted)
-    assert (
-        spark.read.parquet(f"{path}/meta").first()["n_docs"]
-        == 53 + len(survivors)
-    )
 
 
 @pytest.mark.slow
@@ -571,66 +432,6 @@ def test_concurrent_mutation_fails_loudly_under_lease(
     _time.sleep(1.1)
     lsm.acquire_lease(spark, path, "taker", stale_after_s=1.0)
     lsm.release_lease(spark, path)
-
-
-@pytest.mark.slow
-def test_stream_loop_auto_compacts_and_parity_holds(
-    spark, docs, tmp_path_factory
-):
-    """Soak shape (VERDICT r12 ask #4b): a multi-batch drain with
-    ``auto_compact_after=2`` folds its own increments mid-stream; the
-    surviving set and the final store verdicts are identical to the
-    never-compacted run."""
-    from sales_forecast_pyspark_spark.llmdata import lsm
-
-    fresh = [
-        (20_000 + i, " ".join(f"soak{i}w{j} tok{i}x{j}" for j in range(25)))
-        for i in range(6)
-    ]
-    results = {}
-    for label, auto in (("plain", None), ("auto", 2)):
-        root = tmp_path_factory.mktemp(f"mh_soak_{label}")
-        path = str(root / "store")
-        build_minhash_store(docs.filter(F.col("doc_id") < 50), path)
-        src = str(root / "src")
-        for i, (did, text) in enumerate(fresh):
-            rows = [(did, text)]
-            if i >= 2:  # every later batch re-offers an earlier doc
-                rows.append((did + 500, fresh[i - 2][1]))
-            spark.createDataFrame(
-                rows, "doc_id long, text string"
-            ).coalesce(1).write.mode(
-                "overwrite" if i == 0 else "append"
-            ).parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = stream_ingest_dedup(
-            stream,
-            path,
-            survivors_dir=str(root / "out"),
-            checkpoint_dir=str(root / "ckpt"),
-            auto_compact_after=auto,
-        )
-        q.awaitTermination(300)
-        results[label] = {
-            "survivors": {
-                r["doc_id"]
-                for r in spark.read.parquet(str(root / "out")).collect()
-            },
-            "n_docs": spark.read.parquet(f"{path}/meta").first()["n_docs"],
-            "inc_batches": len(
-                lsm.list_inc_batches(spark, path, "signatures")
-            ),
-            "folded": len(lsm.folded_batches(spark, path)),
-        }
-    assert results["auto"]["survivors"] == results["plain"]["survivors"]
-    assert results["auto"]["n_docs"] == results["plain"]["n_docs"]
-    # the auto run actually folded mid-stream and kept the tier shallow
-    assert results["auto"]["folded"] > 0
-    assert results["auto"]["inc_batches"] < results["plain"]["inc_batches"]
 
 
 @pytest.mark.slow

@@ -1,7 +1,10 @@
-"""The composed triad ingest loop (llmdata/ingest.py): the persisted
-exact-fingerprint store's lifecycle, stage short-circuit order on a
-batch engineered so each dedup class has a distinct witness, and
-exactly-once across all three stores under a full replay.
+"""The composed triad ingest loop (llmdata/ingest.py), the engine's one
+streaming dedup loop: the persisted exact-fingerprint store's
+lifecycle, stage short-circuit order on a batch engineered so each
+dedup class has a distinct witness, a two-batch drain with the
+non-transitive chain, zero-token and zero-norm witnesses,
+exactly-once across all three stores under a full replay, and
+three-store auto-compaction parity.
 """
 
 from __future__ import annotations
@@ -34,6 +37,69 @@ def corpus(spark):
         F.col("vec_id").alias("doc_id"), "embedding"
     )
     return docs.join(emb, "doc_id").localCheckpoint(eager=True)
+
+
+_ROW = "doc_id long, text string, embedding array<float>"
+
+
+def _build_stores(seed, root, **minhash_kw) -> tuple[str, str, str]:
+    """The triad's three stores (fp, MinHash, IVF-PQ) seeded from the
+    same (doc_id, text, embedding) frame under ``root``."""
+    fp, mh, idx = (str(root / name) for name in ("fp", "mh", "idx"))
+    build_fp_store(seed, fp)
+    build_minhash_store(seed, mh, **minhash_kw)
+    build_ivfpq_index(
+        seed.select("doc_id", "embedding"), idx, id_col="doc_id"
+    )
+    return fp, mh, idx
+
+
+def _write_batches(spark, src: str, batches) -> None:
+    """One parquet file per row list. The file source orders files by
+    modification time, so the mtimes are set one minute apart: with
+    ``maxFilesPerTrigger=1`` micro-batch i is always list entry i."""
+    import glob
+    import time
+
+    t0 = int(time.time()) - 3_600
+    seen: set[str] = set()
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, _ROW).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        files = set(glob.glob(os.path.join(src, "*.parquet"))) - seen
+        for f in files:
+            os.utime(f, (t0 + 60 * i,) * 2)
+        seen |= files
+
+
+def _drain(spark, src, stores, out, ckpt, **kw) -> dict[int, str]:
+    """Drain ``src`` through the triad loop one file per micro-batch;
+    returns every published row's verdict by doc id."""
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    q = stream_ingest_dedup_all(
+        stream, *stores, survivors_dir=out, checkpoint_dir=ckpt, **kw
+    )
+    q.awaitTermination(600)
+    return {
+        r["doc_id"]: r["verdict"] for r in spark.read.parquet(out).collect()
+    }
+
+
+def _store_counts(spark, fp, mh, idx) -> tuple[int, int, int]:
+    """(fp rows, MinHash ``n_docs``, index ``n_vectors``) as served."""
+    from sales_forecast_pyspark_spark.llmdata.dedup_store import _doc_count
+    from sales_forecast_pyspark_spark.llmdata.ingest import _read_fp_store
+
+    return (
+        _read_fp_store(spark, fp).count(),
+        _doc_count(spark, mh),
+        spark.read.parquet(os.path.join(idx, "meta")).first()["n_vectors"],
+    )
 
 
 def test_fp_store_lifecycle(spark, corpus, tmp_path):
@@ -182,29 +248,13 @@ def test_triad_loop_verdicts_and_exactly_once(spark, corpus, tmp_path):
         9_005: "exact_dup",
     }
 
-    def store_counts():
-        from sales_forecast_pyspark_spark.llmdata.dedup_store import (
-            _doc_count,
-        )
-        from sales_forecast_pyspark_spark.llmdata.ingest import (
-            _read_fp_store,
-        )
-
-        return (
-            _read_fp_store(spark, fp).count(),
-            _doc_count(spark, mh),
-            spark.read.parquet(os.path.join(idx, "meta")).first()[
-                "n_vectors"
-            ],
-        )
-
-    counts = store_counts()
+    counts = _store_counts(spark, fp, mh, idx)
     assert counts == (401, 401, 401)  # seed 400 + the one admitted doc
 
     # full replay on a fresh checkpoint: same verdicts, same counts —
     # exactly-once across all three stores
     assert run(str(tmp_path / "ckpt2")) == verdicts
-    assert store_counts() == counts
+    assert _store_counts(spark, fp, mh, idx) == counts
 
     # the admitted doc is screen-visible in every store going forward
     probe_t = spark.createDataFrame(
@@ -336,3 +386,160 @@ def test_sized_fp_append_writes_one_file_per_small_batch(
     )
     assert n > 0
     assert nfiles(os.path.join(path, "fps_inc")) == 1
+
+
+def test_triad_two_batches_verdicts_tiers_and_replay(spark, corpus, tmp_path):
+    """The one streaming dedup loop over two micro-batches on a tiny
+    seed, one witness per behaviour:
+
+    - batch 0 holds the non-transitive chain a~b, b~c, a≁c: b is
+      ``text_dup``, and c is ``admitted`` because b, its only near-dup,
+      was never admitted (sequential-greedy peel);
+    - two copies of a zero-token text (no shingles, no signature):
+      stage 1's whole-text fingerprint keeps the smaller id and calls
+      the other ``exact_dup``;
+    - a zero-norm embedding under fresh text is ``admitted`` but never
+      enters the index (no direction to serve);
+    - a copy of a's embedding under fresh text is ``semantic_dup`` by
+      the in-batch pair mine (a has the smaller id);
+    - batch 1 re-offers an admitted text (``exact_dup``, against the fp
+      store) and an admitted embedding under fresh text
+      (``semantic_dup``, against the index increments).
+
+    A replay on a fresh checkpoint republishes identical verdicts and
+    leaves every store's count unchanged."""
+    import numpy as np
+
+    from tests.test_dedup_store import _CHAIN_A, _CHAIN_B, _CHAIN_C
+
+    seed = corpus.filter(F.col("doc_id") < 100)
+    stores = _build_stores(seed, tmp_path, num_hashes=32, bands=16)
+    d = len(seed.first()["embedding"])
+    vec = np.random.RandomState(11).normal(size=(5, d)).tolist()
+
+    def fresh(tag: str) -> str:
+        return " ".join(f"{tag}{i} ferry{i} tide{i}" for i in range(20))
+
+    _write_batches(
+        spark,
+        str(tmp_path / "src"),
+        [
+            [
+                (1, _CHAIN_A, vec[0]),
+                (2, _CHAIN_B, vec[1]),
+                (3, _CHAIN_C, vec[2]),
+                (4, "!!!", vec[3]),
+                (5, "!!!", vec[4]),
+                (6, fresh("harbour"), [0.0] * d),
+                (7, fresh("jetty"), vec[0]),
+            ],
+            [
+                (101, _CHAIN_A, vec[0]),
+                (102, fresh("quay"), vec[2]),
+            ],
+        ],
+    )
+
+    def run(ckpt: str) -> dict[int, str]:
+        return _drain(
+            spark, str(tmp_path / "src"), stores, str(tmp_path / "out"),
+            str(tmp_path / ckpt), text_threshold=0.35,
+        )
+
+    verdicts = run("ckpt")
+    assert verdicts == {
+        1: "admitted",
+        2: "text_dup",
+        3: "admitted",
+        4: "admitted",
+        5: "exact_dup",
+        6: "admitted",
+        7: "semantic_dup",
+        101: "exact_dup",
+        102: "semantic_dup",
+    }
+    # four admitted docs; the index skips the zero-norm one
+    counts = _store_counts(spark, *stores)
+    assert counts == (104, 104, 103)
+
+    assert run("ckpt2") == verdicts
+    assert _store_counts(spark, *stores) == counts
+
+
+@pytest.mark.slow
+def test_triad_auto_compaction_matches_the_uncompacted_run(
+    spark, corpus, tmp_path
+):
+    """Soak shape (VERDICT r12 ask #4b) on the triad's three stores:
+    six micro-batches, each admitting one fresh doc and, from the
+    third on, re-offering an earlier one (its text on even batches,
+    its embedding under fresh text on odd ones). ``auto_compact_after=2``
+    folds every store mid-drain; verdicts, served counts and served
+    top-k equal the never-compacted run, and each store's increment
+    tier ends shallower."""
+    import numpy as np
+
+    from sales_forecast_pyspark_spark.llmdata import lsm, query_ivfpq_index
+
+    seed = corpus.filter(F.col("doc_id") < 100)
+    d = len(seed.first()["embedding"])
+    vec = np.random.RandomState(5).normal(size=(6, d)).tolist()
+
+    def text(tag: str, i: int) -> str:
+        return " ".join(f"{tag}{i}w{j} {tag}t{i}x{j}" for j in range(25))
+
+    batches = []
+    for i in range(6):
+        rows = [(20_000 + i, text("soak", i), vec[i])]
+        if i >= 2:
+            j = i - 2
+            rows.append(
+                (20_500 + i, text("soak", j), vec[j])
+                if i % 2 == 0
+                else (20_500 + i, text("echo", i), vec[j])
+            )
+        batches.append(rows)
+
+    results = {}
+    for label, auto in (("plain", None), ("auto", 2)):
+        root = tmp_path / label
+        root.mkdir()
+        stores = _build_stores(seed, root)
+        src = str(root / "src")
+        _write_batches(spark, src, batches)
+        verdicts = _drain(
+            spark, src, stores, str(root / "out"), str(root / "ckpt"),
+            auto_compact_after=auto,
+        )
+        results[label] = {
+            "verdicts": verdicts,
+            "counts": _store_counts(spark, *stores),
+            "topk": sorted(
+                map(
+                    tuple,
+                    query_ivfpq_index(
+                        spark, stores[2],
+                        spark.createDataFrame(
+                            [(i, v) for i, v in enumerate(vec)],
+                            "vec_id long, embedding array<float>",
+                        ),
+                        k=3,
+                    ).collect(),
+                )
+            ),
+            "inc": [
+                len(lsm.list_inc_batches(spark, path, table))
+                for path, table in zip(stores, ("fps", "signatures", "codes"))
+            ],
+            "folded": [len(lsm.folded_batches(spark, p)) for p in stores],
+        }
+    plain, auto = results["plain"], results["auto"]
+    assert auto["verdicts"] == plain["verdicts"]
+    assert auto["topk"] == plain["topk"] and len(plain["topk"]) == 18
+    assert sorted(plain["verdicts"].values()).count("admitted") == 6
+    assert {v for k, v in plain["verdicts"].items() if k >= 20_500} == {
+        "exact_dup", "semantic_dup"
+    }
+    assert auto["counts"] == plain["counts"] == (106, 106, 106)
+    assert all(n > 0 for n in auto["folded"])
+    assert all(a < p for a, p in zip(auto["inc"], plain["inc"]))

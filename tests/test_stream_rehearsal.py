@@ -48,22 +48,6 @@ def test_partials_fold_matches_batch_rebuild(spark):
 
 
 @pytest.mark.slow
-def test_semantic_ingest_path_is_exact_at_tiny_scale(spark):
-    """The semantic-dedup rehearsal leg (VERDICT r13 ask #3) at sf0.001:
-    every re-keyed exact dup screens out, every hash-random fresh
-    vector survives, and the isolated 500-vector screen flags all its
-    exact copies."""
-    from scripts.stream_rehearsal import run_semantic_ingest
-
-    res = run_semantic_ingest(spark, SF, files_per_trigger=1)
-    assert res["semantic_exactness"] is True
-    assert res["survivors"] == res["incoming_fresh"] > 0
-    assert res["screen_hits"] == res["screen_batch"] == 500
-    assert res["screen_s"] > 0 and res["build_s"] > 0
-    assert res["inc_batches"] == res["n_batches"] > 0
-
-
-@pytest.mark.slow
 def test_ingest_all_path_is_exact_at_tiny_scale(spark):
     """The composed-triad rehearsal leg (VERDICT r13 ask #6) at
     sf0.001: every engineered class lands on exactly its own verdict —
