@@ -52,7 +52,6 @@ from sales_forecast_pyspark_spark.llmdata.ingest import (
 from sales_forecast_pyspark_spark.llmdata.similarity import (
     cosine_topk,
     group_centroids,
-    ivf_topk,
     lsh_similarity_join,
 )
 from sales_forecast_pyspark_spark.llmdata.vectorize import term_tfidf
@@ -92,7 +91,6 @@ __all__ = [
     "dedup_clusters",
     "sample_frames",
     "extract_features",
-    "ivf_topk",
     "lsh_similarity_join",
     "fingerprint_expr",
     "group_centroids",

@@ -174,7 +174,9 @@ class Table:
       with each task holding whole ``(cell, xxhash64(key) mod
       files_per_cell)`` groups, so a cell directory gets at most
       ``files_per_cell`` files and the one-directory-per-cell static
-      PartitionFilter pruning holds; neither → plain ``repartition(n)``.
+      PartitionFilter pruning holds, each task sorted on ``(cell,
+      key)`` so a file's bytes do not follow shuffle arrival order;
+      neither → plain ``repartition(n)``.
     """
 
     name: str
@@ -197,9 +199,13 @@ def write_sized(
     target = DEFAULT_TARGET_FILE_MB * 1024 * 1024
     n = max(1, -(-int(est_bytes) // max(1, table.cells) // target))
     if table.cells:
-        w = df.repartition(
-            F.col("cell"), F.pmod(F.xxhash64(*table.key), F.lit(n))
-        ).write.partitionBy("cell")
+        w = (
+            df.repartition(
+                F.col("cell"), F.pmod(F.xxhash64(*table.key), F.lit(n))
+            )
+            .sortWithinPartitions("cell", *table.key)
+            .write.partitionBy("cell")
+        )
     elif table.sort:
         w = (
             df.repartitionByRange(n, *table.sort)

@@ -146,83 +146,6 @@ def topk_recall_audit(
     )
 
 
-def ivf_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: partition the corpus into
-    ``n_centroids`` KMeans cells, probe only the ``n_probe`` cells
-    nearest each query, exact-rank inside the probed cells.
-
-    The scale shape: the corpus is scanned once to assign cells (narrow
-    after a broadcast of centroids), queries fan out only to
-    |Q| × n_probe cell keys, and the candidate join is an equality join
-    on the cell id — recall trades off against n_probe/n_centroids
-    instead of against a full scan. Seeded KMeans keeps results
-    reproducible."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = df.sparkSession
-    corpus = df.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    vecs = corpus.select(
-        "neighbor_id", array_to_vector(F.col("v")).alias("features")
-    )
-    model = KMeans(
-        k=n_centroids, seed=seed, featuresCol="features", predictionCol="cell"
-    ).fit(vecs)
-    assigned = model.transform(vecs).select("neighbor_id", "cell").join(
-        corpus, "neighbor_id"
-    )
-
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, cv array<double>",
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    sq_dist = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(F.asc("cd"), F.asc("cell"))
-    probes = (
-        q.join(F.broadcast(centroids))
-        .select("query_id", "qv", "cell", sq_dist.alias("cd"))
-        .withColumn("probe_rank", F.row_number().over(probe_w))
-        .filter(F.col("probe_rank") <= n_probe)
-        .select("query_id", "qv", "cell")
-    )
-
-    scored = (
-        probes.join(assigned, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity("v", "qv"), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
-
-
 def _lsh_candidate_pairs(
     vecs: DataFrame,
     bucket_length: float,
@@ -451,7 +374,7 @@ def lsh_similarity_join(
     2.25M), and any correct pair mine must emit them all — wall-clock
     is output-bound, per-pair cost flat. Keep the threshold tight at
     scale (near-dup regimes: cos >= 0.9) or bound output per item
-    (top-k, see ``cosine_topk``/``ivf_topk``) when the corpus grows
+    (top-k, see ``cosine_topk``/``ivfpq_topk``) when the corpus grows
     faster than its diversity.
 
     ``rows_per_band`` (r11): AND-banded bucket keys, same knob and
@@ -774,7 +697,7 @@ def lsh_pairs_topk(
     items whose buckets yield no candidates emit no rows (the honest
     answer for an isolated item under this index), and zero-norm
     vectors are dropped up front (no direction ⇒ no cosine — same
-    contract as pq_topk/ivfpq_topk)."""
+    contract as ivfpq_topk)."""
     from pyspark.ml.functions import array_to_vector
 
     raw = df.select(
@@ -784,7 +707,7 @@ def lsh_pairs_topk(
     # zero-norm vectors have no direction: their cosine is NULL against
     # every neighbor, and a NULL-scored pair in an under-full bucket
     # would still take a rank <= k slot (code-review r09) — drop them
-    # up front, same contract as pq_topk/ivfpq_topk. The same norm
+    # up front, same contract as ivfpq_topk. The same norm
     # then L2-normalizes the survivors so the Euclidean index prunes
     # in true cosine units (see docstring).
     #
@@ -982,171 +905,6 @@ def dequantize_embeddings(
             F.col(codes_col),
             lambda c: F.col("qmin") + (c + 128).cast("double") * span / 255,
         ),
-    )
-
-
-def pq_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    m: int = 8,
-    codebook_k: int = 256,
-    refine_factor: int = 32,
-    seed: int = 42,
-) -> DataFrame:
-    """Product-quantization approximate top-k (Jégou/Douze/Schmid,
-    "Product Quantization for Nearest Neighbor Search", TPAMI 2011 —
-    public literature): split each L2-normalized vector into ``m``
-    subvectors, K-means each subspace to ``codebook_k`` centroids, and
-    store only the m code bytes per vector. Queries score the
-    COMPRESSED corpus with asymmetric distance (ADC): a per-query
-    (m x codebook_k) lookup table of exact subspace distances, summed
-    by code lookup — no full-vector arithmetic on the scan. The top
-    ``k x refine_factor`` ADC candidates are then re-ranked with the
-    exact cosine, the standard prune-then-refine shape.
-
-    Why this is the 100 TB shape: the full-vector corpus (256 B/vector
-    at d=64 float32) is touched only at encode time and for the
-    k x refine_factor refine rows per query; the repeated-scan working
-    set is m bytes/vector (32x smaller), and ADC scoring is m array
-    lookups instead of d multiplies. Training cost is m driver-looped
-    KMeans fits on subvectors (seeded, reproducible); on unit vectors
-    squared-L2 ordering equals cosine ordering, so the ADC prune ranks
-    the right metric. Zero-norm vectors are dropped (no direction).
-
-    Recall depends on (m, codebook_k, refine_factor); the defaults
-    reach ~0.74 pooled recall@5 at the 100x rehearsal decade of the
-    synthetic embeddings corpus (tests/test_similarity.py pins >= 0.5,
-    IVF's bar).
-
-    ``codebook_k`` defaults to 256 — the textbook PQ 8x8-bit shape
-    (one byte per subspace code) — because the r09 codebook sweep at
-    200k vectors measured codebook QUALITY, not the refine funnel, as
-    the binding recall limiter: at fixed refine=32, pooled recall
-    climbed 0.34 -> 0.53 -> 0.74 as codebook_k went 32 -> 64 -> 256,
-    while the r08 symptom patch (keeping ck=32 and widening refine to
-    64) only reached 0.48. Better codebooks shrink ADC quantization
-    error at the source, so ``refine_factor`` walks BACK to 32 (from
-    the r08 emergency 64) with recall margin left over — halving the
-    exact-refine read volume per query, which at billion scale is the
-    term that multiplies. Sweep ladder recorded in SCALING.md
-    "LLM-data tier". Cost shift: the m seeded KMeans fits pay for the
-    larger k (one-time, train-sample-sized), and the per-query ADC
-    lookup table grows to m x 256 doubles — still kilobytes of
-    broadcast state per query batch.
-    Output: (query_id, neighbor_id, cos_sim, rank) like cosine_topk."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = df.sparkSession
-    corpus0 = df.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("v0"),
-    )
-    norm = F.sqrt(
-        F.aggregate(F.transform("v0", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    corpus = (
-        corpus0.withColumn("n", norm)
-        .filter(F.col("n") > 0)
-        .select("neighbor_id", F.transform("v0", lambda x: x / F.col("n")).alias("v"))
-    )
-    d = len(corpus.select("v").first()["v"])
-    if d % m != 0:
-        raise ValueError(f"vector dim {d} must divide evenly into m={m} subspaces")
-    sub = d // m
-
-    # Train one codebook per subspace and encode the corpus in the same
-    # cached pass; the m KMeans fits are driver-looped but each runs on
-    # the cluster (seeded per-subspace for reproducibility).
-    corpus.cache()
-    enc = corpus
-    codebooks = []
-    for j in range(m):
-        enc = enc.withColumn(f"_f{j}", array_to_vector(F.slice("v", j * sub + 1, sub)))
-        km = KMeans(
-            k=codebook_k, seed=seed + j, featuresCol=f"_f{j}", predictionCol=f"_c{j}"
-        ).fit(enc)
-        enc = km.transform(enc)
-        codebooks += [
-            (j, c, [float(x) for x in cen])
-            for c, cen in enumerate(km.clusterCenters())
-        ]
-    enc = enc.select(
-        "neighbor_id", "v", F.array(*[F.col(f"_c{j}") for j in range(m)]).alias("codes")
-    )
-    cb = spark.createDataFrame(codebooks, "j int, code int, cen array<double>")
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv0"),
-    )
-    qnorm = F.sqrt(
-        F.aggregate(F.transform("qv0", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    q = (
-        q.withColumn("n", qnorm)
-        .filter(F.col("n") > 0)
-        .select("query_id", F.transform("qv0", lambda x: x / F.col("n")).alias("qv"))
-    )
-
-    # Per-query ADC lookup table: exact squared distance from the query
-    # subvector to every codebook centroid, assembled into
-    # tables[j][code] via two order-pinned collects.
-    sqd = F.aggregate(
-        F.zip_with(
-            F.slice("qv", F.col("j") * sub + 1, sub),
-            F.col("cen"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    tabs = (
-        q.join(F.broadcast(cb))
-        .select("query_id", "qv", "j", "code", sqd.alias("dd"))
-        .groupBy("query_id", "qv", "j")
-        .agg(F.array_sort(F.collect_list(F.struct("code", "dd"))).alias("cl"))
-        .select("query_id", "qv", "j", F.transform("cl", lambda s: s["dd"]).alias("tab"))
-        .groupBy("query_id", "qv")
-        .agg(F.array_sort(F.collect_list(F.struct("j", "tab"))).alias("jt"))
-        .select("query_id", "qv", F.transform("jt", lambda s: s["tab"]).alias("tables"))
-    )
-
-    # ADC scan over codes only (bounded-queries broadcast, same declared
-    # shape as cosine_topk's baseline but over 32x-smaller rows), then
-    # exact-cosine refine on the pruned candidate set.
-    adc = F.aggregate(
-        F.zip_with(
-            "codes", "tables", lambda c, t: F.element_at(t, c.cast("int") + 1)
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        F.broadcast(tabs)
-        .crossJoin(enc)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "qv", "neighbor_id", "v", adc.alias("adc"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    cand = scored.withColumn("prank", F.row_number().over(w_adc)).filter(
-        F.col("prank") <= k * refine_factor
-    )
-    cos = F.round(
-        F.aggregate(F.zip_with("v", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x),
-        6,
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w_cos))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
     )
 
 
@@ -1513,28 +1271,13 @@ def ivfpq_topk(
     a query touches ~n_probe/n_centroids of the corpus, reads only
     codes, and computes m lookups per candidate; the
     k x refine_factor survivors are re-ranked with exact cosine.
-    Defaults follow ``pq_topk``'s r09 codebook sweep (codebook_k=256,
-    refine_factor=32) plus the r09 probe ladder, resolved in r11
-    (VERDICT r09 ask #4 / r10 ask #3) as the operator's CONTRACT:
-
-    - **n_probe defaults to 6** (was 4): 4 probes measured pooled
-      recall 0.55 on the structureless audit corpus — one bad seeded-
-      KMeans draw from the 0.5 tier bar — while 6 probes measure 0.61
-      (20k) / 0.59 (200k), margin the default must own rather than
-      every caller re-discovering it. ADC-cost delta: 6/16 vs 4/16 of
-      the corpus scanned per query, i.e. 1.5x ADC mass — still
-      cell-restricted and 32x smaller rows than the float tier.
-    - **The contracted tier bar is pooled recall >= 0.5, not >= 0.7.**
-      The probe ladder showed coverage buys recall sublinearly on a
-      densifying structureless corpus (probe 6->8->10 measured
-      0.59->0.64->0.65 at 200k, with probe 10/16 already scanning 62%
-      of the corpus — at that point plain ``pq_topk`` is strictly
-      better at 0.74 for a FULL scan of 8-byte codes). So the ladder's
-      division of labor is pinned: **IVF-PQ is the minimum-IO >=0.5
-      tier; pq_topk is the >=0.7 tier**; workloads needing both high
-      recall and sub-scan IO need real cluster structure (where probed
-      cells actually contain the neighbors) — the audit columns
-      measure every production corpus in-row either way.
+    Defaults follow the codebook sweep (codebook_k=256,
+    refine_factor=32, SCALING.md "LLM-data tier"); **n_probe defaults
+    to 6**: 4 probes measured pooled recall 0.55 on the structureless
+    audit corpus, one bad seeded-KMeans draw from the 0.5 tier bar,
+    while 6 measure 0.61 (20k) / 0.59 (200k) for 1.5x the ADC mass.
+    ``n_probe = n_centroids`` is the full-scan tier: every cell's
+    residual codes are ADC-scored (``ann_pq_topk`` runs it).
 
     Codebooks are shared across cells (trained on the pooled
     residuals), so the broadcast state is m x codebook_k centroids +
@@ -1545,8 +1288,9 @@ def ivfpq_topk(
     ``ann_index.screen_against_ivfpq_index`` run over a persisted
     index; the encoded corpus serves as both its codes and its vectors
     frame. The query set is materialized driver-side, at most
-    ``SEARCH_MAX_ROWS`` rows. Output and determinism match ``pq_topk``
-    (seeded, neighbor-id tie order, refined scores are true cosines)."""
+    ``SEARCH_MAX_ROWS`` rows. Output: (query_id, neighbor_id, cos_sim,
+    rank) like ``cosine_topk``; seeded, neighbor-id tie order, refined
+    scores are true cosines."""
     cell_mat, books, enc, _, _ = _ivfpq_fit(
         df, id_col, vec_col, n_centroids, m, codebook_k, seed
     )

@@ -2721,48 +2721,28 @@ def q_model_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return model_quality_audit(spark)
 
 
-@register("ann_ivf_topk")  # rows-only: KMeans cells are not SQL-expressible
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-5 for the same query set as ann_topk: seeded
-    KMeans cells, 4-of-16 cell probes, exact cosine ranking inside the
-    probed cells. Self-validating driver row (VERDICT r07 #4): each
-    row carries recall_at_k / recall_ok vs the in-query brute-force
-    truth over the same bounded query set, so the driver record proves
-    recall, not just a row count; the >= 0.5 bound matches
-    tests/test_similarity.py."""
-    from sales_forecast_pyspark_spark.llmdata import ivf_topk
-    from sales_forecast_pyspark_spark.llmdata.similarity import (
-        cosine_topk,
-        topk_recall_audit,
-    )
-
-    emb = spread_scan(read_table(spark, sf_dir, "embeddings"), "vec_id")
-    q = emb.filter(F.col("vec_id") < 10)
-    return topk_recall_audit(ivf_topk(emb, q, k=5), cosine_topk(emb, q, k=5))
-
-
 @register("ann_pq_topk")  # rows-only: KMeans codebooks are not SQL-expressible
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (llmdata/similarity.py::pq_topk):
-    8-subspace 256-entry codebooks (textbook PQ 8x8-bit) compress
-    vectors to 8 code bytes, ADC lookup tables score the compressed
-    corpus, exact cosine re-ranks the k x refine_factor ADC survivors
-    (operator default 32 — the r09 codebook sweep fixed recall at the
-    cause: ck 32->256 measured 0.34->0.74 pooled recall at the
-    200k-vector decade at fixed refine, letting refine walk back from
-    the r08 emergency 64). Recall >= 0.5 vs cosine_topk is pinned in
-    tests/test_similarity.py AND carried in-row: recall_at_k/recall_ok
-    audit columns vs the in-query exact truth (VERDICT r07 #4);
-    deterministic (seeded codebooks, tie order by neighbor id)."""
+    """Full-scan product-quantization ANN: ``ivfpq_topk`` probing all
+    16 cells, so every vector's 8 residual code bytes are ADC-scored
+    (8-subspace 256-entry codebooks, textbook PQ 8x8-bit) and exact
+    cosine re-ranks the k x refine_factor survivors — the high-recall
+    tier beside ``ann_ivfpq_topk``'s 6-of-16 minimum-IO probe. Recall
+    >= 0.5 vs cosine_topk is pinned in tests/test_similarity.py AND
+    carried in-row: recall_at_k/recall_ok audit columns vs the
+    in-query exact truth (VERDICT r07 #4); deterministic (seeded
+    codebooks, tie order by neighbor id)."""
     from sales_forecast_pyspark_spark.llmdata.similarity import (
         cosine_topk,
-        pq_topk,
+        ivfpq_topk,
         topk_recall_audit,
     )
 
     emb = spread_scan(read_table(spark, sf_dir, "embeddings"), "vec_id")
     q = emb.filter(F.col("vec_id") < 20)
-    return topk_recall_audit(pq_topk(emb, q, k=5), cosine_topk(emb, q, k=5))
+    return topk_recall_audit(
+        ivfpq_topk(emb, q, k=5, n_probe=16), cosine_topk(emb, q, k=5)
+    )
 
 
 @register("ann_ivfpq_topk")  # rows-only: KMeans cells/codebooks not SQL-expressible
@@ -2776,13 +2756,8 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-query exact truth (VERDICT r07 #4). Runs the operator DEFAULTS,
     which since r11 own the measured margin (n_probe=6: pooled recall
     0.61 at 20k / 0.59 at 200k vs 0.55 at the old default 4 — one bad
-    seeded-KMeans draw from the bar). The contracted division of labor
-    (ivfpq_topk docstring + SCALING.md probe ladder): IVF-PQ is the
-    minimum-IO >=0.5 tier, pq_topk the >=0.7 tier — probe coverage
-    buys recall sublinearly on a structureless corpus, and past ~60%
-    scanned a full PQ scan is strictly better. Codebook history: r08
-    widened refine_factor to 64 as a symptom patch; the r09 codebook
-    sweep fixed the cause (codebook_k=256, refine back at 32)."""
+    seeded-KMeans draw from the bar). Probing every cell is the
+    full-scan tier, ``ann_pq_topk``."""
     from sales_forecast_pyspark_spark.llmdata.similarity import (
         cosine_topk,
         ivfpq_topk,

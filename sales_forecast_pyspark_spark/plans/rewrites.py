@@ -28,4 +28,7 @@ prune reported-expired entries opportunistically. Cosmetic edits
 # CORRECTNESS_r10 re-checked both on their new shapes — and were
 # pruned; likewise the four r12 audit-rewrite entries after
 # CORRECTNESS_r12 checked the audit-carrying shapes.)
-REWRITTEN_AT: dict[str, int] = {}
+REWRITTEN_AT: dict[str, int] = {
+    # the full PQ scan moved onto ivfpq_topk probing every cell
+    "ann_pq_topk": 17,
+}

@@ -23,7 +23,7 @@ from sales_forecast_pyspark_spark.session import get_spark
 # only the final post-iteration join; the per-round shapes are
 # documented in llmdata/cluster.py and covered by tests).
 SKIP = {"forecast_lr", "forecast_lr_full", "forecast_segmented",
-        "forecast_eval_kpi", "lr_coefficients_top", "ann_ivf_topk",
+        "forecast_eval_kpi", "lr_coefficients_top",
         "dedup_clusters", "near_dedup_survivors", "forecast_rf",
         "forecast_gbt", "ann_pq_topk", "ann_ivfpq_topk", "backtest_lr",
         "leakage_free_split", "model_quality_audit",

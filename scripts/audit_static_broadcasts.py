@@ -48,7 +48,7 @@ SKIP = {
     "ann_index_lifecycle",  # builds + appends the persisted index eagerly
     "minhash_store_lifecycle",  # builds + appends the persisted store eagerly
     "semantic_dedup_lifecycle",  # builds + appends the persisted index eagerly
-    "ann_ivf_topk", "ann_ivfpq_topk", "ann_pq_topk", "backtest_lr",
+    "ann_ivfpq_topk", "ann_pq_topk", "backtest_lr",
     "dedup_clusters", "forecast_eval_kpi", "forecast_gbt", "forecast_lr",
     "forecast_lr_full", "forecast_rf", "forecast_segmented",
     "leakage_free_split", "lr_coefficients_top", "model_quality_audit",

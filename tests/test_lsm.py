@@ -341,3 +341,38 @@ def test_write_sized_layouts_and_destination(spark, tmp_path):
     assert lsm.destination(d, "codes", None, build=True) == (
         f"{d}/codes", "overwrite"
     )
+
+
+def test_cell_layout_files_are_byte_identical_across_writes(spark, tmp_path):
+    """The cell layout sorts each task on ``(cell, key)``, so the same
+    rows written to two paths give each ``cell=`` directory files of
+    identical bytes even when they reach the writer's shuffle in
+    opposite orders: a file's row order does not follow the order in
+    which shuffle blocks arrive (file names differ, contents do not)."""
+    import glob
+    import pathlib
+
+    rows = [(i, i % 4, [i % 7, i % 11, i % 13]) for i in range(400)]
+    schema = "neighbor_id long, cell int, codes array<int>"
+    codes = lsm.Table(
+        "codes", ("neighbor_id", "cell", "codes"), ("neighbor_id",), 1, cells=4
+    )
+    target = lsm.DEFAULT_TARGET_FILE_MB * 1024 * 1024
+
+    def contents(p: str) -> dict[str, list[bytes]]:
+        out = {}
+        for c in sorted(glob.glob(os.path.join(p, "cell=*"))):
+            files = glob.glob(os.path.join(c, "*.parquet"))
+            out[os.path.basename(c)] = sorted(
+                pathlib.Path(f).read_bytes() for f in files
+            )
+        return out
+
+    d = str(tmp_path)
+    for sub, order in (("a", rows), ("b", rows[::-1])):
+        df = spark.createDataFrame(order, schema)
+        lsm.write_sized(codes, df, f"{d}/{sub}", "overwrite", 8 * target)
+    a, b = contents(f"{d}/a"), contents(f"{d}/b")
+    assert sorted(a) == [f"cell={c}" for c in range(4)]
+    assert all(1 <= len(fs) <= 2 for fs in a.values())
+    assert a == b

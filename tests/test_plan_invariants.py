@@ -19,7 +19,7 @@ from tests.conftest import SF_SMALL
 # scripts/audit_plans.py) — building their "plan" costs minutes.
 SKIP = {
     "forecast_lr", "forecast_lr_full", "forecast_segmented",
-    "forecast_eval_kpi", "lr_coefficients_top", "ann_ivf_topk",
+    "forecast_eval_kpi", "lr_coefficients_top",
     "dedup_clusters", "near_dedup_survivors", "forecast_rf",
     "forecast_gbt", "ann_pq_topk", "ann_ivfpq_topk", "backtest_lr",
     "leakage_free_split", "model_quality_audit", "ann_index_lifecycle",

@@ -78,26 +78,6 @@ def test_multimodal_arrow_roundtrip(spark):
         assert out[doc_id]["header_hex"] == raw[:4].hex()
 
 
-def test_ivf_topk_recall_and_determinism(emb, spark):
-    """IVF with 4-of-16 probes on random 64-d vectors (IVF's worst case:
-    no cluster structure) must still reach reasonable recall vs exact
-    brute force, and repeat identically under its seed."""
-    from sales_forecast_pyspark_spark.llmdata import ivf_topk
-
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = {(r["query_id"], r["neighbor_id"])
-             for r in cosine_topk(emb, queries, k=5).collect()}
-    a = {(r["query_id"], r["neighbor_id"])
-         for r in ivf_topk(emb, queries, k=5).collect()}
-    b = {(r["query_id"], r["neighbor_id"])
-         for r in ivf_topk(emb, queries, k=5).collect()}
-    assert a == b
-    assert len(exact & a) / len(exact) >= 0.5
-    # every query still gets a full top-5 (probed cells are never empty
-    # here: 500 vectors / 16 cells >> 5)
-    assert len(a) == len(exact) == 50
-
-
 def test_sample_frames_fanout_and_losslessness(spark):
     """Frame sampling: n_frames rows per doc through one Arrow pass,
     deterministic chunker concatenates back to the payload."""
@@ -161,54 +141,32 @@ def test_quantize_roundtrip_error_bound(spark):
     assert cq["emb_hat"] == [2.5, 2.5, 2.5]
 
 
-def test_pq_topk_recall_and_determinism(emb, spark):
-    """Product-quantization ANN: recall@5 vs exact cosine must clear
-    the same bar as IVF (>= 0.5 with the default prune-then-refine
-    config), results must be identical across runs (seeded codebooks),
-    and every returned neighbor's cos_sim must match the exact score
-    (the refine stage computes true cosines, not ADC estimates)."""
-    from sales_forecast_pyspark_spark.llmdata.similarity import (
-        cosine_topk,
-        pq_topk,
-    )
-
-    queries = emb.limit(20)
-    got = pq_topk(emb, queries, k=5)
-    pairs = {(r["query_id"], r["neighbor_id"]): r["cos_sim"] for r in got.collect()}
-    exact = cosine_topk(emb, queries, k=5)
-    epairs = {(r["query_id"], r["neighbor_id"]): r["cos_sim"] for r in exact.collect()}
-    recall = len(pairs.keys() & epairs.keys()) / len(epairs)
-    assert recall >= 0.5, recall
-    # refined scores are exact cosines: equal wherever both report a pair
-    for key in pairs.keys() & epairs.keys():
-        assert abs(pairs[key] - epairs[key]) < 1e-6, key
-    rerun = {
-        (r["query_id"], r["neighbor_id"]): r["cos_sim"]
-        for r in pq_topk(emb, queries, k=5).collect()
-    }
-    assert rerun == pairs
-
-
-def test_ivfpq_topk_recall_and_determinism(emb, spark):
-    """IVF-PQ composition: recall@5 vs exact cosine >= 0.5 while
-    scanning only n_probe/n_centroids of the corpus; deterministic
-    across runs; refined scores are exact cosines."""
+@pytest.mark.parametrize("n_probe", [4, 6, 16])
+def test_ivfpq_topk_recall_and_determinism(emb, spark, n_probe):
+    """IVF-PQ on random 64-d vectors (IVF's worst case: no cluster
+    structure) across the probe ladder: 4-of-16 cells ranked exactly
+    inside, the default 6, and all 16 (the full PQ scan that
+    ``ann_pq_topk`` runs). Recall@5 vs exact cosine >= 0.5; every query
+    gets its full top-5 (probed cells are never empty here: 500 vectors
+    / 16 cells >> 5); deterministic across runs; refined scores are
+    exact cosines."""
     from sales_forecast_pyspark_spark.llmdata.similarity import (
         cosine_topk,
         ivfpq_topk,
     )
 
     queries = emb.limit(20)
-    got = ivfpq_topk(emb, queries, k=5)
+    got = ivfpq_topk(emb, queries, k=5, n_probe=n_probe)
     pairs = {(r["query_id"], r["neighbor_id"]): r["cos_sim"] for r in got.collect()}
     exact = cosine_topk(emb, queries, k=5)
     epairs = {(r["query_id"], r["neighbor_id"]): r["cos_sim"] for r in exact.collect()}
+    assert len(pairs) == len(epairs) == 100
     assert len(pairs.keys() & epairs.keys()) / len(epairs) >= 0.5
     for key in pairs.keys() & epairs.keys():
         assert abs(pairs[key] - epairs[key]) < 1e-6, key
     rerun = {
         (r["query_id"], r["neighbor_id"]): r["cos_sim"]
-        for r in ivfpq_topk(emb, queries, k=5).collect()
+        for r in ivfpq_topk(emb, queries, k=5, n_probe=n_probe).collect()
     }
     assert rerun == pairs
 
