@@ -97,7 +97,8 @@ def _tables(num_hashes: int) -> tuple[lsm.Table, lsm.Table, lsm.Table]:
     """The sized tables' write decisions (``lsm.Table``): signatures
     doc_id-sorted for the verify join's point lookups, buckets
     (band, bucket)-sorted for row-group locality on the screen's join
-    key, and the small zero-token fingerprints tier unsorted."""
+    key, and the small zero-token fingerprints tier fp-sorted for the
+    screen's equality join (as ``ingest.FPS``)."""
     return (
         lsm.Table(
             "signatures", ("doc_id", "sig", "src_batch"), ("doc_id",),
@@ -108,7 +109,8 @@ def _tables(num_hashes: int) -> tuple[lsm.Table, lsm.Table, lsm.Table]:
             ("doc_id", "band", "bucket"), 40, ("band", "bucket"),
         ),
         lsm.Table(
-            "fingerprints", ("doc_id", "fp", "src_batch"), ("doc_id",), 64
+            "fingerprints", ("doc_id", "fp", "src_batch"), ("doc_id",), 64,
+            ("fp",),
         ),
     )
 

@@ -175,8 +175,8 @@ class Table:
       files_per_cell)`` groups, so a cell directory gets at most
       ``files_per_cell`` files and the one-directory-per-cell static
       PartitionFilter pruning holds, each task sorted on ``(cell,
-      key)`` so a file's bytes do not follow shuffle arrival order;
-      neither → plain ``repartition(n)``.
+      key)`` so a file's bytes do not follow shuffle arrival order.
+      Every table names one of the two.
     """
 
     name: str
@@ -206,14 +206,12 @@ def write_sized(
             .sortWithinPartitions("cell", *table.key)
             .write.partitionBy("cell")
         )
-    elif table.sort:
+    else:
         w = (
             df.repartitionByRange(n, *table.sort)
             .sortWithinPartitions(*table.sort)
             .write
         )
-    else:
-        w = df.repartition(n).write
     w.mode(mode).parquet(dst)
 
 

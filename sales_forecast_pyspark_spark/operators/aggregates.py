@@ -113,69 +113,6 @@ def grouped_top_k(
     )
 
 
-def daily_rollup_partials(
-    df: DataFrame,
-    keys: list[str],
-    qty_col: str,
-    revenue_expr: Column,
-    price_expr: Column,
-) -> DataFrame:
-    """Mergeable partial state for ``daily_rollup`` — the flagship
-    aggregate split into partial/merge/finalize so the panel can be
-    maintained INCREMENTALLY: persist this table once, fold each new
-    raw partition in with ``merge_daily_rollup_partials``, publish with
-    ``finalize_daily_rollup``. The 100 TB history is scanned once per
-    new partition, never re-aggregated.
-
-    The partials stay in DECIMAL (unrounded): decimal sums are exact
-    and associative, so merge-then-finalize is BIT-IDENTICAL to
-    ``daily_rollup(exact=True)`` over all raw data — rounding only
-    happens once, in finalize, exactly where the one-shot aggregate
-    rounds. (Persisting the ROUNDED public columns instead would break
-    this: round(a) + round(b) != round(a + b).)"""
-    return df.groupBy(*keys).agg(
-        F.sum(qty_col).cast("double").alias("_qty_sum"),
-        F.sum(revenue_expr.cast("decimal(30,6)")).alias("_rev_dec"),
-        F.sum(F.round(price_expr, 7).cast("decimal(30,7)")).alias("_price_dec"),
-        F.count(price_expr).alias("_price_cnt"),
-    )
-
-
-def merge_daily_rollup_partials(
-    existing: DataFrame, delta: DataFrame, keys: list[str]
-) -> DataFrame:
-    """Fold a delta partial table (a new partition's
-    ``daily_rollup_partials``) into an existing one: union + one
-    re-aggregation of the decimal partials. Keys on only one side pass
-    through; same schema out, ready to overwrite-by-partition."""
-    u = existing.select(*keys, "_qty_sum", "_rev_dec", "_price_dec", "_price_cnt")
-    u = u.unionByName(
-        delta.select(*keys, "_qty_sum", "_rev_dec", "_price_dec", "_price_cnt")
-    )
-    return u.groupBy(*keys).agg(
-        F.sum("_qty_sum").alias("_qty_sum"),
-        F.sum("_rev_dec").alias("_rev_dec"),
-        F.sum("_price_dec").alias("_price_dec"),
-        F.sum("_price_cnt").alias("_price_cnt"),
-    )
-
-
-def finalize_daily_rollup(partials: DataFrame, keys: list[str]) -> DataFrame:
-    """Publish the partial table as the public panel columns, applying
-    the same rounding chain as ``daily_rollup(exact=True)``:
-    ``money_sum``'s decimal round for revenue, ``stable_avg``'s
-    sum-cast-then-divide for avg_price."""
-    return partials.select(
-        *keys,
-        F.col("_qty_sum").alias("qty"),
-        F.round(F.col("_rev_dec"), 2).cast("double").alias("revenue"),
-        (
-            F.col("_price_dec").cast("double")
-            / F.nullif(F.col("_price_cnt"), F.lit(0))
-        ).alias("avg_price"),
-    )
-
-
 def retention_matrix(
     df: DataFrame,
     id_col: str = "user_id",

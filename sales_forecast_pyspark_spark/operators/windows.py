@@ -24,10 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# The attribution family's touch/conversion taxonomy — single source
-# of truth shared by touch_attribution, last_touch_rows, the streaming
-# attribution_stream, and the rehearsal harness (code-review r08:
-# the tuple was hand-copied at four sites and could drift).
+# The attribution family's touch/conversion taxonomy: which event types
+# count as touches, and which one is the conversion they are credited for.
 DEFAULT_TOUCH_TYPES: tuple[str, ...] = ("view", "click", "signup")
 DEFAULT_CONVERSION_TYPE = "purchase"
 
@@ -342,16 +340,7 @@ def series_autocorr(
     return out.orderBy(*key_cols, "lag")
 
 
-def touch_attribution(
-    events: DataFrame,
-    touch_types: Sequence[str] = DEFAULT_TOUCH_TYPES,
-    conversion_type: str = DEFAULT_CONVERSION_TYPE,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def touch_attribution(events: DataFrame) -> DataFrame:
     """Last-touch marketing attribution: every conversion's value is
     credited to the most recent preceding touch event (view/click/...)
     on the same user's timeline; conversions with no prior touch land in
@@ -368,7 +357,7 @@ def touch_attribution(
     table twice and explode on power users), and the aggregate input is
     already down to conversions only.
 
-    Determinism: timeline order tie-breaks on ``tiebreak_col``; revenue
+    Determinism: timeline order tie-breaks on ``event_id``; revenue
     uses the exact decimal ``money_sum``; latency sums exact
     microsecond longs before one double division (micros are
     TZ-shift-invariant under subtraction, so the metric is stable
@@ -376,15 +365,30 @@ def touch_attribution(
     """
     from sales_forecast_pyspark_spark.functions.deterministic import money_sum
 
-    rows = last_touch_rows(
-        events,
-        touch_types=touch_types,
-        conversion_type=conversion_type,
-        user_col=user_col,
-        ts_col=ts_col,
-        type_col=type_col,
-        value_col=value_col,
-        tiebreak_col=tiebreak_col,
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    is_touch = F.col("event_type").isin(*DEFAULT_TOUCH_TYPES)
+    rows = (
+        events.select(
+            "event_type",
+            "value",
+            F.unix_micros(F.col("ts")).alias("_us"),
+            F.last(F.when(is_touch, F.col("event_type")), ignorenulls=True)
+            .over(w)
+            .alias("_touch_type"),
+            F.last(F.when(is_touch, F.unix_micros(F.col("ts"))), ignorenulls=True)
+            .over(w)
+            .alias("_touch_us"),
+        )
+        .filter(F.col("event_type") == DEFAULT_CONVERSION_TYPE)
+        .select(
+            F.coalesce(F.col("_touch_type"), F.lit("none")).alias("channel"),
+            "value",
+            (F.col("_us") - F.col("_touch_us")).alias("latency_us"),
+        )
     )
     return (
         rows.groupBy("channel")
@@ -399,58 +403,4 @@ def touch_attribution(
             ).alias("avg_days_to_convert"),
         )
         .orderBy("channel")
-    )
-
-
-def last_touch_rows(
-    events: DataFrame,
-    touch_types: Sequence[str] = DEFAULT_TOUCH_TYPES,
-    conversion_type: str = DEFAULT_CONVERSION_TYPE,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Per-conversion last-touch attribution rows — the row-grain twin
-    of ``touch_attribution`` (which aggregates the same window pass to
-    channel grain) and the batch twin of the streaming operator's
-    emissions (``streaming.stream_ops.attribution_stream``): one row per
-    conversion with (user_id, event_id, channel, value, latency_us).
-    Used as the reprocessing path when late/out-of-order events make the
-    stream's O(1) per-user state unable to retro-correct an
-    already-emitted conversion.
-
-    Plan shape: identical single WindowExec to ``touch_attribution`` —
-    one exchange + per-user sort, no self-join."""
-    w = (
-        Window.partitionBy(user_col)
-        .orderBy(ts_col, tiebreak_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    is_touch = F.col(type_col).isin(*touch_types)
-    return (
-        events.select(
-            F.col(user_col).alias("user_id"),
-            F.col(tiebreak_col).alias("event_id"),
-            F.col(type_col),
-            F.col(value_col).alias("value"),
-            F.unix_micros(F.col(ts_col)).alias("_us"),
-            F.last(F.when(is_touch, F.col(type_col)), ignorenulls=True)
-            .over(w)
-            .alias("_touch_type"),
-            F.last(
-                F.when(is_touch, F.unix_micros(F.col(ts_col))), ignorenulls=True
-            )
-            .over(w)
-            .alias("_touch_us"),
-        )
-        .filter(F.col(type_col) == conversion_type)
-        .select(
-            "user_id",
-            "event_id",
-            F.coalesce(F.col("_touch_type"), F.lit("none")).alias("channel"),
-            "value",
-            (F.col("_us") - F.col("_touch_us")).alias("latency_us"),
-        )
     )

@@ -1893,9 +1893,7 @@ FROM events GROUP BY 1, 2 ORDER BY 1, 2
 """,
 )
 def q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window aggregation per event type — the batch
-    twin of the streaming pipeline in streaming/stream_ops.py (same
-    window expression; batch-stream equivalence is tested)."""
+    """Tumbling 1-hour window aggregation per event type."""
     ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type", F.window("ts", "1 hour").alias("w"))

@@ -1,43 +1,14 @@
 """Streaming-tier scale rehearsal: measured evidence for SCALING.md's
-"Streaming" claims, one-to-two decades above the driver's test scale.
+streaming dedup claims, one-to-two decades above the testdata scales
+(the batch tiers' decades are scripts/scale_rehearsal.py).
 
-The batch tiers got measured rehearsal decades in r08
-(scripts/scale_rehearsal.py); this script extends the same discipline
-to the production-shaped streaming paths, which until now were
-covered by pytest equivalence at sf0.001 only:
-
-1. ``windowed_totals`` — the built-in watermarked tumbling-window
-   aggregation (complete mode). The scale claim: aggregation state
-   scales with the WINDOW GRID (date-range hours x event types), not
-   with input rows — 10x events over the same date range must hold
-   state rows flat. Drained output is compared against the batch twin
-   (same expressions), so the run doubles as a batch-stream
-   equivalence check at scale.
-2. ``attribution`` — the applyInPandasWithState last-touch operator.
-   The scale claim: per-user state is ONE tuple, so state rows track
-   DISTINCT USERS (10x here, by the generator's key remap) while
-   bytes/user stay flat, and throughput (rows/s) holds as the corpus
-   grows. Output goes to the noop sink — this path measures the
-   stateful engine, not a driver collect. No cross-batch ordering is
-   assumed by the measurement: unordered part-files mean late touches
-   may mis-attribute (the documented limitation: recompute affected
-   users with the batch ``last_touch_rows``); emission COUNT still equals the
-   conversion count, which is asserted via observe() metrics.
-3. ``partials_fold`` — the foreachBatch incremental panel maintenance
-   (versioned decimal partials). The scale claims: per-fold cost is
-   bounded by STATE SIZE (panel grain), not log length, and the final
-   state finalizes bit-equal to a one-shot batch rebuild — asserted
-   here via an exceptAll diff at full scale, the same gate the sf0.001
-   pytest pins.
-
-4. ``ingest_all`` — the composed TRIAD loop (stream_ingest_dedup_all,
-   VERDICT r13 ask #6; the engine's one streaming dedup loop) over a
-   four-class engineered stream (exact / text / semantic / fresh, one
-   class per verdict). Claims: per-class verdict exactness — the
-   short-circuit stage order holds under real micro-batching at every
-   decade — plus end-to-end throughput and post-drain increment depth
-   across all three stores.
-5. ``dedup_screen_ratio`` — a 500-doc MinHash store screen against
+1. ``ingest_all`` — the composed TRIAD loop (stream_ingest_dedup_all,
+   the engine's one streaming dedup loop) over a four-class engineered
+   stream (exact / text / semantic / fresh, one class per verdict).
+   Claims: per-class verdict exactness — the short-circuit stage order
+   holds under real micro-batching at every decade — plus end-to-end
+   throughput and post-drain increment depth across all three stores.
+2. ``dedup_screen_ratio`` — a 500-doc MinHash store screen against
    the one-shot ``minhash_near_dedup`` it replaces, per decade.
 
 Usage (generate rehearsal data first — scripts/scale_rehearsal.py gen):
@@ -45,7 +16,7 @@ Usage (generate rehearsal data first — scripts/scale_rehearsal.py gen):
     python scripts/stream_rehearsal.py --dirs /root/testdata/sf0.1 .rehearsal/sf1x
 
 Prints one JSON line per (scale, path) with wall_s / input_rows /
-rows_per_s / n_batches / state rows+bytes / equivalence flags, then a
+rows_per_s / n_batches / exactness flags, then a
 single summary JSON line.
 """
 
@@ -61,7 +32,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
@@ -80,7 +50,7 @@ def _collect_progress(q) -> list[dict]:
     silent ring-buffer truncation: every rehearsal query runs on a
     fresh checkpoint, so batch ids start at 0 — a first retained entry
     with batchId > 0 means the buffer dropped the head and any summed
-    total (input_rows, observe() counts) would be undercounted. This
+    total (input_rows) would be undercounted. This
     anchors on batchId rather than len(progs) because Spark's
     ProgressReporter dequeues down to cap-1 entries, making a
     ``len >= cap`` check unreachable (code-review r08)."""
@@ -95,182 +65,13 @@ def _collect_progress(q) -> list[dict]:
     return progs
 
 
-def _drain(sdf: DataFrame, *, fmt: str, name: str | None = None,
-           output_mode: str = "append", ckpt: str | None = None):
-    """Run a streaming frame to completion (availableNow) and return
-    (wall_s, progress list). Progress entries carry the per-batch input
-    rows, the state-store row/byte counts, and observe() metrics."""
-    _raise_progress_retention(sdf.sparkSession)
-    w = sdf.writeStream.outputMode(output_mode).trigger(availableNow=True)
-    if name:
-        w = w.queryName(name)
-    if ckpt:
-        w = w.option("checkpointLocation", ckpt)
-    t0 = time.time()
-    q = w.format(fmt).start()
-    q.awaitTermination()
-    wall = time.time() - t0
-    return wall, _collect_progress(q)
-
-
 def _progress_stats(progs: list[dict]) -> dict:
     rows = sum(int(p.get("numInputRows", 0)) for p in progs)
     batches = sum(1 for p in progs if int(p.get("numInputRows", 0)) > 0)
-    state_rows = state_bytes = 0
-    for p in reversed(progs):
-        ops = p.get("stateOperators") or []
-        if ops:
-            state_rows = sum(int(o.get("numRowsTotal", 0)) for o in ops)
-            state_bytes = sum(int(o.get("memoryUsedBytes", 0)) for o in ops)
-            break
-    return {"input_rows": rows, "n_batches": batches,
-            "state_rows": state_rows, "state_bytes": state_bytes}
+    return {"input_rows": rows, "n_batches": batches}
 
 
-def _frames_equal(a: DataFrame, b: DataFrame) -> bool:
-    """Exact multiset equality without a driver collect (the scaled
-    frames are panel-sized): two anti-diffs must both be empty."""
-    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-
-def run_windowed(spark, sf_dir, files_per_trigger) -> dict:
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-    from sales_forecast_pyspark_spark.streaming.stream_ops import (
-        stream_events,
-        windowed_event_totals,
-    )
-
-    src = stream_events(spark, sf_dir, files_per_trigger)
-    name = "rehearsal_windowed"
-    wall, progs = _drain(
-        windowed_event_totals(src), fmt="memory", name=name,
-        output_mode="complete",
-    )
-    out = {"path": "windowed_totals", "wall_s": round(wall, 2)}
-    out.update(_progress_stats(progs))
-    # batch twin: identical expressions on the batch scan — complete
-    # mode retains all state, so the drained table must match exactly.
-    batch = windowed_event_totals(read_table(spark, sf_dir, "events"))
-    out["matches_batch"] = _frames_equal(spark.table(name), batch)
-    return out
-
-
-def run_attribution(spark, sf_dir, files_per_trigger) -> dict:
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-    from sales_forecast_pyspark_spark.streaming.stream_ops import (
-        DEFAULT_CONVERSION_TYPE,
-        DEFAULT_TOUCH_TYPES,
-        attribution_stream,
-        stream_events,
-    )
-
-    src = stream_events(spark, sf_dir, files_per_trigger)
-    # observe() rides INSIDE the running query: emission count without
-    # a driver-side sink (output goes to noop).
-    audited = attribution_stream(src).observe(
-        "attr_out", F.count(F.lit(1)).alias("n_out")
-    )
-    wall, progs = _drain(audited, fmt="noop")
-    out = {"path": "attribution", "wall_s": round(wall, 2)}
-    out.update(_progress_stats(progs))
-    out["emitted"] = sum(
-        int(p.get("observedMetrics", {}).get("attr_out", {}).get("n_out", 0))
-        for p in progs
-    )
-    # one aggregation pass over the batch events table for all three
-    # reference counts (code-review r08: was four separate scans). The
-    # touch/conversion taxonomy is IMPORTED from the operator family's
-    # single source of truth, not hand-copied — a retune cannot leave
-    # this harness checking a different taxonomy.
-    events = read_table(spark, sf_dir, "events")
-    ref = events.agg(
-        F.count(F.when(F.col("event_type") == DEFAULT_CONVERSION_TYPE, 1)
-                ).alias("conversions"),
-        F.countDistinct("user_id").alias("distinct_users"),
-        F.countDistinct(
-            F.when(F.col("event_type").isin(*DEFAULT_TOUCH_TYPES),
-                   F.col("user_id"))
-        ).alias("touch_users"),
-    ).first()
-    out["conversions"] = ref["conversions"]
-    out["distinct_users"] = ref["distinct_users"]
-    # the operator only writes state for users with >= 1 TOUCH event
-    # (a purchase-only user emits rows but leaves no state), so the
-    # state-claim comparison anchors on touch users — equality with
-    # distinct_users is a corpus property, not an operator guarantee
-    # (code-review r08).
-    out["touch_users"] = ref["touch_users"]
-    out["emits_all_conversions"] = out["emitted"] == out["conversions"]
-    out["state_is_per_touch_user"] = out["state_rows"] == out["touch_users"]
-    return out
-
-
-def run_partials_fold(spark, sf_dir, files_per_trigger) -> dict:
-    from sales_forecast_pyspark_spark.operators.aggregates import (
-        daily_rollup_partials,
-        finalize_daily_rollup,
-    )
-    from sales_forecast_pyspark_spark.plans.panel import (
-        PANEL_GRAIN,
-        PANEL_QTY_COL,
-        enrich_for_panel,
-        panel_price_expr,
-        panel_revenue_expr,
-    )
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-    from sales_forecast_pyspark_spark.streaming.stream_ops import (
-        maintain_partials_stream,
-        read_latest_partials,
-        stream_lineitem,
-    )
-
-    # THE panel definition, imported — not hand-copied — so this
-    # harness always measures the production panel (code-review r08).
-    keys = PANEL_GRAIN
-    qty = PANEL_QTY_COL
-    rev = panel_revenue_expr()
-    price = panel_price_expr()
-
-    def enrich(li):
-        sup = read_table(spark, sf_dir, "supplier")
-        nat = read_table(spark, sf_dir, "nation")
-        return enrich_for_panel(li, sup, nat)
-
-    tmp = tempfile.mkdtemp(prefix="stream_rehearsal_")
-    try:
-        state, ckpt = os.path.join(tmp, "state"), os.path.join(tmp, "ckpt")
-        src = stream_lineitem(spark, sf_dir, files_per_trigger)
-        # foreachBatch builds its own writeStream, bypassing _drain —
-        # the retention raise and truncation guard must still apply
-        # (code-review r08: this path had neither).
-        _raise_progress_retention(spark)
-        t0 = time.time()
-        q = maintain_partials_stream(
-            enrich(src), state, ckpt, keys, qty, rev, price
-        )
-        q.awaitTermination()
-        wall = time.time() - t0
-        progs = _collect_progress(q)
-        out = {"path": "partials_fold", "wall_s": round(wall, 2)}
-        out.update(_progress_stats(progs))
-        published = finalize_daily_rollup(read_latest_partials(spark, state), keys)
-        out["state_rows"] = published.count()  # external state: panel grain
-        truth = finalize_daily_rollup(
-            daily_rollup_partials(
-                enrich(read_table(spark, sf_dir, "lineitem")),
-                keys, qty, rev, price,
-            ),
-            keys,
-        )
-        out["matches_batch_rebuild"] = _frames_equal(published, truth)
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-
-
-def run_ingest_all(spark, sf_dir, files_per_trigger) -> dict:
+def run_ingest_all(spark, sf_dir) -> dict:
     """The composed TRIAD loop (stream_ingest_dedup_all) — all three
     dedup legs over the same stream, the entry point a real corpus
     pipeline deploys (VERDICT r13 ask #6 wants it measured, not just
@@ -305,8 +106,7 @@ def run_ingest_all(spark, sf_dir, files_per_trigger) -> dict:
     throughput per decade, and post-drain increment-tier depth across
     ALL THREE stores. Micro-batches are bounded by contract (the
     semantic stage's ``SEARCH_MAX_ROWS``; ~3k-row source files, 8
-    files/trigger) — the passed files_per_trigger is deliberately not
-    used."""
+    files/trigger)."""
     from sales_forecast_pyspark_spark.llmdata import (
         build_fp_store,
         build_ivfpq_index,
@@ -472,7 +272,7 @@ def run_ingest_all(spark, sf_dir, files_per_trigger) -> dict:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def run_dedup_screen_ratio(spark, sf_dir, files_per_trigger) -> dict:
+def run_dedup_screen_ratio(spark, sf_dir) -> dict:
     """The screen-vs-reshingle ratio at this corpus decade, made
     reproducible (the r12 numbers in SCALING.md — 2.6× at 20k docs,
     7.8× at 80k — were measured ad hoc; VERDICT r12 ask #5 wants the
@@ -534,9 +334,6 @@ def run_dedup_screen_ratio(spark, sf_dir, files_per_trigger) -> dict:
 
 
 PATHS = {
-    "windowed_totals": run_windowed,
-    "attribution": run_attribution,
-    "partials_fold": run_partials_fold,
     "ingest_all": run_ingest_all,
     "dedup_screen_ratio": run_dedup_screen_ratio,
 }
@@ -548,11 +345,6 @@ def main() -> None:
                     default=["/root/testdata/sf0.1", ".rehearsal/sf1x"])
     ap.add_argument("--paths", nargs="+", default=list(PATHS),
                     choices=list(PATHS))
-    # default = the measured rows-per-group-instance sweet spot (r09,
-    # SCALING.md streaming: 32 files/trigger = 33 rows/instance =
-    # 185.6k rows/s at 100x vs 63.5k at 8) — pass 8 to reproduce the
-    # historical r08/r09 ladder numbers
-    ap.add_argument("--files-per-trigger", type=int, default=32)
     args = ap.parse_args()
 
     from sales_forecast_pyspark_spark.session import get_spark
@@ -565,7 +357,7 @@ def main() -> None:
         label = os.path.basename(os.path.normpath(sf_dir))
         summary[label] = {}
         for path in args.paths:
-            res = PATHS[path](spark, sf_dir, args.files_per_trigger)
+            res = PATHS[path](spark, sf_dir)
             res["scale"] = label
             # dedup_screen_ratio reports component timings, not a
             # streamed row total — no throughput line for it

@@ -131,45 +131,6 @@ def test_winsorize_clips_to_group_cuts_and_passes_nulls(spark):
     assert all(vals[k] == k[1] for k in vals)
 
 
-def test_incremental_daily_rollup_equals_one_shot(spark, tmp_path):
-    """Partial/merge/finalize maintenance of the flagship rollup must be
-    BIT-identical to the one-shot daily_rollup(exact=True) over all raw
-    data — including through a parquet round-trip of the decimal
-    partials and for keys present in only one increment."""
-    from sales_forecast_pyspark_spark.operators.aggregates import (
-        daily_rollup,
-        daily_rollup_partials,
-        finalize_daily_rollup,
-        merge_daily_rollup_partials,
-    )
-    from sales_forecast_pyspark_spark.sources.readers import read_table
-    from tests.conftest import SF_ORACLE
-
-    li = read_table(spark, SF_ORACLE, "lineitem")
-    keys = ["l_partkey", "l_shipdate"]
-    qty = "l_quantity"
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    price = F.col("l_extendedprice") / F.nullif(F.col("l_quantity"), F.lit(0))
-
-    cutoff = li.select(F.percentile_approx("l_shipdate", F.lit(0.7))).first()[0]
-    old = li.filter(F.col("l_shipdate") <= cutoff)
-    new = li.filter(F.col("l_shipdate") > cutoff)
-
-    base = daily_rollup_partials(old, keys, qty, rev, price)
-    path = str(tmp_path / "panel_partials.parquet")
-    base.write.parquet(path)
-    persisted = spark.read.parquet(path)
-    delta = daily_rollup_partials(new, keys, qty, rev, price)
-    merged = merge_daily_rollup_partials(persisted, delta, keys)
-    inc = finalize_daily_rollup(merged, keys)
-
-    full = daily_rollup(li, keys, qty, rev, price, exact=True)
-    cols = keys + ["qty", "revenue", "avg_price"]
-    a = sorted(map(tuple, inc.select(*cols).collect()))
-    b = sorted(map(tuple, full.select(*cols).collect()))
-    assert a == b
-
-
 def test_retention_matrix_property_matches_brute_force(spark):
     """retention_matrix == per-user first-week cohorting in plain
     Python over a deterministic multi-week layout (including users

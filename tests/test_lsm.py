@@ -282,7 +282,7 @@ def test_write_sized_layouts_and_destination(spark, tmp_path):
     """The one store-table writer (``lsm.write_sized``) on tiny frames,
     one table per layout: range-sorted files come out in key order,
     the cell layout writes at most ``files_per_cell`` files per cell
-    directory, the plain layout its sized file count; and the
+    directory, a sort-keyed table its sized file count; and the
     destination rule picks the base or the batch's increment dir with
     the right mode."""
     import glob
@@ -326,13 +326,13 @@ def test_write_sized_layouts_and_destination(spark, tmp_path):
     assert all(1 <= len(files(c)) <= 2 for c in cell_dirs)
     assert spark.read.parquet(f"{d}/c").count() == 200
 
-    # plain layout: repartition(n) to the sized count; a tiny estimate
-    # still writes one file
-    plain = lsm.Table("p", key, key, 1)
-    lsm.write_sized(plain, df, f"{d}/p", "overwrite", 2 * target)
-    assert len(files(f"{d}/p")) == 2
-    lsm.write_sized(plain, df, f"{d}/p1", "overwrite", 1)
-    assert len(files(f"{d}/p1")) == 1
+    # sorted on a non-key column (as the MinHash fingerprints tier is):
+    # the sized count; a tiny estimate still writes one file
+    by_cell = lsm.Table("s", ("neighbor_id", "cell"), key, 1, ("cell",))
+    lsm.write_sized(by_cell, df, f"{d}/s", "overwrite", 2 * target)
+    assert len(files(f"{d}/s")) == 2
+    lsm.write_sized(by_cell, df, f"{d}/s1", "overwrite", 1)
+    assert len(files(f"{d}/s1")) == 1
 
     assert lsm.destination(d, "codes", None) == (f"{d}/codes", "append")
     assert lsm.destination(d, "codes", 7) == (
@@ -344,35 +344,42 @@ def test_write_sized_layouts_and_destination(spark, tmp_path):
 
 
 def test_cell_layout_files_are_byte_identical_across_writes(spark, tmp_path):
-    """The cell layout sorts each task on ``(cell, key)``, so the same
-    rows written to two paths give each ``cell=`` directory files of
-    identical bytes even when they reach the writer's shuffle in
-    opposite orders: a file's row order does not follow the order in
-    which shuffle blocks arrive (file names differ, contents do not)."""
+    """The cell layout sorts each task on ``(cell, key)``, and the
+    sort-keyed layout on its ``sort`` keys, so the same rows written to
+    two paths give each directory files of identical bytes even when
+    they reach the writer's shuffle in opposite orders: a file's row
+    order does not follow the order in which shuffle blocks arrive
+    (file names differ, contents do not)."""
     import glob
     import pathlib
 
     rows = [(i, i % 4, [i % 7, i % 11, i % 13]) for i in range(400)]
     schema = "neighbor_id long, cell int, codes array<int>"
-    codes = lsm.Table(
-        "codes", ("neighbor_id", "cell", "codes"), ("neighbor_id",), 1, cells=4
+    cols, key = ("neighbor_id", "cell", "codes"), ("neighbor_id",)
+    tables = (
+        lsm.Table("codes", cols, key, 1, cells=4),
+        lsm.Table("sorted", cols, key, 1, key),
     )
     target = lsm.DEFAULT_TARGET_FILE_MB * 1024 * 1024
 
     def contents(p: str) -> dict[str, list[bytes]]:
-        out = {}
-        for c in sorted(glob.glob(os.path.join(p, "cell=*"))):
-            files = glob.glob(os.path.join(c, "*.parquet"))
-            out[os.path.basename(c)] = sorted(
-                pathlib.Path(f).read_bytes() for f in files
-            )
-        return out
+        out: dict[str, list[bytes]] = {}
+        for f in glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True):
+            rel = os.path.relpath(os.path.dirname(f), p)
+            out.setdefault(rel, []).append(pathlib.Path(f).read_bytes())
+        return {k: sorted(v) for k, v in out.items()}
 
     d = str(tmp_path)
-    for sub, order in (("a", rows), ("b", rows[::-1])):
-        df = spark.createDataFrame(order, schema)
-        lsm.write_sized(codes, df, f"{d}/{sub}", "overwrite", 8 * target)
-    a, b = contents(f"{d}/a"), contents(f"{d}/b")
+    for table in tables:
+        for sub, order in (("a", rows), ("b", rows[::-1])):
+            df = spark.createDataFrame(order, schema)
+            lsm.write_sized(
+                table, df, f"{d}/{table.name}/{sub}", "overwrite", 8 * target
+            )
+    a, b = contents(f"{d}/codes/a"), contents(f"{d}/codes/b")
     assert sorted(a) == [f"cell={c}" for c in range(4)]
     assert all(1 <= len(fs) <= 2 for fs in a.values())
+    assert a == b
+    a, b = contents(f"{d}/sorted/a"), contents(f"{d}/sorted/b")
+    assert list(a) == ["."] and len(a["."]) == 8
     assert a == b

@@ -20,6 +20,10 @@ it with its tests, or, if it is paper surface or the reference that a
 parity test checks live code against, name it in ``ALLOWED`` with its
 reason.
 
+A script keeps no leftovers either: every top-level def in
+``scripts/*.py`` and ``bench.py`` other than ``main`` must be mentioned
+by some root outside its own body.
+
 The same holds one level down, for options: a ``True``/``False``-default
 parameter that no call site under the roots passes selects a branch
 only tests reach. Fold it into the value every caller gets, or name it
@@ -41,7 +45,6 @@ ALLOWED = {
     "mllib_metrics": "paper surface (COVERAGE.md M7); the regression_metrics parity reference",
     "dequantize_embeddings": "the inverse that checks the live quantize_embeddings",
     "token_count_pandas": "the parity reference for the live tokens_expr",
-    "run_available_now": "the harness that drives the live streaming operators in tests",
 }
 
 ALLOWED_SWITCHES = {
@@ -127,11 +130,15 @@ def _parse() -> tuple[tuple[tuple[str, ast.Module], ...], tuple[ast.Module, ...]
         for path in sorted(PACKAGE.rglob("*.py"))
         for rel in [str(path.relative_to(REPO))]
     )
+    entry = tuple(ast.parse(p.read_text(), filename=str(p)) for p in _entry_paths())
+    return package, entry
+
+
+def _entry_paths() -> list[Path]:
     paths = [REPO / "bench.py", REPO / "__spark_entry__.py"]
     paths += sorted((REPO / "scripts").glob("*.py"))
     paths += sorted((REPO / "perfbench").glob("*.py"))
-    entry = tuple(ast.parse(p.read_text(), filename=str(p)) for p in paths)
-    return package, entry
+    return paths
 
 
 def _walk_package():
@@ -190,6 +197,34 @@ def test_allowlist_names_only_unreached_defs():
     exists, is stale."""
     unreached = {name for _, _, name in _unreached()}
     assert set(ALLOWED) <= unreached, sorted(set(ALLOWED) - unreached)
+
+
+def test_every_script_def_is_called_from_a_root():
+    """A script helper whose callers were deleted (say, a rehearsal leg's
+    drain loop) is dead code that the package walk cannot see: every
+    top-level def of ``scripts/*.py`` and ``bench.py`` but ``main`` must
+    be mentioned by a root statement other than its own definition."""
+    _, entry = _parse()
+    stmts = [stmt for tree in entry for stmt in tree.body]
+    mentions = [_names([stmt]) for stmt in stmts]
+    scripts = {REPO / "bench.py", *(REPO / "scripts").glob("*.py")}
+    uncalled = [
+        f"{path.relative_to(REPO)}:{stmt.lineno} {stmt.name}"
+        for path, tree in zip(_entry_paths(), entry)
+        if path in scripts
+        for stmt in tree.body
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and stmt.name != "main"
+        and not any(
+            stmt.name in names
+            for other, names in zip(stmts, mentions)
+            if other is not stmt
+        )
+    ]
+    assert not uncalled, (
+        f"{len(uncalled)} script defs are called by no root; delete them:\n"
+        + "\n".join(f"  {u}" for u in uncalled)
+    )
 
 
 def _unset_switches() -> list[tuple[str, int, str]]:
