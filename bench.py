@@ -318,6 +318,10 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": _sf_from_dir(sf_dir),
+                # what the board ran on, so runs on different hosts or
+                # core counts are told apart from the line alone
+                "master": spark.sparkContext.master,
+                "default_parallelism": spark.sparkContext.defaultParallelism,
                 # Explicit accounting marker (ADVICE r07): per-query
                 # times for the panel/graph families assume these
                 # persisted frontiers (timed under the _frontier_*

@@ -44,9 +44,11 @@ shared ``_ivfpq_fit`` build stage, similarity.py):
   expected share) — O(batches) kilobyte merges by default,
   ``full_scan=True`` for the recompute-from-data recovery path.
 
-At 100 TB: build cost is the m+1 seeded KMeans fits plus one encode
-pass (once); per-query-batch cost is n_probe/n_centroids of the code
-files + k·refine_factor vector rows + kilobytes of broadcast state.
+At 100 TB: build cost is one pass that collects a bounded training
+sample (at most 256 rows per centre), the m+1 seeded k-means fits on
+the driver, and one encode pass (once); per-query-batch cost is
+n_probe/n_centroids of the code files + k·refine_factor vector rows +
+kilobytes of broadcast state.
 The queries frame stays BOUNDED by contract (at most
 ``SEARCH_MAX_ROWS`` rows: it is materialized driver-side and broadcast,
 the documented O(|Q|) exception class).
@@ -64,6 +66,8 @@ from sales_forecast_pyspark_spark.llmdata import lsm
 from sales_forecast_pyspark_spark.llmdata.dedup_store import _peel
 from sales_forecast_pyspark_spark.llmdata.similarity import (
     SEARCH_MAX_ROWS,
+    _encoded_count,
+    _ivfpq_encode,
     _ivfpq_fit,
     _ivfpq_search,
     _vec_to_python_expr,
@@ -137,23 +141,38 @@ _QUANTIZER_MEMO: dict[str, tuple] = {}
 
 
 def _quantizer_fingerprint(spark: SparkSession, path: str):
+    """The memo key's file fingerprint, or None when a quantizer table
+    is missing or the session has no JVM (Connect mode)."""
     sig = []
-    for sub in ("cells", "codebooks"):
-        p = os.path.join(path, sub)
-        jvm, fs = lsm._jvm_fs(spark, p)
-        jp = jvm.Path(p)
-        if not fs.exists(jp):
-            return None
-        for st in fs.listStatus(jp):
-            sig.append(
-                (
-                    sub,
-                    st.getPath().getName(),
-                    st.getModificationTime(),
-                    st.getLen(),
+    try:
+        for sub in ("cells", "codebooks"):
+            p = os.path.join(path, sub)
+            jvm, fs = lsm._jvm_fs(spark, p)
+            jp = jvm.Path(p)
+            if not fs.exists(jp):
+                return None
+            for st in fs.listStatus(jp):
+                sig.append(
+                    (
+                        sub,
+                        st.getPath().getName(),
+                        st.getModificationTime(),
+                        st.getLen(),
+                    )
                 )
-            )
+    except Exception:
+        return None
     return tuple(sorted(sig))
+
+
+def _memoize_quantizers(path: str, fp, cell_mat, books) -> None:
+    """Freeze the quantizer arrays (every caller shares them, so an
+    in-place op would corrupt every later load) and, given a
+    fingerprint, memoize them under it."""
+    for a in (cell_mat, *books):
+        a.flags.writeable = False
+    if fp is not None:
+        _QUANTIZER_MEMO[os.path.abspath(path)] = (fp, cell_mat, books)
 
 
 def _load_quantizers(spark: SparkSession, path: str):
@@ -169,14 +188,9 @@ def _load_quantizers(spark: SparkSession, path: str):
     import numpy as np
 
     meta = lsm.read_meta(spark, path)
-    key = os.path.abspath(path)
-    fp = None
-    try:
-        fp = _quantizer_fingerprint(spark, path)
-    except Exception:
-        pass  # Connect-mode sessions have no _jvm; fall back to reads
+    fp = _quantizer_fingerprint(spark, path)
     if fp is not None:
-        hit = _QUANTIZER_MEMO.get(key)
+        hit = _QUANTIZER_MEMO.get(os.path.abspath(path))
         if hit is not None and hit[0] == fp:
             return meta, hit[1], hit[2]
     cells = spark.read.parquet(os.path.join(path, "cells")).collect()
@@ -188,10 +202,7 @@ def _load_quantizers(spark: SparkSession, path: str):
     for j in range(meta["m"]):
         rows = sorted((r for r in cb if r["j"] == j), key=lambda r: r["code"])
         books.append(np.stack([np.asarray(r["cen"]) for r in rows]))
-    for a in (cell_mat, *books):
-        a.flags.writeable = False
-    if fp is not None:
-        _QUANTIZER_MEMO[key] = (fp, cell_mat, books)
+    _memoize_quantizers(path, fp, cell_mat, books)
     return meta, cell_mat, books
 
 
@@ -574,11 +585,9 @@ def _build_locked(
     cell_mat, books, enc, d, sub = _ivfpq_fit(
         df, id_col, vec_col, n_centroids, m, codebook_k, seed
     )
-    # cache before the count, as in _append_locked (ADVICE r15): the
-    # count, the codes shuffle-write, the vectors' range-sampling pass
-    # and the vectors write would otherwise each re-run the
-    # m KMeans-transform encode pipeline
-    enc.cache()
+    # cached by the count: the codes shuffle-write, the vectors'
+    # range-sampling pass, the vectors write and the build statistics
+    # all read the one encode pass
     meta = {
         "d": d,
         "sub": sub,
@@ -586,10 +595,9 @@ def _build_locked(
         "codebook_k": codebook_k,
         "n_centroids": n_centroids,
         "seed": seed,
-        "n_vectors": enc.count(),
+        "n_vectors": _encoded_count(enc),
     }
     _write_data(enc, path, meta, meta["n_vectors"], None, build=True)
-    enc.unpersist()
     spark.createDataFrame(
         list(enumerate(cell_mat.tolist())), "cell int, cv array<double>"
     ).write.mode("overwrite").parquet(os.path.join(path, "cells"))
@@ -601,21 +609,28 @@ def _build_locked(
         ],
         "j int, code int, cen array<double>",
     ).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
+    # the arrays just written are what a load would read back (doubles
+    # round-trip exactly), so the first screen or append after a build
+    # collects no quantizer table
+    _memoize_quantizers(
+        path, _quantizer_fingerprint(spark, path), cell_mat, books
+    )
     lsm.write_meta(spark, path, meta, _META_SCHEMA)
-    # Drift bookkeeping, two tables from ONE scan of the tables just
-    # written (one code path, so baseline and report can never disagree
-    # on the error definition; one extra O(N) pass on the build-once
-    # side of the ledger): `stats` is the FROZEN build-time baseline
+    # Drift bookkeeping, two tables from the cached encode pass, with
+    # the per-row error and additive aggregate the append and the full
+    # scan use (so baseline and report can never disagree on the error
+    # definition): `stats` is the FROZEN build-time baseline
     # ivfpq_index_stats compares against, `stats_live` is the evolving
     # additive tier every append folds its contribution into so the
     # report never needs a data scan.
-    build_stats = _cell_error_scan(spark, path)
+    build_stats = _cell_stat_agg(_qerr_per_row(enc, cell_mat, books, m))
     build_stats.cache()
     build_stats.write.mode("overwrite").parquet(os.path.join(path, "stats"))
     build_stats.write.mode("overwrite").parquet(
         os.path.join(path, "stats_live")
     )
     build_stats.unpersist()
+    enc.unpersist()
     return meta
 
 
@@ -629,7 +644,7 @@ def append_to_ivfpq_index(
 ) -> int:
     """Encode NEW vectors with the index's EXISTING quantizers and
     append them — the incremental-ingest flow for a growing corpus
-    (pairs with ``incremental_ingest_dedup``): no KMeans refit, no
+    (pairs with ``incremental_ingest_dedup``): no quantizer refit, no
     touch of already-written partitions beyond parquet append.
 
     With ``batch_id`` set, the append is IDEMPOTENT: the batch lands
@@ -643,14 +658,14 @@ def append_to_ivfpq_index(
     correct under replays and torn appends alike.
 
     Encoding is a single Arrow-batched pass (the declared-Python-
-    boundary class): the cell centers and residual codebooks are
-    kilobytes of broadcast state baked into the closure as numpy
-    arrays, and per batch the cell assignment + per-subspace code
-    argmin are two dense matrix products — the same math
-    ``_ivfpq_fit``'s KMeans ``transform`` applies, so re-encoding a
-    vector the index already saw yields bit-identical (cell, codes)
-    (test-pinned). Returns the number of rows appended. Zero-norm
-    vectors are dropped (no direction), matching the build.
+    boundary class) of ``similarity._ivfpq_encode``, the one encoder
+    the build also runs: the cell centers and residual codebooks are
+    kilobytes of state baked into the closure as numpy arrays, and per
+    batch the cell assignment + per-subspace code argmin are dense
+    matrix products. So re-encoding a vector the index already saw
+    yields bit-identical (cell, codes) (test-pinned). Returns the
+    number of rows appended. Zero-norm vectors are dropped (no
+    direction), matching the build.
 
     Drift honesty: appended vectors are quantized by the ORIGINAL
     codebooks. That is exactly how production IVF-PQ serves a growing
@@ -683,80 +698,25 @@ def _append_locked(
     batch_id: int | None,
 ) -> int:
     """Body of ``append_to_ivfpq_index`` under the held lease."""
-    import numpy as np
-    import pandas as pd
-
     spark = df.sparkSession
     if lsm.already_folded(spark, path, batch_id):
         return 0
     meta, cell_mat, books = _load_quantizers(spark, path)
-    d, sub, m = meta["d"], meta["sub"], meta["m"]
-
-    src = df.select(
-        F.col(id_col).alias("neighbor_id"),
-        _vec_to_python_expr(df, vec_col).alias("v0"),
-    )
-
-    out_schema = (
-        f"neighbor_id {dict(src.dtypes)['neighbor_id']}, "
-        "v array<double>, cell int, codes array<int>"
-    )
-
+    m = meta["m"]
     # The geometry check rides the encode pass instead of its own
     # first() job (VERDICT r15 ask #4 — one fewer of the ~20 sequential
-    # jobs a versioned append was measured to issue per micro-batch);
-    # the task-side marker is re-raised below as the same loud
-    # driver-side ValueError the separate job used to raise.
-    _DIM_ERR = "APPEND_DIM_MISMATCH"
-
-    def encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["v0"].to_numpy()).astype(np.float64)
-            if x.shape[1] != d:
-                raise ValueError(
-                    f"{_DIM_ERR}: append dimension {x.shape[1]} != "
-                    f"index dimension {d}"
-                )
-            norms = np.sqrt(np.einsum("ij,ij->i", x, x))
-            keep = norms > 0
-            if not keep.any():
-                continue
-            pdf = pdf[keep]
-            x = x[keep] / norms[keep, None]
-            # nearest cell by squared L2: argmin(|x|^2 - 2 x.c + |c|^2)
-            cd = -2.0 * (x @ cell_mat.T) + np.einsum(
-                "ij,ij->i", cell_mat, cell_mat
-            )
-            cell = np.argmin(cd, axis=1)
-            resid = x - cell_mat[cell]
-            codes = np.empty((len(x), m), dtype=np.int64)
-            for j in range(m):
-                r = resid[:, j * sub : (j + 1) * sub]
-                bd = -2.0 * (r @ books[j].T) + np.einsum(
-                    "ij,ij->i", books[j], books[j]
-                )
-                codes[:, j] = np.argmin(bd, axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "v": list(x),
-                    "cell": cell.astype("int32"),
-                    "codes": list(codes),
-                }
-            )
-
-    enc = src.mapInPandas(encode, out_schema)
-    enc.cache()
-    try:
-        n_new = enc.count()
-    except Exception as e:  # surface the encode-pass geometry check
-        enc.unpersist()
-        if _DIM_ERR in str(e):
-            detail = str(e).split(_DIM_ERR + ": ", 1)[-1].split("\n", 1)[0]
-            raise ValueError(detail) from None
-        raise
+    # jobs a versioned append was measured to issue per micro-batch):
+    # _encoded_count raises a mismatched dimension as a ValueError.
+    enc = _ivfpq_encode(
+        df.select(
+            F.col(id_col).alias("neighbor_id"),
+            _vec_to_python_expr(df, vec_col).alias("v0"),
+        ),
+        cell_mat,
+        books,
+        "append",
+    )
+    n_new = _encoded_count(enc)
     _write_data(enc, path, meta, n_new, batch_id)
     # Fold this batch's drift-stat contribution into the live tier —
     # the additive (n, Σqerr) statistic computed from the SAME cached

@@ -30,6 +30,15 @@ from sales_forecast_pyspark_spark.session import shuffle_partitions
 # broadcast: the ingest contract's batch ceiling (~50 MB at d=128).
 SEARCH_MAX_ROWS = 50_000
 
+# Training rows per centre for the IVF-PQ quantizers (FAISS's
+# max_points_per_centroid): ``_ivfpq_fit`` trains on at most this many
+# rows times max(n_centroids, codebook_k).
+TRAIN_PER_CENTRE = 256
+
+# Prefix of the error an ``_ivfpq_encode`` task raises on a vector of
+# the wrong dimension (``_encoded_count`` re-raises it on the driver).
+_DIM_ERR = "IVFPQ_DIM_MISMATCH"
+
 
 def cosine_topk(
     df: DataFrame,
@@ -908,6 +917,152 @@ def dequantize_embeddings(
     )
 
 
+def _ivfpq_math():
+    """``(unit_rows, nearest)``, the two numpy kernels that the IVF-PQ
+    fit and its encoder share.
+
+    ``unit_rows(x)`` returns the mask of nonzero rows and those rows
+    scaled to unit length. ``nearest(x, centres)`` returns each row's
+    nearest centre by squared L2, as argmin(-2 x·c + |c|²) (|x|² is the
+    same for every centre), ties to the lowest index; it works through
+    ~4M distances at a time. Both are built inside this function so
+    that cloudpickle ships them by value: the encoder's Python workers
+    need not be able to import this package."""
+    import numpy as np
+
+    def unit_rows(x):
+        norms = np.sqrt(np.einsum("ij,ij->i", x, x))
+        keep = norms > 0
+        return keep, x[keep] / norms[keep, None]
+
+    def nearest(x, centres):
+        cn = np.einsum("ij,ij->i", centres, centres)
+        step = max(1, (1 << 22) // len(centres))
+        return np.concatenate(
+            [
+                np.argmin(-2.0 * (x[lo : lo + step] @ centres.T) + cn, axis=1)
+                for lo in range(0, len(x), step)
+            ]
+        )
+
+    return unit_rows, nearest
+
+
+_unit_rows, _nearest = _ivfpq_math()
+
+
+def _kmeans(x, k: int, seed: int):
+    """Seeded k-means over the rows of ``x`` on the driver, with MLlib
+    ``KMeans``' defaults (``maxIter`` 20, ``tol`` 1e-4) and edge case.
+    With no more than ``k`` distinct rows, those rows (in first-seen
+    order) are the centres. Otherwise k-means++ picks ``k`` seed rows
+    from ``default_rng(seed)``, and Lloyd rounds run until no centre
+    moves by more than 1e-4 or 20 rounds have run; an empty cluster
+    keeps its centre."""
+    import numpy as np
+
+    _, first = np.unique(x, axis=0, return_index=True)
+    if len(first) <= k:
+        return x[np.sort(first)].copy()
+    rng = np.random.default_rng(seed)
+    centres = np.empty((k, x.shape[1]))
+    centres[0] = x[rng.integers(len(x))]
+    d2 = ((x - centres[0]) ** 2).sum(axis=1)
+    for c in range(1, k):
+        cum = np.cumsum(d2)
+        # side="right" never lands on a row already chosen (d2 = 0)
+        i = np.searchsorted(cum, rng.random() * cum[-1], side="right")
+        centres[c] = x[min(int(i), len(x) - 1)]
+        d2 = np.minimum(d2, ((x - centres[c]) ** 2).sum(axis=1))
+    for _ in range(20):
+        cell = _nearest(x, centres)
+        counts = np.bincount(cell, minlength=k)
+        sums = np.stack(
+            [np.bincount(cell, x[:, j], minlength=k) for j in range(x.shape[1])],
+            axis=1,
+        )
+        new = centres.copy()
+        filled = counts > 0
+        new[filled] = sums[filled] / counts[filled, None]
+        moved = ((new - centres) ** 2).sum(axis=1).max()
+        centres = new
+        if moved <= 1e-4**2:
+            break
+    return centres
+
+
+def _ivfpq_encode(src: DataFrame, cell_mat, books, what: str) -> DataFrame:
+    """The one IVF-PQ encoder, used by the build (through
+    ``_ivfpq_fit``) and by ``ann_index.append_to_ivfpq_index``:
+    (neighbor_id, v0) rows in, (neighbor_id, v, cell, codes) rows out.
+    ``v`` is the unit vector, ``cell`` its nearest cell centre and
+    ``codes`` the nearest codeword of each residual subspace. Zero-norm
+    rows have no direction and are dropped.
+
+    One Arrow-batched pass: the cell centres and codebooks are
+    kilobytes of state in the closure, and each batch costs m + 1
+    dense matrix products. A row of the wrong dimension fails the task
+    with ``_DIM_ERR``; ``_encoded_count`` turns that back into a plain
+    ``ValueError`` naming ``what``."""
+    import numpy as np
+    import pandas as pd
+
+    d, m = cell_mat.shape[1], len(books)
+    sub = d // m
+
+    def encode(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = np.stack(pdf["v0"].to_numpy()).astype(np.float64)
+            if x.shape[1] != d:
+                raise ValueError(
+                    f"{_DIM_ERR}: {what} dimension {x.shape[1]} != "
+                    f"index dimension {d}"
+                )
+            keep, x = _unit_rows(x)
+            if not keep.any():
+                continue
+            cell = _nearest(x, cell_mat)
+            resid = x - cell_mat[cell]
+            codes = np.stack(
+                [
+                    _nearest(resid[:, j * sub : (j + 1) * sub], books[j])
+                    for j in range(m)
+                ],
+                axis=1,
+            )
+            yield pd.DataFrame(
+                {
+                    "neighbor_id": pdf["neighbor_id"].to_numpy()[keep],
+                    "v": list(x),
+                    "cell": cell.astype("int32"),
+                    "codes": list(codes),
+                }
+            )
+
+    return src.mapInPandas(
+        encode,
+        f"neighbor_id {dict(src.dtypes)['neighbor_id']}, "
+        "v array<double>, cell int, codes array<int>",
+    )
+
+
+def _encoded_count(enc: DataFrame) -> int:
+    """Cache an ``_ivfpq_encode`` frame and count it. An encode task's
+    dimension error is raised again on the driver as a plain
+    ``ValueError``; the cache is dropped before any error leaves."""
+    enc.cache()
+    try:
+        return enc.count()
+    except Exception as e:
+        enc.unpersist()
+        if _DIM_ERR in str(e):
+            detail = str(e).split(_DIM_ERR + ": ", 1)[-1].split("\n", 1)[0]
+            raise ValueError(detail) from None
+        raise
+
+
 def _ivfpq_fit(
     df: DataFrame,
     id_col: str,
@@ -920,77 +1075,52 @@ def _ivfpq_fit(
     """The IVF-PQ BUILD stage, shared verbatim by ``ivfpq_topk``
     (fit-and-query in one call) and ``llmdata.ann_index`` (fit once,
     persist, query many — the billion-scale usage). Returns
-    (cell_mat, books, encoded corpus, d, sub): the coarse KMeans cell
-    centers as an [n_centroids × d] array, the shared residual
-    codebooks (seeded ``seed + 1 + j`` per subspace) as m
-    [codebook_k × sub] arrays, and (neighbor_id, v, cell, codes) rows —
-    the arrays are the quantizer state ``_ivfpq_search`` takes. Seeded and
-    input-deterministic, so the two callers produce identical indexes
-    from identical inputs (parity pinned in tests/test_ann_index.py).
-    The corpus and assignment frames are cached (each is read by the
-    coarse fit, the m codebook fits, and the encode pass)."""
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    (cell_mat, books, encoded corpus, d, sub): the coarse cell centres
+    as an [n_centroids × d] array (seeded ``seed``), the shared
+    residual codebooks (seeded ``seed + 1 + j`` per subspace) as m
+    [codebook_k × sub] arrays, and the lazy ``_ivfpq_encode`` frame of
+    (neighbor_id, v, cell, codes) rows — the arrays are the quantizer
+    state ``_ivfpq_search`` takes. Seeded and input-deterministic, so
+    the two callers produce identical indexes from identical inputs
+    (parity pinned in tests/test_ann_index.py).
 
-    spark = df.sparkSession
-    corpus0 = df.select(
+    The quantizers train on the driver (``_kmeans``) from one bounded
+    learning set, as in Jégou et al. (TPAMI 2011) and FAISS: the
+    ``TRAIN_PER_CENTRE · max(n_centroids, codebook_k)`` rows with the
+    smallest ``(xxhash64(id), id)``, collected in one job. Below that
+    size (every registry and benchmark corpus) the sample is the whole
+    corpus. ``d`` comes from the sample. Nothing is cached."""
+    import numpy as np
+
+    src = df.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("v0"),
+        _vec_to_python_expr(df, vec_col).alias("v0"),
     )
-    norm = F.sqrt(
-        F.aggregate(F.transform("v0", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
+    cap = TRAIN_PER_CENTRE * max(n_centroids, codebook_k)
+    sample = (
+        src.orderBy(F.xxhash64("neighbor_id"), "neighbor_id")
+        .limit(cap)
+        .toPandas()["v0"]
     )
-    corpus = (
-        corpus0.withColumn("n", norm)
-        .filter(F.col("n") > 0)
-        .select("neighbor_id", F.transform("v0", lambda x: x / F.col("n")).alias("v"))
-    )
-    d = len(corpus.select("v").first()["v"])
+    if len(sample):
+        x = _unit_rows(np.stack(sample.to_numpy()).astype(np.float64))[1]
+    if not len(sample) or not len(x):
+        raise ValueError("IVF-PQ fit needs at least one nonzero vector")
+    d = x.shape[1]
     if d % m != 0:
         raise ValueError(f"vector dim {d} must divide evenly into m={m} subspaces")
     sub = d // m
-    corpus.cache()
-
-    # Coarse quantizer (IVF cells).
-    vecs = corpus.select("neighbor_id", "v", array_to_vector(F.col("v")).alias("_fv"))
-    coarse = KMeans(
-        k=n_centroids, seed=seed, featuresCol="_fv", predictionCol="cell"
-    ).fit(vecs)
-    cell_mat = np.stack(coarse.clusterCenters()).astype(np.float64)
-    cells = spark.createDataFrame(
-        list(enumerate(cell_mat.tolist())), "cell int, cv array<double>"
-    )
-    assigned = (
-        coarse.transform(vecs)
-        .select("neighbor_id", "v", "cell")
-        .join(F.broadcast(cells), "cell")
-        .select(
-            "neighbor_id",
-            "v",
-            "cell",
-            F.zip_with("v", "cv", lambda x, y: x - y).alias("r"),
+    cell_mat = _kmeans(x, n_centroids, seed)
+    resid = x - cell_mat[_nearest(x, cell_mat)]
+    books = [
+        _kmeans(
+            np.ascontiguousarray(resid[:, j * sub : (j + 1) * sub]),
+            codebook_k,
+            seed + 1 + j,
         )
-    )
-    assigned.cache()
-
-    # Shared PQ codebooks trained on pooled residuals, then encode.
-    enc = assigned
-    books = []
-    for j in range(m):
-        enc = enc.withColumn(f"_f{j}", array_to_vector(F.slice("r", j * sub + 1, sub)))
-        km = KMeans(
-            k=codebook_k, seed=seed + 1 + j, featuresCol=f"_f{j}", predictionCol=f"_c{j}"
-        ).fit(enc)
-        enc = km.transform(enc)
-        books.append(np.stack(km.clusterCenters()).astype(np.float64))
-    enc = enc.select(
-        "neighbor_id",
-        "v",
-        "cell",
-        F.array(*[F.col(f"_c{j}") for j in range(m)]).alias("codes"),
-    )
-    return cell_mat, books, enc, d, sub
+        for j in range(m)
+    ]
+    return cell_mat, books, _ivfpq_encode(src, cell_mat, books, "corpus"), d, sub
 
 
 def _vec_to_python_expr(df: DataFrame, vec_col: str):
@@ -1259,7 +1389,7 @@ def ivfpq_topk(
 ) -> DataFrame:
     """IVF-PQ approximate top-k — the composition of the two scale
     tiers into the standard billion-scale layout (FAISS's IVFPQ;
-    Jégou et al. TPAMI 2011, public literature): a coarse KMeans
+    Jégou et al. TPAMI 2011, public literature): a coarse k-means
     quantizer restricts each query to ``n_probe`` cells (IVF), and
     within probed cells the RESIDUALS (vector − its cell centroid) are
     PQ-encoded and scored with per-(query, cell) ADC lookup tables.
@@ -1273,9 +1403,13 @@ def ivfpq_topk(
     k x refine_factor survivors are re-ranked with exact cosine.
     Defaults follow the codebook sweep (codebook_k=256,
     refine_factor=32, SCALING.md "LLM-data tier"); **n_probe defaults
-    to 6**: 4 probes measured pooled recall 0.55 on the structureless
-    audit corpus, one bad seeded-KMeans draw from the 0.5 tier bar,
-    while 6 measure 0.61 (20k) / 0.59 (200k) for 1.5x the ADC mass.
+    to 6**: measured with the MLlib ``KMeans`` fit the quantizers had
+    before they trained on the driver, 4 probes gave pooled recall
+    0.55 on the structureless audit corpus, one bad seeded draw from
+    the 0.5 tier bar, while 6 gave 0.61 (20k) / 0.59 (200k) for 1.5x
+    the ADC mass. With the driver fit the ``ann_ivfpq_topk`` row reads
+    0.66 (sf0.01) and 0.67 (sf0.1) at 6 probes; over fit seeds 1–6 at
+    sf0.1 it reads 0.71–0.81, against 0.70–0.83 for the MLlib fit.
     ``n_probe = n_centroids`` is the full-scan tier: every cell's
     residual codes are ADC-scored (``ann_pq_topk`` runs it).
 

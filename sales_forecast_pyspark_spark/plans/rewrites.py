@@ -31,4 +31,9 @@ prune reported-expired entries opportunistically. Cosmetic edits
 REWRITTEN_AT: dict[str, int] = {
     # the full PQ scan moved onto ivfpq_topk probing every cell
     "ann_pq_topk": 17,
+    # the IVF-PQ quantizers train on the driver from a bounded sample,
+    # and build and append share one encoder
+    "ann_ivfpq_topk": 17,
+    "ann_index_lifecycle": 17,
+    "semantic_dedup_lifecycle": 17,
 }

@@ -273,6 +273,69 @@ def test_quantizer_memo_hits_and_invalidates_on_rebuild(
     assert not np.array_equal(c4, c1)
 
 
+def test_build_leaves_its_quantizers_in_the_memo(spark, emb, tmp_path_factory):
+    """The first screen or append after a build loads no quantizer
+    table: the build memoizes the arrays it wrote, and they equal what
+    the ``cells`` and ``codebooks`` tables hold."""
+    import os
+
+    import numpy as np
+
+    from sales_forecast_pyspark_spark.llmdata.ann_index import (
+        _QUANTIZER_MEMO,
+        _load_quantizers,
+    )
+
+    path = str(tmp_path_factory.mktemp("ivfpq_memo_build") / "idx")
+    build_ivfpq_index(emb.filter(F.col("vec_id") < 300), path)
+    _, cell_mat, books = _QUANTIZER_MEMO[os.path.abspath(path)]
+    meta, c1, b1 = _load_quantizers(spark, path)
+    assert c1 is cell_mat and b1 is books
+    cells = sorted(spark.read.parquet(f"{path}/cells").collect())
+    assert np.array_equal(cell_mat, np.array([r["cv"] for r in cells]))
+    cb = sorted(spark.read.parquet(f"{path}/codebooks").collect())
+    for j in range(meta["m"]):
+        want = np.array([r["cen"] for r in cb if r["j"] == j])
+        assert np.array_equal(books[j], want), j
+
+
+def test_fit_and_build_leave_no_cached_frames(spark, emb, tmp_path_factory):
+    """Spark's CacheManager is empty after the in-memory operator runs
+    and after a build: the fit caches nothing, and the build drops its
+    encoded frame and its statistics once they are written."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    ivfpq_topk(emb, emb.filter(F.col("vec_id") < 5), k=5).collect()
+    assert cache.isEmpty()
+    build_ivfpq_index(emb, str(tmp_path_factory.mktemp("ivfpq_cache") / "idx"))
+    assert cache.isEmpty()
+
+
+def test_build_trains_on_the_driver_in_few_jobs(spark, emb, tmp_path_factory):
+    """The quantizers train on the driver from one collected sample:
+    building the fixture index runs no job whose call site is MLlib's
+    ``KMeans.scala``, and the whole build stays within the 15 jobs it
+    measured once the fits left Spark. With the MLlib fits (a job per
+    Lloyd round) the same build ran 141 jobs, 79 of them in
+    ``KMeans.scala``."""
+    sc = spark.sparkContext
+    group = "ivfpq_build_guard"
+    sc.setJobGroup(group, group)
+    try:
+        build_ivfpq_index(emb, str(tmp_path_factory.mktemp("ivfpq_jobs") / "idx"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    names = [
+        jsc.statusStore().job(j).name()
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    ]
+    assert not [n for n in names if "KMeans.scala" in n], names
+    assert 0 < len(names) <= 15, names
+
+
 def test_index_rejects_mismatched_query_dimension(spark, emb, index_path):
     """The meta table is a geometry CONTRACT: a query set with the
     wrong dimensionality fails loudly at plan time, not with silent
@@ -289,8 +352,9 @@ def test_append_reencodes_bit_identically_and_serves_new_vectors(
 ):
     """Incremental ingest: (a) re-encoding vectors the index already
     saw through the stored codebooks yields the SAME (cell, codes) the
-    build wrote — the Arrow encoder replays KMeans-transform math
-    exactly; (b) appended near-duplicate vectors are immediately
+    build wrote — build and append run the one encoder
+    (``similarity._ivfpq_encode``) on the same quantizers; (b) appended
+    near-duplicate vectors are immediately
     served: a query for a planted near-dup finds it at rank 1."""
     from sales_forecast_pyspark_spark.llmdata import append_to_ivfpq_index
 
