@@ -193,8 +193,8 @@ def _load_quantizers(spark: SparkSession, path: str):
         hit = _QUANTIZER_MEMO.get(os.path.abspath(path))
         if hit is not None and hit[0] == fp:
             return meta, hit[1], hit[2]
-    cells = spark.read.parquet(os.path.join(path, "cells")).collect()
-    cb = spark.read.parquet(os.path.join(path, "codebooks")).collect()
+    cells = lsm.read_root(spark, os.path.join(path, "cells")).collect()
+    cb = lsm.read_root(spark, os.path.join(path, "codebooks")).collect()
     cell_mat = np.stack(
         [np.asarray(r["cv"]) for r in sorted(cells, key=lambda r: r["cell"])]
     )
@@ -294,10 +294,10 @@ def _cell_error_scan(
     class)."""
     meta, cell_mat, books = _load_quantizers(spark, path)
     if base_only:
-        codes = spark.read.parquet(os.path.join(path, "codes")).select(
+        codes = lsm.read_root(spark, os.path.join(path, "codes")).select(
             "neighbor_id", "cell", "codes"
         )
-        vectors = spark.read.parquet(os.path.join(path, "vectors"))
+        vectors = lsm.read_root(spark, os.path.join(path, "vectors"))
     else:
         codes = _read_index_table(spark, path, "codes").select(
             "neighbor_id", "cell", "codes"
@@ -386,7 +386,7 @@ def ivfpq_index_stats(
     cheaply) fans that join out and inflates the scan's counts while
     the live tier stays per-batch-true — the 10× streaming rehearsal
     caught a harness id-collision exactly this way."""
-    base0 = spark.read.parquet(os.path.join(path, "stats"))
+    base0 = lsm.read_root(spark, os.path.join(path, "stats"))
     base = base0.select(
         "cell",
         F.col("n_rows").alias("build_rows"),
@@ -598,17 +598,25 @@ def _build_locked(
         "n_vectors": _encoded_count(enc),
     }
     _write_data(enc, path, meta, meta["n_vectors"], None, build=True)
-    spark.createDataFrame(
-        list(enumerate(cell_mat.tolist())), "cell int, cv array<double>"
-    ).write.mode("overwrite").parquet(os.path.join(path, "cells"))
-    spark.createDataFrame(
-        [
-            (j, c, cen)
-            for j, book in enumerate(books)
-            for c, cen in enumerate(book.tolist())
-        ],
-        "j int, code int, cen array<double>",
-    ).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
+    lsm.save(
+        spark.createDataFrame(
+            list(enumerate(cell_mat.tolist())), "cell int, cv array<double>"
+        ),
+        os.path.join(path, "cells"),
+        "overwrite",
+    )
+    lsm.save(
+        spark.createDataFrame(
+            [
+                (j, c, cen)
+                for j, book in enumerate(books)
+                for c, cen in enumerate(book.tolist())
+            ],
+            "j int, code int, cen array<double>",
+        ),
+        os.path.join(path, "codebooks"),
+        "overwrite",
+    )
     # the arrays just written are what a load would read back (doubles
     # round-trip exactly), so the first screen or append after a build
     # collects no quantizer table
@@ -625,10 +633,8 @@ def _build_locked(
     # report never needs a data scan.
     build_stats = _cell_stat_agg(_qerr_per_row(enc, cell_mat, books, m))
     build_stats.cache()
-    build_stats.write.mode("overwrite").parquet(os.path.join(path, "stats"))
-    build_stats.write.mode("overwrite").parquet(
-        os.path.join(path, "stats_live")
-    )
+    for table in ("stats", "stats_live"):
+        lsm.save(build_stats, os.path.join(path, table), "overwrite")
     build_stats.unpersist()
     enc.unpersist()
     return meta
@@ -729,16 +735,19 @@ def _append_locked(
     # never over-claims rows that are not stored.
     batch_stats = _cell_stat_agg(_qerr_per_row(enc, cell_mat, books, m))
     if batch_id is not None:
-        dst, mode = lsm.destination(path, "stats_live", batch_id)
-        batch_stats.write.mode(mode).parquet(dst)
+        lsm.save(batch_stats, *lsm.destination(path, "stats_live", batch_id))
     else:
         live = os.path.join(path, "stats_live")
         merged = _merge_cell_stats(
-            spark.read.parquet(live).unionByName(batch_stats)
+            lsm.read_root(spark, live).unionByName(batch_stats)
         ).collect()
-        spark.createDataFrame(
-            merged, "cell int, n_rows long, sum_qerr decimal(30,15)"
-        ).write.mode("overwrite").parquet(live)
+        lsm.save(
+            spark.createDataFrame(
+                merged, "cell int, n_rows long, sum_qerr decimal(30,15)"
+            ),
+            live,
+            "overwrite",
+        )
     # recount instead of increment: correct under replays (the same
     # increment dir overwritten) and under torn appends (counts only
     # what the stats tier has absorbed). Counting from the kilobyte
@@ -826,7 +835,7 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
         # (full-recount base PLUS still-present increments) and could raise
         # spurious skew flags (code-review r12, second pass)
         lsm.drop_inc(spark, path, "stats_live")
-        fresh.write.mode("overwrite").parquet(os.path.join(path, "stats_live"))
+        lsm.save(fresh, os.path.join(path, "stats_live"), "overwrite")
         # refresh meta.n_vectors from the same recompute (code-review r12):
         # the fold may have removed transient duplicates a prior append's
         # recount had absorbed, and meta must agree with the data the

@@ -124,11 +124,13 @@ def _write_doc_count(
 ) -> None:
     """One ``doc_counts`` ledger row (see ``_doc_count``), written to
     ``lsm.destination`` (a build or a fold overwrites the base)."""
-    dst, mode = lsm.destination(path, "doc_counts", batch_id, build)
-    spark.createDataFrame(
-        [(int(n), -1 if batch_id is None else int(batch_id))],
-        "n long, src_batch long",
-    ).write.mode(mode).parquet(dst)
+    lsm.save(
+        spark.createDataFrame(
+            [(int(n), -1 if batch_id is None else int(batch_id))],
+            "n long, src_batch long",
+        ),
+        *lsm.destination(path, "doc_counts", batch_id, build),
+    )
 
 
 def _sig_frame(
@@ -798,9 +800,9 @@ def compact_minhash_store(spark: SparkSession, path: str) -> dict:
         # Torn batches' rows are NOT in the bases and not in the count
         # — the module invariant: torn state undercounts, never
         # over-claims (their doc_counts row never landed either).
-        n_docs = spark.read.parquet(os.path.join(path, t_sig.name)).count()
+        n_docs = lsm.read_root(spark, os.path.join(path, t_sig.name)).count()
         if fp_folds:
-            n_docs += spark.read.parquet(fp_path).count()
+            n_docs += lsm.read_root(spark, fp_path).count()
         # increments before the base overwrite — crash in between reads
         # as an undercount, never a double-count (same ordering rule as
         # the index's stats_live consolidation). Every doc_counts_inc

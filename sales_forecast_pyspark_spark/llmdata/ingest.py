@@ -35,7 +35,10 @@ needs:
   excludes the batch's own prior attempt (``src_batch`` filters for
   the fp and MinHash stores, own-id exclusion for the index), so a
   replayed batch is judged only against prior state and re-publishes
-  bit-identical verdicts.
+  bit-identical verdicts. The three appends run side by side (three
+  stores, three leases), so a batch that fails during admission may
+  leave ANY subset of them landed; the verdicts publish only after all
+  three succeed, and the replay completes the rest.
 
 The EXACT-FINGERPRINT STORE persisted here (``build_fp_store`` /
 ``screen_against_fp_store`` / ``append_to_fp_store`` /
@@ -62,6 +65,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -255,9 +259,11 @@ def triad_consistency_report(
     QUIESCENCE (ADVICE r14): the report holds no lease — it is the one
     deliberately uncoordinated reader, so it can run against a live
     loop without stalling ingest. The price is that the three id sets
-    materialize at different times: a concurrent batch that has run
-    ``append_to_fp_store`` but not yet the MinHash/index appends shows
-    as transient ``mh_missing``/``index_missing`` > 0. ``recheck``
+    materialize at different times: the loop admits a batch to the
+    three stores concurrently, so mid-admission ANY subset of the three
+    appends may have landed, and the batch shows as transient
+    ``mh_missing``/``index_missing``/``mh_extra``/``index_extra`` > 0.
+    ``recheck``
     (default True) re-runs the whole comparison once before reporting
     inconsistency — a TRANSIENT mid-batch state changes between the
     two passes (the second pass sees the appends land), while real
@@ -340,6 +346,31 @@ def triad_consistency_report(
     return report
 
 
+def _admit_concurrently(*appends) -> None:
+    """Run each store append in a thread of its own and wait for all of
+    them; the first error is raised once every thread has joined. An
+    ``InheritableThread`` copies the caller's Spark local properties,
+    so the appends' jobs keep the streaming query's job group."""
+    errors: list[BaseException] = []
+
+    def run(append) -> None:
+        try:
+            append()
+        except BaseException as e:  # noqa: BLE001 - raised below
+            errors.append(e)
+
+    threads = [
+        InheritableThread(target=run, args=(a,), name=f"triad-admit-{i}")
+        for i, a in enumerate(appends)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+
+
 def stream_ingest_dedup_all(
     stream_df: DataFrame,
     fp_store: str,
@@ -369,10 +400,15 @@ def stream_ingest_dedup_all(
        survivors (index screen, own ids excluded + EXACT in-batch
        pairs, greedy-peeled) → ``semantic_dup``.
     4. ADMIT the final survivors to ALL THREE stores under the batch id
-       (fingerprints; the already-computed signatures; the index; each
-       append waits up to ``lsm.STREAM_LEASE_RETRY_S`` for an external
-       maintainer's lease) and publish every batch row with its
-       verdict to ``survivors_dir/b=<id>`` (overwrite — idempotent).
+       (fingerprints; the already-computed signatures; the index),
+       concurrently: the appends touch three stores under three
+       leases, so each runs in its own ``InheritableThread``, which
+       keeps the query's job group. Each append waits up to
+       ``lsm.STREAM_LEASE_RETRY_S`` for an external maintainer's
+       lease. Every thread is joined before the first error is raised.
+       Only after all three succeed is every batch row published with
+       its verdict to ``survivors_dir/b=<id>`` (overwrite —
+       idempotent).
 
     ``auto_compact_after=N`` (default 64) folds a store once any of
     its tables holds N increment dirs (``lsm.should_compact``), so
@@ -401,89 +437,96 @@ def stream_ingest_dedup_all(
             F.col(vec_col).alias("embedding"),
             fingerprint_expr(text_col).alias("fp"),
         )
-        b.cache()
-
-        # ---- stage 1: exact fingerprint (cheapest screen first) ----
-        bfp = b.select("doc_id", "fp").localCheckpoint(eager=True)
-        exact_losers = (
-            _screen_fps(spark, fp_store, bfp, batch_id)
-            .select("doc_id")
-            .unionByName(_first_wins(bfp))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        s1 = b.join(exact_losers, "doc_id", "left_anti")
-
-        # ---- stage 2: MinHash text (stage-1 survivors only) ----
-        text_losers, bsig, unsigned, meta = _text_stage(
-            spark, mh_store, s1, text_threshold, batch_id
-        )
-        s2 = s1.join(text_losers, "doc_id", "left_anti")
-        s2.cache()
-
-        # ---- stage 3: embedding cosine (stage-2 survivors only) ----
-        sem_losers = _semantic_stage(
-            spark, index_path, s2, cos_threshold, k, n_probe
-        )
-        survivors = s2.join(sem_losers, "doc_id", "left_anti")
-        survivors.cache()
-        surv_ids = survivors.select("doc_id")
-
-        # ---- admit to all three stores, batch-versioned ----
-        _append_fps(
-            spark,
-            survivors.select("doc_id", "fp"),
-            fp_store,
-            batch_id,
-            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
-        )
-        _append_signed(
-            spark,
-            bsig.join(surv_ids, "doc_id"),
-            mh_store,
-            meta,
-            batch_id,
-            fps=unsigned.join(surv_ids, "doc_id"),
-            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
-        )
-        append_to_ivfpq_index(
-            survivors.select("doc_id", "embedding"),
-            index_path,
-            id_col="doc_id",
-            batch_id=batch_id,
-            lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
-        )
-
-        # ---- publish: every row, per-stage verdict ----
-        verdicts = (
-            exact_losers.select(
-                "doc_id", F.lit("exact_dup").alias("verdict")
+        cached = [b.cache()]
+        try:
+            # ---- stage 1: exact fingerprint (cheapest screen first) ----
+            bfp = b.select("doc_id", "fp").localCheckpoint(eager=True)
+            exact_losers = (
+                _screen_fps(spark, fp_store, bfp, batch_id)
+                .select("doc_id")
+                .unionByName(_first_wins(bfp))
+                .distinct()
+                .localCheckpoint(eager=True)
             )
-            .unionByName(
-                text_losers.select(
-                    "doc_id", F.lit("text_dup").alias("verdict")
+            s1 = b.join(exact_losers, "doc_id", "left_anti")
+
+            # ---- stage 2: MinHash text (stage-1 survivors only) ----
+            text_losers, bsig, unsigned, meta = _text_stage(
+                spark, mh_store, s1, text_threshold, batch_id
+            )
+            cached += [bsig, unsigned]
+            # survivor frames are pinned eagerly, not cached lazily: a
+            # lazy cache is built inside whichever action first reads
+            # it, and the three admission threads would race to build
+            # the survivors' cache, each running its jobs
+            s2 = s1.join(text_losers, "doc_id", "left_anti").localCheckpoint(
+                eager=True
+            )
+
+            # ---- stage 3: embedding cosine (stage-2 survivors only) ----
+            sem_losers = _semantic_stage(
+                spark, index_path, s2, cos_threshold, k, n_probe
+            )
+            survivors = s2.join(
+                sem_losers, "doc_id", "left_anti"
+            ).localCheckpoint(eager=True)
+            surv_ids = survivors.select("doc_id")
+
+            # ---- admit to all three stores, batch-versioned, at once ----
+            _admit_concurrently(
+                lambda: _append_fps(
+                    spark,
+                    survivors.select("doc_id", "fp"),
+                    fp_store,
+                    batch_id,
+                    lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
+                ),
+                lambda: _append_signed(
+                    spark,
+                    bsig.join(surv_ids, "doc_id"),
+                    mh_store,
+                    meta,
+                    batch_id,
+                    fps=unsigned.join(surv_ids, "doc_id"),
+                    lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
+                ),
+                lambda: append_to_ivfpq_index(
+                    survivors.select("doc_id", "embedding"),
+                    index_path,
+                    id_col="doc_id",
+                    batch_id=batch_id,
+                    lease_retry_s=lsm.STREAM_LEASE_RETRY_S,
+                ),
+            )
+
+            # ---- publish: every row, per-stage verdict ----
+            verdicts = (
+                exact_losers.select(
+                    "doc_id", F.lit("exact_dup").alias("verdict")
+                )
+                .unionByName(
+                    text_losers.select(
+                        "doc_id", F.lit("text_dup").alias("verdict")
+                    )
+                )
+                .unionByName(
+                    sem_losers.select(
+                        "doc_id", F.lit("semantic_dup").alias("verdict")
+                    )
                 )
             )
-            .unionByName(
-                sem_losers.select(
-                    "doc_id", F.lit("semantic_dup").alias("verdict")
+            (
+                b.drop("fp")
+                .join(verdicts, "doc_id", "left")
+                .withColumn(
+                    "verdict", F.coalesce("verdict", F.lit("admitted"))
                 )
+                .write.mode("overwrite")
+                .parquet(os.path.join(survivors_dir, f"b={int(batch_id)}"))
             )
-        )
-        (
-            b.drop("fp")
-            .join(verdicts, "doc_id", "left")
-            .withColumn(
-                "verdict", F.coalesce("verdict", F.lit("admitted"))
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(survivors_dir, f"b={int(batch_id)}"))
-        )
-        survivors.unpersist()
-        s2.unpersist()
-        unsigned.unpersist()
-        bsig.unpersist()
-        b.unpersist()
+        finally:
+            for df in reversed(cached):
+                df.unpersist()
 
         if auto_compact_after is None:
             return

@@ -10,7 +10,8 @@ folded lives once here, and a fix cannot drift between the stores
 drifted to three layouts):
 
 - the tiered readers (``read_tiered``, ``read_tiered_opt``,
-  ``complete_view``) and the Hadoop-FS helpers;
+  ``complete_view``), which read every table root through one schema
+  memo (``read_root``), and the Hadoop-FS helpers;
 - the WRITER: each store names each table once as a ``Table`` (layout,
   row-byte estimate, fold key), and its build, append and fold all
   write it through ``write_sized``; ``destination`` is the one rule
@@ -71,17 +72,94 @@ class LeaseHeldError(RuntimeError):
     """Another maintainer holds the store's mutation lease."""
 
 
+# Process-local memo of each table root's parquet data schema, keyed
+# on the root's absolute path and valid while the root directory keeps
+# the modification time it had when the schema was taken. Unmemoized,
+# every read of a root first runs a schema-inference job over its
+# footers, and a triad micro-batch reads about twenty roots. Writers
+# fill it with the schema they just wrote (``_wrote``), so reads at
+# ingest cadence infer nothing; a miss infers once. Partition columns
+# (``b`` of an increments root, ``cell`` of the cell layout) are left
+# out and discovered from the paths, typed as an inferring read types
+# them. A root rewritten by another process has a new modification time
+# and is inferred again. Only schemas are kept, never data.
+_SCHEMAS: dict[str, tuple] = {}
+
+
+def _root_mtime(spark: SparkSession, root: str) -> int | None:
+    """The root directory's modification time, or None when absent."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm, fs = _jvm_fs(spark, root)
+    try:
+        return fs.getFileStatus(jvm.Path(root)).getModificationTime()
+    except Py4JJavaError:  # FileNotFoundException
+        return None
+
+
+def _memo(spark: SparkSession, root: str, schema) -> None:
+    mtime = _root_mtime(spark, root)
+    if mtime is not None:
+        _SCHEMAS[os.path.abspath(root)] = (mtime, schema)
+
+
+def read_root(spark: SparkSession, root: str) -> DataFrame:
+    """One table root (a base table or a ``<table>_inc`` tier) read
+    through the schema memo: a hit reads with the memoized schema and
+    runs no inference job; a miss infers once and memoizes. An absent
+    root raises ``AnalysisException``, as an inferring read does."""
+    mtime = _root_mtime(spark, root)
+    hit = _SCHEMAS.get(os.path.abspath(root))
+    if mtime is not None and hit is not None and hit[0] == mtime:
+        return spark.read.schema(hit[1]).parquet(root)
+    df = spark.read.parquet(root)
+    if mtime is not None:
+        _SCHEMAS[os.path.abspath(root)] = (mtime, df.schema)
+    return df
+
+
+def _wrote(
+    df: DataFrame, dst: str, mode: str, partitions: tuple[str, ...] = ()
+) -> None:
+    """Memoize the data schema a writer just wrote to ``dst`` under its
+    table root (``dst`` itself, or the increments root of a
+    ``b=<id>`` dir). An ``append`` writes next to files of another
+    schema, so it memoizes nothing: the root's new modification time
+    turns the next read into one inference."""
+    from pyspark.sql.types import StructType
+
+    if mode == "append":
+        return
+    root, leaf = os.path.split(dst)
+    if not leaf.startswith("b="):
+        root = dst
+    _memo(
+        df.sparkSession,
+        root,
+        StructType([f for f in df.schema.fields if f.name not in partitions]),
+    )
+
+
+def save(df: DataFrame, dst: str, mode: str) -> None:
+    """Write ``df`` as parquet to ``dst`` and memoize its schema — the
+    unsized writes (meta, ledgers, statistics, quantizers)."""
+    df.write.mode(mode).parquet(dst)
+    _wrote(df, dst, mode)
+
+
 def read_tiered(spark: SparkSession, path: str, table: str) -> DataFrame:
     """A store table as its readers see it: the compacted BASE plus any
     batch-versioned increments. Filters push through the union into
     both scans; increments keep the base's partition layout, so
-    partition pruning holds across the split."""
+    partition pruning holds across the split. Both tiers read through
+    the schema memo (``read_root``), so neither runs an inference job
+    once a writer of this process has written it."""
     from pyspark.errors import AnalysisException
 
-    base = spark.read.parquet(os.path.join(path, table))
+    base = read_root(spark, os.path.join(path, table))
     cols = base.columns
     try:
-        inc = spark.read.parquet(os.path.join(path, f"{table}_inc"))
+        inc = read_root(spark, os.path.join(path, f"{table}_inc"))
     except AnalysisException:
         return base
     return base.unionByName(inc.select(*cols))
@@ -101,7 +179,7 @@ def read_tiered_opt(
     parts = []
     for sub in (table, f"{table}_inc"):
         try:
-            parts.append(spark.read.parquet(os.path.join(path, sub)))
+            parts.append(read_root(spark, os.path.join(path, sub)))
         except AnalysisException:
             pass
     # project to the declared schema's columns: reading an increments
@@ -143,7 +221,7 @@ def complete_view(
     parts = []
     for sub, keep in ((table, None), (f"{table}_inc", folding)):
         try:
-            df = spark.read.parquet(os.path.join(path, sub))
+            df = read_root(spark, os.path.join(path, sub))
         except AnalysisException:
             continue
         if keep is not None:
@@ -213,6 +291,7 @@ def write_sized(
             .write
         )
     w.mode(mode).parquet(dst)
+    _wrote(df, dst, mode, ("cell",) if table.cells else ())
 
 
 def destination(
@@ -239,8 +318,9 @@ def src_batch(batch_id: int | None):
 
 
 def read_meta(spark: SparkSession, path: str) -> dict:
-    """A store's one-row ``meta`` table as a dict."""
-    return spark.read.parquet(os.path.join(path, "meta")).first().asDict()
+    """A store's one-row ``meta`` table as a dict: one job, since the
+    schema comes from the memo ``write_meta`` fills (``read_root``)."""
+    return read_root(spark, os.path.join(path, "meta")).first().asDict()
 
 
 def write_meta(
@@ -248,9 +328,11 @@ def write_meta(
 ) -> None:
     """Overwrite a store's one-row ``meta`` table (``schema`` lists the
     dict's fields in order)."""
-    spark.createDataFrame([tuple(meta.values())], schema).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "meta"))
+    save(
+        spark.createDataFrame([tuple(meta.values())], schema),
+        os.path.join(path, "meta"),
+        "overwrite",
+    )
 
 
 def _jvm_fs(spark: SparkSession, p: str):
@@ -310,6 +392,9 @@ def swap_dir(spark: SparkSession, path: str, sub: str, write_to) -> None:
     write_to(tmp)
     fs.delete(jvm.Path(src), True)
     fs.rename(jvm.Path(tmp), jvm.Path(src))
+    staged = _SCHEMAS.pop(os.path.abspath(tmp), None)
+    if staged is not None:
+        _memo(spark, src, staged[1])
 
 
 def drop_inc(spark: SparkSession, path: str, table: str) -> None:
@@ -383,7 +468,7 @@ def folded_batches(spark: SparkSession, path: str) -> set[int]:
     from pyspark.errors import AnalysisException
 
     try:
-        rows = spark.read.parquet(
+        rows = spark.read.schema("batch_id long").parquet(
             os.path.join(path, "folded_batches")
         ).collect()
     except AnalysisException:

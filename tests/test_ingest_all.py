@@ -3,8 +3,9 @@ streaming dedup loop: the persisted exact-fingerprint store's
 lifecycle, stage short-circuit order on a batch engineered so each
 dedup class has a distinct witness, a two-batch drain with the
 non-transitive chain, zero-token and zero-norm witnesses,
-exactly-once across all three stores under a full replay, and
-three-store auto-compaction parity.
+exactly-once across all three stores under a full replay, concurrent
+admission and its failure path, and three-store auto-compaction
+parity.
 """
 
 from __future__ import annotations
@@ -464,6 +465,133 @@ def test_triad_two_batches_verdicts_tiers_and_replay(spark, corpus, tmp_path):
 
     assert run("ckpt2") == verdicts
     assert _store_counts(spark, *stores) == counts
+
+
+def _admission_batch(spark, corpus, src: str) -> dict[int, str]:
+    """Land one four-row micro-batch in ``src`` (an exact copy, a copied
+    embedding under fresh text, two fresh rows) and return the verdicts
+    a clean drain publishes for it."""
+    import numpy as np
+
+    r = corpus.filter(F.col("doc_id") < 100).orderBy("doc_id").limit(2).collect()
+    vec = np.random.RandomState(3).normal(size=(2, len(r[0]["embedding"])))
+
+    def fresh(tag: str) -> str:
+        return " ".join(f"{tag}{i} lantern{i} quarry{i}" for i in range(20))
+
+    _write_batches(spark, src, [[
+        (9_001, r[0]["text"], r[0]["embedding"]),
+        (9_002, fresh("alder"), vec[0].tolist()),
+        (9_003, fresh("birch"), r[1]["embedding"]),
+        (9_004, fresh("cedar"), vec[1].tolist()),
+    ]])
+    return {
+        9_001: "exact_dup",
+        9_002: "admitted",
+        9_003: "semantic_dup",
+        9_004: "admitted",
+    }
+
+
+_APPENDS = ("_append_fps", "_append_signed", "append_to_ivfpq_index")
+
+
+def test_triad_admits_to_the_three_stores_concurrently(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """The three store appends of a micro-batch overlap: each waits at
+    one three-party barrier before it runs, which serial admission
+    never passes (it times out and fails the query). The batch's
+    verdicts publish only after all three appends have returned."""
+    import threading
+
+    from sales_forecast_pyspark_spark.llmdata import ingest
+
+    stores = _build_stores(corpus.filter(F.col("doc_id") < 100), tmp_path)
+    want = _admission_batch(spark, corpus, str(tmp_path / "src"))
+    out = str(tmp_path / "out")
+    barrier = threading.Barrier(3, timeout=60)
+    published_at_return = []
+
+    def meet(append):
+        def wrapped(*args, **kwargs):
+            barrier.wait()
+            n = append(*args, **kwargs)
+            published_at_return.append(os.path.exists(os.path.join(out, "b=0")))
+            return n
+
+        return wrapped
+
+    for name in _APPENDS:
+        monkeypatch.setattr(ingest, name, meet(getattr(ingest, name)))
+    verdicts = _drain(
+        spark, str(tmp_path / "src"), stores, out, str(tmp_path / "ckpt")
+    )
+    assert published_at_return == [False, False, False]
+    assert verdicts == want
+    assert _store_counts(spark, *stores) == (102, 102, 102)
+
+
+def test_triad_admission_failure_publishes_nothing_and_replays_clean(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """The index append raises on its first call. The query fails with
+    that error only after the sibling appends have finished (their
+    increments are on disk), nothing is published for the batch, and no
+    admission thread, store lease or cached frame is left behind. A
+    restart on the same checkpoint replays the batch to the verdicts
+    and store counts of a clean run."""
+    import threading
+
+    from pyspark.errors import StreamingQueryException
+
+    from sales_forecast_pyspark_spark.llmdata import ingest, lsm
+
+    seed = corpus.filter(F.col("doc_id") < 100)
+    runs = {}
+    for label in ("clean", "faulty"):
+        root = tmp_path / label
+        root.mkdir()
+        runs[label] = (
+            _build_stores(seed, root),
+            str(root / "src"),
+            str(root / "out"),
+            str(root / "ckpt"),
+        )
+        want = _admission_batch(spark, corpus, runs[label][1])
+    stores, src, out, ckpt = runs["clean"]
+    assert _drain(spark, src, stores, out, ckpt) == want
+    clean_counts = _store_counts(spark, *stores)
+
+    stores, src, out, ckpt = runs["faulty"]
+    real = ingest.append_to_ivfpq_index
+    calls = []
+
+    def flaky(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected index append failure")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(ingest, "append_to_ivfpq_index", flaky)
+    spark.catalog.clearCache()
+    with pytest.raises(StreamingQueryException, match="injected index"):
+        _drain(spark, src, stores, out, ckpt)
+    assert not os.path.exists(os.path.join(out, "b=0"))
+    assert lsm.list_inc_batches(spark, stores[0], "fps") == {0}
+    assert lsm.list_inc_batches(spark, stores[1], "doc_counts") == {0}
+    assert lsm.list_inc_batches(spark, stores[2], "codes") == set()
+    assert not [
+        t for t in threading.enumerate() if t.name.startswith("triad-admit")
+    ]
+    assert not [
+        p for p in stores if os.path.exists(os.path.join(p, lsm.LEASE_FILE))
+    ]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    assert _drain(spark, src, stores, out, ckpt) == want
+    assert len(calls) == 2
+    assert _store_counts(spark, *stores) == clean_counts == (102, 102, 102)
 
 
 @pytest.mark.slow

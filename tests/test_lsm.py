@@ -383,3 +383,147 @@ def test_cell_layout_files_are_byte_identical_across_writes(spark, tmp_path):
     a, b = contents(f"{d}/sorted/a"), contents(f"{d}/sorted/b")
     assert list(a) == ["."] and len(a["."]) == 8
     assert a == b
+
+
+def _group_job_names(spark, group: str, action) -> list[str]:
+    """Names of the Spark jobs that ``action()`` runs under job group
+    ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return [
+        jsc.statusStore().job(j).name()
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    ]
+
+
+def test_store_reads_after_a_build_infer_no_schema(spark, tmp_path):
+    """The writers fill the schema memo, so a serve right after a build
+    runs no parquet schema-inference job (``parquet at …``): the meta,
+    codes and vectors roots are read with the schemas the build wrote.
+    Unmemoized, the same serve ran five of them among its jobs."""
+    from pyspark.sql import functions as F
+
+    from sales_forecast_pyspark_spark.llmdata import (
+        build_ivfpq_index,
+        query_ivfpq_index,
+    )
+    from tests.conftest import SF_SMALL
+
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    path = str(tmp_path / "idx")
+    build_ivfpq_index(emb, path, n_centroids=4, m=2, codebook_k=16)
+    rows = []
+    names = _group_job_names(
+        spark,
+        "lsm_schema_memo_serve",
+        lambda: rows.extend(
+            query_ivfpq_index(
+                spark, path, emb.filter(F.col("vec_id") < 5), k=3
+            ).collect()
+        ),
+    )
+    assert len(rows) == 15
+    assert names and not [n for n in names if n.startswith("parquet at")], names
+
+
+def test_rebuild_with_another_id_type_refreshes_the_memo(spark, tmp_path):
+    """A store rebuilt in place with a ``string`` id is read back with
+    the new type, from the schema the rebuild wrote: the read after the
+    rebuild runs no inference job either."""
+    from sales_forecast_pyspark_spark.llmdata.ingest import (
+        _read_fp_store,
+        build_fp_store,
+    )
+
+    path = str(tmp_path / "fp")
+    rows = [(i, f"text number {i}") for i in range(20)]
+    build_fp_store(spark.createDataFrame(rows, "doc_id long, text string"), path)
+    assert dict(_read_fp_store(spark, path).dtypes)["doc_id"] == "bigint"
+    build_fp_store(
+        spark.createDataFrame(
+            [(str(i), t) for i, t in rows], "doc_id string, text string"
+        ),
+        path,
+    )
+    got = {}
+    names = _group_job_names(
+        spark,
+        "lsm_schema_memo_rebuild",
+        lambda: got.update(
+            dtypes=dict(_read_fp_store(spark, path).dtypes),
+            ids=sorted(r[0] for r in _read_fp_store(spark, path).collect()),
+        ),
+    )
+    assert got["dtypes"]["doc_id"] == "string"
+    assert got["ids"] == sorted(str(i) for i, _ in rows)
+    assert not [n for n in names if n.startswith("parquet at")], names
+
+
+def test_memoized_schemas_equal_the_inferred_ones(spark, tmp_path):
+    """The memo never changes what a read sees: after builds and a
+    versioned append of all three stores, every memoized table root
+    reads with exactly the schema (partition columns included) an
+    inferring read gives, and a root rewritten behind the memo's back
+    (another process) is inferred again."""
+    from pyspark.sql import functions as F
+
+    from sales_forecast_pyspark_spark.llmdata import (
+        append_to_fp_store,
+        append_to_ivfpq_index,
+        append_to_minhash_store,
+        build_fp_store,
+        build_ivfpq_index,
+        build_minhash_store,
+    )
+    from tests.conftest import SF_SMALL
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    seed = docs.filter(F.col("doc_id") < 60).select("doc_id", "text")
+    batch = docs.filter(F.col("doc_id").between(60, 69)).select(
+        "doc_id", "text"
+    )
+    fp, mh, idx = (str(tmp_path / s) for s in ("fp", "mh", "idx"))
+    build_fp_store(seed, fp)
+    build_minhash_store(seed, mh)
+    build_ivfpq_index(
+        emb.filter(F.col("vec_id") < 60), idx, n_centroids=4, m=2,
+        codebook_k=16,
+    )
+    append_to_fp_store(batch, fp, batch_id=3)
+    append_to_minhash_store(batch, mh, batch_id=3)
+    append_to_ivfpq_index(
+        emb.filter(F.col("vec_id").between(60, 69)), idx, batch_id=3
+    )
+    roots = [
+        r for r in lsm._SCHEMAS if r.startswith(str(tmp_path) + os.sep)
+    ]
+    want = {
+        "fp/fps", "fp/fps_inc", "mh/signatures",
+        "mh/signatures_inc", "mh/buckets", "mh/buckets_inc",
+        "mh/doc_counts", "mh/doc_counts_inc", "mh/meta", "idx/codes",
+        "idx/codes_inc", "idx/vectors", "idx/vectors_inc", "idx/cells",
+        "idx/codebooks", "idx/meta", "idx/stats", "idx/stats_live",
+        "idx/stats_live_inc",
+    }
+    assert want - {os.path.relpath(r, tmp_path) for r in roots} == set()
+    for root in roots:
+        assert lsm.read_root(spark, root).schema == (
+            spark.read.parquet(root).schema
+        ), root
+
+    # a rewrite the memo did not see: the root's modification time moves
+    # on, and the next read infers the new schema
+    meta = str(tmp_path / "fp" / "meta")
+    time.sleep(0.01)
+    spark.createDataFrame([("x",)], "note string").write.mode(
+        "overwrite"
+    ).parquet(meta)
+    assert lsm.read_root(spark, meta).columns == ["note"]
